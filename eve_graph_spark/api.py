@@ -15,9 +15,12 @@ from eve_graph_spark.checkpointing import truncate_lineage
 from eve_graph_spark.functions.risk import galaxy_baseline, risk_expr
 from eve_graph_spark.operators import relational as R
 from eve_graph_spark.operators.graph import (
+    DRIVER_PATH_MAX_NODES,
     ProjectionRegistry,
+    force_distributed,
     path_as_names,
     reconstruct_path,
+    route_local,
     sssp,
 )
 
@@ -42,6 +45,34 @@ class GraphEngine:
         # arm. Optional: without them every route runs target-pruned sssp.
         self.coords = coords
         self.registry = ProjectionRegistry()
+        # (systems frame it was collected from, name snapshot)
+        self._names: tuple[DataFrame, tuple | None] | None = None
+
+    def _name_snapshot(self) -> tuple[dict[str, int], dict[int, str]] | None:
+        """(name → id, id → name) of `systems`, collected in one job on
+        first use; None above DRIVER_PATH_MAX_NODES rows and in the
+        forced-distributed arm. Keyed by the identity of the `systems`
+        frame, so any reassignment (a refresh, stream anchoring, a caller)
+        re-collects it, and a route racing a refresh on another thread
+        cannot keep a snapshot of the old table. A duplicated name
+        resolves to its first row, like the point lookup."""
+        if force_distributed():
+            return None
+        systems = self.systems
+        if self._names is None or self._names[0] is not systems:
+            rows = (
+                systems.select("system_id", "name")
+                .limit(DRIVER_PATH_MAX_NODES + 1)
+                .collect()
+            )
+            snap = None
+            if len(rows) <= DRIVER_PATH_MAX_NODES:
+                ids: dict[str, int] = {}
+                for r in rows:
+                    ids.setdefault(r["name"], r["system_id"])
+                snap = (ids, {r["system_id"]: r["name"] for r in rows})
+            self._names = (systems, snap)
+        return self._names[1]
 
     # --- projections (G1-G6) ------------------------------------------------
     def build_cost_projection(self) -> None:
@@ -51,23 +82,39 @@ class GraphEngine:
         self.registry.refresh(JUMP_RISK, self.jumps, "risk")
 
     def _resolve(self, name: str) -> int:
-        row = R.point_lookup(self.systems, "name", name).select("system_id").collect()
-        if not row:
+        names = self._name_snapshot()
+        if names is not None:
+            sid = names[0].get(name)
+        else:
+            row = R.point_lookup(self.systems, "name", name).select("system_id").collect()
+            sid = row[0]["system_id"] if row else None
+        if sid is None:
             raise RouteNotFound(f"system {name!r} not found")
-        return row[0]["system_id"]
+        return sid
 
     def _route(self, projection: str, from_name: str, to_name: str,
                heuristic: bool = False,
                avoid: list[str] | None = None) -> list[str]:
         src, dst = self._resolve(from_name), self._resolve(to_name)
+        # Avoiding an endpoint of the trip itself makes the route
+        # unreachable -> the normal 404 path.
+        ids = [self._resolve(n) for n in avoid or ()]
+        adj = None if heuristic else self.registry.adjacency(projection)
+        names = self._name_snapshot()
+        if adj is not None and names is not None:
+            # both snapshots on the driver: no Spark job per request, the
+            # GDS-over-CSR shape (database.rs:484-513). An id missing from
+            # `systems` drops out, as path_as_names' inner join does.
+            path = route_local(adj, src, dst, set(ids))
+            if not path:
+                raise RouteNotFound("route not found")
+            return [names[1][n] for n in path if n in names[1]]
         edges = self.registry.get(projection)
-        if avoid:
+        if ids:
             # avoid-list routing: drop edges touching the avoided systems
             # BEFORE the search — a scan-stage predicate over the cached
             # projection, so the SSSP/A* kernels run unchanged on the
-            # subgraph. Avoiding an endpoint of the trip itself makes the
-            # route unreachable -> the normal 404 path.
-            ids = [self._resolve(n) for n in avoid]
+            # subgraph.
             edges = edges.filter(
                 ~F.col("src").isin(ids) & ~F.col("dst").isin(ids)
             )
@@ -142,14 +189,18 @@ class GraphEngine:
         routes = k_shortest_paths_distributed(edges, src, dst, k)
         if not routes:
             raise RouteNotFound("route not found")
-        # path-sized name fetch (pushed-down isin), never the full dim
-        node_ids = sorted({n for _, p in routes for n in p})
-        names = {
-            r["system_id"]: r["name"]
-            for r in self.systems.filter(F.col("system_id").isin(node_ids))
-            .select("system_id", "name")
-            .collect()
-        }
+        snapshot = self._name_snapshot()
+        if snapshot is not None:
+            names = snapshot[1]
+        else:
+            # path-sized name fetch (pushed-down isin), never the full dim
+            node_ids = sorted({n for _, p in routes for n in p})
+            names = {
+                r["system_id"]: r["name"]
+                for r in self.systems.filter(F.col("system_id").isin(node_ids))
+                .select("system_id", "name")
+                .collect()
+            }
         return [(cost, [names[n] for n in path]) for cost, path in routes]
 
     # --- A3: POST /systems/refresh (sync.rs:121-170) ------------------------

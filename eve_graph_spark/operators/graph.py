@@ -103,6 +103,9 @@ class ProjectionRegistry:
     """
 
     _graphs: dict[str, DataFrame] = field(default_factory=dict)
+    # name → (projection frame, its driver-resident {src: [(dst, weight)]}
+    # or None when it does not fit the driver); see adjacency()
+    _adjacency: dict[str, tuple[DataFrame, dict | None]] = field(default_factory=dict)
     # deltas applied since the projection last had its lineage truncated
     _deltas_since_anchor: dict[str, int] = field(default_factory=dict)
     # Every N-th apply_delta localCheckpoints the patched projection: a
@@ -137,9 +140,28 @@ class ProjectionRegistry:
     def get(self, name: str) -> DataFrame:
         return self._graphs[name]
 
+    def adjacency(self, name: str) -> dict[int, list[tuple[int, float]]] | None:
+        """The persisted projection as a driver-side {src: [(dst, weight)]}
+        map — the CSR the reference's GDS Dijkstra reads — so a route
+        request runs no Spark job. Collected in one job on first use, only
+        when the projection has ≤ DRIVER_SSSP_MAX_EDGES rows (None above
+        it, and in the forced-distributed arm). It lives and dies with the
+        projection: keyed by the identity of the persisted frame, so a
+        rebuild or delta re-collects it on next use, and a route racing a
+        refresh on another thread cannot keep the old map."""
+        if force_distributed():
+            return None
+        proj = self._graphs[name]
+        cached = self._adjacency.get(name)
+        if cached is None or cached[0] is not proj:
+            adj = _collect_adj(proj) if fits_driver(proj, DRIVER_SSSP_MAX_EDGES) else None
+            cached = self._adjacency[name] = (proj, adj)
+        return cached[1]
+
     def drop(self, name: str) -> None:
         """G4/G5 (database.rs:402-420)."""
         g = self._graphs.pop(name, None)
+        self._adjacency.pop(name, None)
         self._deltas_since_anchor.pop(name, None)
         if g is not None:
             g.unpersist()
@@ -210,8 +232,13 @@ DRIVER_SSSP_MAX_EDGES = 2_000_000  # below this, solve on the driver
 
 def _collect_adj(e: DataFrame) -> dict[int, list[tuple[int, float]]]:
     adj: dict[int, list[tuple[int, float]]] = {}
+    # edges into one node mostly carry one weight (cost ≡ 1, risk is the
+    # inbound system's), so equal (dst, weight) pairs share one tuple —
+    # the map stays resident for a projection's lifetime (adjacency())
+    pairs: dict[tuple[int, float], tuple[int, float]] = {}
     for r in e.collect():
-        adj.setdefault(r["src"], []).append((r["dst"], r["weight"]))
+        pair = (r["dst"], r["weight"])
+        adj.setdefault(r["src"], []).append(pairs.setdefault(pair, pair))
     return adj
 
 
@@ -1197,13 +1224,7 @@ def reconstruct_path(
         if stats_out is not None:
             stats_out["mode"] = "driver"
             stats_out["rows_collected"] = len(rows)
-        pred = {r["node"]: r["pred"] for r in rows}
-        if target_id not in pred:
-            return []
-        path = [target_id]
-        while pred[path[-1]] is not None and len(path) <= max_hops:
-            path.append(pred[path[-1]])
-        return list(reversed(path))
+        return _walk_preds({r["node"]: r["pred"] for r in rows}, target_id, max_hops)
 
     d = dist.select("node", "pred").persist()
     n_collected = 0
@@ -1228,6 +1249,34 @@ def reconstruct_path(
         return list(reversed(path))
     finally:
         d.unpersist()
+
+
+def _walk_preds(pred: dict[int, int | None], target_id: int,
+               max_hops: int = 10_000) -> list[int]:
+    """source → target node path from a driver-side {node: pred} map; []
+    when the target was not reached."""
+    if target_id not in pred:
+        return []
+    path = [target_id]
+    while pred[path[-1]] is not None and len(path) <= max_hops:
+        path.append(pred[path[-1]])
+    return list(reversed(path))
+
+
+def route_local(adj: dict[int, list[tuple[int, float]]], source_id: int,
+                target_id: int, avoid: set[int] | None = None) -> list[int]:
+    """Driver-resident twin of `sssp(target_id=)` → `reconstruct_path` over
+    a collected adjacency (`ProjectionRegistry.adjacency`): the same
+    `_relax_local` kernel and pred walk, so the path is node-for-node the
+    one the DataFrame route returns. `avoid` drops every edge touching
+    those nodes first, like the route API's pre-search edge filter."""
+    if avoid:
+        adj = {
+            u: [(v, w) for v, w in nbrs if v not in avoid]
+            for u, nbrs in adj.items() if u not in avoid
+        }
+    best = _relax_local(adj, [source_id], target_id)
+    return _walk_preds({n: p for n, (_, p) in best.items()}, target_id)
 
 
 def path_as_names(systems: DataFrame, path: list[int]) -> list[str]:

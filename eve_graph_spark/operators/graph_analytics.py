@@ -47,12 +47,6 @@ def _fits_driver(e: DataFrame, threshold: int,
     return fits_driver(e, threshold, force_exempt=force_exempt)
 
 
-def _force_distributed() -> bool:
-    from eve_graph_spark.operators.graph import force_distributed
-
-    return force_distributed()
-
-
 # --- connected components ---------------------------------------------------
 
 def _star_symmetrize(cur: DataFrame) -> DataFrame:
@@ -503,10 +497,11 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         ew = _weighted_edge_frame(edges, src_col, dst_col, weight_col)
         # SPARK_GRAFT_FORCE_DISTRIBUTED makes _fits_driver answer False as
         # a measurement device; the O(V^2)-state guard must keep judging
-        # the REAL input size, not the forced verdict, or the bench's
-        # distributed arm turns fixture-sized queries into errors.
-        if (landmarks is None and not exact and not _force_distributed()
-                and not _fits_driver(ew, driver_threshold)):
+        # the REAL input size (force_exempt), not the forced verdict, or
+        # the bench's distributed arm turns fixture-sized queries into
+        # errors — and over-threshold ones into silent all-pairs runs.
+        if (landmarks is None and not exact
+                and not _fits_driver(ew, driver_threshold, force_exempt=True)):
             raise ValueError(
                 "closeness_centrality: graph exceeds the driver threshold and no "
                 "landmarks were given — exact all-pairs closeness is O(V) pivots "
@@ -559,10 +554,12 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         return spark.createDataFrame(rows, "node long, closeness double")
 
     # the forced-distributed arm must not trip the exact-cost guard on a
-    # fixture-sized graph: under it, fall through to the exact distributed
-    # path (the measurable twin; branch parity pinned by
+    # fixture-sized graph: the guard probes the real size (force_exempt),
+    # so such a graph falls through to the exact distributed path (the
+    # measurable twin; branch parity pinned by
     # test_closeness_distributed_matches_local)
-    if landmarks is None and not exact and not _force_distributed():
+    if (landmarks is None and not exact
+            and not _fits_driver(e, driver_threshold, force_exempt=True)):
         raise ValueError(
             "closeness_centrality: graph exceeds the driver threshold and no "
             "landmarks were given — exact all-pairs closeness is O(V) pivots "
@@ -1547,10 +1544,9 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         # regardless of path, and the n/k scale is undefined
         scale = n_nodes / len(source_ids) if source_ids else 1.0
     else:
-        # see closeness_centrality: the forced-distributed bench arm must
-        # not trip the exact-cost guard on a fixture-sized graph
-        if (not exact and not _force_distributed()
-                and not _fits_driver(e, driver_threshold)):
+        # see closeness_centrality: the guard judges the real size under
+        # the forced-distributed bench arm too
+        if not exact and not _fits_driver(e, driver_threshold, force_exempt=True):
             raise ValueError(
                 "betweenness_centrality: graph exceeds the driver threshold "
                 "and no sample_sources were given — exact betweenness is O(V) "

@@ -1144,3 +1144,29 @@ def test_dag_longest_path_vs_all_paths_enumeration(spark):
         paths = all_paths_ending_at(v)
         assert lvl == max(h for h, _ in paths)
         assert dist == max(d for _, d in paths)
+
+
+def test_forced_distributed_arm_keeps_exact_cost_guards(spark, monkeypatch):
+    """The forced-distributed switch only picks an execution strategy: an
+    exact all-pairs request on a graph over the driver threshold must
+    still raise there, for closeness (hop and weighted) and betweenness
+    alike, while a graph under it still runs."""
+    from eve_graph_spark.operators import graph
+    from eve_graph_spark.operators.graph_analytics import (
+        betweenness_centrality,
+        closeness_centrality,
+    )
+
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4)]).withColumn("w", F.lit(1.0))
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+    graph.clear_probe_cache()
+    try:
+        with pytest.raises(ValueError, match="landmarks=k"):
+            closeness_centrality(e, driver_threshold=2)
+        with pytest.raises(ValueError, match="landmarks=k"):
+            closeness_centrality(e, driver_threshold=2, weight_col="w")
+        with pytest.raises(ValueError, match="sample_sources"):
+            betweenness_centrality(e, driver_threshold=2)
+        assert closeness_centrality(e, weight_col="w").count() == 4
+    finally:
+        graph.clear_probe_cache()
