@@ -164,17 +164,19 @@ def truncate_lineage(
     # r13: a LocalRelation leaf (literal rows already sitting in the JVM
     # plan) has no lineage to cut and no inherited stats to cap —
     # checkpointing it only spends a job materializing data that is
-    # already materialized. LogicalRDD leaves are NOT exempt (r13 fix):
-    # a PySpark createDataFrame is a *python-RDD-backed* LogicalRDD, and
-    # EVERY scan of one re-pays a Python-worker deserialization pass —
-    # the eager checkpoint converts it to JVM blocks once, which is
-    # exactly why multi-scan consumers (the betweenness pair joins: four
-    # scans) call this. Skipping it regressed both betweenness queries
-    # ~2.5x (measured; see OPTIMIZATION_r13.md). A bare file scan is
-    # also a leaf, but checkpointing one legitimately pins a snapshot of
-    # mutable storage, so it too keeps the old behavior. keyed_by
-    # callers are exempt regardless: they want the repartition contract
-    # applied.
+    # already materialized. Package-built driver frames
+    # (frames.local_frame) are such LocalRelations below Spark's
+    # localRelationThreshold, so they are skipped; above it they are
+    # JVM-side Arrow RDDs whose scans need no Python workers, and
+    # checkpointing one merely pins its blocks.
+    # Other LogicalRDD leaves are NOT exempt: a Python-list
+    # createDataFrame (e.g. a caller's own frame) re-pays a Python-worker
+    # deserialization pass on every scan, which is why multi-scan
+    # consumers (the betweenness pair joins: four scans) checkpoint it
+    # once (OPTIMIZATION_r13.md). A bare file scan is also a leaf, but
+    # checkpointing one legitimately pins a snapshot of mutable storage,
+    # so it too keeps the old behavior. keyed_by callers are exempt
+    # regardless: they want the repartition contract applied.
     if keyed_by is None:
         try:
             plan = df._jdf.queryExecution().analyzed()

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eve_graph_spark.checkpointing import truncate_lineage
+from eve_graph_spark.frames import local_frame
 
 
 def exact_dedup(
@@ -538,10 +539,12 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text", id_col: str = "do
         from eve_graph_spark.operators.graph import fits_driver
 
         if fits_driver(docs.select(F.col(id_col)), driver_local_threshold):
-            return _near_dup_clusters_local(
+            local = _near_dup_clusters_local(
                 docs, text_col, id_col, threshold, carry,
                 num_hashes, bands, rows_per_band, k,
             )
+            if local is not None:
+                return local
     # sig + verify set from one let-bound hash array (one md5 pass per doc
     # instead of the old pipeline's separate signature and verify-set
     # passes over the representative text)
@@ -614,16 +617,23 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text", id_col: str = "do
     return members.join(rep_cluster, "__dg").select(id_col, "cluster", *carry.keys())
 
 
+#: Most bucket pairs, summed over every band's buckets, the driver branch
+#: enumerates (about the pairs of one 2,000-representative bucket).
+_LOCAL_MAX_PAIRS = 2_000_000
+
+
 def _near_dup_clusters_local(docs: DataFrame, text_col: str, id_col: str,
                              threshold: float, carry: dict[str, Column] | None,
                              num_hashes: int, bands: int, rows_per_band: int,
-                             k: int) -> DataFrame:
+                             k: int) -> DataFrame | None:
     """near_dup_clusters' ≤driver_local_threshold branch (uncapped path
     only): the text-derived values (digest, signature, verify set, carry
     expressions) come from ONE engine scan — so string semantics are
     Spark's, bit-identical to the distributed path — and the pair/CC
     stages are integer/double arithmetic replayed in Python. See the
-    call-site comment for the parity argument."""
+    call-site comment for the parity argument. Returns None to decline
+    (more than _LOCAL_MAX_PAIRS bucket pairs in all) — the caller then
+    runs the distributed path."""
     from pyspark.sql import types as T
 
     carry = carry or {}
@@ -652,7 +662,7 @@ def _near_dup_clusters_local(docs: DataFrame, text_col: str, id_col: str,
     out_schema = T.StructType(out_fields)
     spark = docs.sparkSession
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # exact-dup collapse: min-id representative per digest; identical text
     # => identical sig/sh, so the rep's are the group's (same min_by rule)
     rep_of: dict[str, int] = {}
@@ -671,6 +681,11 @@ def _near_dup_clusters_local(docs: DataFrame, text_col: str, id_col: str,
             for j in range(rows_per_band):
                 acc = (acc * 31 + sig[b * rows_per_band + j]) % PORTABLE_P
             buckets.setdefault((b, acc), []).append(rid)
+    if sum(len(m) * (len(m) - 1) // 2 for m in buckets.values()) > _LOCAL_MAX_PAIRS:
+        # all-pairs is quadratic in bucket size: a corpus of case variants
+        # of a few texts puts each group's representatives in one bucket
+        # of every band (~2e8 driver-side pairs at 20k docs)
+        return None
     sh_of = {rep_of[dg]: set(r["__sh"]) for dg, r in rep_row.items()}
     cand: set[tuple[int, int]] = set()
     for members in buckets.values():
@@ -705,7 +720,7 @@ def _near_dup_clusters_local(docs: DataFrame, text_col: str, id_col: str,
         tuple([r[id_col], cluster_of[r["__dg"]], *[r[n] for n in carry]])
         for r in rows
     ]
-    return spark.createDataFrame(out, out_schema)
+    return local_frame(spark, out, out_schema)
 
 
 def portable_simhash_sql(text_col: str, bits: int = 31, k: int = 2) -> str:
@@ -970,7 +985,7 @@ def _semantic_dedup_local(emb: DataFrame, k: int, iterations: int,
     rows = emb.collect()
     out_schema = "id long, cluster int, n_close long, kept boolean"
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     ids = [r["id"] for r in rows]
     if any(i is None for i in ids):
         return None  # NULL ids: keep the distributed path authoritative
@@ -1019,8 +1034,8 @@ def _semantic_dedup_local(emb: DataFrame, k: int, iterations: int,
         n_close[x] = n_close.get(x, 0) + 1
     dups = set(out_b)
     by_id = dict(zip(ids, (int(c) for c in assign)))
-    return spark.createDataFrame(
-        [(int(i), by_id[i], n_close.get(int(i), 0), int(i) not in dups)
+    return local_frame(
+        spark, [(int(i), by_id[i], n_close.get(int(i), 0), int(i) not in dups)
          for i in ids],
         out_schema,
     )

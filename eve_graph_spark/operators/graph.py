@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from eve_graph_spark.checkpointing import truncate_lineage
+from eve_graph_spark.frames import local_frame
 
 BROADCAST_FRONTIER_MAX = 2_000_000  # rows; beyond this, shuffle-join the frontier
 
@@ -311,7 +312,7 @@ def _sssp_local(e: DataFrame, source_ids: list[int],
     """
     best = _relax_local(_collect_adj(e), source_ids, target_id)
     rows = [(n, d, p) for n, (d, p) in best.items()]
-    return e.sparkSession.createDataFrame(rows, _SSSP_SCHEMA)
+    return local_frame(e.sparkSession, rows, _SSSP_SCHEMA)
 
 
 _SSSP_SCHEMA = T.StructType(
@@ -383,7 +384,7 @@ def sssp(
             T.StructField("pred", T.LongType(), True),
         ]
     )
-    dist = spark.createDataFrame([(int(s), 0.0, None) for s in source_ids], seed_schema)
+    dist = local_frame(spark, [(int(s), 0.0, None) for s in source_ids], seed_schema)
     frontier = dist
     frontier_rows = len(source_ids)
     n_iters = n_ckpts = 0
@@ -506,8 +507,8 @@ def sssp_route(
             while path[-1] in pred and len(path) <= 10_000:
                 path.append(pred[path[-1]])
             path.reverse()
-        dist_df = spark.createDataFrame(
-            [(n, d) for n, (d, _p) in best.items()], "node long, dist double"
+        dist_df = local_frame(
+            spark, [(n, d) for n, (d, _p) in best.items()], "node long, dist double"
         )
         return dist_df, path
 
@@ -544,7 +545,7 @@ def _multi_sssp_local(e: DataFrame, source_ids: list[int]) -> DataFrame:
         for s in source_ids
         for n, (d, p) in _relax_local(adj, [s]).items()
     ]
-    return e.sparkSession.createDataFrame(rows, _MSSSP_SCHEMA)
+    return local_frame(e.sparkSession, rows, _MSSSP_SCHEMA)
 
 
 def multi_source_sssp(
@@ -595,8 +596,8 @@ def multi_source_sssp(
     if fits_driver(e, driver_threshold):
         return _multi_sssp_local(e, source_ids)
 
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0.0, None) for s in source_ids], _MSSSP_SCHEMA
+    dist = local_frame(
+        spark, [(int(s), int(s), 0.0, None) for s in source_ids], _MSSSP_SCHEMA
     )
     frontier = dist
     frontier_rows = len(source_ids)
@@ -772,16 +773,16 @@ def _banned_multi_sweep(
     accumulation to `sssp`/`multi_source_sssp`.
     """
     spark = e.sparkSession
-    seeds = spark.createDataFrame(
-        [(int(j), int(s), 0.0, None) for j, s, _, _ in jobs], _JSSSP_SCHEMA
+    seeds = local_frame(
+        spark, [(int(j), int(s), 0.0, None) for j, s, _, _ in jobs], _JSSSP_SCHEMA
     )
     bn = [(int(j), int(n)) for j, _, bns, _ in jobs for n in sorted(bns)]
     be = [(int(j), int(u), int(v)) for j, _, _, bes in jobs for u, v in sorted(bes)]
     bn_df = (
-        F.broadcast(spark.createDataFrame(bn, "jid long, bnode long")) if bn else None
+        F.broadcast(local_frame(spark, bn, "jid long, bnode long")) if bn else None
     )
     be_df = (
-        F.broadcast(spark.createDataFrame(be, "jid long, bsrc long, bdst long"))
+        F.broadcast(local_frame(spark, be, "jid long, bsrc long, bdst long"))
         if be
         else None
     )
@@ -1165,7 +1166,7 @@ def dfs(edges: DataFrame, source: int,
     spark = edges.sparkSession
     if source not in adj:
         # GDS semantics: an absent / isolated source visits just itself
-        return spark.createDataFrame([(source, 1)], "node long, visit_order long")
+        return local_frame(spark, [(source, 1)], "node long, visit_order long")
     visited = [source]
     vis = {source}
     stack = [source]
@@ -1183,8 +1184,8 @@ def dfs(edges: DataFrame, source: int,
             vis.add(nxt)
             visited.append(nxt)
             stack.append(nxt)
-    return spark.createDataFrame(
-        [(n, i + 1) for i, n in enumerate(visited)], "node long, visit_order long"
+    return local_frame(
+        spark, [(n, i + 1) for i, n in enumerate(visited)], "node long, visit_order long"
     )
 
 
@@ -1284,7 +1285,7 @@ def path_as_names(systems: DataFrame, path: list[int]) -> list[str]:
     if not path:
         return []
     spark = systems.sparkSession
-    order = spark.createDataFrame(list(enumerate(path)), "pos int, system_id long")
+    order = local_frame(spark, list(enumerate(path)), "pos int, system_id long")
     rows = (
         order.join(F.broadcast(systems.select("system_id", "name")), "system_id")
         .orderBy("pos")

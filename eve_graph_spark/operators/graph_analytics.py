@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eve_graph_spark.checkpointing import truncate_lineage
+from eve_graph_spark.frames import local_frame
 
 from eve_graph_spark.operators.graph import multi_source_sssp
 
@@ -249,7 +250,7 @@ def connected_components(edges: DataFrame, src_col: str = "src_system_id",
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(n, find(n)) for n in parent]
-        return spark.createDataFrame(rows, "node long, component long")
+        return local_frame(spark, rows, "node long, component long")
 
     if algorithm == "star":
         return _star_components(e, max_iterations, stats_out)
@@ -296,7 +297,7 @@ def incremental_cc_insert(labels: DataFrame, new_edges: DataFrame,
     spark = labels.sparkSession
     batch = e.collect()  # the delta is small by definition of a delta
     endpoints = sorted({r["src"] for r in batch} | {r["dst"] for r in batch})
-    ep_df = spark.createDataFrame([(n,) for n in endpoints] or [], "node long")
+    ep_df = local_frame(spark, [(n,) for n in endpoints], "node long")
     known = (
         ep_df.join(labels, "node", "left")
         .select("node", "component")
@@ -338,13 +339,13 @@ def incremental_cc_insert(labels: DataFrame, new_edges: DataFrame,
         stats_out["merged_components"] = merged
     out = labels
     if remap:
-        m = spark.createDataFrame(remap, "component long, __new long")
+        m = local_frame(spark, remap, "component long, __new long")
         out = out.join(F.broadcast(m), "component", "left").select(
             "node", F.coalesce("__new", "component").alias("component")
         )
     if new_nodes:
         out = out.unionByName(
-            spark.createDataFrame(new_nodes, "node long, component long")
+            local_frame(spark, new_nodes, "node long, component long")
         )
     return out
 
@@ -364,7 +365,7 @@ def _pagerank_local(e: DataFrame, iterations: int, damping: float,
         nodes.add(r["dst"])
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], "node long, rank double")
+        return local_frame(spark, [], "node long, rank double")
     if sources is None:
         base = {v: (1.0 - damping) / n for v in nodes}
         ranks = {v: 1.0 / n for v in nodes}
@@ -382,7 +383,7 @@ def _pagerank_local(e: DataFrame, iterations: int, damping: float,
             for v in outs:
                 sums[v] = sums.get(v, 0) + c
         ranks = {v: base[v] + damping * (sums.get(v, 0) / float(PR_SCALE)) for v in nodes}
-    return spark.createDataFrame(list(ranks.items()), "node long, rank double")
+    return local_frame(spark, list(ranks.items()), "node long, rank double")
 
 
 def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
@@ -551,7 +552,7 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
                 frontier = nxt
             total = sum(dist.values())
             rows.append((s, float(len(dist) - 1) / total if total else 0.0))
-        return spark.createDataFrame(rows, "node long, closeness double")
+        return local_frame(spark, rows, "node long, closeness double")
 
     # the forced-distributed arm must not trip the exact-cost guard on a
     # fixture-sized graph: the guard probes the real size (force_exempt),
@@ -734,8 +735,8 @@ def strongly_connected_components(edges: DataFrame,
                     rep = min(comp)
                     for w in comp:
                         scc_of[w] = rep
-        return spark.createDataFrame(
-            sorted(scc_of.items()), "node long, scc long"
+        return local_frame(
+            spark, sorted(scc_of.items()), "node long, scc long"
         )
 
     # distributed FW-BW-Trim: bulk-peel trivial SCCs, then one pivot/round.
@@ -794,7 +795,7 @@ def strongly_connected_components(edges: DataFrame,
             live.select(F.lit(0).alias("dir"), "src", "dst")
             .unionByName(live_rev.select(F.lit(1).alias("dir"), "src", "dst"))
         )
-        seen = spark.createDataFrame([(0, pivot), (1, pivot)], "dir int, node long")
+        seen = local_frame(spark, [(0, pivot), (1, pivot)], "dir int, node long")
         frontier = seen
         while True:
             nxt = (
@@ -831,7 +832,7 @@ def strongly_connected_components(edges: DataFrame,
             "still unassigned; raise max_pivots (non-trivial SCC count "
             "exceeds the cap)"
         )
-    return out if out is not None else spark.createDataFrame([], "node long, scc long")
+    return out if out is not None else local_frame(spark, [], "node long, scc long")
 
 
 # --- link prediction (neighborhood Jaccard) ----------------------------------
@@ -913,8 +914,7 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src_system_id",
                     if u in adj:
                         adj[u].discard(v)
         rows = [(v,) for v in sorted(adj)]
-        return spark.createDataFrame(rows, "node long") if rows else (
-            spark.createDataFrame([], "node long"))
+        return local_frame(spark, rows, "node long")
 
     cur = e
     for _ in range(max_iterations):
@@ -927,7 +927,7 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src_system_id",
             .transform(truncate_lineage)
         )
         if nxt.limit(1).count() == 0:
-            return spark.createDataFrame([], "node long")
+            return local_frame(spark, [], "node long")
         removed = cur.select("src").distinct().join(
             nxt.select("src").distinct(), "src", "left_anti")
         cur = nxt
@@ -990,8 +990,8 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
             if nxt == labels:
                 break
             labels = nxt
-        return spark.createDataFrame(
-            sorted(labels.items()), "node long, community long"
+        return local_frame(
+            spark, sorted(labels.items()), "node long, community long"
         )
 
     labels = (
@@ -1102,7 +1102,7 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
                 frontier = list(nxt)
                 level += 1
             rows.extend((int(s), int(n), int(d), float(sigma[n])) for n, d in dist.items())
-        return spark.createDataFrame(rows, "source long, node long, dist int, sigma double")
+        return local_frame(spark, rows, "source long, node long, dist int, sigma double")
 
     if source_ids is None:
         raise ValueError(
@@ -1111,8 +1111,8 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
             "sampled source list (betweenness_centrality(sample_sources=k) "
             "does) or raise driver_threshold knowingly."
         )
-    visited = spark.createDataFrame(
-        [(int(s), int(s), 0, 1.0) for s in source_ids],
+    visited = local_frame(
+        spark, [(int(s), int(s), 0, 1.0) for s in source_ids],
         "source long, node long, dist int, sigma double",
     )
     frontier = visited
@@ -1240,7 +1240,7 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
                 (int(s), int(n), float(d), float(sigma[n]), int(depth[n]))
                 for n, d in dist.items()
             )
-        return spark.createDataFrame(rows, out_schema)
+        return local_frame(spark, rows, out_schema)
 
     if source_ids is None:
         raise ValueError(
@@ -1362,8 +1362,8 @@ def _weighted_brandes_local(ew: DataFrame, source_ids: list[int],
         for v, dl in delta.items():
             if v != s:
                 bet[v] += dl * scale
-    return spark.createDataFrame(
-        sorted(bet.items()), "node long, betweenness double"
+    return local_frame(
+        spark, sorted(bet.items()), "node long, betweenness double"
     )
 
 
@@ -1412,8 +1412,8 @@ def _brandes_local(e: DataFrame, source_ids: list[int], scale: float) -> DataFra
         for v, d in delta.items():
             if v != s:
                 bet[v] += d * scale
-    return spark.createDataFrame(
-        sorted(bet.items()), "node long, betweenness double"
+    return local_frame(
+        spark, sorted(bet.items()), "node long, betweenness double"
     )
 
 
@@ -1703,8 +1703,8 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
                         ),
                     )
                     out_rows.append((wid, i, cur))
-        return spark.createDataFrame(
-            out_rows, "walk_id long, step int, node long"
+        return local_frame(
+            spark, out_rows, "walk_id long, step int, node long"
         )
 
     reps = spark.range(walks_per_node).select(F.col("id").alias("rep"))
@@ -1799,7 +1799,7 @@ def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
                         seen.add(v)
                         stack.append(v)
             rows.append((ex, len(seen), int(len(seen) < n - 1)))
-        return spark.createDataFrame(rows, "node long, reached long, is_articulation int")
+        return local_frame(spark, rows, "node long, reached long, is_articulation int")
 
     nodes = e.select("src").union(e.select(F.col("dst").alias("src"))).distinct().select(
         F.col("src").alias("node")
@@ -1862,8 +1862,8 @@ def bridges(edges: DataFrame, src_col: str = "src_system_id",
                     seen.add(v)
                     stack.append(v)
             rows.append((a, b, len(seen), int(len(seen) < n)))
-        return spark.createDataFrame(
-            rows, "src long, dst long, reached long, is_bridge int"
+        return local_frame(
+            spark, rows, "src long, dst long, reached long, is_bridge int"
         )
 
     nodes = e.select("src").union(e.select(F.col("dst").alias("src"))).distinct()
@@ -1955,7 +1955,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
                     nxt = min(nbrs, key=biased)
                     prev, cur = cur, nxt
                     rows.append((wid, i, cur))
-        return spark.createDataFrame(rows, "walk_id long, step int, node long")
+        return local_frame(spark, rows, "walk_id long, step int, node long")
 
     reps = spark.range(walks_per_node).select(F.col("id").alias("rep"))
     cur = nodes.crossJoin(F.broadcast(reps)).select(
@@ -2040,7 +2040,7 @@ def set_exclusion_reach(edges: DataFrame, seeds: DataFrame, excluded: DataFrame,
                         seen.add(v)
                         stack.append(v)
             rows.append((k, len(seen)))
-        return spark.createDataFrame(rows, "k long, reachable long")
+        return local_frame(spark, rows, "k long, reachable long")
 
     reached = seeds
     prev = -1
@@ -2105,16 +2105,16 @@ def diameter_estimate(
     )
     if fits_driver(en, driver_threshold):
         peak_node, peak_dist, lb = double_sweep_local(_collect_adj(en), int(start))
-        return spark.createDataFrame(
-            [(int(start), peak_node, peak_dist, lb)],
+        return local_frame(
+            spark, [(int(start), peak_node, peak_dist, lb)],
             "sweep_start long, sweep_peak long, ecc_start double, diameter_lb double",
         )
     d1 = sssp(e, [int(start)], weight_col=w, src_col=src_col, dst_col=dst_col)
     peak = d1.orderBy(F.desc("dist"), F.asc("node")).limit(1).collect()[0]
     d2 = sssp(e, [int(peak["node"])], weight_col=w, src_col=src_col, dst_col=dst_col)
     lb = d2.agg(F.max("dist").alias("m")).collect()[0]["m"]
-    return spark.createDataFrame(
-        [(int(start), int(peak["node"]), float(peak["dist"]), float(lb))],
+    return local_frame(
+        spark, [(int(start), int(peak["node"]), float(peak["dist"]), float(lb))],
         "sweep_start long, sweep_peak long, ecc_start double, diameter_lb double",
     )
 
@@ -2255,7 +2255,7 @@ def _eigenvector_local(e: DataFrame, iterations: int) -> DataFrame:
         q = sum(sv * sv for sv in s.values())
         norm = math.sqrt(float(q)) if q > 0 else 1.0
         x = {v: s.get(v, 0) / norm for v in nodes}
-    return spark.createDataFrame([(v, x[v]) for v in nodes], "node long, score double")
+    return local_frame(spark, [(v, x[v]) for v in nodes], "node long, score double")
 
 
 def eigenvector_centrality(edges: DataFrame, iterations: int = 3,
@@ -2334,8 +2334,8 @@ def _hits_local(e: DataFrame, iterations: int) -> DataFrame:
     for _ in range(iterations):
         auth = _norm_step(hub, forward=True)
         hub = _norm_step(auth, forward=False)
-    return spark.createDataFrame(
-        [(v, hub[v], auth[v]) for v in nodes], "node long, hub double, authority double"
+    return local_frame(
+        spark, [(v, hub[v], auth[v]) for v in nodes], "node long, hub double, authority double"
     )
 
 
@@ -2529,8 +2529,8 @@ def community_metrics(edges: DataFrame, labels: DataFrame,
                 float(scale * (i * m - vol_out * vol_in)) / (float(m) * float(m))
             )
             out_rows.append((c, nodes_ct[c], i, o, inc, cond, mod))
-        return spark.createDataFrame(
-            out_rows,
+        return local_frame(
+            spark, out_rows,
             "community long, nodes long, internal long, outgoing long, "
             "incoming long, conductance_fp long, modularity_fp long",
         )
@@ -2669,8 +2669,8 @@ def _mst_local(und_rows: list, spark) -> DataFrame:
                 relabel[x] = lbl
         comp = {v: relabel.get(c, c) for v, c in comp.items()}
     rows = sorted(chosen)
-    return spark.createDataFrame(
-        [(a, b, w) for a, b, w in rows], "src long, dst long, weight_fp long"
+    return local_frame(
+        spark, [(a, b, w) for a, b, w in rows], "src long, dst long, weight_fp long"
     )
 
 
@@ -2773,7 +2773,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "risk",
                 f"(forest would be incomplete) — raise max_rounds"
             )
     if chosen is None:
-        return edges.sparkSession.createDataFrame([], "src long, dst long, weight_fp long")
+        return local_frame(edges.sparkSession, [], "src long, dst long, weight_fp long")
     return chosen.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), F.col("wfp").alias("weight_fp")
     )
@@ -2809,8 +2809,8 @@ def _dag_local(e_rows: list, max_iterations: int, spark) -> DataFrame:
                 q.append(v)
     if seen != len(nodes):
         raise ValueError("dag_longest_paths: graph has a cycle")
-    return spark.createDataFrame(
-        [(v, level[v], dist[v]) for v in nodes],
+    return local_frame(
+        spark, [(v, level[v], dist[v]) for v in nodes],
         "node long, topo_level long, longest_dist_fp long",
     )
 
@@ -2930,8 +2930,8 @@ def _k_truss_local(und_rows: list, k: int, spark) -> DataFrame:
         }
         dead = {e for e in edges if sup[e] < k - 2}
         if not dead:
-            return spark.createDataFrame(
-                sorted((a, b, sup[(a, b)]) for a, b in edges),
+            return local_frame(
+                spark, sorted((a, b, sup[(a, b)]) for a, b in edges),
                 "src long, dst long, support long",
             )
         edges -= dead
@@ -3226,8 +3226,8 @@ def louvain(edges: DataFrame, rounds: int = 4,
         )
         comm = _louvain_core(_adj_from_und(und_l), sl_l, rounds,
                              gnum, gden, stats_out)
-        return edges.sparkSession.createDataFrame(
-            sorted(comm.items()), "node long, community long"
+        return local_frame(
+            edges.sparkSession, sorted(comm.items()), "node long, community long"
         )
     # undirected weight = MIN across the collapsed directed/parallel edges
     # (the MST convention); with weight_col=None this reduces to the
@@ -3404,8 +3404,8 @@ def community_aggregate(edges: DataFrame, labels: DataFrame,
         )
         lab = {r["node"]: r["community"] for r in labels.collect()}
         sup = _aggregate_core(und_l, sl_l, lab)
-        return edges.sparkSession.createDataFrame(
-            sorted((a, b, w) for (a, b), w in sup.items()),
+        return local_frame(
+            edges.sparkSession, sorted((a, b, w) for (a, b), w in sup.items()),
             "src long, dst long, wfp long",
         )
     # same undirected collapse as louvain (MIN across directed/parallel
@@ -3439,7 +3439,7 @@ def _multilevel_local(rows, levels: int, rounds: int, refine: bool, spark,
                       stats_out: dict | None = None) -> DataFrame:
     """Driver fast path for `louvain_multilevel` / `leiden`: the whole
     level stack — local moves, (optional) refinement, aggregation, label
-    composition — over Python dicts, ONE collect and ONE createDataFrame
+    composition — over Python dicts, ONE collect and ONE local_frame
     total. Each phase mirrors its distributed twin bit-for-bit
     (`_louvain_core` / `_refine_core` / `_aggregate_core`), so results
     are identical; only the Spark job count changes (r10 verdict item 4:
@@ -3468,8 +3468,8 @@ def _multilevel_local(rows, levels: int, rounds: int, refine: bool, spark,
         stats_out["levels"] = levels
         stats_out["per_level"] = per_level
         stats_out["did_converge"] = per_level[-1]["did_converge"]
-    return spark.createDataFrame(
-        sorted(mapping.items()), "node long, community long"
+    return local_frame(
+        spark, sorted(mapping.items()), "node long, community long"
     )
 
 
@@ -3586,8 +3586,8 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
         }
         lab = {r["node"]: r["community"] for r in labels.collect()}
         refined = _refine_core(pairs, lab)
-        return edges.sparkSession.createDataFrame(
-            sorted(refined.items()), "node long, community long"
+        return local_frame(
+            edges.sparkSession, sorted(refined.items()), "node long, community long"
         )
     und = (
         e.filter(F.col("src") != F.col("dst"))
@@ -3697,7 +3697,7 @@ def _article_rank_local(e: DataFrame, iterations: int, damping: float) -> DataFr
         nodes.add(r["dst"])
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], "node long, rank double")
+        return local_frame(spark, [], "node long, rank double")
     m = sum(len(v) for v in adj.values())
     base = (1.0 - damping) / n
     ranks = {v: 1.0 / n for v in nodes}
@@ -3710,7 +3710,7 @@ def _article_rank_local(e: DataFrame, iterations: int, damping: float) -> DataFr
             for v in outs:
                 sums[v] = sums.get(v, 0) + c
         ranks = {v: base + damping * (sums.get(v, 0) / float(PR_SCALE)) for v in nodes}
-    return spark.createDataFrame(list(ranks.items()), "node long, rank double")
+    return local_frame(spark, list(ranks.items()), "node long, rank double")
 
 
 def article_rank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
@@ -3815,7 +3815,7 @@ def _fastrp_local(adj_rows: list, dim: int, iterations: int, spark) -> DataFrame
         norm = math.sqrt(norm2)
         out[v] = [(acc[v][j] / norm if norm > 0.0 else 0.0) for j in range(dim)]
     schema = "node long, " + ", ".join(f"e{j} double" for j in range(dim))
-    return spark.createDataFrame([(v, *out[v]) for v in nodes], schema)
+    return local_frame(spark, [(v, *out[v]) for v in nodes], schema)
 
 
 def fastrp_embeddings(edges: DataFrame, dim: int = FASTRP_DIM, iterations: int = 2,
@@ -3954,8 +3954,8 @@ def _k1_local(adj_rows: list, max_rounds: int, spark) -> DataFrame:
             f"k1_coloring: {len(nodes) - len(color)} nodes uncolored after "
             f"{max_rounds} rounds"
         )
-    return spark.createDataFrame(
-        sorted(color.items()), "node long, color long"
+    return local_frame(
+        spark, sorted(color.items()), "node long, color long"
     )
 
 
@@ -4000,7 +4000,7 @@ def k1_coloring(edges: DataFrame, max_rounds: int = 12,
     nodes = adj.select("u").distinct().select(
         F.col("u").alias("node"), prio_expr.alias("prio")
     ).transform(truncate_lineage)
-    colored = nodes.sparkSession.createDataFrame([], "node long, color long")
+    colored = local_frame(nodes.sparkSession, [], "node long, color long")
     uncolored = nodes
     deg = adj.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     for _ in range(max_rounds):
@@ -4082,7 +4082,7 @@ def _sllpa_local(adj_rows: list, rounds: int, min_count: int, spark) -> DataFram
         (v, lbl, cnt)
         for v in nodes for lbl, cnt in sorted(mem[v].items()) if cnt >= min_count
     ]
-    return spark.createDataFrame(rows, "node long, label long, cnt long")
+    return local_frame(spark, rows, "node long, label long, cnt long")
 
 
 def sllpa(edges: DataFrame, rounds: int = 5, min_count: int = 2,

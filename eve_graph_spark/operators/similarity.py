@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eve_graph_spark.checkpointing import truncate_lineage
+from eve_graph_spark.frames import local_frame
 
 FIXED_POINT_SCALE = 1_000_000_000  # products are in [-1,1]·dim → fits long
 
@@ -185,7 +186,7 @@ def _cents_1row(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
     # compiles once and is cache-hit afterwards.
     rows = [(int(c), _unit_list(v)) for c, v in cents]
     return (
-        spark.createDataFrame(rows, "cell long, cvec array<double>")
+        local_frame(spark, rows, "cell long, cvec array<double>")
         .groupBy()
         .agg(F.sort_array(F.collect_list(F.struct("cell", "cvec"))).alias("__cents"))
     )
@@ -308,10 +309,10 @@ def ivf_topk_from_index(
             qdata.append((int(r[id_col]), int(cell_ids[i]),
                           [float(x) for x in r[vec_col]]))
     if not qdata:
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long, cosine double, rank int"
+        return local_frame(
+            spark, [], f"query_id long, {id_col} long, cosine double, rank int"
         )
-    qdf = spark.createDataFrame(qdata, "query_id long, cell long, qvec array<double>")
+    qdf = local_frame(spark, qdata, "query_id long, cell long, qvec array<double>")
     probe_cells = sorted({c for _, c, _ in qdata})
     pairs = (
         index.filter(F.col("cell").isin(probe_cells))  # static partition pruning
@@ -463,8 +464,8 @@ def _ivf_topk_local(
             (int(qid), int(vid), float(c), r + 1)
             for r, (c, vid) in enumerate(ranked)
         )
-    return embeddings.sparkSession.createDataFrame(
-        out, f"query_id long, {id_col} long, cosine double, rank int"
+    return local_frame(
+        embeddings.sparkSession, out, f"query_id long, {id_col} long, cosine double, rank int"
     )
 
 
@@ -596,8 +597,8 @@ def ivf_pq_index(
             (int(r[id_col]), int(cells_np[i]), [int(c) for c in codes_np[i]])
             for i, r in enumerate(rows)
         ]
-        index = spark.createDataFrame(
-            enc, f"{id_col} long, cell bigint, codes array<int>"
+        index = local_frame(
+            spark, enc, f"{id_col} long, cell bigint, codes array<int>"
         )
         # the training collect covered the WHOLE corpus here — expose it
         # (and the driver-encoded index rows) so ivf_pq_topk can derive
@@ -619,11 +620,11 @@ def ivf_pq_index(
     # (argmin L2 per subspace) — pure JVM array expressions against one
     # broadcast row, a narrow map over the corpus
     ucents = _unit_rows_np(np.array(model["cents"]))
-    cent_row = spark.createDataFrame(
-        [(sorted(zip(model["cell_ids"], [[float(x) for x in r] for r in ucents])),)],
+    cent_row = local_frame(
+        spark, [(sorted(zip(model["cell_ids"], [[float(x) for x in r] for r in ucents])),)],
         "cents array<struct<cell:bigint,cvec:array<double>>>",
     )
-    cb_row = spark.createDataFrame([(codebooks,)], "cb array<array<array<double>>>")
+    cb_row = local_frame(spark, [(codebooks,)], "cb array<array<array<double>>>")
     scores = F.transform(F.col("cents"), lambda s: dot_expr(F.col(vec_col), s["cvec"]))
     cell = F.element_at(
         F.transform(F.col("cents"), lambda s: s["cell"]),
@@ -740,8 +741,8 @@ def ivf_pq_topk(
         for i in order[:n_probe]:
             qdata.append((int(r[id_col]), int(cell_ids[i]), lut))
     if not qdata:
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long, cosine double, rank int"
+        return local_frame(
+            spark, [], f"query_id long, {id_col} long, cosine double, rank int"
         )
     # r14 (guide §5.3/§1.2): when the index build already collected the
     # whole corpus (_corpus_rows) AND encoded it driver-side (_index_rows),
@@ -805,11 +806,11 @@ def ivf_pq_topk(
             out.extend(
                 (qid, vid, cos, rk + 1) for rk, (vid, cos) in enumerate(rer[:k])
             )
-        return spark.createDataFrame(
-            out, f"query_id long, {id_col} long, cosine double, rank int"
+        return local_frame(
+            spark, out, f"query_id long, {id_col} long, cosine double, rank int"
         )
-    qdf = spark.createDataFrame(
-        qdata, f"query_id long, cell long, __lut array<array<double>>"
+    qdf = local_frame(
+        spark, qdata, f"query_id long, cell long, __lut array<array<double>>"
     )
     # stage 1: ADC over the narrow index — codes ride the scan, vectors
     # don't. The LITERAL probe-cell filter is semantically redundant with
@@ -840,8 +841,8 @@ def ivf_pq_topk(
         .select("query_id", id_col)
     )
     # stage 2: exact cosine on the shortlist only
-    qvec_df = spark.createDataFrame(
-        [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in qrows],
+    qvec_df = local_frame(
+        spark, [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in qrows],
         "query_id long, qvec array<double>",
     )
     scored = (
@@ -1002,11 +1003,11 @@ def lsh_topk_from_index(
         .select(id_col, vec_col, "bucket").collect()
     )
     if not qrows:
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long, cosine double, rank int"
+        return local_frame(
+            spark, [], f"query_id long, {id_col} long, cosine double, rank int"
         )
-    qdf = spark.createDataFrame(
-        [(int(r[id_col]), [float(x) for x in r[vec_col]], int(r["bucket"]))
+    qdf = local_frame(
+        spark, [(int(r[id_col]), [float(x) for x in r[vec_col]], int(r["bucket"]))
          for r in qrows],
         "query_id long, qvec array<double>, bucket long",
     )

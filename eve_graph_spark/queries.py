@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eve_graph_spark.checkpointing import truncate_lineage
-
+from eve_graph_spark.frames import local_frame
 from eve_graph_spark.functions.risk import risk_expr
 from eve_graph_spark.operators import relational as R
 from eve_graph_spark.operators.dedup import portable_band_buckets_sql
@@ -580,8 +580,8 @@ def safest_route_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         jumps, 0, 13, weight_col="risk",
         src_col="src_system_id", dst_col="dst_system_id",
     )
-    order = spark.createDataFrame(
-        list(enumerate(path)), "pos long, system_id long"
+    order = local_frame(
+        spark, list(enumerate(path)), "pos long, system_id long"
     )
     return (
         dist.withColumnRenamed("node", "system_id")
@@ -691,7 +691,7 @@ def wormhole_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s_suppkey") % 25).cast("long").alias("in_system_id"),
         ((F.col("s_suppkey") * 7 + 3) % 25).cast("long").alias("out_system_id"),
     )
-    reset = spark.createDataFrame([(2,), (17,)], "system_id long")
+    reset = local_frame(spark, [(2,), (17,)], "system_id long")
     kept = R.drop_node_connections(jumps, reset)
     wh = R.filter_wormhole_signatures(sigs).select(
         F.col("in_system_id").alias("src_system_id"),
@@ -2734,8 +2734,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_df = None
     if "_corpus_rows" in model:
         qset = {int(q) for q in ANN_QUERY_IDS}
-        q_df = spark.createDataFrame(
-            [
+        q_df = local_frame(
+            spark, [
                 (int(r["vec_id"]), [float(x) for x in r["embedding"]])
                 for r in model["_corpus_rows"] if int(r["vec_id"]) in qset
             ],
@@ -6308,7 +6308,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl"),
     )
-    q = spark.createDataFrame(list(BM25_QUERIES), "query_id long, term string")
+    q = local_frame(spark, list(BM25_QUERIES), "query_id long, term string")
     w = base.select(
         "doc_id", F.size("ws").cast("long").alias("dl"), F.explode("ws").alias("word")
     )
@@ -6779,8 +6779,8 @@ def graph_diameter_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                   src_col="src", dst_col="dst")
         peak_node, peak_dist = int(peak["node"]), float(peak["dist"])
         lb = d2.agg(F.max("dist").alias("m")).collect()[0]["m"]
-    return spark.createDataFrame(
-        [(0, int(peak_node), int(peak_dist), int(lb))],
+    return local_frame(
+        spark, [(0, int(peak_node), int(peak_dist), int(lb))],
         "sweep_start long, sweep_peak long, ecc_start long, diameter_lb long",
     )
 
@@ -6867,8 +6867,8 @@ def risk_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in range(9)
         if (rest := [n for n in low9 if n not in set(top8[:k])])
     ]
-    excl = spark.createDataFrame(excl_rows, "k long, node long")
-    seeds = spark.createDataFrame(seed_rows, "k long, node long")
+    excl = local_frame(spark, excl_rows, "k long, node long")
+    seeds = local_frame(spark, seed_rows, "k long, node long")
     return set_exclusion_reach(choke, seeds, excl, src_col="src", dst_col="dst").select(
         F.col("k").alias("removed"), "reachable"
     )
@@ -7339,7 +7339,7 @@ def route_avoiding_risky(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist, path = sssp_route(
         e.withColumn("cost", F.lit(1).cast("long")), 0, 13, weight_col="cost"
     )
-    order = spark.createDataFrame(list(enumerate(path)), "pos long, system_id long")
+    order = local_frame(spark, list(enumerate(path)), "pos long, system_id long")
     return (
         dist.withColumnRenamed("node", "system_id")
         .join(F.broadcast(order), "system_id")
@@ -7448,8 +7448,8 @@ def route_alternatives_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r, (cost, path) in enumerate(routes)
         for pos, n in enumerate(path)
     ]
-    return spark.createDataFrame(
-        rows, "rank long, pos long, system_id long, total_cost_fp long"
+    return local_frame(
+        spark, rows, "rank long, pos long, system_id long, total_cost_fp long"
     )
 
 
@@ -7507,8 +7507,8 @@ def a_star_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = a_star(e, build_coords(spark, sf_dir), 1, 13, weight_col="w")
     cost, path = res
     rows = [(pos, int(n), int(cost)) for pos, n in enumerate(path)]
-    return spark.createDataFrame(
-        rows, "pos long, system_id long, total_cost_fp long"
+    return local_frame(
+        spark, rows, "pos long, system_id long, total_cost_fp long"
     )
 
 
@@ -8462,7 +8462,7 @@ def louvain_multilevel_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").cast("long").alias("n")
     )
     cnt = nation.groupBy().agg(F.count(F.lit(1)).alias("cnt"))
-    pairs = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "i long, j long")
+    pairs = local_frame(spark, [(0, 1), (0, 2), (1, 2)], "i long, j long")
     intra = nation.crossJoin(F.broadcast(pairs)).select(
         (F.col("n") * 3 + F.col("i")).alias("src_system_id"),
         (F.col("n") * 3 + F.col("j")).alias("dst_system_id"),
@@ -8501,7 +8501,7 @@ def louvain_gamma4_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").cast("long").alias("n")
     )
     cnt = nation.groupBy().agg(F.count(F.lit(1)).alias("cnt"))
-    pairs = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "i long, j long")
+    pairs = local_frame(spark, [(0, 1), (0, 2), (1, 2)], "i long, j long")
     intra = nation.crossJoin(F.broadcast(pairs)).select(
         (F.col("n") * 3 + F.col("i")).alias("src_system_id"),
         (F.col("n") * 3 + F.col("j")).alias("dst_system_id"),
@@ -8583,7 +8583,7 @@ def leiden_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").cast("long").alias("n")
     )
     cnt = nation.groupBy().agg(F.count(F.lit(1)).alias("cnt"))
-    pairs = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "i long, j long")
+    pairs = local_frame(spark, [(0, 1), (0, 2), (1, 2)], "i long, j long")
     intra = nation.crossJoin(F.broadcast(pairs)).select(
         (F.col("n") * 3 + F.col("i")).alias("src_system_id"),
         (F.col("n") * 3 + F.col("j")).alias("dst_system_id"),

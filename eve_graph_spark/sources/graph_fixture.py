@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eve_graph_spark.frames import local_frame
 from eve_graph_spark.functions.risk import risk_expr
 
 WORMHOLE_PAIRS = ((2, 17), (5, 21))
@@ -132,7 +133,7 @@ def build_wormhole_edges(spark: SparkSession) -> DataFrame:
     for a, b in WORMHOLE_PAIRS:
         rows.append((a, b))
         rows.append((b, a))
-    return spark.createDataFrame(rows, "src_system_id long, dst_system_id long").select(
+    return local_frame(spark, rows, "src_system_id long, dst_system_id long").select(
         "src_system_id",
         "dst_system_id",
         F.lit(1).cast("long").alias("cost"),
@@ -281,7 +282,7 @@ def _build_choke_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(hub_rank.alias("b"), F.col("b.rk") == F.col("a.rk") + 1)
         .select(F.col("a.hub").alias("src"), F.col("b.hub").alias("dst"))
     )
-    worm = spark.createDataFrame(list(WORMHOLE_PAIRS), "src long, dst long")
+    worm = local_frame(spark, list(WORMHOLE_PAIRS), "src long, dst long")
     fwd = leaf.union(chain).union(worm)
     return (
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -284,3 +284,25 @@ def test_ivf_local_and_distributed_paths_agree(spark):
     }
     assert local == dist
     assert len(local) == 10
+
+
+def test_near_dup_local_branch_declines_over_its_pair_budget(spark, monkeypatch):
+    # two groups of 20 case variants of one word each: every doc has its
+    # own digest but its group's lowercased shingle, so each group fills
+    # one bucket per band. One group's buckets come to 4 x 190 = 760
+    # pairs, under the budget; both groups' come to 1,520, over it, and the
+    # driver branch must decline.
+    from eve_graph_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_PAIRS", 1_000)
+    texts = [
+        "".join(c.upper() if mask >> i & 1 else c for i, c in enumerate(word))
+        for word in ("abcdefghijkl", "mnopqrstuvwx")
+        for mask in range(20)
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    assert dedup._near_dup_clusters_local(docs, "text", "doc_id", 0.5, None, 8, 4, 2, 3) is None
+    got = sorted(map(tuple, dedup.near_dup_clusters(docs).collect()))
+    dist = sorted(map(tuple, dedup.near_dup_clusters(docs, driver_local_threshold=0).collect()))
+    assert got == dist
+    assert got == [(i, 0 if i < 20 else 20) for i in range(40)]  # min id per group
