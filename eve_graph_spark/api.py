@@ -49,28 +49,30 @@ class GraphEngine:
         self._names: tuple[DataFrame, tuple | None] | None = None
 
     def _name_snapshot(self) -> tuple[dict[str, int], dict[int, str]] | None:
-        """(name → id, id → name) of `systems`, collected in one job on
-        first use; None above DRIVER_PATH_MAX_NODES rows and in the
+        """(name → id, id → name) of `systems`, collected as Arrow in one
+        job on first use; None above DRIVER_PATH_MAX_NODES rows and in the
         forced-distributed arm. Keyed by the identity of the `systems`
-        frame, so any reassignment (a refresh, stream anchoring, a caller)
-        re-collects it, and a route racing a refresh on another thread
-        cannot keep a snapshot of the old table. A duplicated name
-        resolves to its first row, like the point lookup."""
+        frame, so any reassignment (a refresh, a caller) re-collects it,
+        and a route racing a refresh on another thread cannot keep a
+        snapshot of the old table. A duplicated name resolves to its first
+        row, like the point lookup."""
         if force_distributed():
             return None
         systems = self.systems
         if self._names is None or self._names[0] is not systems:
-            rows = (
+            t = (
                 systems.select("system_id", "name")
                 .limit(DRIVER_PATH_MAX_NODES + 1)
-                .collect()
+                .toArrow()
             )
             snap = None
-            if len(rows) <= DRIVER_PATH_MAX_NODES:
+            if t.num_rows <= DRIVER_PATH_MAX_NODES:
+                sids = t.column("system_id").to_pylist()
+                names = t.column("name").to_pylist()
                 ids: dict[str, int] = {}
-                for r in rows:
-                    ids.setdefault(r["name"], r["system_id"])
-                snap = (ids, {r["system_id"]: r["name"] for r in rows})
+                for name, sid in zip(names, sids):
+                    ids.setdefault(name, sid)
+                snap = (ids, dict(zip(sids, names)))
             self._names = (systems, snap)
         return self._names[1]
 
@@ -203,42 +205,63 @@ class GraphEngine:
             }
         return [(cost, [names[n] for n in path]) for cost, path in routes]
 
+    # Every refresh materializes each table it reassigns ONCE, right after
+    # deriving it (`truncate_lineage`), the way the reference reads and
+    # writes stored Neo4j rows. The projection rebuild, the caller's row
+    # count, the name snapshot and the next refresh then all read that
+    # checkpointed leaf: a refresh costs the same however many came before
+    # it, and a dropDuplicates-based dedup is decided once per refresh.
+    # The replaced anchor is NOT unpersisted here: frames derived from it
+    # (a projection's recovery lineage, a route in flight on a stream
+    # thread, the frame an earlier refresh returned) may still read it.
+    # Spark's ContextCleaner frees its blocks once nothing references it.
+
     # --- A3: POST /systems/refresh (sync.rs:121-170) ------------------------
     def refresh_systems(self, esi_systems: DataFrame) -> DataFrame:
-        """Diff-sync: remove DB∖ESI, add ESI∖DB, dedup, return new table."""
+        """Diff-sync: remove DB∖ESI, add ESI∖DB, dedup; the new table is
+        materialized once and returned."""
         to_add, to_remove = R.diff_sync(
             esi_systems.select("system_id"), self.systems.select("system_id"), "system_id"
         )
         kept = R.remove_by_ids(self.systems, to_remove, "system_id")
         added = esi_systems.join(to_add, "system_id", "left_semi")
-        self.systems = R.dedup_keep_first(kept.unionByName(added), ["system_id"])
+        self.systems = R.dedup_keep_first(
+            kept.unionByName(added), ["system_id"]
+        ).transform(truncate_lineage)
         return self.systems
 
     # --- A4: POST /systems/risk (sync.rs:296-321) ---------------------------
     def refresh_risk(self, kills: DataFrame, jumps_activity: DataFrame) -> DataFrame:
         """Risk pipeline: update activity columns (W6/W7), baseline (F2),
         per-system risk (F1), write onto inbound edges (W8), rebuild the
-        risk projection (G6). Three small joins, one pass over edges."""
+        risk projection (G6). Three small joins, one pass over edges.
+        `systems` and `jumps` are each materialized once, before the
+        projection reads them; the new `jumps` is returned."""
         sys = R.keyed_update(self.systems, kills, "system_id", "kills", "ship_kills", default=0)
         sys = R.keyed_update(sys, jumps_activity, "system_id", "jumps", "ship_jumps", default=0)
-        self.systems = sys
+        self.systems = sys = sys.transform(truncate_lineage)
         base = galaxy_baseline(kills, jumps_activity)
         sys_risk = sys.crossJoin(F.broadcast(base)).select(
             "system_id", risk_expr(F.col("kills"), F.col("jumps"), F.col("baseline")).alias("risk")
         )
-        self.jumps = R.update_inbound_edge_risk(self.jumps, sys_risk)
+        self.jumps = R.update_inbound_edge_risk(self.jumps, sys_risk).transform(
+            truncate_lineage
+        )
         self._gate_base = None  # full-table rewrite invalidates the poll split
         self.build_risk_projection()
         return self.jumps
 
     # --- A5: POST /stargates/refresh (sync.rs:172-221) ----------------------
     def refresh_stargates(self, stargates: DataFrame) -> DataFrame:
-        """Derive gate edges (W4) and upsert the missing ones (W5), then
-        rebuild the cost projection."""
+        """Derive gate edges (W4) and upsert the missing ones (W5),
+        materialize the new `jumps` once, then rebuild the cost
+        projection from it."""
         gate_edges = R.derive_gate_edges(stargates, self.systems).withColumn(
             "risk", F.lit(None).cast("double")
         ).select("src_system_id", "dst_system_id", "cost", "risk", "kind")
-        self.jumps = R.upsert_edges_if_missing(self.jumps, gate_edges)
+        self.jumps = R.upsert_edges_if_missing(self.jumps, gate_edges).transform(
+            truncate_lineage
+        )
         self._gate_base = None  # gate set changed — rebuild the poll split
         self.build_cost_projection()
         return self.jumps
@@ -246,9 +269,10 @@ class GraphEngine:
     # --- A6: POST /wormholes/refresh (main.rs:201-212, sync.rs:66-94) -------
     def refresh_wormholes(self, signatures: DataFrame, reset_names: tuple[str, ...] = ("Thera", "Turnur")) -> DataFrame:
         """Thera/Turnur connection reset (W13) + wormhole filter (D3) +
-        bidirectional insert (W3) + cost projection rebuild."""
+        bidirectional insert (W3), the new `jumps` materialized once, then
+        the cost projection rebuilt from it."""
         reset_ids = self.systems.filter(F.col("name").isin(list(reset_names))).select("system_id")
-        self.jumps = R.drop_node_connections(self.jumps, reset_ids)
+        kept = R.drop_node_connections(self.jumps, reset_ids)
         wh = R.filter_wormhole_signatures(signatures).select(
             F.col("in_system_id").alias("src_system_id"),
             F.col("out_system_id").alias("dst_system_id"),
@@ -256,7 +280,9 @@ class GraphEngine:
             F.lit(None).cast("double").alias("risk"),
             F.lit("wormhole").alias("kind"),
         )
-        self.jumps = R.upsert_edges_if_missing(self.jumps, R.bidirectional_edges(wh))
+        self.jumps = R.upsert_edges_if_missing(
+            kept, R.bidirectional_edges(wh)
+        ).transform(truncate_lineage)
         self._gate_base = None  # full rewrite — the poll split re-derives lazily
         self.build_cost_projection()
         return self.jumps
@@ -270,13 +296,16 @@ class GraphEngine:
     ) -> DataFrame:
         """Delta form of `refresh_wormholes`: wormholes churn every poll
         (A6, sync.rs:66-94), but the edge DELTA per poll is a handful of
-        signatures — re-deriving the whole cost projection per poll is
-        the scale leak. This applies exactly the same edge-table update
-        as the full path, then patches the persisted projection with
+        signatures. This applies exactly the same edge-table update as
+        the full path, then patches the persisted projection with
         (removed reset-system edges, newly-missing wormhole edges) via
         `ProjectionRegistry.apply_delta` — one left_anti + union over
-        the CACHED projection, never the full derivation. Routes after
-        this are identical to a full rebuild (test-pinned e2e).
+        the CACHED projection, never a scan of the edge table. Routes
+        after this are identical to a full rebuild (test-pinned e2e).
+        Since the full path reads an anchored table too, this form
+        writes fewer shuffle rows per poll but runs more probe jobs; at
+        ~188k edges on 4 cores it is the slower of the two (SCALE.md
+        "Incremental refresh").
 
         `stats_out` gets apply_delta's removed_rows/added_rows — both
         delta-sized.
@@ -460,12 +489,13 @@ def risk_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
     baseline is a global Σkills/Σjumps, so every system's risk — and every
     edge of the risk projection — legitimately moves with each poll. The
     full recompute IS the reference semantics (sync.rs:296-321 re-derives
-    every system's risk each cycle); what the streaming wiring must add is
-    bounded lineage, so after each applied poll the engine's systems and
-    jumps tables are re-anchored with an eager localCheckpoint — N polls
+    every system's risk each cycle). Lineage stays bounded because
+    `refresh_risk` itself materializes the new systems and jumps tables
+    once each — the same code path as POST /systems/risk — so N polls
     cost N × one-refresh work, never a growing join chain (the r7
     wormhole-overlay lesson, measured in
-    scripts/measure_incremental_refresh.py).
+    scripts/measure_incremental_refresh.py). The replaced tables are
+    freed by Spark's ContextCleaner once nothing references them.
 
     Full-state-per-poll semantics match `wormhole_stream_handler`: the ESI
     activity endpoints return the whole galaxy's counters per fetch, so a
@@ -483,9 +513,8 @@ def risk_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
     (b) The applied poll is reduced to ONE row per system_id (max
     counters — deterministic) before keyed_update, so a poll split across
     files cannot fan out the systems table through the update join.
-    (c) `stats_out["polls"]` records a poll only AFTER refresh_risk and
-    the checkpoint anchoring succeed — a mid-batch failure must not log
-    the poll as applied.
+    (c) `stats_out["polls"]` records a poll only AFTER refresh_risk
+    succeeds — a mid-batch failure must not log the poll as applied.
     """
     applied: dict[str, int | None] = {"last": None}
 
@@ -511,9 +540,6 @@ def risk_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
             batch_df.select("system_id", "ship_kills"),
             batch_df.select("system_id", "ship_jumps"),
         )
-        # anchor: constant lineage depth across polls
-        engine.systems = engine.systems.transform(truncate_lineage)
-        engine.jumps = engine.jumps.transform(truncate_lineage)
         if last is not None:
             applied["last"] = last
             if stats_out is not None:

@@ -232,14 +232,19 @@ DRIVER_SSSP_MAX_EDGES = 2_000_000  # below this, solve on the driver
 
 
 def _collect_adj(e: DataFrame) -> dict[int, list[tuple[int, float]]]:
+    # collected as Arrow columns: a JVM-side batch collect, and building
+    # plain ints/floats from three columns skips per-edge Row objects
+    t = e.select("src", "dst", "weight").toArrow()
     adj: dict[int, list[tuple[int, float]]] = {}
     # edges into one node mostly carry one weight (cost ≡ 1, risk is the
     # inbound system's), so equal (dst, weight) pairs share one tuple —
     # the map stays resident for a projection's lifetime (adjacency())
     pairs: dict[tuple[int, float], tuple[int, float]] = {}
-    for r in e.collect():
-        pair = (r["dst"], r["weight"])
-        adj.setdefault(r["src"], []).append(pairs.setdefault(pair, pair))
+    for src, pair in zip(
+        t.column("src").to_pylist(),
+        zip(t.column("dst").to_pylist(), t.column("weight").to_pylist()),
+    ):
+        adj.setdefault(src, []).append(pairs.setdefault(pair, pair))
     return adj
 
 

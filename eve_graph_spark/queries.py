@@ -52,95 +52,14 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver oracle-checks the FIRST 50 entries of queries() per round.
-# The check order is DERIVED from the committed CORRECTNESS_r*.json files
-# (no hand-maintained list): queries with no driver row in any prior round
-# come first, then queries whose most-recent row was red, then everything
-# already green/rows-only — registration order within each tier. This way
-# newly-registered or newly-fixed queries always rotate into the window
-# automatically.
-_PRIORITY_CACHE: dict[str, int] | None = None
-
-
-def _correctness_tiers(root=None) -> dict[str, int]:
-    """name -> tier from CORRECTNESS_r*.json at the repo root.
-
-    0 = never driver-checked, 1 = latest row red, 2 = latest row green or
-    rows-only-by-design. Names absent from every file default to 0.
-    """
-    global _PRIORITY_CACHE
-    if root is None and _PRIORITY_CACHE is not None:
-        return _PRIORITY_CACHE
-    import json
-    import re
-    from pathlib import Path
-
-    caching = root is None
-    root = Path(root) if root is not None else Path(__file__).resolve().parents[1]
-    latest: dict[str, dict] = {}
-    rounds = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.sub(r"\D", "", p.stem) or 0),
-    )
-    for path in rounds:
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            latest.update(rows)
-    tiers: dict[str, int] = {}
-    for name, row in latest.items():
-        if not isinstance(row, dict):
-            continue
-        err = row.get("err")
-        if row.get("hash_match") is False or err not in (None, "no_oracle"):
-            tiers[name] = 1
-        else:
-            tiers[name] = 2
-    if caching:
-        _PRIORITY_CACHE = tiers
-    return tiers
-
-
-# Queries whose Spark plan or oracle changed in the current round: forced
-# into the driver window right after the never-checked tier, so changed code
-# is always externally re-verified in the round it changes (ADVICE r2).
-_MODIFIED_THIS_ROUND = {
-    # r12: the global-rank offsets moved from a driver collect + literal
-    # map to a K-row broadcast frame (values identical, plan changed).
-    "token_budget_sample",
-    "customer_spend_quartiles",
-    # r12: oracle SQL now interpolates ANN_QUERY_IDS / ANN_PRODUCTION_K
-    # (same values, oracle text changed).
-    "ann_ivf_production",
-    # r12: the two xxhash64 twins went from rows-only to boolean-pinned
-    # contracts (new output schemas + oracles).
-    "minhash_near_dups",
-    "simhash_signatures",
-}
-
-
-def _prioritized(d: dict[str, object]) -> dict[str, object]:
-    tiers = _correctness_tiers()
-
-    def key(n: str) -> float:
-        if tiers.get(n, 0) == 0:
-            return 0.0
-        if n in _MODIFIED_THIS_ROUND:
-            return 0.5
-        return float(tiers[n])
-
-    names = sorted(d, key=key)  # stable sort: registration order within tier
-    return {n: d[n] for n in names}
-
-
 def queries() -> dict[str, QueryFn]:
-    return _prioritized(dict(_QUERIES))
+    """name -> query fn, in registration order."""
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _prioritized(dict(_ORACLES))
+    """name -> DuckDB oracle SQL, in registration order."""
+    return dict(_ORACLES)
 
 
 def _dsum(col, alias: str):

@@ -6,9 +6,10 @@ engine's `refresh_wormholes_incremental` patches the persisted
 projection with the per-poll edge delta instead
 (`ProjectionRegistry.apply_delta`). The e2e test pins that routes after
 either path are identical; THIS script pins the cost claim with
-numbers: per-poll shuffle WRITE RECORDS (UI REST stage diff, same
-methodology as bench.py) and apply_delta's removed/added row counters,
-full path vs incremental path, over several simulated polls.
+numbers: per-poll shuffle WRITE RECORDS and input records (UI REST
+stage diff, same methodology as bench.py), wall milliseconds and
+apply_delta's removed/added row counters, full path vs incremental path,
+over several simulated polls.
 
 Usage: python scripts/measure_incremental_refresh.py [n_polls]
 Prints one JSON line per poll and a summary line; results are recorded
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 import json
 import sys
+import time
 import urllib.request
 from pathlib import Path
 
@@ -53,13 +55,15 @@ def stage_rows(spark) -> dict:
     }
 
 
-def measure(spark, fn) -> tuple[int, int]:
-    """(shuffle write records, input records) attributable to fn()."""
+def measure(spark, fn) -> tuple[int, int, float]:
+    """(shuffle write records, input records, wall ms) attributable to fn()."""
     before = stage_rows(spark)
+    t0 = time.perf_counter()
     fn()
+    ms = (time.perf_counter() - t0) * 1e3
     after = stage_rows(spark)
     new = [v for k, v in after.items() if k not in before]
-    return sum(v[0] for v in new), sum(v[1] for v in new)
+    return sum(v[0] for v in new), sum(v[1] for v in new), ms
 
 
 def poll_signatures(spark, i: int):
@@ -120,22 +124,25 @@ def main() -> None:
     eng_inc = GraphEngine(systems, jumps)
     eng_inc.build_cost_projection()
 
-    tot = {"full_sh": 0, "inc_sh": 0, "full_in": 0, "inc_in": 0}
+    tot = {"full_sh": 0, "inc_sh": 0, "full_in": 0, "inc_in": 0,
+           "full_ms": 0.0, "inc_ms": 0.0}
     for i in range(args.n_polls):
         sigs = poll_signatures(spark, i)
-        sh_f, in_f = measure(spark, lambda: eng_full.refresh_wormholes(sigs))
+        sh_f, in_f, ms_f = measure(spark, lambda: eng_full.refresh_wormholes(sigs))
         st: dict = {}
-        sh_i, in_i = measure(
+        sh_i, in_i, ms_i = measure(
             spark, lambda: eng_inc.refresh_wormholes_incremental(sigs, stats_out=st)
         )
         tot["full_sh"] += sh_f
         tot["inc_sh"] += sh_i
         tot["full_in"] += in_f
         tot["inc_in"] += in_i
+        tot["full_ms"] += ms_f
+        tot["inc_ms"] += ms_i
         print(json.dumps({
             "poll": i,
-            "full": {"shuffle_rows": sh_f, "input_rows": in_f},
-            "incremental": {"shuffle_rows": sh_i, "input_rows": in_i},
+            "full": {"shuffle_rows": sh_f, "input_rows": in_f, "ms": round(ms_f)},
+            "incremental": {"shuffle_rows": sh_i, "input_rows": in_i, "ms": round(ms_i)},
             "delta_removed": st.get("removed_rows"),
             "delta_added": st.get("added_rows"),
         }))
@@ -148,6 +155,8 @@ def main() -> None:
         "incremental_shuffle_total": tot["inc_sh"],
         "full_input_total": tot["full_in"],
         "incremental_input_total": tot["inc_in"],
+        "full_ms_total": round(tot["full_ms"]),
+        "incremental_ms_total": round(tot["inc_ms"]),
     }))
     if tmp:
         shutil.rmtree(tmp, ignore_errors=True)
