@@ -247,7 +247,6 @@ class GraphEngine:
         self.jumps = R.update_inbound_edge_risk(self.jumps, sys_risk).transform(
             truncate_lineage
         )
-        self._gate_base = None  # full-table rewrite invalidates the poll split
         self.build_risk_projection()
         return self.jumps
 
@@ -262,7 +261,6 @@ class GraphEngine:
         self.jumps = R.upsert_edges_if_missing(self.jumps, gate_edges).transform(
             truncate_lineage
         )
-        self._gate_base = None  # gate set changed — rebuild the poll split
         self.build_cost_projection()
         return self.jumps
 
@@ -283,113 +281,7 @@ class GraphEngine:
         self.jumps = R.upsert_edges_if_missing(
             kept, R.bidirectional_edges(wh)
         ).transform(truncate_lineage)
-        self._gate_base = None  # full rewrite — the poll split re-derives lazily
         self.build_cost_projection()
-        return self.jumps
-
-    # --- A6, incremental form (r6 verdict item 6) ---------------------------
-    def refresh_wormholes_incremental(
-        self,
-        signatures: DataFrame,
-        reset_names: tuple[str, ...] = ("Thera", "Turnur"),
-        stats_out: dict | None = None,
-    ) -> DataFrame:
-        """Delta form of `refresh_wormholes`: wormholes churn every poll
-        (A6, sync.rs:66-94), but the edge DELTA per poll is a handful of
-        signatures. This applies exactly the same edge-table update as
-        the full path, then patches the persisted projection with
-        (removed reset-system edges, newly-missing wormhole edges) via
-        `ProjectionRegistry.apply_delta` — one left_anti + union over
-        the CACHED projection, never a scan of the edge table. Routes
-        after this are identical to a full rebuild (test-pinned e2e).
-        Since the full path reads an anchored table too, this form
-        writes fewer shuffle rows per poll but runs more probe jobs; at
-        ~188k edges on 4 cores it is the slower of the two (SCALE.md
-        "Incremental refresh").
-
-        `stats_out` gets apply_delta's removed_rows/added_rows — both
-        delta-sized.
-        """
-        if not self.registry.exists(SYSTEM_MAP):
-            # nothing to patch — take the full path (also builds the
-            # projection the next delta will patch)
-            return self.refresh_wormholes(signatures, reset_names)
-        reset_ids = [
-            r["system_id"]
-            for r in self.systems.filter(F.col("name").isin(list(reset_names)))
-            .select("system_id")
-            .collect()
-        ]
-        # Base/overlay split, built once and ANCHORED: gates are static
-        # across wormhole polls, wormholes churn. Every poll rebuilds
-        # only the delta-sized wormhole overlay (materialized eagerly —
-        # it is signature-batch-sized) and re-unions it onto the frozen
-        # gate base, so self.jumps stays at CONSTANT lineage depth. The
-        # first wiring (r7) layered left_anti+union directly on
-        # self.jumps per poll; scripts/measure_incremental_refresh.py
-        # measured the per-poll input rows growing QUADRATICALLY as each
-        # poll replayed every prior poll's chain — the classic immutable-
-        # table delta mistake. This is the in-memory analogue of a
-        # kind-partitioned stored table where the poll overwrites only
-        # the wormhole partition (SCALE.md "Incremental refresh").
-        if getattr(self, "_gate_base", None) is None:
-            self._gate_base = self.jumps.filter(
-                F.col("kind") != "wormhole"
-            ).transform(truncate_lineage)
-            self._wh_overlay = self.jumps.filter(
-                F.col("kind") == "wormhole"
-            ).transform(truncate_lineage)
-        # Removed pairs come from the CACHED projection, not the edge
-        # table (the cost projection covers every jump edge, so the two
-        # filters select the same pairs) — one cached scan, no upstream
-        # re-derivation.
-        old_proj = self.registry.get(SYSTEM_MAP)
-        removed_keys = old_proj.filter(
-            F.col("src").isin(reset_ids) | F.col("dst").isin(reset_ids)
-        ).select(
-            F.col("src").alias("src_system_id"), F.col("dst").alias("dst_system_id")
-        )
-        # Gate edges touching a reset system are none in practice (resets
-        # are wormhole-only systems) — probe the anchored base and, in
-        # the rare hit, patch and RE-ANCHOR it so the base never grows a
-        # lineage chain.
-        gate_hit = self._gate_base.filter(
-            F.col("src_system_id").isin(reset_ids)
-            | F.col("dst_system_id").isin(reset_ids)
-        )
-        if gate_hit.limit(1).count():
-            self._gate_base = self._gate_base.join(
-                removed_keys, ["src_system_id", "dst_system_id"], "left_anti"
-            ).transform(truncate_lineage)
-        wh_kept = self._wh_overlay.filter(
-            ~(F.col("src_system_id").isin(reset_ids)
-              | F.col("dst_system_id").isin(reset_ids))
-        )
-        wh = R.filter_wormhole_signatures(signatures).select(
-            F.col("in_system_id").alias("src_system_id"),
-            F.col("out_system_id").alias("dst_system_id"),
-            F.lit(1).cast("long").alias("cost"),
-            F.lit(None).cast("double").alias("risk"),
-            F.lit("wormhole").alias("kind"),
-        )
-        bi = R.bidirectional_edges(wh).dropDuplicates(
-            ["src_system_id", "dst_system_id"]
-        )
-        # "Newly missing" check against a PRUNED slice of the base (the
-        # signature batch's src-id set pushes down) plus the tiny overlay
-        # — candidate rows only, never the full table.
-        bi_srcs = [r["src_system_id"] for r in bi.select("src_system_id").collect()]
-        cand = (
-            self._gate_base.filter(F.col("src_system_id").isin(bi_srcs))
-            .select("src_system_id", "dst_system_id")
-            .unionByName(wh_kept.select("src_system_id", "dst_system_id"))
-        )
-        added = bi.join(cand, ["src_system_id", "dst_system_id"], "left_anti")
-        self._wh_overlay = wh_kept.unionByName(added).transform(truncate_lineage)
-        self.jumps = self._gate_base.unionByName(self._wh_overlay)
-        self.registry.apply_delta(
-            SYSTEM_MAP, added, removed_keys, "cost", stats_out=stats_out
-        )
         return self.jumps
 
     # --- bootstrap (D9, main.rs:84-107) --------------------------------------
@@ -406,10 +298,11 @@ class GraphEngine:
 
 def wormhole_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
     """foreachBatch handler wiring the eve_scout STREAMING source
-    (sources/custom_datasource.STREAM_DDL) to
-    `GraphEngine.refresh_wormholes_incremental` — the end-to-end streaming
-    analogue of POST /wormholes/refresh (A6): each micro-batch patches the
-    persisted cost projection with a delta, never a full rebuild.
+    (sources/custom_datasource.STREAM_DDL) to `GraphEngine.refresh_wormholes`
+    — the end-to-end streaming analogue of POST /wormholes/refresh (A6),
+    on the same code path: each applied poll resets Thera/Turnur, upserts
+    the poll's wormhole edges, anchors the new `jumps` once and rebuilds
+    the cost projection from it, as the reference does (sync.rs:66-94).
 
     The feed is FULL-STATE per poll, so a catch-up micro-batch spanning
     several polls applies only the LATEST poll in the batch (older polls
@@ -466,7 +359,7 @@ def wormhole_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
             )
         else:  # id-only frame: duplicates are identical rows
             batch_df = batch_df.dropDuplicates(["id"])
-        engine.refresh_wormholes_incremental(batch_df)
+        engine.refresh_wormholes(batch_df)
         if last is not None:
             applied["last"] = last
             if stats_out is not None:
@@ -492,10 +385,9 @@ def risk_stream_handler(engine: GraphEngine, stats_out: dict | None = None):
     every system's risk each cycle). Lineage stays bounded because
     `refresh_risk` itself materializes the new systems and jumps tables
     once each — the same code path as POST /systems/risk — so N polls
-    cost N × one-refresh work, never a growing join chain (the r7
-    wormhole-overlay lesson, measured in
-    scripts/measure_incremental_refresh.py). The replaced tables are
-    freed by Spark's ContextCleaner once nothing references them.
+    cost N × one-refresh work, never a growing join chain. The replaced
+    tables are freed by Spark's ContextCleaner once nothing references
+    them.
 
     Full-state-per-poll semantics match `wormhole_stream_handler`: the ESI
     activity endpoints return the whole galaxy's counters per fetch, so a

@@ -38,8 +38,6 @@ checkpointing is the equivalent durability seam.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-conf key that, when set, switches every truncate_lineage call
@@ -111,11 +109,9 @@ def _reset_bloated_stats(df: DataFrame) -> DataFrame:
 
     Tradeoff (ADVICE r11): the rebuilt LogicalRDD also loses the
     checkpointed frame's advertised outputPartitioning/ordering, so a
-    call site that anchored a partitioning contract before truncation
-    (e.g. ``repartition("src")``) would silently re-shuffle downstream.
-    ``truncate_lineage(df, keyed_by=...)`` re-applies the contract
-    exactly when the reset fires — callers that need co-location declare
-    it there instead of guessing whether the cap triggered.
+    keyed join downstream of it shuffles again. Under AQE a checkpoint
+    advertises no partitioning in the first place, so no call site in
+    this engine relies on it.
     """
     try:
         jqe = df._jdf.queryExecution()
@@ -135,9 +131,7 @@ def _reset_bloated_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-def truncate_lineage(
-    df: DataFrame, *, keyed_by: tuple[str, ...] | None = None
-) -> DataFrame:
+def truncate_lineage(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and cut its lineage; drop-in for localCheckpoint.
 
     Designed for fluent use: ``frame.transform(truncate_lineage)`` reads
@@ -148,18 +142,6 @@ def truncate_lineage(
     ``_reset_bloated_stats`` — without the cap, iterative kernels compound
     join-estimate BigInts across rounds until planning dominates wall
     time).
-
-    ``keyed_by`` declares a partitioning contract the caller anchored
-    before truncation (e.g. ``repartition("src")`` for co-located src
-    joins). Two things can drop the advertisement (ADVICE r11, extended):
-    the stats-cap rebuild, and — measured on this Spark version — ANY
-    checkpoint taken while AQE is enabled (AdaptiveSparkPlanExec reports
-    UnknownPartitioning to the LogicalRDD constructor, so the
-    checkpointed scan advertises nothing even though the blocks ARE
-    key-partitioned). When the returned frame does not advertise the
-    declared keys, the contract is re-applied with a ``repartition`` so
-    downstream keyed joins plan against it instead of silently
-    re-shuffling the big side every action.
     """
     # r13: a LocalRelation leaf (literal rows already sitting in the JVM
     # plan) has no lineage to cut and no inherited stats to cap —
@@ -175,34 +157,16 @@ def truncate_lineage(
     # consumers (the betweenness pair joins: four scans) checkpoint it
     # once (OPTIMIZATION_r13.md). A bare file scan is also a leaf, but
     # checkpointing one legitimately pins a snapshot of mutable storage,
-    # so it too keeps the old behavior. keyed_by callers are exempt
-    # regardless: they want the repartition contract applied.
-    if keyed_by is None:
-        try:
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.children().isEmpty() and plan.nodeName() == "LocalRelation":
-                return df
-        except Exception:  # pragma: no cover — plan not inspectable
-            pass
+    # so it too keeps the old behavior.
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.children().isEmpty() and plan.nodeName() == "LocalRelation":
+            return df
+    except Exception:  # pragma: no cover — plan not inspectable
+        pass
     ck = (
         df.checkpoint(eager=True)
         if reliable_checkpoint_dir(df.sparkSession)
         else df.localCheckpoint(eager=True)
     )
-    out = _reset_bloated_stats(ck)
-    if keyed_by and not _advertises_keys(out, keyed_by):
-        out = out.repartition(*keyed_by)
-    return out
-
-
-def _advertises_keys(df: DataFrame, keys: tuple[str, ...]) -> bool:
-    """Whether the frame's physical scan advertises a partitioning over all
-    of ``keys``. Attributes render as ``name#exprId`` — match the WHOLE
-    token, not a substring (ADVICE r12: ``"src" in part`` was falsely
-    satisfied by a partitioning over ``src_system_id``, silently skipping
-    the repartition re-anchor this option exists to guarantee)."""
-    try:
-        part = df._jdf.queryExecution().executedPlan().outputPartitioning().toString()
-    except Exception:
-        return False
-    return all(re.search(rf"\b{re.escape(k)}#\d+", part) for k in keys)
+    return _reset_bloated_stats(ck)

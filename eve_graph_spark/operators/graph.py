@@ -107,15 +107,6 @@ class ProjectionRegistry:
     # name → (projection frame, its driver-resident {src: [(dst, weight)]}
     # or None when it does not fit the driver); see adjacency()
     _adjacency: dict[str, tuple[DataFrame, dict | None]] = field(default_factory=dict)
-    # deltas applied since the projection last had its lineage truncated
-    _deltas_since_anchor: dict[str, int] = field(default_factory=dict)
-    # Every N-th apply_delta localCheckpoints the patched projection: a
-    # persisted frame's RECOVERY lineage is still its logical plan, so an
-    # unbounded left_anti+union chain means one evicted block replays
-    # every historical delta back to the original derivation. Truncating
-    # on a period bounds recovery at N deltas for a small per-period
-    # materialization cost (the projection is persisted anyway).
-    CHECKPOINT_EVERY_DELTAS = 8
 
     def project(self, name: str, edges: DataFrame, weight_col: str) -> DataFrame:
         """G1/G2: materialize (src, dst, weight), partitioned by src for the
@@ -131,7 +122,6 @@ class ProjectionRegistry:
         )
         proj.count()  # force materialization, like gds.graph.project
         self._graphs[name] = proj
-        self._deltas_since_anchor[name] = 0  # fresh derivation = fresh anchor
         return proj
 
     def exists(self, name: str) -> bool:
@@ -148,8 +138,8 @@ class ProjectionRegistry:
         when the projection has ≤ DRIVER_SSSP_MAX_EDGES rows (None above
         it, and in the forced-distributed arm). It lives and dies with the
         projection: keyed by the identity of the persisted frame, so a
-        rebuild or delta re-collects it on next use, and a route racing a
-        refresh on another thread cannot keep the old map."""
+        rebuild re-collects it on next use, and a route racing a refresh
+        on another thread cannot keep the old map."""
         if force_distributed():
             return None
         proj = self._graphs[name]
@@ -163,7 +153,6 @@ class ProjectionRegistry:
         """G4/G5 (database.rs:402-420)."""
         g = self._graphs.pop(name, None)
         self._adjacency.pop(name, None)
-        self._deltas_since_anchor.pop(name, None)
         if g is not None:
             g.unpersist()
 
@@ -171,61 +160,6 @@ class ProjectionRegistry:
         """G6 (database.rs:468-482): drop-if-exists + rebuild."""
         self.drop(name)
         return self.project(name, edges, weight_col)
-
-    def apply_delta(self, name: str, added: DataFrame | None,
-                    removed_keys: DataFrame | None, weight_col: str,
-                    stats_out: dict | None = None) -> DataFrame:
-        """Incremental projection maintenance (r6 verdict item 6): apply an
-        edge delta to a persisted projection instead of re-deriving it
-        from the full edge table. `added` is rows in the edge-table
-        schema; `removed_keys` is (src_system_id, dst_system_id) pairs.
-        One left_anti + union over the OLD PERSISTED projection — the
-        scan is the cached projection plus delta-sized sides, never the
-        upstream derivation (which at 100 TB is the full risk/cost join
-        pipeline the wormhole poll loop must not replay every cycle).
-
-        `stats_out` records `removed_rows`/`added_rows` (delta sizes).
-        """
-        old = self._graphs[name]
-        cur = old
-        n_removed = n_added = 0
-        want_stats = stats_out is not None
-        if removed_keys is not None:
-            rk = removed_keys.select(
-                F.col("src_system_id").alias("__rs"), F.col("dst_system_id").alias("__rd")
-            )
-            if want_stats:  # each count is an extra job over the delta side
-                n_removed = rk.count()
-            cur = cur.join(
-                F.broadcast(rk),
-                (cur["src"] == F.col("__rs")) & (cur["dst"] == F.col("__rd")),
-                "left_anti",
-            )
-        if added is not None:
-            add = added.select(
-                F.col("src_system_id").alias("src"),
-                F.col("dst_system_id").alias("dst"),
-                F.col(weight_col).cast("double").alias("weight"),
-            )
-            if want_stats:
-                n_added = add.count()
-            cur = cur.unionByName(add)
-        n_since = self._deltas_since_anchor.get(name, 0) + 1
-        if n_since >= self.CHECKPOINT_EVERY_DELTAS:
-            # keyed_by: if the stats-cap rebuild fires it must re-anchor
-            # the src co-location this projection promises (ADVICE r11)
-            new = truncate_lineage(cur.repartition("src"), keyed_by=("src",))
-            n_since = 0
-        else:
-            new = cur.repartition("src").persist()
-            new.count()
-        self._deltas_since_anchor[name] = n_since
-        old.unpersist()
-        self._graphs[name] = new
-        if stats_out is not None:
-            stats_out["removed_rows"] = n_removed
-            stats_out["added_rows"] = n_added
-        return new
 
 
 DRIVER_SSSP_MAX_EDGES = 2_000_000  # below this, solve on the driver

@@ -263,93 +263,6 @@ def connected_components(edges: DataFrame, src_col: str = "src_system_id",
     return _star_components(e, max_iterations, stats_out)
 
 
-def incremental_cc_insert(labels: DataFrame, new_edges: DataFrame,
-                          src_col: str = "src_system_id",
-                          dst_col: str = "dst_system_id",
-                          stats_out: dict | None = None) -> DataFrame:
-    """Repair a (node, component) labeling after a batch of edge INSERTS —
-    the incremental half of graph maintenance (r6 verdict item 6: the
-    reference's refresh semantic re-polls wormholes constantly, A6/
-    sync.rs:66-94, and an insert can only MERGE components, never split
-    them). So the repair is a union-find over the COMPONENT IDS touched
-    by the batch — a batch-sized driver job — followed by ONE broadcast
-    remap join over the labels table:
-
-      1. look up the component of each batch endpoint (batch-sized join
-         collect — never the labels table itself);
-      2. union-find those component ids on the driver, roots = min id
-         (matching connected_components' component = min node id
-         invariant, provided labels came from it);
-      3. broadcast the {old component -> merged component} map onto
-         labels; endpoints new to the graph enter as rows of their own.
-
-    Total driver traffic and broadcast size are O(batch), the labels
-    table is touched by exactly one map-side join — no frontier loop, no
-    graph-sized shuffle. Edge DELETES can split components and need a
-    real CC run (use connected_components; auto mode bounds it at any
-    diameter) — this function is insert-only by contract.
-
-    `stats_out`: records `rows_collected` (endpoint lookups + batch
-    edges) and `merged_components` — tests pin that both stay
-    batch-sized.
-    """
-    e = _edge_frame(new_edges, src_col, dst_col)
-    spark = labels.sparkSession
-    batch = e.collect()  # the delta is small by definition of a delta
-    endpoints = sorted({r["src"] for r in batch} | {r["dst"] for r in batch})
-    ep_df = local_frame(spark, [(n,) for n in endpoints], "node long")
-    known = (
-        ep_df.join(labels, "node", "left")
-        .select("node", "component")
-        .collect()
-    )
-    known_comp = {r["node"]: r["component"] for r in known}
-    comp_of = {n: (c if c is not None else n) for n, c in known_comp.items()}
-    parent: dict[int, int] = {c: c for c in comp_of.values()}
-    # `merged_components` counts unions of PRE-EXISTING components only:
-    # a batch edge joining two brand-new nodes creates one fresh
-    # component, it does not merge anything the labels table knew about
-    # (round-7 shipped this stat counting new-singleton unions too).
-    has_pre: dict[int, bool] = {
-        c: any(known_comp.get(n) is not None and comp_of[n] == c
-               for n in endpoints)
-        for c in parent
-    }
-    merged = 0
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in batch:
-        ra, rb = find(comp_of[r["src"]]), find(comp_of[r["dst"]])
-        if ra != rb:
-            if has_pre[ra] and has_pre[rb]:
-                merged += 1
-            keep, gone = min(ra, rb), max(ra, rb)
-            parent[gone] = keep
-            has_pre[keep] = has_pre[ra] or has_pre[rb]
-    remap = [(c, find(c)) for c in parent if find(c) != c]
-    new_nodes = [(n, find(comp_of[n])) for n in endpoints
-                 if known_comp.get(n) is None]
-    if stats_out is not None:
-        stats_out["rows_collected"] = len(batch) + len(known)
-        stats_out["merged_components"] = merged
-    out = labels
-    if remap:
-        m = local_frame(spark, remap, "component long, __new long")
-        out = out.join(F.broadcast(m), "component", "left").select(
-            "node", F.coalesce("__new", "component").alias("component")
-        )
-    if new_nodes:
-        out = out.unionByName(
-            local_frame(spark, new_nodes, "node long, component long")
-        )
-    return out
-
-
 # --- PageRank ---------------------------------------------------------------
 
 def _pagerank_local(e: DataFrame, iterations: int, damping: float,

@@ -164,8 +164,9 @@ class _EveScoutStreamReader(SimpleDataSourceStreamReader):
     an ordering key, comparable only WITHIN one read) when the user
     schema asks for it; `poll_id` must then be the LAST schema field.
     A catch-up micro-batch contains ALL pending polls, and the feed is
-    full-state per poll, so downstream keeps only the latest poll
-    (see api.wormhole_stream_handler).
+    full-state per poll, so downstream keeps only the latest poll and
+    applies it as one full wormhole refresh, the POST /wormholes/refresh
+    path (see api.wormhole_stream_handler).
 
     Polls are read driver-side by design (the simple-reader contract):
     a signature feed is hundreds of rows per poll — prefetching to a

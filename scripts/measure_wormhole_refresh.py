@@ -1,17 +1,15 @@
-"""Measure the incremental-vs-full wormhole-refresh win in shuffle rows.
+"""Measure the per-poll cost of the wormhole refresh in shuffle rows.
 
 The reference re-polls wormhole signatures constantly (A6,
-sync.rs:66-94) and rebuilds its GDS cost projection each time; the
-engine's `refresh_wormholes_incremental` patches the persisted
-projection with the per-poll edge delta instead
-(`ProjectionRegistry.apply_delta`). The e2e test pins that routes after
-either path are identical; THIS script pins the cost claim with
-numbers: per-poll shuffle WRITE RECORDS and input records (UI REST
-stage diff, same methodology as bench.py), wall milliseconds and
-apply_delta's removed/added row counters, full path vs incremental path,
-over several simulated polls.
+sync.rs:66-94): it resets Thera/Turnur, inserts the poll's wormhole
+edges and rebuilds its GDS cost projection. The engine answers every
+poll, POST or stream, with `GraphEngine.refresh_wormholes`, which
+anchors the new `jumps` once and rebuilds the cost projection from it.
+This script times that one path over several simulated polls: per-poll
+shuffle WRITE RECORDS and input records (UI REST stage diff, same
+methodology as bench.py) and wall milliseconds.
 
-Usage: python scripts/measure_incremental_refresh.py [n_polls]
+Usage: python scripts/measure_wormhole_refresh.py [n_polls] [--rep N]
 Prints one JSON line per poll and a summary line; results are recorded
 in SCALE.md ("Incremental refresh").
 """
@@ -87,13 +85,13 @@ def main() -> None:
     ap.add_argument("n_polls", nargs="?", type=int, default=5)
     ap.add_argument("--rep", type=int, default=1,
                     help="replicate the fixture edge table N times (disjoint "
-                         "id ranges) and serve it from parquet, so the full "
-                         "path's re-derivation reads a real table")
+                         "id ranges) and serve it from parquet, so the "
+                         "refresh reads a real table")
     args = ap.parse_args()
 
     spark = (
         SparkSession.builder.master("local[8]")
-        .appName("incremental-refresh-measure")
+        .appName("wormhole-refresh-measure")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "true")
@@ -106,7 +104,7 @@ def main() -> None:
     jumps = build_jumps(spark, SF_DIR, with_risk=True)
     tmp = None
     if args.rep > 1:
-        tmp = tempfile.mkdtemp(prefix="inc_refresh_")
+        tmp = tempfile.mkdtemp(prefix="wh_refresh_")
         reps = spark.range(args.rep).select(F.col("id").alias("k"))
         (
             jumps.crossJoin(reps)
@@ -119,44 +117,27 @@ def main() -> None:
         )
         jumps = spark.read.parquet(f"{tmp}/jumps")
 
-    eng_full = GraphEngine(systems, jumps)
-    eng_full.build_cost_projection()
-    eng_inc = GraphEngine(systems, jumps)
-    eng_inc.build_cost_projection()
+    eng = GraphEngine(systems, jumps)
+    eng.build_cost_projection()
 
-    tot = {"full_sh": 0, "inc_sh": 0, "full_in": 0, "inc_in": 0,
-           "full_ms": 0.0, "inc_ms": 0.0}
+    tot = {"shuffle_rows": 0, "input_rows": 0, "ms": 0.0}
     for i in range(args.n_polls):
         sigs = poll_signatures(spark, i)
-        sh_f, in_f, ms_f = measure(spark, lambda: eng_full.refresh_wormholes(sigs))
-        st: dict = {}
-        sh_i, in_i, ms_i = measure(
-            spark, lambda: eng_inc.refresh_wormholes_incremental(sigs, stats_out=st)
-        )
-        tot["full_sh"] += sh_f
-        tot["inc_sh"] += sh_i
-        tot["full_in"] += in_f
-        tot["inc_in"] += in_i
-        tot["full_ms"] += ms_f
-        tot["inc_ms"] += ms_i
+        sh, inp, ms = measure(spark, lambda: eng.refresh_wormholes(sigs))
+        tot["shuffle_rows"] += sh
+        tot["input_rows"] += inp
+        tot["ms"] += ms
         print(json.dumps({
-            "poll": i,
-            "full": {"shuffle_rows": sh_f, "input_rows": in_f, "ms": round(ms_f)},
-            "incremental": {"shuffle_rows": sh_i, "input_rows": in_i, "ms": round(ms_i)},
-            "delta_removed": st.get("removed_rows"),
-            "delta_added": st.get("added_rows"),
+            "poll": i, "shuffle_rows": sh, "input_rows": inp, "ms": round(ms),
         }))
 
     print(json.dumps({
         "summary": True,
         "n_polls": args.n_polls,
         "rep": args.rep,
-        "full_shuffle_total": tot["full_sh"],
-        "incremental_shuffle_total": tot["inc_sh"],
-        "full_input_total": tot["full_in"],
-        "incremental_input_total": tot["inc_in"],
-        "full_ms_total": round(tot["full_ms"]),
-        "incremental_ms_total": round(tot["inc_ms"]),
+        "shuffle_total": tot["shuffle_rows"],
+        "input_total": tot["input_rows"],
+        "ms_total": round(tot["ms"]),
     }))
     if tmp:
         shutil.rmtree(tmp, ignore_errors=True)

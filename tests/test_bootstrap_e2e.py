@@ -127,59 +127,3 @@ def test_engine_over_persisted_bucketed_tables(spark, universe, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     finally:
         spark.sql("DROP TABLE IF EXISTS jumps_engine_e2e")
-
-
-@pytest.mark.slow  # >10s: full-tier only (r14 test tiers)
-def test_incremental_wormhole_refresh_matches_full_rebuild(spark, universe):
-    """r6 verdict item 6: the incremental A6 path (edge delta + projection
-    patch) must leave the engine in the same state as the full
-    refresh_wormholes + projection rebuild, with delta-sized stats."""
-    esi_systems, stargates, kills, jumps_act, sigs = universe
-    from eve_graph_spark import schemas
-    from eve_graph_spark.api import SYSTEM_MAP
-
-    engines = []
-    for _ in range(2):
-        eng = GraphEngine(
-            spark.createDataFrame([], schemas.SYSTEM),
-            spark.createDataFrame([], schemas.JUMP),
-        )
-        eng.bootstrap(esi_systems, stargates, kills, jumps_act, sigs)
-        engines.append(eng)
-    eng_full, eng_inc = engines
-
-    # the next poll: w1 is gone, a new wormhole w2 (3<->6) appeared, and
-    # Sys2's connections reset (standing in for Thera)
-    batch = spark.createDataFrame(
-        [("w2", "wormhole", 3, 6)],
-        "id string, signature_type string, in_system_id long, out_system_id long",
-    )
-    eng_full.refresh_wormholes(batch, reset_names=("Sys2",))
-    st: dict = {}
-    eng_inc.refresh_wormholes_incremental(batch, reset_names=("Sys2",), stats_out=st)
-
-    full_edges = sorted(
-        (r["src_system_id"], r["dst_system_id"], r["cost"], r["kind"])
-        for r in eng_full.jumps.collect()
-    )
-    inc_edges = sorted(
-        (r["src_system_id"], r["dst_system_id"], r["cost"], r["kind"])
-        for r in eng_inc.jumps.collect()
-    )
-    assert inc_edges == full_edges
-    # projection contents identical to the rebuilt one
-    full_proj = sorted(map(tuple, eng_full.registry.get(SYSTEM_MAP).collect()))
-    inc_proj = sorted(map(tuple, eng_inc.registry.get(SYSTEM_MAP).collect()))
-    assert inc_proj == full_proj
-    # routes agree end-to-end: the new wormhole carries 3->6, while Sys1
-    # is disconnected by the Sys2 reset — both engines agree on both
-    assert eng_inc.shortest_route("Sys3", "Sys6") == eng_full.shortest_route(
-        "Sys3", "Sys6"
-    ) == ["Sys3", "Sys6"]
-    for eng in (eng_full, eng_inc):
-        with pytest.raises(RouteNotFound):
-            eng.shortest_route("Sys1", "Sys6")
-    # delta-sized: Sys2 touched 6 directed edges (gates to 1/3 both ways +
-    # stale wormhole 2<->6); added = new wormhole both directions
-    assert st["removed_rows"] == 6
-    assert st["added_rows"] == 2

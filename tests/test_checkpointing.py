@@ -158,6 +158,10 @@ def test_truncate_lineage_keeps_small_credible_stats(spark):
     after = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     # a tiny frame's inherited estimate must survive (broadcast signal)
     assert after < 1 << 30, after
+    # and the checkpoint is a plain scan: no exchange stacked on top of it
+    parted = truncate_lineage(df.repartition("n"))
+    plan = parted._jdf.queryExecution().toString()
+    assert "Exchange" not in plan.split("== Physical Plan ==")[-1], plan
 
 
 def test_session_builder_enables_checkpoint_reaping(spark):
@@ -220,69 +224,3 @@ def test_reliable_checkpoints_reaped_on_gc(spark, tmp_path):
         )
     finally:
         disable_reliable_checkpoints(spark)
-
-
-def test_truncate_lineage_keyed_by_restores_partitioning(spark):
-    """ADVICE r11 (extended): BOTH the stats-cap rebuild and any
-    AQE-era checkpoint drop the frame's advertised outputPartitioning —
-    with keyed_by declared, truncate_lineage must hand back a frame whose
-    plan advertises the contract either way, so downstream src joins
-    don't silently re-shuffle the projection every action."""
-    df = spark.range(50).selectExpr("id as src", "id + 1 as dst")
-    bloated = df
-    for i in range(10):
-        bloated = bloated.crossJoin(
-            df.selectExpr(f"src as s{i}", f"dst as d{i}")
-        ).filter(f"s{i} = 0")
-    bloated = bloated.select("src", "dst").repartition("src")
-    out = truncate_lineage(bloated, keyed_by=("src",))
-    plan = out._jdf.queryExecution().toString()
-    assert "hashpartitioning(src" in plan, plan
-    assert out.count() == 50
-    # zero recompute: the re-anchoring exchange reads the checkpoint scan,
-    # never the original crossJoin pipeline
-    assert "Join" not in plan.split("== Physical Plan ==")[-1], plan
-
-    # small credible stats (no cap): under AQE the checkpoint STILL loses
-    # the advertisement (AdaptiveSparkPlanExec hands UnknownPartitioning
-    # to LogicalRDD), so keyed_by must re-anchor here too
-    small = truncate_lineage(df.repartition("src"), keyed_by=("src",))
-    splan = small._jdf.queryExecution().toString()
-    assert "hashpartitioning(src" in splan, splan
-    assert small.count() == 50
-
-    # without keyed_by: unchanged fast path, no exchange stacked on top
-    plain = truncate_lineage(df.repartition("src"))
-    pplan = plain._jdf.queryExecution().toString()
-    assert "Exchange" not in pplan.split("== Physical Plan ==")[-1], pplan
-
-
-def test_advertises_keys_matches_whole_token(spark):
-    """ADVICE r12: _advertises_keys must match attribute TOKENS
-    (``name#exprId``), not substrings — a partitioning over
-    ``src_system_id`` must NOT satisfy keyed_by=("src",), or the
-    repartition re-anchor the option exists to guarantee is silently
-    skipped and downstream src joins re-shuffle every action."""
-    from eve_graph_spark.checkpointing import _advertises_keys
-
-    # AQE wraps every live plan in AdaptiveSparkPlanExec, which reports
-    # UnknownPartitioning regardless of keys — turn it off so the
-    # repartition actually ADVERTISES, which is the only regime where the
-    # substring-vs-token distinction is observable
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = spark.range(50).selectExpr(
-            "id as src_system_id", "id + 1 as dst"
-        ).repartition("src_system_id")
-        assert _advertises_keys(df, ("src_system_id",))
-        assert not _advertises_keys(df, ("src",))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    # end-to-end: keyed_by=("src",) over a src_system_id-partitioned
-    # checkpoint must re-anchor (an Exchange over src appears)
-    out = truncate_lineage(
-        df.selectExpr("src_system_id as src", "dst"), keyed_by=("src",)
-    )
-    plan = out._jdf.queryExecution().toString()
-    assert "hashpartitioning(src#" in plan or "hashpartitioning(src " in plan, plan

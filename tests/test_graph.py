@@ -246,33 +246,6 @@ def test_projection_registry(spark, sf_dir):
     assert not reg.exists("system-map")
 
 
-def test_apply_delta_truncates_lineage_periodically(spark, sf_dir):
-    """A persisted projection's RECOVERY lineage is still its logical plan:
-    without periodic truncation, N deltas = an N-deep left_anti+union chain
-    that a cache eviction replays in full. Every CHECKPOINT_EVERY_DELTAS-th
-    delta must anchor the plan (localCheckpoint), after which the chain is
-    gone — and the rows must match a from-scratch rebuild regardless."""
-    jumps = build_jumps(spark, sf_dir)
-    reg = ProjectionRegistry()
-    reg.project("system-map", jumps, "cost")
-    n = ProjectionRegistry.CHECKPOINT_EVERY_DELTAS
-    for i in range(n):
-        added = spark.createDataFrame(
-            [(1000 + i, 2000 + i, 1)],
-            "src_system_id long, dst_system_id long, cost long",
-        )
-        reg.apply_delta("system-map", added, None, "cost")
-    assert reg._deltas_since_anchor["system-map"] == 0
-    plan = reg.get("system-map")._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    assert "Union" not in plan  # anchored: no delta chain left to replay
-    # content parity with a from-scratch projection over the same edges
-    expected = jumps.select("src_system_id", "dst_system_id").count() + n
-    assert reg.get("system-map").count() == expected
-    reg.drop("system-map")
-
-
 def test_reconstruct_path_iterative_mode_matches_driver_mode(spark, fixture_edges):
     """Distributed path walk: same path as the collect-the-map walk, and it
     never collects the vertex-sized dist table (scale-killer fix, r5)."""

@@ -296,52 +296,6 @@ def test_auto_cc_switches_to_star_on_chain(spark):
     assert st["iterations"] <= 2 * star_st["iterations"] + AUTO_LABEL_BUDGET, st
 
 
-def test_incremental_cc_insert_matches_full_rebuild(spark):
-    """r6 verdict item 6: edge INSERTS only merge components — repair is a
-    batch-sized union-find + one broadcast remap, and the result must
-    equal a from-scratch CC over the combined edges."""
-    from eve_graph_spark.operators.graph_analytics import (
-        connected_components,
-        incremental_cc_insert,
-    )
-
-    e = _edges(spark, [(1, 2), (2, 3), (10, 11), (30, 31)])
-    labels = connected_components(e)
-    # merges {1,2,3} with {10,11}; brings new nodes 20,21; intra-component
-    # edge (30,31) is a no-op
-    batch = _edges(spark, [(3, 10), (20, 21), (30, 31)])
-    st: dict = {}
-    inc = {
-        r["node"]: r["component"]
-        for r in incremental_cc_insert(labels, batch, stats_out=st).collect()
-    }
-    full = {
-        r["node"]: r["component"]
-        for r in connected_components(e.unionByName(batch)).collect()
-    }
-    assert inc == full
-    assert st["merged_components"] == 1
-    # driver traffic stays batch-sized: 6 directed batch edges + 6 endpoint
-    # component lookups, never the labels table
-    assert st["rows_collected"] <= 12
-
-
-def test_incremental_cc_insert_empty_batch_is_identity(spark):
-    from eve_graph_spark.operators.graph_analytics import (
-        connected_components,
-        incremental_cc_insert,
-    )
-
-    e = _edges(spark, [(1, 2)])
-    labels = connected_components(e)
-    empty = spark.createDataFrame([], "src_system_id long, dst_system_id long")
-    got = {
-        r["node"]: r["component"]
-        for r in incremental_cc_insert(labels, empty).collect()
-    }
-    assert got == {1: 1, 2: 1}
-
-
 def test_cc_rejects_unknown_algorithm(spark):
     import pytest
 

@@ -5,8 +5,15 @@ same however many refreshes came before it."""
 from __future__ import annotations
 
 from eve_graph_spark import api, schemas
-from eve_graph_spark.api import JUMP_RISK, SYSTEM_MAP, GraphEngine, risk_stream_handler
+from eve_graph_spark.api import (
+    JUMP_RISK,
+    SYSTEM_MAP,
+    GraphEngine,
+    risk_stream_handler,
+    wormhole_stream_handler,
+)
 from eve_graph_spark.frames import local_frame
+from eve_graph_spark.sources.custom_datasource import STREAM_DDL
 from eve_graph_spark.sources.graph_fixture import build_jumps, build_systems
 from tests.test_route_snapshot import _dataframe_route, _snapshot_route
 
@@ -35,6 +42,14 @@ def _stargates(spark, poll: int):
          (1001 + 2 * poll, b, 1000 + 2 * poll, a, f"g{b}-{a}", 0.0, 0.0, 0.0, 29624)],
         schemas.STARGATE,
     )
+
+
+def _wormhole_poll(spark, poll: int):
+    """One stream poll: a wormhole that moves every poll, its duplicate id
+    and the poll's sentinel row."""
+    a, b = poll % 25, (poll + 9) % 25
+    sig = (f"wh{poll}", "wormhole", b, "XYZ-1", a, "ABC-2", "large", None, 12, poll)
+    return local_frame(spark, [sig, sig, (None,) * 9 + (poll,)], STREAM_DDL)
 
 
 def _jobs_of(spark, group: str, fn) -> int:
@@ -71,10 +86,12 @@ def test_third_risk_refresh_runs_no_more_jobs_than_the_first(spark, sf_dir):
 def test_table_plans_do_not_grow_across_refreshes(spark, sf_dir):
     eng = _engine(spark, sf_dir)
     ids = _ids(eng)
+    handle = wormhole_stream_handler(eng, {})
     sizes = []
     for poll in range(3):
         eng.refresh_stargates(_stargates(spark, poll))
         eng.refresh_risk(*_activity(spark, ids, poll))
+        handle(_wormhole_poll(spark, poll), poll)
         sizes.append((_plan_nodes(eng.systems), _plan_nodes(eng.jumps)))
     assert sizes[2][0] <= sizes[0][0] and sizes[2][1] <= sizes[0][1], sizes
 
@@ -102,8 +119,8 @@ def test_risk_stream_poll_anchors_each_table_once(spark, sf_dir, monkeypatch):
     anchored = []
     real = api.truncate_lineage
 
-    def counting(df, **kw):
-        out = real(df, **kw)
+    def counting(df):
+        out = real(df)
         anchored.append(out)
         return out
 
@@ -118,3 +135,25 @@ def test_risk_stream_poll_anchors_each_table_once(spark, sf_dir, monkeypatch):
     )
     assert len(anchored) == 2
     assert anchored[0] is eng.systems and anchored[1] is eng.jumps
+
+
+def test_wormhole_stream_poll_anchors_jumps_once(spark, sf_dir, monkeypatch):
+    """A wormhole poll runs `refresh_wormholes`, the POST path: one
+    `truncate_lineage` over the new `jumps`, which the engine keeps as is,
+    even when a cost projection already exists."""
+    eng = _engine(spark, sf_dir)
+    eng.build_cost_projection()
+    anchored = []
+    real = api.truncate_lineage
+
+    def counting(df):
+        out = real(df)
+        anchored.append(out)
+        return out
+
+    monkeypatch.setattr(api, "truncate_lineage", counting)
+    stats: dict = {}
+    wormhole_stream_handler(eng, stats)(_wormhole_poll(spark, 0), 0)
+    assert len(anchored) == 1
+    assert anchored[0] is eng.jumps
+    assert stats["polls"] == [0]

@@ -134,13 +134,10 @@ def _signature(spark, src: int, dst: int):
     )
 
 
-@pytest.mark.parametrize("incremental", [False, True])
-def test_wormhole_refresh_reroutes_shortest(spark, engine, names, incremental):
+def test_wormhole_refresh_reroutes_shortest(spark, engine, names):
     a, b = _far_pair(engine, names)
     ids = {n: i for i, n in names.items()}
-    refresh = (engine.refresh_wormholes_incremental if incremental
-               else engine.refresh_wormholes)
-    refresh(_signature(spark, ids[a], ids[b]))
+    engine.refresh_wormholes(_signature(spark, ids[a], ids[b]))
     assert engine.shortest_route(a, b) == [a, b]
     assert engine.shortest_route(b, a) == [b, a]
 
@@ -151,7 +148,8 @@ def test_adjacency_collected_across_a_refresh_is_not_kept(spark, sf_dir, monkeyp
     from eve_graph_spark.operators import graph as G
 
     reg = G.ProjectionRegistry()
-    reg.project(SYSTEM_MAP, build_jumps(spark, sf_dir), "cost")
+    jumps = build_jumps(spark, sf_dir).select("src_system_id", "dst_system_id", "cost")
+    reg.project(SYSTEM_MAP, jumps, "cost")
     added = spark.createDataFrame(
         [(1000, 2000, 1)], "src_system_id long, dst_system_id long, cost long"
     )
@@ -159,7 +157,7 @@ def test_adjacency_collected_across_a_refresh_is_not_kept(spark, sf_dir, monkeyp
 
     def collect_then_refresh(e):
         adj = collect(e)
-        reg.apply_delta(SYSTEM_MAP, added, None, "cost")
+        reg.refresh(SYSTEM_MAP, jumps.unionByName(added), "cost")
         return adj
 
     monkeypatch.setattr(G, "_collect_adj", collect_then_refresh)

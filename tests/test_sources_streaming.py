@@ -436,14 +436,12 @@ def _run_wormhole_stream(spark, poll_dir, ckpt, handler):
 
 
 @pytest.mark.slow  # >10s: full-tier only (r14 test tiers)
-def test_eve_scout_stream_incremental_refresh_and_offset_resume(
-    spark, sf_dir, tmp_path
-):
+def test_eve_scout_stream_refresh_and_offset_resume(spark, sf_dir, tmp_path):
     """r8 verdict item 7 end-to-end: two polls through the eve_scout
-    STREAMING source drive refresh_wormholes_incremental per micro-batch;
-    the incrementally-patched cost projection matches a full rebuild after
-    each poll, and the second streaming run resumes from the committed
-    offset (only the new poll is processed)."""
+    STREAMING source drive one wormhole refresh per micro-batch; the cost
+    projection matches direct `refresh_wormholes` calls after each poll,
+    the second streaming run resumes from the committed offset (only the
+    new poll is processed), and an empty poll is still applied."""
     import json as _json
 
     from eve_graph_spark.api import wormhole_stream_handler
@@ -463,7 +461,7 @@ def test_eve_scout_stream_incremental_refresh_and_offset_resume(
     )
     assert stats["polls"] == [0]
 
-    # parity vs full rebuild after poll 0
+    # parity vs direct refresh_wormholes calls after poll 0
     def full_rebuild(poll_files):
         ref = _fixture_engine(spark, sf_dir)
         for pf in poll_files:
