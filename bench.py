@@ -3,7 +3,7 @@
 
 Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[] parallelism (default: the host's CPU count)
 
 Prints ONE COMPACT JSON line on stdout (≤1900 bytes, so it fits whole
 inside the driver's ~2000-char tail capture — r12 verdict item 2):
@@ -184,7 +184,7 @@ def snap_shuffle_pins(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     only = [s for s in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if s]
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
     # FORCED-DISTRIBUTED ARM (r13 verdict item 3): with

@@ -16,8 +16,14 @@ from eve_graph_spark.functions.risk import galaxy_baseline, risk_expr
 from eve_graph_spark.operators import relational as R
 from eve_graph_spark.operators.graph import (
     DRIVER_PATH_MAX_NODES,
+    Adjacency,
+    EuclidHeuristic,
     ProjectionRegistry,
+    a_star,
+    collect_coords,
     force_distributed,
+    k_shortest_paths_distributed,
+    k_shortest_paths_local,
     path_as_names,
     reconstruct_path,
     route_local,
@@ -47,6 +53,10 @@ class GraphEngine:
         self.registry = ProjectionRegistry()
         # (systems frame it was collected from, name snapshot)
         self._names: tuple[DataFrame, tuple | None] | None = None
+        # (coords frame it was collected from, {system_id: (x, y, z)})
+        self._xyz: tuple[DataFrame, dict] | None = None
+        # projection → (adjacency, coords snapshot, A* heuristic over both)
+        self._heuristics: dict[str, tuple] = {}
 
     def _name_snapshot(self) -> tuple[dict[str, int], dict[int, str]] | None:
         """(name → id, id → name) of `systems`, collected as Arrow in one
@@ -76,6 +86,21 @@ class GraphEngine:
             self._names = (systems, snap)
         return self._names[1]
 
+    def _heuristic(self, projection: str, adj: Adjacency) -> EuclidHeuristic:
+        """A* heuristic over a projection's adjacency and a snapshot of
+        `coords`, each keyed by identity like `_name_snapshot`: a rebuilt
+        projection or a reassigned `coords` frame re-derives it, and its
+        scale pass over every edge runs once per build, not per route."""
+        coords = self.coords
+        if self._xyz is None or self._xyz[0] is not coords:
+            self._xyz = (coords, collect_coords(coords))
+        xyz = self._xyz[1]
+        cached = self._heuristics.get(projection)
+        if cached is None or cached[0] is not adj or cached[1] is not xyz:
+            cached = (adj, xyz, EuclidHeuristic.over(adj, xyz))
+            self._heuristics[projection] = cached
+        return cached[2]
+
     # --- projections (G1-G6) ------------------------------------------------
     def build_cost_projection(self) -> None:
         self.registry.refresh(SYSTEM_MAP, self.jumps, "cost")
@@ -101,13 +126,23 @@ class GraphEngine:
         # Avoiding an endpoint of the trip itself makes the route
         # unreachable -> the normal 404 path.
         ids = [self._resolve(n) for n in avoid or ()]
-        adj = None if heuristic else self.registry.adjacency(projection)
+        if heuristic and self.coords is None:
+            raise ValueError(
+                "heuristic route requires the engine to be built with "
+                "a coords table (system_id, x, y, z)"
+            )
+        adj = self.registry.adjacency(projection)
         names = self._name_snapshot()
         if adj is not None and names is not None:
             # both snapshots on the driver: no Spark job per request, the
             # GDS-over-CSR shape (database.rs:484-513). An id missing from
             # `systems` drops out, as path_as_names' inner join does.
-            path = route_local(adj, src, dst, set(ids))
+            # heuristic=True is coordinate-pruned A*: h = euclidean distance
+            # scaled by the graph's best distance-per-cost ratio, admissible
+            # for ANY positive weight column — cost and risk alike —
+            # because r is derived from the same weights.
+            astar = self._heuristic(projection, adj) if heuristic else None
+            path = route_local(adj, src, dst, set(ids), astar)
             if not path:
                 raise RouteNotFound("route not found")
             return [names[1][n] for n in path if n in names[1]]
@@ -121,26 +156,13 @@ class GraphEngine:
                 ~F.col("src").isin(ids) & ~F.col("dst").isin(ids)
             )
         if heuristic:
-            # coordinate-pruned A* (driver-sized graphs): h = euclidean
-            # distance scaled by the graph's best distance-per-cost ratio,
-            # admissible for ANY positive weight column — cost and risk
-            # alike — because r is derived from the same weights.
-            if self.coords is None:
-                raise ValueError(
-                    "heuristic route requires the engine to be built with "
-                    "a coords table (system_id, x, y, z)"
-                )
-            from eve_graph_spark.operators.graph import a_star
-
             res = a_star(edges, self.coords, src, dst)
-            if res is None:
-                raise RouteNotFound("route not found")
-            return path_as_names(self.systems, res[1])
-        # target-pruned: GDS Dijkstra stops at targetNode
-        # (database.rs:484-513); the early exit keeps a route request from
-        # relaxing the whole graph above the driver threshold
-        dist = sssp(edges, [src], target_id=dst)
-        path = reconstruct_path(dist, dst)
+            path = res[1] if res else []
+        else:
+            # target-pruned: GDS Dijkstra stops at targetNode
+            # (database.rs:484-513); the early exit keeps a route request
+            # from relaxing the whole graph above the driver threshold
+            path = reconstruct_path(sssp(edges, [src], target_id=dst), dst)
         if not path:
             raise RouteNotFound("route not found")
         return path_as_names(self.systems, path)
@@ -180,15 +202,17 @@ class GraphEngine:
     def route_alternatives(self, from_name: str, to_name: str, k: int = 3) -> list[tuple[float, list[str]]]:
         """k best loop-free routes ranked by total cost (SURVEY §2.8 route
         ranking) — beyond the reference's single-route API."""
-        from eve_graph_spark.operators.graph import k_shortest_paths_distributed
-
         src, dst = self._resolve(from_name), self._resolve(to_name)
         if not self.registry.exists(SYSTEM_MAP):
             self.build_cost_projection()
-        edges = self.registry.get(SYSTEM_MAP)
-        # the shipping router: driver twin below the SSSP threshold, batched
-        # spur sweeps above it (graph.k_shortest_paths_distributed)
-        routes = k_shortest_paths_distributed(edges, src, dst, k)
+        adj = self.registry.adjacency(SYSTEM_MAP)
+        if adj is not None:
+            routes = k_shortest_paths_local(adj, src, dst, k)
+        else:
+            # batched spur sweeps above the driver threshold
+            routes = k_shortest_paths_distributed(
+                self.registry.get(SYSTEM_MAP), src, dst, k
+            )
         if not routes:
             raise RouteNotFound("route not found")
         snapshot = self._name_snapshot()

@@ -1,31 +1,31 @@
 """Graph analytics — SURVEY.md §2.6 (G1-G8): projections + weighted SSSP.
 
 The reference delegates Dijkstra to Neo4j GDS over an in-memory CSR
-projection (src/database.rs:422-456, :484-544). Spark has no built-in
-weighted shortest path, so the core here is a **Pregel-style iterative
-DataFrame Bellman-Ford / delta-relaxation loop**:
+projection (src/database.rs:422-456, :484-544). Shortest paths here run
+at two scales, with the same (dist, pred) at both:
+
+- **driver**: a graph within `DRIVER_SSSP_MAX_EDGES` edges is collected
+  once as an adjacency map (per request, or resident per projection in
+  `ProjectionRegistry.adjacency`) and solved by `_dijkstra`, one heap
+  kernel behind every route, SSSP, Yen and A* driver path;
+- **distributed**: a Pregel-style DataFrame Bellman-Ford loop,
 
     dist'(v) = min(dist(v), min over in-edges (u,v) of dist(u) + w(u,v))
 
-iterated until the frontier (set of vertices whose distance improved) is
-empty. Per iteration that is one join (frontier × edges, broadcast when the
-frontier is small) and one min-aggregation — both Catalyst-planned.
-
-Scale posture:
-- edges are hash-partitioned by `src` once up front and persisted, so every
-  iteration's frontier-edges join reuses the same partitioning (no repeated
-  edge shuffle);
-- the frontier is broadcast while small (it usually is: SSSP frontiers are
-  a thin wavefront), falling back to a shuffle join past a row threshold;
-- `localCheckpoint()` every few iterations truncates lineage, otherwise the
-  plan tree doubles per iteration and planning time explodes;
-- early termination the moment the frontier is empty (`frontier.isEmpty()`),
-  the analogue of Dijkstra settling all reachable nodes.
+  iterated until the frontier (vertices whose dist improved) is empty —
+  one join (frontier × edges, broadcast while the frontier is small)
+  and one (dist, pred) min-aggregation per round. Edges are
+  hash-partitioned by `src` once and persisted, `localCheckpoint()`
+  truncates lineage every few rounds, and a target stops the loop early.
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from heapq import heapify, heappop, heappush
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -104,9 +104,9 @@ class ProjectionRegistry:
     """
 
     _graphs: dict[str, DataFrame] = field(default_factory=dict)
-    # name → (projection frame, its driver-resident {src: [(dst, weight)]}
-    # or None when it does not fit the driver); see adjacency()
-    _adjacency: dict[str, tuple[DataFrame, dict | None]] = field(default_factory=dict)
+    # name → (projection frame, its driver-resident Adjacency or None when
+    # it does not fit the driver); see adjacency()
+    _adjacency: dict[str, tuple[DataFrame, Adjacency | None]] = field(default_factory=dict)
 
     def project(self, name: str, edges: DataFrame, weight_col: str) -> DataFrame:
         """G1/G2: materialize (src, dst, weight), partitioned by src for the
@@ -131,10 +131,10 @@ class ProjectionRegistry:
     def get(self, name: str) -> DataFrame:
         return self._graphs[name]
 
-    def adjacency(self, name: str) -> dict[int, list[tuple[int, float]]] | None:
-        """The persisted projection as a driver-side {src: [(dst, weight)]}
-        map — the CSR the reference's GDS Dijkstra reads — so a route
-        request runs no Spark job. Collected in one job on first use, only
+    def adjacency(self, name: str) -> Adjacency | None:
+        """The persisted projection as a driver-side `Adjacency` — the CSR
+        the reference's GDS Dijkstra reads — so a route request runs no
+        Spark job. Collected in one job on first use, only
         when the projection has ≤ DRIVER_SSSP_MAX_EDGES rows (None above
         it, and in the forced-distributed arm). It lives and dies with the
         projection: keyed by the identity of the persisted frame, so a
@@ -165,93 +165,170 @@ class ProjectionRegistry:
 DRIVER_SSSP_MAX_EDGES = 2_000_000  # below this, solve on the driver
 
 
-def _collect_adj(e: DataFrame) -> dict[int, list[tuple[int, float]]]:
+class Adjacency(NamedTuple):
+    """A graph on the driver, CSR-style: `ids` lists the node ids in
+    ascending order, `index` maps an id to its position there, and
+    `out[i]` holds node i's out-edges as (position of dst, weight). Dense
+    positions keep the kernel's state in flat lists, and ascending ids
+    make comparing positions compare ids (the smallest-pred tie-break)."""
+
+    ids: list[int]
+    index: dict[int, int]
+    out: list[list[tuple[int, float]]]
+
+    @classmethod
+    def from_edges(cls, src: list[int], dst: list[int],
+                   weight: list[float]) -> Adjacency:
+        ids = sorted(set(src).union(dst))
+        index = {n: i for i, n in enumerate(ids)}
+        out: list[list[tuple[int, float]]] = [[] for _ in ids]
+        # edges into one node mostly carry one weight (cost ≡ 1, risk is
+        # the inbound system's), so equal (dst, weight) pairs share one
+        # tuple — the map stays resident for a projection's lifetime
+        pairs: dict[tuple[int, float], tuple[int, float]] = {}
+        for u, pair in zip(src, zip(map(index.__getitem__, dst), weight)):
+            out[index[u]].append(pairs.setdefault(pair, pair))
+        return cls(ids, index, out)
+
+
+def _weighted_edges(edges: DataFrame, src_col: str, dst_col: str,
+                    weight_col: str) -> DataFrame:
+    """(src long, dst long, weight double): the shape every kernel reads."""
+    return edges.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+        F.col(weight_col).cast("double").alias("weight"),
+    )
+
+
+def _collect_adj(e: DataFrame) -> Adjacency:
     # collected as Arrow columns: a JVM-side batch collect, and building
     # plain ints/floats from three columns skips per-edge Row objects
     t = e.select("src", "dst", "weight").toArrow()
-    adj: dict[int, list[tuple[int, float]]] = {}
-    # edges into one node mostly carry one weight (cost ≡ 1, risk is the
-    # inbound system's), so equal (dst, weight) pairs share one tuple —
-    # the map stays resident for a projection's lifetime (adjacency())
-    pairs: dict[tuple[int, float], tuple[int, float]] = {}
-    for src, pair in zip(
-        t.column("src").to_pylist(),
-        zip(t.column("dst").to_pylist(), t.column("weight").to_pylist()),
-    ):
-        adj.setdefault(src, []).append(pairs.setdefault(pair, pair))
-    return adj
+    return Adjacency.from_edges(*(t.column(c).to_pylist() for c in ("src", "dst", "weight")))
 
 
-def _relax_local(
-    adj: dict[int, list[tuple[int, float]]], source_ids: list[int],
+class _Tree(NamedTuple):
+    """`_dijkstra`'s result over its graph's positions: `dist` (inf when
+    unreached) and `pred` (-1 for a source)."""
+
+    ids: list[int]
+    index: dict[int, int]
+    dist: list[float]
+    pred: list[int]
+
+    def entries(self) -> list[tuple[int, float, int | None]]:
+        """(node, dist, pred) of every reached node."""
+        ids, pred = self.ids, self.pred
+        return [
+            (ids[i], d, ids[pred[i]] if pred[i] >= 0 else None)
+            for i, d in enumerate(self.dist) if d < math.inf
+        ]
+
+    def route(self, target_id: int) -> tuple[float, list[int]] | None:
+        """(dist, [source, ..., target]), or None when unreached."""
+        i = self.index.get(target_id)
+        if i is None or self.dist[i] == math.inf:
+            return None
+        path, pred = [i], self.pred
+        while (p := pred[path[-1]]) >= 0:
+            path.append(p)
+        return self.dist[i], [self.ids[j] for j in reversed(path)]
+
+
+def _dijkstra(
+    adj: Adjacency,
+    source_ids: Iterable[int],
     target_id: int | None = None,
-) -> dict[int, tuple[float, int | None]]:
-    """The shared driver-side frontier relaxation kernel: identical update
-    rule and (dist, pred) tie-break as the distributed loops, so results
-    are bit-identical — float addition order per path is the same
-    IEEE-754 sequence.
+    h: Callable[[int], float] | None = None,
+    banned_nodes: Iterable[int] = (),
+    banned_edges: Iterable[tuple[int, int]] = (),
+    stats_out: dict | None = None,
+) -> _Tree:
+    """The driver's shortest-path kernel: Dijkstra over an `Adjacency`,
+    its heap keyed `(dist, hops, pred)`.
 
-    `target_id` enables the single-pair early exit (see `sssp`): stop once
-    the frontier's min tentative dist >= the target's settled dist. Rounds
-    that run are identical to the full run, so every returned entry with
-    dist <= dist(target) — the whole shortest path included — carries the
-    full run's exact (dist, pred)."""
-    best: dict[int, tuple[float, int | None]] = {int(s): (0.0, None) for s in source_ids}
-    frontier = set(best)
-    while frontier:
-        if target_id is not None and target_id in best:
-            dt = best[target_id][0]
-            if min(best[u][0] for u in frontier) >= dt:
-                break
-        candidates: dict[int, tuple[float, int]] = {}
-        for u in frontier:
-            du = best[u][0]
-            for v, w in adj.get(u, ()):
-                c = (du + w, u)
-                if v not in candidates or c < candidates[v]:
-                    candidates[v] = c
-        frontier = set()
-        for v, (d, p) in candidates.items():
-            if v not in best or d < best[v][0]:
-                best[v] = (d, p)
-                frontier.add(v)
-    return best
+    That key reproduces the distributed loops' Bellman-Ford rounds
+    exactly: a node first reaches its final dist in the round equal to
+    its fewest hops over shortest paths, and that round keeps the
+    smallest pred — so (dist, pred) are bit-identical to `sssp`'s, each
+    dist the same IEEE-754 sum along the same path.
 
-
-def double_sweep_local(
-    adj: dict[int, list[tuple[int, float]]], start: int
-) -> tuple[int, float, float]:
-    """Driver-side double-sweep kernel (r13, guide §5.3/§1.2): BOTH
-    diameter sweeps from ONE collected adjacency — the composition that
-    previously ran sweep 1 as a Spark job, collected the peak, and ran
-    sweep 2 as another job pays 2 edge collects + 2 scalar jobs for a
-    graph already on the driver. Returns (peak_node, peak_dist, lb) with
-    the exact values of the job-composed form: `_relax_local` is the same
-    relaxation kernel `_sssp_local` wraps, the peak rule is the
-    `orderBy(desc(dist), asc(node)).limit(1)` tie-break (max dist, ties
-    to min node — float negation is exact, so the sort keys agree), and
-    lb is the plain MAX over sweep-2 distances (no NaN: weights are
-    non-negative finite)."""
-    b1 = _relax_local(adj, [int(start)])
-    peak_node, (peak_dist, _) = min(b1.items(), key=lambda kv: (-kv[1][0], kv[0]))
-    b2 = _relax_local(adj, [int(peak_node)])
-    lb = max(d for d, _ in b2.values())
-    return int(peak_node), float(peak_dist), float(lb)
-
-
-def _sssp_local(e: DataFrame, source_ids: list[int],
-                target_id: int | None = None) -> DataFrame:
-    """Small-graph fast path: collect edges, run the shared relaxation
-    kernel on the driver.
-
-    Rationale: the reference's production graph is ~9k nodes / ~28k
-    directed edges; GDS itself solves it single-machine over CSR. A route
-    query on a graph that fits on the driver must not launch 30 Spark
-    jobs — the distributed loop below is for graphs that don't fit.
+    - `target_id`: stop once the least key exceeds the target's. Every
+      entry with dist <= dist(target) is then final, the target's path
+      included; farther entries may be tentative or absent.
+    - `h`: A*. h(node id) is added to the key, so a consistent h settles
+      the target first; `dist` stays the path cost.
+    - `banned_nodes` are never entered and `banned_edges` (u, v) never
+      ridden: Yen's spur searches.
+    - `stats_out["expansions"]` counts the nodes expanded.
+    A source outside the graph reaches only itself.
     """
-    best = _relax_local(_collect_adj(e), source_ids, target_id)
-    rows = [(n, d, p) for n, (d, p) in best.items()]
-    return local_frame(e.sparkSession, rows, _SSSP_SCHEMA)
+    ids, index, out = adj
+    source_ids = [int(s) for s in source_ids]
+    extra = [s for s in dict.fromkeys(source_ids) if s not in index]
+    if extra:
+        ids, out = ids + extra, out + [[] for _ in extra]
+        index = {**index, **{s: i for i, s in enumerate(extra, len(adj.ids))}}
+    n = len(ids)
+    dist, hops, pred, done = [math.inf] * n, [0] * n, [-1] * n, bytearray(n)
+    banned = [index[b] for b in banned_nodes if b in index]
+    for b in banned:
+        dist[b] = -math.inf  # no candidate beats it
+    cut: dict[int, set[int]] = {}
+    for u, v in banned_edges:
+        if u in index and v in index:
+            cut.setdefault(index[u], set()).add(index[v])
+    heap = []
+    for s in map(index.__getitem__, source_ids):
+        dist[s], hops[s], pred[s] = 0.0, 0, -1
+        heap.append((h(ids[s]) if h else 0.0, 0, -1, s))
+    heapify(heap)
+    push, pop = heappush, heappop
+    t = index.get(target_id, -1)
+    limit = math.inf
+    expansions = 0
+    while heap:
+        key, k, _, u = pop(heap)
+        if done[u]:
+            continue  # a superseded entry
+        if key > limit:
+            break
+        done[u] = 1
+        if u == t:
+            limit = key
+        expansions += 1
+        d, nbrs = dist[u], out[u]
+        if u in cut:
+            nbrs = [(v, w) for v, w in nbrs if v not in cut[u]]
+        k += 1
+        for v, w in nbrs:
+            nd = d + w
+            dv = dist[v]
+            # keep v's entry unless (nd, k, u) < its (dist, hops, pred)
+            if nd > dv or nd == dv and (k > hops[v] or k == hops[v] and u >= pred[v]):
+                continue
+            dist[v], hops[v], pred[v] = nd, k, u
+            push(heap, (nd + h(ids[v]) if h else nd, k, u, v))
+    for b in banned:
+        if dist[b] == -math.inf:
+            dist[b] = math.inf
+    if stats_out is not None:
+        stats_out["expansions"] = expansions
+    return _Tree(ids, index, dist, pred)
+
+
+def double_sweep_local(adj: Adjacency, start: int) -> tuple[int, float, float]:
+    """Both diameter sweeps from ONE collected adjacency, on the driver:
+    the job-composed form pays 2 edge collects + 2 scalar jobs for a graph
+    already there. Returns (peak_node, peak_dist, lb) with that form's
+    exact values: `_dijkstra` gives `sssp`'s dists, the peak rule is its
+    `orderBy(desc(dist), asc(node)).limit(1)` tie-break (float negation
+    is exact, so the sort keys agree), and lb is the plain MAX over
+    sweep-2 distances (no NaN: weights are non-negative finite)."""
+    neg_peak, peak_node = min((-d, n) for n, d, _ in _dijkstra(adj, [start]).entries())
+    lb = max(d for _, d, _ in _dijkstra(adj, [peak_node]).entries())
+    return int(peak_node), -neg_peak, float(lb)
 
 
 _SSSP_SCHEMA = T.StructType(
@@ -278,28 +355,30 @@ def sssp(
     """Weighted single/multi-source shortest paths (G7/G8 kernel).
 
     Returns (node long, dist double, pred long) — pred is the upstream node
-    on a shortest path (ties broken by smallest dist then smallest pred, so
-    the result is deterministic). Unreachable nodes are absent.
+    on a shortest path: of the shortest paths with the fewest hops, the
+    one entering through the smallest pred, so the result is
+    deterministic. Unreachable nodes are absent.
 
     Weights must be non-negative (true for cost ≡ 1 and risk ≥ baseline > 0,
     database.rs:375, :324-332).
 
     `target_id` is the single-pair early exit for route queries (the
     reference's flagship A1/A2 shape, database.rs:484-513: GDS Dijkstra
-    stops at targetNode; r6 verdict item 1): stop relaxing once the
-    frontier's min tentative dist >= the target's settled dist. With
-    non-negative weights every future candidate is >= that min, so
-    neither the target nor any node on its shortest path can improve
-    again — and because whole rounds run unchanged before the cut, every
-    returned entry with dist <= dist(target) is bit-identical (dist AND
-    pred) to the full run: `reconstruct_path(dist, target_id)` walks only
-    such entries. Entries for farther nodes may be tentative or absent —
-    when a target is supplied the result is a ROUTE table, not an
-    all-nodes distance table. On a 1000-layer graph with the target at
-    layer 10 this is ~11 supersteps instead of ~1000.
+    stops at targetNode): every returned entry with dist <= dist(target)
+    is bit-identical (dist AND pred) to the full run, so
+    `reconstruct_path(dist, target_id)` walks only such entries. Entries
+    for farther nodes may be tentative or absent — when a target is
+    supplied the result is a ROUTE table, not an all-nodes distance table.
 
-    Graphs with ≤ `driver_threshold` edges are solved on the driver
-    (`_sssp_local`); pass 0 to force the distributed loop.
+    Graphs with ≤ `driver_threshold` edges are solved on the driver by
+    `_dijkstra`, whose (dist, hops, pred) heap key reproduces the
+    distributed loop's choices; pass 0 to force that loop. It relaxes the
+    whole frontier per round, a join plus a (dist, pred) min-aggregation,
+    until no dist improves; with a target it stops once the frontier's
+    min tentative dist >= the target's settled dist (non-negative weights:
+    nothing on the target's path can improve again, and whole rounds run
+    unchanged before the cut). On a 1000-layer graph with the target at
+    layer 10 that is ~11 supersteps instead of ~1000.
 
     If `stats_out` is a dict, the distributed loop records
     `iterations` (relaxation rounds run), `dist_checkpoints` (lineage
@@ -308,22 +387,12 @@ def sssp(
     convergence/lineage behavior on long-diameter graphs.
     """
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
     if fits_driver(e, driver_threshold):
-        return _sssp_local(e, source_ids, target_id)
+        rows = _dijkstra(_collect_adj(e), source_ids, target_id).entries()
+        return local_frame(spark, rows, _SSSP_SCHEMA)
 
-    seed_schema = T.StructType(
-        [
-            T.StructField("node", T.LongType(), False),
-            T.StructField("dist", T.DoubleType(), False),
-            T.StructField("pred", T.LongType(), True),
-        ]
-    )
-    dist = local_frame(spark, [(int(s), 0.0, None) for s in source_ids], seed_schema)
+    dist = local_frame(spark, [(int(s), 0.0, None) for s in source_ids], _SSSP_SCHEMA)
     frontier = dist
     frontier_rows = len(source_ids)
     n_iters = n_ckpts = 0
@@ -408,48 +477,36 @@ def sssp_route(
     (pred(v) := MIN(src) over edges with dist(src) + w == dist(v) EXACTLY —
     the SQL-replayable tie-break, see safest_route_path), pred-chain walk.
 
-    r13 (guide §2.4 — remove whole jobs, not just exchanges): below
-    `driver_threshold` edges the ≤threshold branch used to run the preds
-    derivation as a distributed 3-frame join + groupBy and
-    reconstruct_path as a separate collect — 5+ scheduler round-trips over
-    <100-row frames, each paying fixed job latency (decomposed at sf0.1:
-    preds 0.89 s + dist⋈preds collect 1.16 s on a 25-node graph). One edge
-    collect now feeds the relaxation, the preds rule AND the walk.
-    Bit-identical by construction: Python float add/compare on the
-    collected doubles are the same IEEE-754 ops the distributed filter
-    runs, and MIN over longs is engine-independent. Above the threshold
-    the distributed derivation below is exactly the old query plan.
+    Below `driver_threshold` edges one Arrow edge collect feeds
+    `_dijkstra`, the preds rule AND the walk: no job per step on a
+    reference-sized graph. Bit-identical by construction: Python float
+    add/compare on the collected doubles are the same IEEE-754 ops the
+    distributed filter runs, and MIN over longs is engine-independent.
     """
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
     source_id, target_id = int(source_id), int(target_id)
     if fits_driver(e, driver_threshold):
-        rows = e.collect()
-        adj: dict[int, list[tuple[int, float]]] = {}
-        for r in rows:
-            adj.setdefault(r["src"], []).append((r["dst"], r["weight"]))
-        best = _relax_local(adj, [source_id], None)
-        pred: dict[int, int] = {}
-        for r in rows:
-            u, v, w = r["src"], r["dst"], r["weight"]
-            if v == source_id or u not in best or v not in best:
+        adj = _collect_adj(e)
+        tree = _dijkstra(adj, [source_id])
+        dist, s = tree.dist, tree.index[source_id]
+        pred: dict[int, int] = {}  # positions ascend with ids
+        for u, nbrs in enumerate(adj.out):
+            du = dist[u]
+            if du == math.inf:
                 continue
-            if best[u][0] + w == best[v][0] and (v not in pred or u < pred[v]):
-                pred[v] = u
+            for v, w in nbrs:
+                if v != s and du + w == dist[v] and (v not in pred or u < pred[v]):
+                    pred[v] = u
         path: list[int] = []
-        if target_id in best:
-            path = [target_id]
+        t = tree.index.get(target_id)
+        if t is not None and dist[t] < math.inf:
+            path = [t]
             while path[-1] in pred and len(path) <= 10_000:
                 path.append(pred[path[-1]])
-            path.reverse()
-        dist_df = local_frame(
-            spark, [(n, d) for n, (d, _p) in best.items()], "node long, dist double"
-        )
-        return dist_df, path
+            path = [tree.ids[i] for i in reversed(path)]
+        rows = [(n, d) for n, d, _ in tree.entries()]
+        return local_frame(spark, rows, "node long, dist double"), path
 
     dist = sssp(
         e, [source_id], weight_col="weight", driver_threshold=driver_threshold
@@ -475,16 +532,6 @@ _MSSSP_SCHEMA = T.StructType(
         T.StructField("pred", T.LongType(), True),
     ]
 )
-
-
-def _multi_sssp_local(e: DataFrame, source_ids: list[int]) -> DataFrame:
-    adj = _collect_adj(e)
-    rows = [
-        (int(s), n, d, p)
-        for s in source_ids
-        for n, (d, p) in _relax_local(adj, [s]).items()
-    ]
-    return local_frame(e.sparkSession, rows, _MSSSP_SCHEMA)
 
 
 def multi_source_sssp(
@@ -527,13 +574,11 @@ def multi_source_sssp(
     # order-preserving dedup: a repeated source id would seed duplicate
     # (source, source) state rows and emit every result row twice
     source_ids = list(dict.fromkeys(source_ids))
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
     if fits_driver(e, driver_threshold):
-        return _multi_sssp_local(e, source_ids)
+        adj = _collect_adj(e)
+        rows = [(int(s), *entry) for s in source_ids for entry in _dijkstra(adj, [s]).entries()]
+        return local_frame(spark, rows, _MSSSP_SCHEMA)
 
     dist = local_frame(
         spark, [(int(s), int(s), 0.0, None) for s in source_ids], _MSSSP_SCHEMA
@@ -588,60 +633,23 @@ def multi_source_sssp(
     return dist
 
 
-def k_shortest_paths(edges: DataFrame, source: int, target: int, k: int = 3,
-                     weight_col: str = "weight", src_col: str = "src",
-                     dst_col: str = "dst",
-                     driver_threshold: int = DRIVER_SSSP_MAX_EDGES) -> list[tuple[float, list[int]]]:
+def k_shortest_paths_local(adj: Adjacency, source: int, target: int,
+                           k: int = 3) -> list[tuple[float, list[int]]]:
     """Yen's algorithm: the k best loop-free routes, ranked by total cost
-    (SURVEY §2.8 route ranking). Route alternatives only make sense on a
-    graph small enough to answer interactively, so this is driver-side
-    over the collected edge list (guarded by the same threshold as SSSP);
-    at cluster scale you'd run it per-request on the driver against the
-    broadcast edge snapshot, not as a distributed job.
+    (SURVEY §2.8 route ranking), over a collected adjacency
+    (`ProjectionRegistry.adjacency`). Every spur search is `_dijkstra`
+    with the root's nodes and the found paths' next edges banned, so each
+    search picks the path `k_shortest_paths_distributed`'s banned sweeps
+    pick.
 
     Returns [(total_cost, [node, ...])], best first; ties by path nodes.
     """
-    if k < 1:
-        return []
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
-    if not fits_driver(e, driver_threshold, force_exempt=True):
-        raise ValueError("graph exceeds driver threshold; route alternatives "
-                         "are a driver-side interactive query")
-    import heapq
 
-    adj: dict[int, list[tuple[int, float]]] = {}
-    for r in e.collect():
-        adj.setdefault(r["src"], []).append((r["dst"], r["weight"]))
+    def search(spur: int, banned_nodes: set, banned_edges: set):
+        return _dijkstra(adj, [spur], target, banned_nodes=banned_nodes,
+                         banned_edges=banned_edges).route(target)
 
-    def dijkstra(banned_edges: set, banned_nodes: set, s: int):
-        dist = {s: 0.0}
-        pred: dict[int, int] = {}
-        pq = [(0.0, s)]
-        while pq:
-            d, u = heapq.heappop(pq)
-            if d > dist.get(u, float("inf")):
-                continue
-            for v, w in adj.get(u, ()):
-                if (u, v) in banned_edges or v in banned_nodes:
-                    continue
-                nd = d + w
-                if nd < dist.get(v, float("inf")):
-                    dist[v], pred[v] = nd, u
-                    heapq.heappush(pq, (nd, v))
-        if target not in dist:
-            return None
-        path, cur = [target], target
-        while cur != s:
-            cur = pred[cur]
-            path.append(cur)
-        return dist[target], list(reversed(path))
-
-    first = dijkstra(set(), set(), source)
-    if first is None:
+    if k < 1 or (first := search(source, set(), set())) is None:
         return []
     found = [first]
     candidates: list[tuple[float, list[int]]] = []
@@ -654,16 +662,16 @@ def k_shortest_paths(edges: DataFrame, source: int, target: int, k: int = 3,
                 for _, p in found
                 if len(p) > len(root) and p[: len(root)] == root
             }
-            banned_n = set(root[:-1])
-            spur_res = dijkstra(banned_e, banned_n, spur)
+            spur_res = search(spur, set(root[:-1]), banned_e)
             if spur_res is None:
                 continue
             spur_cost, spur_path = spur_res
             # min over parallel edges — the weight the relaxation itself
             # would ride (matches the distributed twin's min-aggregated
             # weight cache)
+            ix = adj.index
             root_cost = sum(
-                min(w for v, w in adj[a] if v == b)
+                min(w for v, w in adj.out[ix[a]] if v == ix[b])
                 for a, b in zip(root, root[1:])
             )
             cand = (root_cost + spur_cost, root[:-1] + spur_path)
@@ -845,36 +853,31 @@ def k_shortest_paths_distributed(
     stats_out: dict | None = None,
 ) -> list[tuple[float, list[int]]]:
     """Yen's k best loop-free routes with BATCHED spur sweeps — the
-    distributed twin of `k_shortest_paths` (GDS `gds.shortestPath.yens`
-    parity, the step past database.rs:484-544's single Dijkstra).
+    distributed twin of `k_shortest_paths_local` (GDS
+    `gds.shortestPath.yens` parity, the step past database.rs:484-544's
+    single Dijkstra).
 
-    Below `driver_threshold` it delegates to the driver implementation
-    (identical results; a reference-scale graph must not launch Spark jobs
-    per route query). Above it, each Yen round runs ONE `_banned_multi_sweep`
-    over all |prev_path| spur jobs instead of |spurs| serial SSSPs, so a
-    round costs O(max diameter) supersteps regardless of path length.
+    Below `driver_threshold` it collects the edges and runs the driver
+    twin (identical results; a reference-scale graph must not launch
+    Spark jobs per route query). Above it, each Yen round runs ONE
+    `_banned_multi_sweep` over all |prev_path| spur jobs instead of
+    |spurs| serial SSSPs, so a round costs O(max diameter) supersteps
+    regardless of path length.
     Candidate bookkeeping (path-sized) stays on the driver; edge weights
     for root costs are prefetched per found path via pushed-down filters
     (path-sized rows, never the edge table).
 
-    Output is implementation-independent whenever the top-(k+1) simple-path
-    costs are distinct (ties are broken by min-(dist, pred) here vs heap
-    order in the driver twin — both return SOME optimal path under exact
-    cost ties, the same guarantee GDS gives).
+    Output equals the driver twin's, cost ties included: every sweep here
+    keeps the (dist, pred) of whole min-(dist, pred) rounds, and the
+    driver's `_dijkstra` reproduces exactly those choices.
 
     Returns [(total_cost, [node, ...])], best first; ties by path nodes.
     """
     if k < 1:
         return []
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
     if fits_driver(e, driver_threshold):
-        return k_shortest_paths(
-            edges, source, target, k, weight_col, src_col, dst_col, driver_threshold
-        )
+        return k_shortest_paths_local(_collect_adj(e), int(source), int(target), k)
     e = e.persist()
     wcache: dict[tuple[int, int], float] = {}
 
@@ -975,90 +978,70 @@ def a_star(
       nonzero h could overestimate the remaining cost.
     Both arms are pinned by tests/test_a_star.py.
 
-    Driver-side over the collected edge list, like `k_shortest_paths`:
-    a single-pair interactive route on a graph that fits the driver
-    must not launch a job per expansion (the distributed answer to the
-    same question is sssp(target_id=...)). Raises above
-    `driver_threshold`.
+    Driver-side over the collected edge list: a single-pair interactive
+    route on a graph that fits the driver must not launch a job per
+    expansion (the distributed answer to the same question is
+    sssp(target_id=...)). Raises above `driver_threshold`.
+    `route_local(heuristic=)` is the same search over a resident
+    adjacency and coords snapshot.
 
     Returns (total_cost, [node, ...]) or None when unreachable.
-    `stats_out["expansions"]` counts settled nodes — the quantity the
+    `stats_out["expansions"]` counts expanded nodes — the quantity the
     heuristic exists to shrink (tests/test_a_star.py pins it strictly
     below Dijkstra's on a coordinate-true grid).
     """
-    import heapq
-    import math
-
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
-    )
+    e = _weighted_edges(edges, src_col, dst_col, weight_col)
     if not fits_driver(e, driver_threshold, force_exempt=True):
         raise ValueError(
             "a_star: graph exceeds the driver threshold; single-pair routes "
             "at that scale run sssp(target_id=...) with its distributed "
             "early-exit loop"
         )
-    xyz = {
-        r[id_col]: (float(r["x"]), float(r["y"]), float(r["z"]))
-        for r in coords.select(id_col, "x", "y", "z").collect()
-    }
+    adj = _collect_adj(e)
+    h = EuclidHeuristic.over(adj, collect_coords(coords, id_col)).to(target)
+    return _dijkstra(adj, [source], target, h, stats_out=stats_out).route(target)
 
-    def euclid(a: int, b: int) -> float:
-        pa, pb = xyz.get(a), xyz.get(b)
-        if pa is None or pb is None:
-            return 0.0
-        return math.dist(pa, pb)
 
-    erows = e.collect()
-    nodes = {row["src"] for row in erows} | {row["dst"] for row in erows}
-    coords_ok = all(
-        n in xyz and any(c != 0.0 for c in xyz[n]) for n in nodes
-    )
-    adj: dict[int, list[tuple[int, float]]] = {}
-    r_best = 0.0
-    for row in erows:
-        u, v, w = row["src"], row["dst"], row["weight"]
-        adj.setdefault(u, []).append((v, w))
-        if w > 0:
-            r_best = max(r_best, euclid(u, v) / w)
-        elif euclid(u, v) > 0:
-            r_best = math.inf  # free edge with real length: unbounded ratio
+def collect_coords(coords: DataFrame,
+                   id_col: str = "system_id") -> dict[int, tuple[float, float, float]]:
+    """{id: (x, y, z)} of a coords table, collected as Arrow columns."""
+    t = coords.select(
+        id_col, *(F.col(c).cast("double") for c in ("x", "y", "z"))
+    ).toArrow()
+    xyz = zip(*(t.column(i).to_pylist() for i in (1, 2, 3)))
+    return dict(zip(t.column(0).to_pylist(), xyz))
 
-    use_h = coords_ok and 0.0 < r_best < math.inf
 
-    def h(v: int) -> float:
-        return euclid(v, target) / r_best if use_h else 0.0
+class EuclidHeuristic(NamedTuple):
+    """`a_star`'s h over one adjacency: coordinates plus the scale r, or
+    r = None (h ≡ 0) when one of its two degradations holds. The scale
+    pass reads every edge, so a caller serving many routes keeps this
+    per adjacency and asks `to(target)` per route."""
 
-    dist = {source: 0.0}
-    pred: dict[int, int] = {}
-    pq = [(h(source), source)]
-    settled: set[int] = set()
-    expansions = 0
-    while pq:
-        f, u = heapq.heappop(pq)
-        if u in settled:
-            continue
-        settled.add(u)
-        expansions += 1
-        if u == target:
-            break
-        du = dist[u]
-        for v, w in adj.get(u, ()):
-            nd = du + w
-            if v not in dist or nd < dist[v]:
-                dist[v], pred[v] = nd, u
-                heapq.heappush(pq, (nd + h(v), v))
-    if stats_out is not None:
-        stats_out["expansions"] = expansions
-    if target not in settled:
-        return None
-    path, cur = [target], target
-    while cur != source:
-        cur = pred[cur]
-        path.append(cur)
-    return dist[target], list(reversed(path))
+    xyz: dict[int, tuple[float, float, float]]
+    r: float | None
+
+    @classmethod
+    def over(cls, adj: Adjacency,
+             xyz: dict[int, tuple[float, float, float]]) -> EuclidHeuristic:
+        pts = [xyz.get(n) for n in adj.ids]
+        if not all(p and any(p) for p in pts):
+            return cls(xyz, None)  # missing or placeholder coordinates
+        r = 0.0
+        for pu, nbrs in zip(pts, adj.out):
+            for v, w in nbrs:
+                length = math.dist(pu, pts[v])
+                if w > 0:
+                    r = max(r, length / w)
+                elif length > 0:
+                    return cls(xyz, None)  # free edge with real length: unbounded ratio
+        return cls(xyz, r if 0.0 < r < math.inf else None)
+
+    def to(self, target: int) -> Callable[[int], float] | None:
+        xyz, r, pt = self.xyz, self.r, self.xyz.get(target)
+        if r is None or pt is None:
+            return None
+        return lambda v: math.dist(xyz.get(v, pt), pt) / r
 
 
 def dfs(edges: DataFrame, source: int,
@@ -1203,20 +1186,23 @@ def _walk_preds(pred: dict[int, int | None], target_id: int,
     return list(reversed(path))
 
 
-def route_local(adj: dict[int, list[tuple[int, float]]], source_id: int,
-                target_id: int, avoid: set[int] | None = None) -> list[int]:
+def route_local(adj: Adjacency, source_id: int, target_id: int,
+                avoid: set[int] | None = None,
+                heuristic: EuclidHeuristic | None = None) -> list[int]:
     """Driver-resident twin of `sssp(target_id=)` → `reconstruct_path` over
-    a collected adjacency (`ProjectionRegistry.adjacency`): the same
-    `_relax_local` kernel and pred walk, so the path is node-for-node the
-    one the DataFrame route returns. `avoid` drops every edge touching
-    those nodes first, like the route API's pre-search edge filter."""
-    if avoid:
-        adj = {
-            u: [(v, w) for v, w in nbrs if v not in avoid]
-            for u, nbrs in adj.items() if u not in avoid
-        }
-    best = _relax_local(adj, [source_id], target_id)
-    return _walk_preds({n: p for n, (_, p) in best.items()}, target_id)
+    a collected adjacency (`ProjectionRegistry.adjacency`): `_dijkstra`
+    reproduces the distributed loop's (dist, pred), so the path is
+    node-for-node the one the DataFrame route returns. `avoid` drops
+    every edge touching those nodes, like the route API's pre-search edge
+    filter. With a `heuristic` over `adj` it is `a_star`'s search; h is
+    scaled over the whole adjacency, and dropping edges only raises true
+    costs, so h stays admissible."""
+    avoid = avoid or set()
+    h = heuristic.to(target_id) if heuristic else None
+    if source_id in avoid:
+        adj = Adjacency([], {}, [])
+    found = _dijkstra(adj, [source_id], target_id, h, banned_nodes=avoid).route(target_id)
+    return found[1] if found else []
 
 
 def path_as_names(systems: DataFrame, path: list[int]) -> list[str]:

@@ -108,10 +108,17 @@ def upsert_edges_if_missing(existing: DataFrame, new_edges: DataFrame,
     """W5 `create_system_jump_if_missing` (database.rs:355-365): idempotent
     check-then-insert = left_anti against existing, then union. The
     reference checks before EACH insert, so duplicates within the new
-    batch also collapse — hence the dropDuplicates on the keys."""
-    missing = new_edges.dropDuplicates(list(keys)).join(
-        existing.select(*keys), list(keys), "left_anti"
+    batch also collapse — hence the dropDuplicates on the keys.
+
+    `existing` is the big side and is never shuffled, whatever its size
+    estimate (an anchored table may carry none): it semi-joins against
+    the batch's broadcast keys, and the batch anti-joins against those
+    broadcast hits."""
+    keys = list(keys)
+    hits = existing.select(*keys).join(
+        F.broadcast(new_edges.select(*keys)), keys, "left_semi"
     )
+    missing = new_edges.dropDuplicates(keys).join(F.broadcast(hits), keys, "left_anti")
     return existing.unionByName(missing)
 
 

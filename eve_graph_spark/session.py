@@ -35,7 +35,7 @@ def get_spark(app_name: str = "eve-graph-spark", shuffle_partitions: int | None 
     - Broadcast threshold 64MB: the dimension tables (region/nation/systems
       name-lookup) must broadcast, never shuffle.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
     _export_warm_daemon_path()

@@ -27,7 +27,7 @@ def main() -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
     from pyspark.sql import SparkSession
 

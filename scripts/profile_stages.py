@@ -15,7 +15,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F

@@ -146,7 +146,7 @@ def test_graph_engine_routes(spark, sf_dir):
 
 
 def test_k_shortest_paths_ranked_and_distinct(spark):
-    from eve_graph_spark.operators.graph import k_shortest_paths
+    from eve_graph_spark.operators.graph import k_shortest_paths_distributed
 
     # diamond with a longer detour: 0->1->3 (cost 2), 0->2->3 (cost 3),
     # 0->1->2->3 (cost 4)
@@ -154,7 +154,7 @@ def test_k_shortest_paths_ranked_and_distinct(spark):
         [(0, 1, 1.0), (1, 3, 1.0), (0, 2, 2.0), (2, 3, 1.0), (1, 2, 2.0)],
         "src long, dst long, weight double",
     )
-    routes = k_shortest_paths(e, 0, 3, k=3)
+    routes = k_shortest_paths_distributed(e, 0, 3, k=3)  # below the threshold: driver twin
     assert [(c, p) for c, p in routes] == [
         (2.0, [0, 1, 3]),
         (3.0, [0, 2, 3]),
@@ -170,10 +170,7 @@ def test_k_shortest_distributed_matches_driver(spark, sf_dir):
     independent — see route_alternatives_k3). driver_threshold=0 forces
     the distributed machinery; stats pin that spur sweeps are batched
     (one sweep per Yen round, not one per spur)."""
-    from eve_graph_spark.operators.graph import (
-        k_shortest_paths,
-        k_shortest_paths_distributed,
-    )
+    from eve_graph_spark.operators.graph import k_shortest_paths_distributed
     from eve_graph_spark.sources.graph_fixture import build_jumps
 
     e = build_jumps(spark, sf_dir).select(
@@ -181,7 +178,7 @@ def test_k_shortest_distributed_matches_driver(spark, sf_dir):
         F.col("dst_system_id").alias("dst"),
         F.floor(F.col("risk") * 1_000_000 + F.lit(0.5)).cast("long").alias("w"),
     )
-    local = k_shortest_paths(e, 1, 13, k=3, weight_col="w")
+    local = k_shortest_paths_distributed(e, 1, 13, k=3, weight_col="w")
     stats: dict = {}
     dist = k_shortest_paths_distributed(
         e, 1, 13, k=3, weight_col="w", driver_threshold=0, stats_out=stats
@@ -212,6 +209,40 @@ def test_k_shortest_distributed_target_early_exit(spark):
     assert stats["sweeps"] == 1
     # unpruned, the single sweep would run ~n supersteps
     assert stats["sweep_iterations"] <= 6
+
+
+# Two equal-cost routes 3 -> 4: 3-5-4 (2 hops, over the zero-weight edge
+# 5 -> 4) and 3-1-2-4 (3 hops). The distributed rounds reach 4 through 5
+# first; a heap ordered by (dist, node) alone would settle 4 through 2.
+TIE_EDGES = [(3, 5, 2.0), (5, 4, 0.0), (3, 1, 1.0), (1, 2, 0.5), (2, 4, 0.5)]
+
+
+def test_driver_kernel_matches_distributed_loop_under_ties(spark):
+    from eve_graph_spark.operators.graph import Adjacency, _dijkstra, route_local
+
+    e = spark.createDataFrame(TIE_EDGES, "src long, dst long, weight double")
+    adj = Adjacency.from_edges(*zip(*TIE_EDGES))
+    for seeds in ([3], [1, 3]):
+        want = {
+            r["node"]: (r["dist"], r["pred"])
+            for r in sssp(e, seeds, driver_threshold=0).collect()
+        }
+        got = {n: (d, p) for n, d, p in _dijkstra(adj, seeds).entries()}
+        assert got == want, seeds
+    assert want[4] == (1.0, 2)  # seed 1 reaches 4 at 1.0 through 2
+    for s, t in ((3, 4), (1, 4)):
+        dist = sssp(e, [s], target_id=t, driver_threshold=0)
+        assert route_local(adj, s, t) == reconstruct_path(dist, t)
+    assert route_local(adj, 3, 4) == [3, 5, 4]
+
+
+def test_k_shortest_driver_matches_distributed_under_ties(spark):
+    from eve_graph_spark.operators.graph import k_shortest_paths_distributed
+
+    e = spark.createDataFrame(TIE_EDGES, "src long, dst long, weight double")
+    want = [(2.0, [3, 5, 4]), (2.0, [3, 1, 2, 4])]
+    assert k_shortest_paths_distributed(e, 3, 4, k=2) == want
+    assert k_shortest_paths_distributed(e, 3, 4, k=2, driver_threshold=0) == want
 
 
 def test_k_shortest_distributed_no_route(spark):

@@ -29,8 +29,9 @@ def names(spark, sf_dir) -> dict[int, str]:
 
 
 def _dataframe_route(eng: GraphEngine, projection: str, src: int, dst: int) -> list[str]:
-    """The DataFrame route: sssp(target_id=) -> reconstruct_path -> names."""
-    dist = sssp(eng.registry.get(projection), [src], target_id=dst)
+    """The distributed DataFrame route: sssp(target_id=) -> reconstruct_path
+    -> names."""
+    dist = sssp(eng.registry.get(projection), [src], target_id=dst, driver_threshold=0)
     return path_as_names(eng.systems, reconstruct_path(dist, dst))
 
 
@@ -60,8 +61,9 @@ def test_snapshot_route_matches_dataframe_route_on_every_pair(spark, engine, nam
     """Every ordered pair, both projections. The all-sources oracle is
     multi_source_sssp, whose per-source (dist, pred) are sssp()'s
     (test_multi_source_sssp_per_source_parity) and, below dist(target),
-    the target-pruned run's (sssp docstring); far pairs are also checked
-    against the target-pruned DataFrame route itself."""
+    the target-pruned run's (sssp docstring). The fixture fits the driver,
+    so that oracle runs the same driver kernel; far pairs are also checked
+    against the distributed target-pruned loop."""
     from eve_graph_spark.operators.graph import multi_source_sssp
 
     engine.build_cost_projection()
@@ -84,6 +86,25 @@ def test_snapshot_route_matches_dataframe_route_on_every_pair(spark, engine, nam
         for s, t in ((0, 13), (13, 0), (3, 21), (24, 7)):
             assert _snapshot_route(engine, projection, names[s], names[t]) == \
                 _dataframe_route(engine, projection, s, t)
+
+
+def test_alternatives_and_heuristic_routes_launch_no_spark_jobs(spark, sf_dir, names):
+    from eve_graph_spark.operators.graph import a_star
+    from eve_graph_spark.sources.graph_fixture import build_coords
+
+    eng = GraphEngine(build_systems(spark, sf_dir), build_jumps(spark, sf_dir),
+                      coords=build_coords(spark, sf_dir))
+    a, b = names[0], names[13]
+    eng.route_alternatives(a, b)  # builds the projections and snapshots
+    cost, path = a_star(eng.registry.get(SYSTEM_MAP), eng.coords, 13, 0)
+    eng.safest_route(a, b, heuristic=True)
+    before = _jobs(spark)
+    routes = eng.route_alternatives(b, a)
+    assert len(routes) == 3 and all(p[0] == b and p[-1] == a for _, p in routes)
+    assert eng.shortest_route(b, a, heuristic=True) == [names[n] for n in path]
+    assert routes[0][0] == cost
+    assert eng.safest_route(b, a, heuristic=True)[-1] == a
+    assert _jobs(spark) == before
 
 
 def test_forced_distributed_arm_skips_the_snapshot(spark, engine, names, monkeypatch):
@@ -161,7 +182,8 @@ def test_adjacency_collected_across_a_refresh_is_not_kept(spark, sf_dir, monkeyp
         return adj
 
     monkeypatch.setattr(G, "_collect_adj", collect_then_refresh)
-    assert 1000 not in reg.adjacency(SYSTEM_MAP)
+    assert 1000 not in reg.adjacency(SYSTEM_MAP).index
     monkeypatch.setattr(G, "_collect_adj", collect)
-    assert reg.adjacency(SYSTEM_MAP)[1000] == [(2000, 1.0)]
+    adj = reg.adjacency(SYSTEM_MAP)
+    assert adj.out[adj.index[1000]] == [(adj.index[2000], 1.0)]
     reg.drop(SYSTEM_MAP)
