@@ -7,6 +7,7 @@ a function over DataFrames. Error mapping (main.rs:125-151): route not found
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -17,13 +18,12 @@ from eve_graph_spark.operators import relational as R
 from eve_graph_spark.operators.graph import (
     DRIVER_PATH_MAX_NODES,
     Adjacency,
-    EuclidHeuristic,
     ProjectionRegistry,
     a_star,
-    collect_coords,
     force_distributed,
     k_shortest_paths_distributed,
     k_shortest_paths_local,
+    landmark_table,
     path_as_names,
     reconstruct_path,
     route_local,
@@ -47,16 +47,16 @@ class GraphEngine:
         self.systems = systems
         self.jumps = jumps
         # (system_id, x, y, z) — the reference stores coordinates on every
-        # System (database.rs:86-88); they enable the heuristic=True route
-        # arm. Optional: without them every route runs target-pruned sssp.
+        # System (database.rs:86-88); a heuristic=True route requires them
+        # and runs coordinate-pruned `a_star` when the projection is not
+        # on the driver. Optional: without them every route runs
+        # target-pruned sssp.
         self.coords = coords
         self.registry = ProjectionRegistry()
         # (systems frame it was collected from, name snapshot)
         self._names: tuple[DataFrame, tuple | None] | None = None
-        # (coords frame it was collected from, {system_id: (x, y, z)})
-        self._xyz: tuple[DataFrame, dict] | None = None
-        # projection → (adjacency, coords snapshot, A* heuristic over both)
-        self._heuristics: dict[str, tuple] = {}
+        # projection → (adjacency, its landmark table)
+        self._landmarks: dict[str, tuple[Adjacency, np.ndarray]] = {}
 
     def _name_snapshot(self) -> tuple[dict[str, int], dict[int, str]] | None:
         """(name → id, id → name) of `systems`, collected as Arrow in one
@@ -86,20 +86,14 @@ class GraphEngine:
             self._names = (systems, snap)
         return self._names[1]
 
-    def _heuristic(self, projection: str, adj: Adjacency) -> EuclidHeuristic:
-        """A* heuristic over a projection's adjacency and a snapshot of
-        `coords`, each keyed by identity like `_name_snapshot`: a rebuilt
-        projection or a reassigned `coords` frame re-derives it, and its
-        scale pass over every edge runs once per build, not per route."""
-        coords = self.coords
-        if self._xyz is None or self._xyz[0] is not coords:
-            self._xyz = (coords, collect_coords(coords))
-        xyz = self._xyz[1]
-        cached = self._heuristics.get(projection)
-        if cached is None or cached[0] is not adj or cached[1] is not xyz:
-            cached = (adj, xyz, EuclidHeuristic.over(adj, xyz))
-            self._heuristics[projection] = cached
-        return cached[2]
+    def _landmark_table(self, projection: str, adj: Adjacency) -> np.ndarray:
+        """The landmark table of a projection's adjacency, keyed by its
+        identity like `_name_snapshot`: built on the first route after
+        each projection build, never per request."""
+        cached = self._landmarks.get(projection)
+        if cached is None or cached[0] is not adj:
+            cached = self._landmarks[projection] = (adj, landmark_table(adj))
+        return cached[1]
 
     # --- projections (G1-G6) ------------------------------------------------
     def build_cost_projection(self) -> None:
@@ -137,12 +131,10 @@ class GraphEngine:
             # both snapshots on the driver: no Spark job per request, the
             # GDS-over-CSR shape (database.rs:484-513). An id missing from
             # `systems` drops out, as path_as_names' inner join does.
-            # heuristic=True is coordinate-pruned A*: h = euclidean distance
-            # scaled by the graph's best distance-per-cost ratio, admissible
-            # for ANY positive weight column — cost and risk alike —
-            # because r is derived from the same weights.
-            astar = self._heuristic(projection, adj) if heuristic else None
-            path = route_local(adj, src, dst, set(ids), astar)
+            # heuristic=True takes this route too: the landmark bounds
+            # prune harder than coordinates, and the path is the same.
+            table = self._landmark_table(projection, adj)
+            path = route_local(adj, src, dst, set(ids), table)
             if not path:
                 raise RouteNotFound("route not found")
             return [names[1][n] for n in path if n in names[1]]

@@ -7,7 +7,11 @@ at two scales, with the same (dist, pred) at both:
 - **driver**: a graph within `DRIVER_SSSP_MAX_EDGES` edges is collected
   once as an adjacency map (per request, or resident per projection in
   `ProjectionRegistry.adjacency`) and solved by `_dijkstra`, one heap
-  kernel behind every route, SSSP, Yen and A* driver path;
+  kernel behind every route, SSSP, Yen and A* driver path. A resident
+  route projection also gets a `landmark_table`, built once per
+  projection build: its triangle-inequality lower bounds confine
+  `route_local`'s search to the target's corridor, and the path stays
+  the unbounded kernel's;
 - **distributed**: a Pregel-style DataFrame Bellman-Ford loop,
 
     dist'(v) = min(dist(v), min over in-edges (u,v) of dist(u) + w(u,v))
@@ -22,11 +26,12 @@ at two scales, with the same (dist, pred) at both:
 from __future__ import annotations
 
 import math
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable, Sequence
 from dataclasses import dataclass, field
 from heapq import heapify, heappop, heappush
 from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -240,9 +245,10 @@ def _dijkstra(
     adj: Adjacency,
     source_ids: Iterable[int],
     target_id: int | None = None,
-    h: Callable[[int], float] | None = None,
+    h: Sequence[float] | None = None,
     banned_nodes: Iterable[int] = (),
     banned_edges: Iterable[tuple[int, int]] = (),
+    prune: tuple[Sequence[float], float] | None = None,
     stats_out: dict | None = None,
 ) -> _Tree:
     """The driver's shortest-path kernel: Dijkstra over an `Adjacency`,
@@ -257,10 +263,18 @@ def _dijkstra(
     - `target_id`: stop once the least key exceeds the target's. Every
       entry with dist <= dist(target) is then final, the target's path
       included; farther entries may be tentative or absent.
-    - `h`: A*. h(node id) is added to the key, so a consistent h settles
-      the target first; `dist` stays the path cost.
+    - `h`: A*, with h[i] a lower bound on node i's remaining cost (one
+      entry per position of `adj`). It is added to the key, so a
+      consistent h settles the target first; `dist` stays the path cost.
     - `banned_nodes` are never entered and `banned_edges` (u, v) never
       ridden: Yen's spur searches.
+    - `prune=(lb, bound)`: a push of node i at dist d is skipped when
+      d + lb[i] > bound. With lb a lower bound on the cost to the target
+      and bound at least the target's dist, no node of a shortest route
+      is skipped, and such a node's (dist, hops, pred) depend only on
+      other such nodes: the target's path is the unpruned one. The
+      result is then a route tree, not an all-nodes table — skipped
+      nodes read as unreached or keep a tentative dist.
     - `stats_out["expansions"]` counts the nodes expanded.
     A source outside the graph reaches only itself.
     """
@@ -270,6 +284,8 @@ def _dijkstra(
     if extra:
         ids, out = ids + extra, out + [[] for _ in extra]
         index = {**index, **{s: i for i, s in enumerate(extra, len(adj.ids))}}
+        if h is not None:
+            h = [*h, *[0.0] * len(extra)]
     n = len(ids)
     dist, hops, pred, done = [math.inf] * n, [0] * n, [-1] * n, bytearray(n)
     banned = [index[b] for b in banned_nodes if b in index]
@@ -279,10 +295,11 @@ def _dijkstra(
     for u, v in banned_edges:
         if u in index and v in index:
             cut.setdefault(index[u], set()).add(index[v])
+    lb, bound = prune if prune is not None else (None, math.inf)
     heap = []
     for s in map(index.__getitem__, source_ids):
         dist[s], hops[s], pred[s] = 0.0, 0, -1
-        heap.append((h(ids[s]) if h else 0.0, 0, -1, s))
+        heap.append((h[s] if h else 0.0, 0, -1, s))
     heapify(heap)
     push, pop = heappush, heappop
     t = index.get(target_id, -1)
@@ -308,14 +325,69 @@ def _dijkstra(
             # keep v's entry unless (nd, k, u) < its (dist, hops, pred)
             if nd > dv or nd == dv and (k > hops[v] or k == hops[v] and u >= pred[v]):
                 continue
+            if lb is not None and nd + lb[v] > bound:
+                continue  # off every shortest route to the target
             dist[v], hops[v], pred[v] = nd, k, u
-            push(heap, (nd + h(ids[v]) if h else nd, k, u, v))
+            push(heap, (nd + h[v] if h else nd, k, u, v))
     for b in banned:
         if dist[b] == -math.inf:
             dist[b] = math.inf
     if stats_out is not None:
         stats_out["expansions"] = expansions
     return _Tree(ids, index, dist, pred)
+
+
+LANDMARKS = 8  # reference points in a route projection's landmark table
+# relative slack on a route's prune bound: it absorbs the rounding in the
+# table's float sums, ~1e-16 per hop, so a tie route is never cut
+_BOUND_SLACK = 1e-9
+
+
+def landmark_table(adj: Adjacency) -> np.ndarray:
+    """(2L, n) float64 distances for L = `LANDMARKS` reference points:
+    row i holds d(L_i, v) and row L + i holds d(v, L_i) for every
+    position v of `adj` (inf when unreached), each from a `_dijkstra`
+    run over `adj` or over its reverse. L_0 is the smallest id; each
+    next landmark is the node farthest from those picked (a node none
+    of them reaches first), the farthest-point rule. A graph with fewer
+    nodes than `LANDMARKS` repeats landmarks, which only repeats rows.
+
+    `route_local` derives its lower bounds from it. It is built once per
+    projection build (16 full kernel runs), and each row becomes numpy as
+    soon as it is built."""
+    n = len(adj.ids)
+    table = np.empty((2 * LANDMARKS, n))
+    if not n:
+        return table
+    back: list[list[tuple[int, float]]] = [[] for _ in adj.ids]
+    for u, nbrs in enumerate(adj.out):
+        for v, w in nbrs:
+            back[v].append((u, w))
+    reverse = Adjacency(adj.ids, adj.index, back)
+    nearest = np.full(n, np.inf)  # distance from the closest landmark
+    mark = 0
+    for i in range(LANDMARKS):
+        table[i] = _dijkstra(adj, [adj.ids[mark]]).dist
+        table[LANDMARKS + i] = _dijkstra(reverse, [adj.ids[mark]]).dist
+        np.minimum(nearest, table[i], out=nearest)
+        mark = int(np.argmax(nearest))
+    return table
+
+
+def _lower_bounds(table: np.ndarray, t: int) -> tuple[Sequence[float], float]:
+    """(h, scale) toward position t. h[v] = max over landmarks L of
+    d(L,t) − d(L,v) and d(v,L) − d(t,L), clamped at 0: a lower bound on
+    d(v,t) by the triangle inequality. An inf − inf pair bounds nothing
+    (its nan is skipped); finite − inf gives +inf, and v cannot reach t.
+    `scale` is the largest finite entry of t's column, the magnitude the
+    rounding of h scales with. h is a memoryview over the numpy result:
+    it indexes to Python floats without a per-route list."""
+    col = table[:, t]
+    k = LANDMARKS
+    with np.errstate(invalid="ignore"):
+        h = np.fmax(np.fmax.reduce(col[:k, None] - table[:k], axis=0, initial=0.0),
+                    np.fmax.reduce(table[k:] - col[k:, None], axis=0, initial=0.0))
+    return memoryview(h), float(np.max(col, initial=0.0, where=np.isfinite(col)))
 
 
 def double_sweep_local(adj: Adjacency, start: int) -> tuple[int, float, float]:
@@ -982,8 +1054,6 @@ def a_star(
     route on a graph that fits the driver must not launch a job per
     expansion (the distributed answer to the same question is
     sssp(target_id=...)). Raises above `driver_threshold`.
-    `route_local(heuristic=)` is the same search over a resident
-    adjacency and coords snapshot.
 
     Returns (total_cost, [node, ...]) or None when unreachable.
     `stats_out["expansions"]` counts expanded nodes — the quantity the
@@ -1013,12 +1083,12 @@ def collect_coords(coords: DataFrame,
 
 
 class EuclidHeuristic(NamedTuple):
-    """`a_star`'s h over one adjacency: coordinates plus the scale r, or
-    r = None (h ≡ 0) when one of its two degradations holds. The scale
-    pass reads every edge, so a caller serving many routes keeps this
-    per adjacency and asks `to(target)` per route."""
+    """`a_star`'s h over one adjacency: coordinates (`pts` per position)
+    plus the scale r, or r = None (h ≡ 0) when one of its two
+    degradations holds. `to(target)` lists h per position."""
 
     xyz: dict[int, tuple[float, float, float]]
+    pts: list[tuple[float, float, float] | None]
     r: float | None
 
     @classmethod
@@ -1026,7 +1096,7 @@ class EuclidHeuristic(NamedTuple):
              xyz: dict[int, tuple[float, float, float]]) -> EuclidHeuristic:
         pts = [xyz.get(n) for n in adj.ids]
         if not all(p and any(p) for p in pts):
-            return cls(xyz, None)  # missing or placeholder coordinates
+            return cls(xyz, pts, None)  # missing or placeholder coordinates
         r = 0.0
         for pu, nbrs in zip(pts, adj.out):
             for v, w in nbrs:
@@ -1034,14 +1104,14 @@ class EuclidHeuristic(NamedTuple):
                 if w > 0:
                     r = max(r, length / w)
                 elif length > 0:
-                    return cls(xyz, None)  # free edge with real length: unbounded ratio
-        return cls(xyz, r if 0.0 < r < math.inf else None)
+                    return cls(xyz, pts, None)  # free edge with real length: unbounded ratio
+        return cls(xyz, pts, r if 0.0 < r < math.inf else None)
 
-    def to(self, target: int) -> Callable[[int], float] | None:
-        xyz, r, pt = self.xyz, self.r, self.xyz.get(target)
+    def to(self, target: int) -> list[float] | None:
+        r, pt = self.r, self.xyz.get(target)
         if r is None or pt is None:
             return None
-        return lambda v: math.dist(xyz.get(v, pt), pt) / r
+        return [math.dist(p, pt) / r for p in self.pts]
 
 
 def dfs(edges: DataFrame, source: int,
@@ -1188,20 +1258,39 @@ def _walk_preds(pred: dict[int, int | None], target_id: int,
 
 def route_local(adj: Adjacency, source_id: int, target_id: int,
                 avoid: set[int] | None = None,
-                heuristic: EuclidHeuristic | None = None) -> list[int]:
+                landmarks: np.ndarray | None = None) -> list[int]:
     """Driver-resident twin of `sssp(target_id=)` → `reconstruct_path` over
     a collected adjacency (`ProjectionRegistry.adjacency`): `_dijkstra`
     reproduces the distributed loop's (dist, pred), so the path is
     node-for-node the one the DataFrame route returns. `avoid` drops
     every edge touching those nodes, like the route API's pre-search edge
-    filter. With a `heuristic` over `adj` it is `a_star`'s search; h is
-    scaled over the whole adjacency, and dropping edges only raises true
-    costs, so h stays admissible."""
+    filter.
+
+    With `landmarks` (`landmark_table(adj)`) the search stays in the
+    target's corridor, in two passes over the table's lower bounds h
+    (ALT: A*, landmarks and the triangle inequality):
+    1. A* keyed dist + h finds the route cost D, or no route;
+    2. the plain `(dist, hops, pred)` kernel runs again, skipping every
+       push with dist + h above D plus a slack for float rounding.
+    The heap of pass 2 is keyed on dist alone, so rounding in h cannot
+    reorder equal-cost routes: the path is the unbounded kernel's.
+    Avoiding nodes only raises distances, so h stays a lower bound."""
     avoid = avoid or set()
-    h = heuristic.to(target_id) if heuristic else None
     if source_id in avoid:
-        adj = Adjacency([], {}, [])
-    found = _dijkstra(adj, [source_id], target_id, h, banned_nodes=avoid).route(target_id)
+        adj, landmarks = Adjacency([], {}, []), None
+    t = adj.index.get(target_id)
+    if landmarks is not None and t is not None and source_id in adj.index:
+        h, scale = _lower_bounds(landmarks, t)
+        if h[adj.index[source_id]] == math.inf:
+            return []  # no landmark path from the source reaches the target
+        first = _dijkstra(adj, [source_id], target_id, h, banned_nodes=avoid).route(target_id)
+        if first is None:
+            return []
+        bound = first[0] + _BOUND_SLACK * (first[0] + scale)
+        found = _dijkstra(adj, [source_id], target_id, banned_nodes=avoid,
+                          prune=(h, bound)).route(target_id)
+    else:
+        found = _dijkstra(adj, [source_id], target_id, banned_nodes=avoid).route(target_id)
     return found[1] if found else []
 
 

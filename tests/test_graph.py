@@ -236,6 +236,101 @@ def test_driver_kernel_matches_distributed_loop_under_ties(spark):
     assert route_local(adj, 3, 4) == [3, 5, 4]
 
 
+# A landmark-bounded route must be node-for-node the unbounded kernel's.
+# The graph mixes the features that could tell them apart:
+# - 1-2-5 (0.1 + 0.2) and 1-5 (0.3) cost the same in reals, not in floats;
+# - 5-7-8 and 5-8 cost 2.0 in floats, with 2 and 1 hops;
+# - 6 -> 7 is free, so 5-6-7 ties 5-7 at 1.0;
+# - the 2-11-12-13-14-9 chain and 12-6 carry inbound weights (an edge
+#   costs what the node it enters costs), so u -> v and v -> u differ;
+# - 20-23 is a second component: half the pairs are unreachable, and the
+#   landmarks picked in one component cannot reach the other.
+INBOUND = {2: 0.1, 6: 0.6, 9: 0.2, 11: 0.3, 12: 0.7, 13: 0.1, 14: 1.3}
+EXACT_EDGES = [
+    (1, 2, 0.1), (2, 5, 0.2), (1, 5, 0.3),
+    (5, 7, 1.0), (7, 8, 1.0), (5, 8, 2.0),
+    (5, 6, 1.0), (6, 7, 0.0),
+    (8, 9, 0.5), (9, 1, 0.7),
+    *((u, v, INBOUND[v]) for a, b in ((2, 11), (11, 12), (12, 13), (13, 14), (14, 9), (12, 6))
+      for u, v in ((a, b), (b, a))),
+    (20, 21, 0.1), (21, 20, 0.2), (21, 22, 0.3), (22, 23, 0.0), (23, 21, 0.4),
+]
+
+
+def test_landmark_route_is_the_plain_kernel_route_on_every_pair(spark):
+    """Every ordered pair, with and without an avoid-list holding the
+    first landmark (the smallest id): `route_local` with the table gives
+    the unbounded `_dijkstra` route over the edges the avoid-list keeps.
+    Without one it also gives the distributed loop's route; that oracle
+    is `multi_source_sssp` below the threshold, whose per-source
+    (dist, pred) are `sssp`'s (test_multi_source_sssp_per_source_parity),
+    and one pair meets `sssp(target_id=)` itself."""
+    from eve_graph_spark.operators.graph import (
+        Adjacency,
+        _dijkstra,
+        _walk_preds,
+        landmark_table,
+        multi_source_sssp,
+        route_local,
+    )
+
+    adj = Adjacency.from_edges(*zip(*EXACT_EDGES))
+    table = landmark_table(adj)
+    assert table[0][adj.index[1]] == 0.0  # node 1 is a landmark
+    ids = adj.ids
+    for avoid in (set(), {1}):
+        kept = Adjacency.from_edges(
+            *zip(*((u, v, w) for u, v, w in EXACT_EDGES if u not in avoid and v not in avoid))
+        )
+        for s in ids:
+            for t in ids:
+                want = _dijkstra(kept, [s], t).route(t)
+                assert route_local(adj, s, t, avoid, table) == (want[1] if want else []), \
+                    (avoid, s, t)
+    e = spark.createDataFrame(EXACT_EDGES, "src long, dst long, weight double")
+    preds: dict[int, dict[int, int | None]] = {s: {} for s in ids}
+    for r in multi_source_sssp(e, ids, driver_threshold=0).collect():
+        preds[r["source"]][r["node"]] = r["pred"]
+    for s in ids:
+        for t in ids:
+            assert route_local(adj, s, t, set(), table) == _walk_preds(preds[s], t), (s, t)
+    assert route_local(adj, 1, 5, set(), table) == [1, 5]
+    assert route_local(adj, 5, 8, set(), table) == [5, 8]
+    assert route_local(adj, 1, 20, set(), table) == []
+    assert route_local(adj, 9, 5, {1}, table) == [9, 14, 13, 12, 11, 2, 5]
+    dist = sssp(e, [12], target_id=9, driver_threshold=0)
+    assert route_local(adj, 12, 9, set(), table) == reconstruct_path(dist, 9)
+
+
+def _geometric(seed: int, n: int = 500):
+    """n points in the unit square, each linked both ways to its 3
+    nearest neighbours."""
+    import random
+
+    rng = random.Random(seed)
+    pts = [(rng.random(), rng.random()) for _ in range(n)]
+    links = set()
+    for i, (x, y) in enumerate(pts):
+        near = sorted(range(n), key=lambda j: (pts[j][0] - x) ** 2 + (pts[j][1] - y) ** 2)
+        links.update((i, j) for j in near[1:4])
+    risk = [rng.randrange(40) ** 2 / rng.randrange(1, 400) + 0.0123 for _ in range(n)]
+    pairs = [tuple(rng.sample(range(n), 2)) for _ in range(200)]
+    return sorted(links | {(j, i) for i, j in links}), risk, pairs
+
+
+@pytest.mark.parametrize("seed", [1, 7919])
+def test_landmark_route_matches_plain_kernel_on_geometric_graph(seed):
+    from eve_graph_spark.operators.graph import Adjacency, landmark_table, route_local
+
+    links, risk, pairs = _geometric(seed)
+    src, dst = (list(c) for c in zip(*links))
+    for weight in ([1.0] * len(dst), [risk[v] for v in dst]):
+        adj = Adjacency.from_edges(src, dst, weight)
+        table = landmark_table(adj)
+        for s, t in pairs:
+            assert route_local(adj, s, t, None, table) == route_local(adj, s, t), (s, t)
+
+
 def test_k_shortest_driver_matches_distributed_under_ties(spark):
     from eve_graph_spark.operators.graph import k_shortest_paths_distributed
 

@@ -10,7 +10,12 @@ from pyspark.sql import functions as F
 
 from eve_graph_spark import api
 from eve_graph_spark.api import JUMP_RISK, SYSTEM_MAP, GraphEngine, RouteNotFound
-from eve_graph_spark.operators.graph import path_as_names, reconstruct_path, sssp
+from eve_graph_spark.operators.graph import (
+    landmark_table,
+    path_as_names,
+    reconstruct_path,
+    sssp,
+)
 from eve_graph_spark.sources.graph_fixture import build_jumps, build_systems
 
 
@@ -105,6 +110,48 @@ def test_alternatives_and_heuristic_routes_launch_no_spark_jobs(spark, sf_dir, n
     assert routes[0][0] == cost
     assert eng.safest_route(b, a, heuristic=True)[-1] == a
     assert _jobs(spark) == before
+
+
+def test_landmark_table_is_built_once_per_projection_build(spark, engine, names, monkeypatch):
+    """Routes reuse their projection's table; a refresh rebuilds the
+    table of the projection it rebuilt, and only that one."""
+    from eve_graph_spark import schemas
+    from eve_graph_spark.frames import local_frame
+
+    built = []
+
+    def counted(adj):
+        built.append(adj)
+        return landmark_table(adj)
+
+    monkeypatch.setattr(api, "landmark_table", counted)
+    a, b = names[0], names[13]
+    engine.shortest_route(a, b)
+    engine.safest_route(a, b)
+    assert len(built) == 2 and built[0] is engine.registry.adjacency(SYSTEM_MAP)
+    assert built[1] is engine.registry.adjacency(JUMP_RISK)
+    for s in sorted(names)[:6]:
+        engine.shortest_route(names[s], b)
+        engine.safest_route(names[s], b, avoid=[names[20]])
+    assert len(built) == 2
+
+    ids = sorted(names)
+    engine.refresh_risk(local_frame(spark, [(i, i % 3) for i in ids], schemas.SYSTEM_KILLS),
+                        local_frame(spark, [(i, i % 5 + 1) for i in ids], schemas.SYSTEM_JUMPS))
+    engine.shortest_route(a, b)
+    engine.safest_route(a, b)
+    assert len(built) == 3 and built[2] is engine.registry.adjacency(JUMP_RISK)
+
+    engine.refresh_wormholes(_signature(spark, 0, 13))
+    assert engine.shortest_route(a, b) == [a, b]
+    engine.safest_route(a, b)
+    assert len(built) == 4 and built[3] is engine.registry.adjacency(SYSTEM_MAP)
+
+    # the forced-distributed arm routes through DataFrames, to the same path
+    want = engine.shortest_route(b, names[7]), engine.safest_route(b, names[7])
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+    assert (engine.shortest_route(b, names[7]), engine.safest_route(b, names[7])) == want
+    assert len(built) == 4
 
 
 def test_forced_distributed_arm_skips_the_snapshot(spark, engine, names, monkeypatch):
