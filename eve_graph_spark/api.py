@@ -7,7 +7,6 @@ a function over DataFrames. Error mapping (main.rs:125-151): route not found
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -17,13 +16,11 @@ from eve_graph_spark.functions.risk import galaxy_baseline, risk_expr
 from eve_graph_spark.operators import relational as R
 from eve_graph_spark.operators.graph import (
     DRIVER_PATH_MAX_NODES,
-    Adjacency,
     ProjectionRegistry,
     a_star,
     force_distributed,
     k_shortest_paths_distributed,
     k_shortest_paths_local,
-    landmark_table,
     path_as_names,
     reconstruct_path,
     route_local,
@@ -55,17 +52,15 @@ class GraphEngine:
         self.registry = ProjectionRegistry()
         # (systems frame it was collected from, name snapshot)
         self._names: tuple[DataFrame, tuple | None] | None = None
-        # projection → (adjacency, its landmark table)
-        self._landmarks: dict[str, tuple[Adjacency, np.ndarray]] = {}
 
     def _name_snapshot(self) -> tuple[dict[str, int], dict[int, str]] | None:
         """(name → id, id → name) of `systems`, collected as Arrow in one
-        job on first use; None above DRIVER_PATH_MAX_NODES rows and in the
-        forced-distributed arm. Keyed by the identity of the `systems`
-        frame, so any reassignment (a refresh, a caller) re-collects it,
-        and a route racing a refresh on another thread cannot keep a
-        snapshot of the old table. A duplicated name resolves to its first
-        row, like the point lookup."""
+        job by the refresh that reassigns it, or on first use; None above
+        DRIVER_PATH_MAX_NODES rows and in the forced-distributed arm. Keyed
+        by the identity of the `systems` frame, so any reassignment (a
+        refresh, a caller) re-collects it, and a route racing a refresh on
+        another thread cannot keep a snapshot of the old table. A
+        duplicated name resolves to its first row, like the point lookup."""
         if force_distributed():
             return None
         systems = self.systems
@@ -86,21 +81,17 @@ class GraphEngine:
             self._names = (systems, snap)
         return self._names[1]
 
-    def _landmark_table(self, projection: str, adj: Adjacency) -> np.ndarray:
-        """The landmark table of a projection's adjacency, keyed by its
-        identity like `_name_snapshot`: built on the first route after
-        each projection build, never per request."""
-        cached = self._landmarks.get(projection)
-        if cached is None or cached[0] is not adj:
-            cached = self._landmarks[projection] = (adj, landmark_table(adj))
-        return cached[1]
-
     # --- projections (G1-G6) ------------------------------------------------
+    # Each build also takes the projection's driver snapshot, its adjacency
+    # and landmark table, so the refresh that rebuilt a projection (a POST
+    # or a stream poll) pays for them and no route request does.
     def build_cost_projection(self) -> None:
         self.registry.refresh(SYSTEM_MAP, self.jumps, "cost")
+        self.registry.landmarks(SYSTEM_MAP)
 
     def build_risk_projection(self) -> None:
         self.registry.refresh(JUMP_RISK, self.jumps, "risk")
+        self.registry.landmarks(JUMP_RISK)
 
     def _resolve(self, name: str) -> int:
         names = self._name_snapshot()
@@ -125,15 +116,15 @@ class GraphEngine:
                 "heuristic route requires the engine to be built with "
                 "a coords table (system_id, x, y, z)"
             )
-        adj = self.registry.adjacency(projection)
+        snap = self.registry.landmarks(projection)
         names = self._name_snapshot()
-        if adj is not None and names is not None:
+        if snap is not None and names is not None:
             # both snapshots on the driver: no Spark job per request, the
             # GDS-over-CSR shape (database.rs:484-513). An id missing from
             # `systems` drops out, as path_as_names' inner join does.
             # heuristic=True takes this route too: the landmark bounds
             # prune harder than coordinates, and the path is the same.
-            table = self._landmark_table(projection, adj)
+            adj, table = snap
             path = route_local(adj, src, dst, set(ids), table)
             if not path:
                 raise RouteNotFound("route not found")
@@ -227,6 +218,9 @@ class GraphEngine:
     # count, the name snapshot and the next refresh then all read that
     # checkpointed leaf: a refresh costs the same however many came before
     # it, and a dropDuplicates-based dedup is decided once per refresh.
+    # A refresh that reassigns `systems` also re-takes the name snapshot,
+    # as a projection build takes its driver snapshot: the refresh pays
+    # for it, not the first route after it.
     # The replaced anchor is NOT unpersisted here: frames derived from it
     # (a projection's recovery lineage, a route in flight on a stream
     # thread, the frame an earlier refresh returned) may still read it.
@@ -244,6 +238,7 @@ class GraphEngine:
         self.systems = R.dedup_keep_first(
             kept.unionByName(added), ["system_id"]
         ).transform(truncate_lineage)
+        self._name_snapshot()
         return self.systems
 
     # --- A4: POST /systems/risk (sync.rs:296-321) ---------------------------
@@ -264,6 +259,7 @@ class GraphEngine:
             truncate_lineage
         )
         self.build_risk_projection()
+        self._name_snapshot()
         return self.jumps
 
     # --- A5: POST /stargates/refresh (sync.rs:172-221) ----------------------

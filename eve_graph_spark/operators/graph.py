@@ -8,10 +8,10 @@ at two scales, with the same (dist, pred) at both:
   once as an adjacency map (per request, or resident per projection in
   `ProjectionRegistry.adjacency`) and solved by `_dijkstra`, one heap
   kernel behind every route, SSSP, Yen and A* driver path. A resident
-  route projection also gets a `landmark_table`, built once per
-  projection build: its triangle-inequality lower bounds confine
-  `route_local`'s search to the target's corridor, and the path stays
-  the unbounded kernel's;
+  route projection also holds a `landmark_table`
+  (`ProjectionRegistry.landmarks`), built once per projection build: its
+  triangle-inequality lower bounds confine `route_local`'s search to the
+  target's corridor, and the path stays the unbounded kernel's;
 - **distributed**: a Pregel-style DataFrame Bellman-Ford loop,
 
     dist'(v) = min(dist(v), min over in-edges (u,v) of dist(u) + w(u,v))
@@ -100,6 +100,17 @@ def fits_driver(df: DataFrame, threshold: int,
 
 
 @dataclass
+class _Snapshot:
+    """A projection's driver copies: the persisted frame they were taken
+    from, its `Adjacency` (None when it does not fit the driver) and that
+    adjacency's landmark table (None until a route projection asks)."""
+
+    proj: DataFrame
+    adj: Adjacency | None
+    table: np.ndarray | None = None
+
+
+@dataclass
 class ProjectionRegistry:
     """G1-G6 (database.rs:387-482): named, cached edge projections.
 
@@ -109,9 +120,8 @@ class ProjectionRegistry:
     """
 
     _graphs: dict[str, DataFrame] = field(default_factory=dict)
-    # name → (projection frame, its driver-resident Adjacency or None when
-    # it does not fit the driver); see adjacency()
-    _adjacency: dict[str, tuple[DataFrame, Adjacency | None]] = field(default_factory=dict)
+    # name → the driver snapshot of that projection; see adjacency()
+    _snapshots: dict[str, _Snapshot] = field(default_factory=dict)
 
     def project(self, name: str, edges: DataFrame, weight_col: str) -> DataFrame:
         """G1/G2: materialize (src, dst, weight), partitioned by src for the
@@ -145,19 +155,35 @@ class ProjectionRegistry:
         projection: keyed by the identity of the persisted frame, so a
         rebuild re-collects it on next use, and a route racing a refresh
         on another thread cannot keep the old map."""
+        snap = self._snapshot(name)
+        return snap.adj if snap is not None else None
+
+    def landmarks(self, name: str) -> tuple[Adjacency, np.ndarray] | None:
+        """`adjacency(name)` with its `landmark_table`, built on first use
+        and held in the same snapshot, so it lives and dies with the
+        projection like the map, and a route reads a table of the map it
+        searches. None when `adjacency(name)` is."""
+        snap = self._snapshot(name)
+        if snap is None or snap.adj is None:
+            return None
+        if snap.table is None:
+            snap.table = landmark_table(snap.adj)
+        return snap.adj, snap.table
+
+    def _snapshot(self, name: str) -> _Snapshot | None:
         if force_distributed():
             return None
         proj = self._graphs[name]
-        cached = self._adjacency.get(name)
-        if cached is None or cached[0] is not proj:
+        snap = self._snapshots.get(name)
+        if snap is None or snap.proj is not proj:
             adj = _collect_adj(proj) if fits_driver(proj, DRIVER_SSSP_MAX_EDGES) else None
-            cached = self._adjacency[name] = (proj, adj)
-        return cached[1]
+            snap = self._snapshots[name] = _Snapshot(proj, adj)
+        return snap
 
     def drop(self, name: str) -> None:
         """G4/G5 (database.rs:402-420)."""
         g = self._graphs.pop(name, None)
-        self._adjacency.pop(name, None)
+        self._snapshots.pop(name, None)
         if g is not None:
             g.unpersist()
 
@@ -352,9 +378,9 @@ def landmark_table(adj: Adjacency) -> np.ndarray:
     of them reaches first), the farthest-point rule. A graph with fewer
     nodes than `LANDMARKS` repeats landmarks, which only repeats rows.
 
-    `route_local` derives its lower bounds from it. It is built once per
-    projection build (16 full kernel runs), and each row becomes numpy as
-    soon as it is built."""
+    `route_local` derives its lower bounds from it. It costs 16 full
+    kernel runs, so `ProjectionRegistry.landmarks` builds it once per
+    projection build, and each row becomes numpy as soon as it is built."""
     n = len(adj.ids)
     table = np.empty((2 * LANDMARKS, n))
     if not n:
@@ -1068,7 +1094,19 @@ def a_star(
             "early-exit loop"
         )
     adj = _collect_adj(e)
-    h = EuclidHeuristic.over(adj, collect_coords(coords, id_col)).to(target)
+    xyz = collect_coords(coords, id_col)
+    pts, pt = [xyz.get(n) for n in adj.ids], xyz.get(target)
+    r = math.inf  # h ≡ 0 unless every node has real coordinates
+    if pt is not None and all(p and any(p) for p in pts):
+        r = 0.0
+        for pu, nbrs in zip(pts, adj.out):
+            for v, w in nbrs:
+                length = math.dist(pu, pts[v])
+                if w > 0:
+                    r = max(r, length / w)
+                elif length > 0:
+                    r = math.inf  # free edge with real length: unbounded ratio
+    h = [math.dist(p, pt) / r for p in pts] if 0.0 < r < math.inf else None
     return _dijkstra(adj, [source], target, h, stats_out=stats_out).route(target)
 
 
@@ -1080,38 +1118,6 @@ def collect_coords(coords: DataFrame,
     ).toArrow()
     xyz = zip(*(t.column(i).to_pylist() for i in (1, 2, 3)))
     return dict(zip(t.column(0).to_pylist(), xyz))
-
-
-class EuclidHeuristic(NamedTuple):
-    """`a_star`'s h over one adjacency: coordinates (`pts` per position)
-    plus the scale r, or r = None (h ≡ 0) when one of its two
-    degradations holds. `to(target)` lists h per position."""
-
-    xyz: dict[int, tuple[float, float, float]]
-    pts: list[tuple[float, float, float] | None]
-    r: float | None
-
-    @classmethod
-    def over(cls, adj: Adjacency,
-             xyz: dict[int, tuple[float, float, float]]) -> EuclidHeuristic:
-        pts = [xyz.get(n) for n in adj.ids]
-        if not all(p and any(p) for p in pts):
-            return cls(xyz, pts, None)  # missing or placeholder coordinates
-        r = 0.0
-        for pu, nbrs in zip(pts, adj.out):
-            for v, w in nbrs:
-                length = math.dist(pu, pts[v])
-                if w > 0:
-                    r = max(r, length / w)
-                elif length > 0:
-                    return cls(xyz, pts, None)  # free edge with real length: unbounded ratio
-        return cls(xyz, pts, r if 0.0 < r < math.inf else None)
-
-    def to(self, target: int) -> list[float] | None:
-        r, pt = self.r, self.xyz.get(target)
-        if r is None or pt is None:
-            return None
-        return [math.dist(p, pt) / r for p in self.pts]
 
 
 def dfs(edges: DataFrame, source: int,

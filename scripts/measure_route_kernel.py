@@ -12,9 +12,11 @@ Spark session:
 
 It prints one line per kind: kernel p50 and max ms for both, the median
 number of nodes settled per route (`stats_out["expansions"]`, summed over
-a route's kernel runs), the table build ms, and how many routes differ
-from the plain kernel's (the bounded route must be node-for-node equal,
-so anything but 0 is a bug).
+a route's kernel runs), the table build ms, the break-even (how many
+routes one projection build must serve before their saved kernel time,
+by the mean, repays its table), and how many routes differ from the
+plain kernel's (the bounded route must be node-for-node equal, so
+anything but 0 is a bug).
 
 `--synthetic EDGES` runs the same comparison on a jittered grid of about
 that many directed edges instead, with seeded random inbound weights for
@@ -115,11 +117,13 @@ def measure(label: str, adjs: dict[str, G.Adjacency], pairs: list[tuple[int, int
         nodes = {arm: statistics.median(settled(adj, s, t, tab) for s, t in pairs)
                  for arm, tab in (("plain", None), ("bounded", table))}
         differ = sum(a != b for a, b in zip(paths["plain"], paths["bounded"]))
+        saved = statistics.mean(ms["plain"]) - statistics.mean(ms["bounded"])
+        even = f"{build_ms / saved:.0f} routes" if saved > 0 else "never"
         print(f"{label} {kind:8s} pairs={len(pairs)} "
               f"p50 {statistics.median(ms['plain']):.2f} -> {statistics.median(ms['bounded']):.2f} ms  "
               f"max {max(ms['plain']):.1f} -> {max(ms['bounded']):.1f} ms  "
               f"settled p50 {nodes['plain']:.0f} -> {nodes['bounded']:.0f}  "
-              f"table {build_ms:.0f} ms  differ {differ}", flush=True)
+              f"table {build_ms:.0f} ms  break-even {even}  differ {differ}", flush=True)
 
 
 def main() -> None:

@@ -5,17 +5,15 @@ they were collected from."""
 
 from __future__ import annotations
 
+import gc
+import weakref
+
 import pytest
 from pyspark.sql import functions as F
 
 from eve_graph_spark import api
 from eve_graph_spark.api import JUMP_RISK, SYSTEM_MAP, GraphEngine, RouteNotFound
-from eve_graph_spark.operators.graph import (
-    landmark_table,
-    path_as_names,
-    reconstruct_path,
-    sssp,
-)
+from eve_graph_spark.operators.graph import path_as_names, reconstruct_path, sssp
 from eve_graph_spark.sources.graph_fixture import build_jumps, build_systems
 
 
@@ -113,21 +111,24 @@ def test_alternatives_and_heuristic_routes_launch_no_spark_jobs(spark, sf_dir, n
 
 
 def test_landmark_table_is_built_once_per_projection_build(spark, engine, names, monkeypatch):
-    """Routes reuse their projection's table; a refresh rebuilds the
-    table of the projection it rebuilt, and only that one."""
+    """Each projection build takes its table, so routes build none; a
+    refresh rebuilds the table of the projection it rebuilt, and only
+    that one, and leaves no snapshot for the next route to collect."""
     from eve_graph_spark import schemas
     from eve_graph_spark.frames import local_frame
+    from eve_graph_spark.operators import graph as G
 
     built = []
+    landmark_table = G.landmark_table
 
     def counted(adj):
         built.append(adj)
         return landmark_table(adj)
 
-    monkeypatch.setattr(api, "landmark_table", counted)
+    monkeypatch.setattr(G, "landmark_table", counted)
     a, b = names[0], names[13]
-    engine.shortest_route(a, b)
-    engine.safest_route(a, b)
+    engine.build_cost_projection()
+    engine.build_risk_projection()
     assert len(built) == 2 and built[0] is engine.registry.adjacency(SYSTEM_MAP)
     assert built[1] is engine.registry.adjacency(JUMP_RISK)
     for s in sorted(names)[:6]:
@@ -138,18 +139,24 @@ def test_landmark_table_is_built_once_per_projection_build(spark, engine, names,
     ids = sorted(names)
     engine.refresh_risk(local_frame(spark, [(i, i % 3) for i in ids], schemas.SYSTEM_KILLS),
                         local_frame(spark, [(i, i % 5 + 1) for i in ids], schemas.SYSTEM_JUMPS))
+    assert len(built) == 3 and built[2] is engine.registry.adjacency(JUMP_RISK)
+    before = _jobs(spark)
     engine.shortest_route(a, b)
     engine.safest_route(a, b)
-    assert len(built) == 3 and built[2] is engine.registry.adjacency(JUMP_RISK)
+    assert len(built) == 3 and _jobs(spark) == before
 
     engine.refresh_wormholes(_signature(spark, 0, 13))
+    assert len(built) == 4 and built[3] is engine.registry.adjacency(SYSTEM_MAP)
+    before = _jobs(spark)
     assert engine.shortest_route(a, b) == [a, b]
     engine.safest_route(a, b)
-    assert len(built) == 4 and built[3] is engine.registry.adjacency(SYSTEM_MAP)
+    assert len(built) == 4 and _jobs(spark) == before
 
-    # the forced-distributed arm routes through DataFrames, to the same path
+    # the forced-distributed arm builds no table and routes through
+    # DataFrames, to the same path
     want = engine.shortest_route(b, names[7]), engine.safest_route(b, names[7])
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+    engine.build_risk_projection()
     assert (engine.shortest_route(b, names[7]), engine.safest_route(b, names[7])) == want
     assert len(built) == 4
 
@@ -233,4 +240,14 @@ def test_adjacency_collected_across_a_refresh_is_not_kept(spark, sf_dir, monkeyp
     monkeypatch.setattr(G, "_collect_adj", collect)
     adj = reg.adjacency(SYSTEM_MAP)
     assert adj.out[adj.index[1000]] == [(adj.index[2000], 1.0)]
-    reg.drop(SYSTEM_MAP)
+    # the landmark table is held with the map, and a rebuild or a drop
+    # releases both
+    for release in (lambda: reg.refresh(SYSTEM_MAP, jumps, "cost"),
+                    lambda: reg.drop(SYSTEM_MAP)):
+        snap = reg.landmarks(SYSTEM_MAP)
+        assert snap[0] is reg.adjacency(SYSTEM_MAP)
+        table = weakref.ref(snap[1])
+        del snap
+        release()
+        gc.collect()
+        assert table() is None
