@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,16 +48,6 @@ def test_pagerank_mass_and_symmetry(spark):
     ranks = [r["rank"] for r in rows]
     assert sum(ranks) == pytest.approx(1.0, abs=1e-6)
     assert max(ranks) - min(ranks) < 1e-12  # symmetry => equal ranks
-
-
-def test_pagerank_distributed_matches_local(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    local = {r["node"]: r["rank"] for r in pagerank(e, iterations=3).collect()}
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(e, iterations=3, driver_threshold=0).collect()
-    }
-    assert dist == local  # bit-identical fixed-point supersteps
 
 
 def test_closeness_centrality_known_graph(spark):
@@ -372,6 +364,48 @@ def test_node_similarity_hand_graph(spark):
     assert top1 == {1: 2, 2: 1, 3: 2}
 
 
+# --- rank family: driver executor vs DataFrame executor ----------------------
+# Each spec runs on its own pin graph, on a graph with a dangling node (4),
+# a parallel edge (1→2) and a self-loop (2→2), and with iterations=0; the
+# default (driver) branch must equal driver_threshold=0 bit-for-bit.
+
+_RANK_ODD = [(1, 2), (1, 2), (2, 2), (2, 3), (3, 1), (3, 4)]
+_RANK_CASES = [
+    # (spec, pin edges, symmetric, iterations)
+    ("pagerank", [(1, 2), (2, 3), (3, 1), (3, 4)], True, 3),
+    ("personalized_pagerank", [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], True, 3),
+    ("article_rank", [(1, 2), (2, 3), (3, 1), (3, 4)], True, 3),
+    ("eigenvector", [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)], True, 3),
+    ("hits", [(0, 1), (1, 2), (2, 0), (2, 3)], False, 2),
+]
+
+
+@pytest.mark.parametrize("graph", ["pin", "odd", "iterations0"])
+@pytest.mark.parametrize("spec, pin, symmetric, iterations", _RANK_CASES,
+                         ids=[c[0] for c in _RANK_CASES])
+def test_rank_family_branch_parity(spark, spec, pin, symmetric, iterations, graph):
+    from eve_graph_spark.operators import graph_analytics as ga
+
+    run = {
+        "pagerank": ga.pagerank,
+        "personalized_pagerank": functools.partial(ga.pagerank, sources=[1, 4]),
+        "article_rank": ga.article_rank,
+        "eigenvector": ga.eigenvector_centrality,
+        "hits": ga.hits,
+    }[spec]
+    if graph == "pin":
+        e = _edges(spark, pin, symmetric=symmetric)
+    else:
+        e = _edges(spark, _RANK_ODD, symmetric=False)
+        iterations = 0 if graph == "iterations0" else iterations
+    local = sorted(tuple(r) for r in run(e, iterations=iterations).collect())
+    dist = sorted(tuple(r) for r in run(e, iterations=iterations,
+                                        driver_threshold=0).collect())
+    assert dist == local  # bit-identical fixed-point supersteps
+    if spec == "hits" and iterations == 0:
+        assert {r[1:] for r in local} == {(1.0, 0.0)}  # hub0 = 1, authority0 = 0
+
+
 # --- eigenvector / HITS / LCC / community metrics / personalized PR ----------
 
 
@@ -386,18 +420,6 @@ def test_eigenvector_hand_graph(spark):
     assert sum(v * v for v in got.values()) == pytest.approx(1.0, abs=1e-6)
 
 
-def test_eigenvector_distributed_matches_local(spark):
-    from eve_graph_spark.operators.graph_analytics import eigenvector_centrality
-
-    e = _edges(spark, [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)])
-    local = {r["node"]: r["score"] for r in eigenvector_centrality(e, iterations=3).collect()}
-    dist = {
-        r["node"]: r["score"]
-        for r in eigenvector_centrality(e, iterations=3, driver_threshold=0).collect()
-    }
-    assert dist == local  # bit-identical fixed-point supersteps
-
-
 def test_hits_asymmetric_semantics(spark):
     from eve_graph_spark.operators.graph_analytics import hits
 
@@ -408,19 +430,6 @@ def test_hits_asymmetric_semantics(spark):
     assert got[0][0] == pytest.approx(1.0, abs=1e-6) and got[0][1] == 0.0
     for v in (1, 2, 3):
         assert got[v][0] == 0.0 and got[v][1] == pytest.approx(1.0 / 3**0.5, abs=1e-6)
-
-
-@pytest.mark.slow  # >3s: full-tier only (r14 test tiers)
-def test_hits_distributed_matches_local(spark):
-    from eve_graph_spark.operators.graph_analytics import hits
-
-    e = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3)], symmetric=False)
-    local = {r["node"]: (r["hub"], r["authority"]) for r in hits(e, iterations=2).collect()}
-    dist = {
-        r["node"]: (r["hub"], r["authority"])
-        for r in hits(e, iterations=2, driver_threshold=0).collect()
-    }
-    assert dist == local
 
 
 def test_local_clustering_known_values(spark):
@@ -479,18 +488,6 @@ def test_personalized_pagerank_mass_on_sources(spark):
     # uniform pagerank spreads base mass everywhere — no zero-rank nodes
     uni = {r["node"]: r["rank"] for r in pagerank(e, iterations=3).collect()}
     assert min(uni.values()) > 0.0
-
-
-def test_personalized_pagerank_distributed_matches_local(spark):
-    from eve_graph_spark.operators.graph_analytics import pagerank
-
-    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)])
-    local = {r["node"]: r["rank"] for r in pagerank(e, iterations=3, sources=[1, 4]).collect()}
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(e, iterations=3, sources=[1, 4], driver_threshold=0).collect()
-    }
-    assert dist == local
 
 
 def test_property_graph_new_gds_veneers(spark):
@@ -804,19 +801,6 @@ def test_article_rank_damps_hub_endorsements(spark):
     )
     got = {r["node"]: r["rank"] for r in article_rank(e, iterations=3).collect()}
     assert got[100] > got[200]
-
-
-@pytest.mark.slow  # >10s: full-tier only (r14 test tiers)
-def test_article_rank_distributed_matches_local(spark):
-    from eve_graph_spark.operators.graph_analytics import article_rank
-
-    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    loc = {r["node"]: r["rank"] for r in article_rank(e, iterations=3).collect()}
-    dist = {
-        r["node"]: r["rank"]
-        for r in article_rank(e, iterations=3, driver_threshold=0).collect()
-    }
-    assert loc == dist
 
 
 def test_article_rank_differs_from_pagerank(spark):
