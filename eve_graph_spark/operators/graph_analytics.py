@@ -6,7 +6,10 @@ Spark. Same execution design as `graph.py:sssp`:
 
 - iterative algorithms are Pregel-style DataFrame loops (join + min/sum
   aggregation per superstep) with localCheckpoint lineage truncation and
-  early stop — the shape that scales to edge sets that don't fit anywhere;
+  early stop — the shape that scales to edge sets that don't fit anywhere.
+  The keyed frontier kernels (min-label connected components, `bfs_sigma`,
+  `dijkstra_sigma`'s depth pass, the exclusion-reach kernels) each pass
+  their relaxation to `graph._frontier_loop`, which runs the superstep;
 - below a driver threshold they solve locally (union-find / dict loops),
   bit-identical to the distributed result, because launching 30 Spark jobs
   on a 9k-node graph is the wrong tool;
@@ -22,6 +25,7 @@ Spark. Same execution design as `graph.py:sssp`:
 from __future__ import annotations
 
 import math
+import operator
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -31,7 +35,12 @@ from pyspark.sql import functions as F
 from eve_graph_spark.checkpointing import truncate_lineage
 from eve_graph_spark.frames import local_frame
 
-from eve_graph_spark.operators.graph import fits_driver, multi_source_sssp
+from eve_graph_spark.operators.graph import (
+    FRONTIER_TRUNCATE_EVERY,
+    _frontier_loop,
+    fits_driver,
+    multi_source_sssp,
+)
 
 DRIVER_MAX_EDGES = 2_000_000
 
@@ -130,54 +139,35 @@ def _star_components(e: DataFrame, max_iterations: int,
 AUTO_LABEL_BUDGET = 12  # label supersteps before "auto" concedes to star
 
 
-def _label_components(e: DataFrame, max_iterations: int, checkpoint_every: int,
+def _label_components(e: DataFrame, max_iterations: int,
                       stats_out: dict | None) -> tuple[DataFrame, bool]:
-    """Min-label propagation loop. Returns (labels, converged)."""
+    """Min-label propagation on `_frontier_loop`: every node starts as its
+    own label, and a round sends the labels that changed along their
+    out-edges, keeping the min per node. Returns (labels, converged)."""
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    converged = False
-    n_iters = 0
-    for it in range(max_iterations):
-        msgs = (
-            labels.join(e, labels.node == e.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("cand"))
-        )
-        merged = (
-            labels.join(msgs, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("component"), F.coalesce(F.col("cand"), F.col("component"))).alias(
-                    "component"
-                ),
-                (F.col("cand") < F.col("component")).alias("__improved"),
-            )
-        )
-        merged = merged.transform(truncate_lineage)
-        changed = merged.filter(F.col("__improved")).limit(1).count()
-        labels = merged.drop("__improved")
-        n_iters = it + 1
-        if changed == 0:
-            converged = True
-            break
-        if (it + 1) % checkpoint_every == 0:
-            labels = labels.transform(truncate_lineage)
+    run = _frontier_loop(
+        labels, ["node"],
+        lambda fr: fr.join(e, fr.node == e.src)
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.min("component").alias("component")),
+        max_iterations, value="component",
+    )
     if stats_out is not None:
-        stats_out["iterations"] = stats_out.get("iterations", 0) + n_iters
-        stats_out["label_supersteps"] = n_iters
+        stats_out["iterations"] = stats_out.get("iterations", 0) + run.rounds
+        stats_out["label_supersteps"] = run.rounds
         stats_out["algorithm"] = "label"
-    return labels, converged
+    return run.state, run.converged
 
 
 def connected_components(edges: DataFrame, src_col: str = "src_system_id",
                          dst_col: str = "dst_system_id",
                          driver_threshold: int = DRIVER_MAX_EDGES,
                          max_iterations: int = 100,
-                         checkpoint_every: int = 3,
                          algorithm: str = "auto",
                          stats_out: dict | None = None) -> DataFrame:
     """(node, component) where component = min node id in the component.
@@ -251,7 +241,7 @@ def connected_components(edges: DataFrame, src_col: str = "src_system_id",
     label_budget = (
         min(AUTO_LABEL_BUDGET, max_iterations) if algorithm == "auto" else max_iterations
     )
-    labels, converged = _label_components(e, label_budget, checkpoint_every, stats_out)
+    labels, converged = _label_components(e, label_budget, stats_out)
     if converged or algorithm == "label":
         return labels
     return _star_components(e, max_iterations, stats_out)
@@ -422,10 +412,13 @@ def _rank_frame(spec: RankSpec, e: DataFrame, iterations: int, damping: float,
     scores = {c: nodes.withColumn("score", x0 if i == 0 else F.lit(0.0))
               for i, c in enumerate(spec.columns)}
     for it in range(iterations):
+        cut = (it + 1) % RANK_TRUNCATE_EVERY == 0
         for read, write, forward in spec.halfsteps:
             scores[write] = step(scores[read], forward)
-        if (it + 1) % RANK_TRUNCATE_EVERY == 0:
-            scores = {c: f.transform(truncate_lineage) for c, f in scores.items()}
+            if cut:
+                # truncate as written, so the next half-step (HITS's hub
+                # from authority) reads the checkpoint, not its lineage
+                scores[write] = scores[write].transform(truncate_lineage)
     first, *rest = spec.columns
     out = scores[first].select("node", F.col("score").alias(first))
     for c in rest:
@@ -1093,7 +1086,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
 
 def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
               src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-              max_iterations: int = 200, checkpoint_every: int = 5,
+              max_iterations: int = 200,
               driver_threshold: int = DRIVER_MAX_EDGES,
               stats_out: dict | None = None) -> DataFrame:
     """(source, node, dist, sigma): hop distance and shortest-path COUNT
@@ -1101,8 +1094,8 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
     building block of path-diversity metrics.
 
     Level-synchronous BFS keyed (source, node), run for ALL sources in
-    ONE frontier loop (the multi-source shape of
-    graph.multi_source_sssp): at superstep L every (source, frontier
+    ONE `_frontier_loop` that keeps new keys only (the multi-source shape
+    of graph.multi_source_sssp): at superstep L every (source, frontier
     node) pair at dist L sends sigma along its out-edges; a node first
     reached at L+1 gets sigma = the SUM of messages — complete in that
     superstep because level-synchronous BFS delivers every dist-L
@@ -1170,35 +1163,19 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
         spark, [(int(s), int(s), 0, 1.0) for s in source_ids],
         "source long, node long, dist int, sigma double",
     )
-    frontier = visited
-    n_iters = n_ckpts = 0
-    for it in range(max_iterations):
-        msgs = (
-            frontier.join(e, frontier.node == e.src)
-            .groupBy("source", F.col("dst").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(it + 1))
-        )
-        seen = visited.select(F.col("source").alias("__s"), F.col("node").alias("__n"))
-        fresh = msgs.join(
-            seen,
-            (msgs["source"] == F.col("__s")) & (msgs["node"] == F.col("__n")),
-            "left_anti",
-        ).select("source", "node", "dist", "sigma")
-        fresh = fresh.transform(truncate_lineage)
-        n_new = fresh.count()
-        n_iters = it + 1
-        if n_new == 0:
-            break
-        frontier = fresh
-        visited = visited.unionByName(fresh)
-        if (it + 1) % checkpoint_every == 0:
-            visited = visited.transform(truncate_lineage)
-            n_ckpts += 1
+    # a level-L frontier row sends sigma to each out-neighbour; only
+    # first reaches (new keys) are kept, at dist L + 1
+    run = _frontier_loop(
+        visited, ["source", "node"],
+        lambda fr: fr.join(e, fr.node == e.src)
+        .groupBy("source", F.col("dst").alias("node"))
+        .agg(F.min(F.col("dist") + 1).alias("dist"), F.sum("sigma").alias("sigma")),
+        max_iterations, better=None, seed_rows=len(source_ids),
+    )
     if stats_out is not None:
-        stats_out["iterations"] = n_iters
-        stats_out["visited_checkpoints"] = n_ckpts
-    return visited
+        stats_out["iterations"] = run.rounds
+        stats_out["visited_checkpoints"] = run.truncations
+    return run.state
 
 
 def _weighted_edge_frame(edges: DataFrame, src_col: str, dst_col: str,
@@ -1244,7 +1221,7 @@ def _dijkstra_sigma_local_one(adj: dict[int, list[tuple[int, float]]], s: int):
 def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
                    weight_col: str,
                    src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-                   max_iterations: int = 200, checkpoint_every: int = 5,
+                   max_iterations: int = 200,
                    driver_threshold: int = DRIVER_MAX_EDGES,
                    stats_out: dict | None = None) -> DataFrame:
     """(source, node, dist, sigma, depth): WEIGHTED shortest-path distance,
@@ -1304,14 +1281,10 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
             "sampled source list (betweenness_centrality(sample_sources=k, "
             "weight_col=...) does) or raise driver_threshold knowingly."
         )
-    from eve_graph_spark.operators.graph import multi_source_sssp
-
     d = multi_source_sssp(
         ew, source_ids, weight_col="w", src_col="src", dst_col="dst",
-        max_iterations=max_iterations, checkpoint_every=checkpoint_every,
-        driver_threshold=0, stats_out=stats_out,
+        max_iterations=max_iterations, driver_threshold=0, stats_out=stats_out,
     ).select("source", "node", "dist")
-    d = d.transform(truncate_lineage)
 
     # per-source shortest-path DAG: edge (u, v) is on a shortest path from
     # `source` iff dist(u) + w == dist(v) — exact equality, see docstring
@@ -1333,39 +1306,18 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
     dag = dag.transform(truncate_lineage)
 
     # longest-path depth: max-propagation to fixpoint, O(max depth) rounds
-    depth = d.filter(F.col("dist") == 0.0).select(
-        "source", "node", F.lit(0).alias("depth")
+    run = _frontier_loop(
+        d.filter(F.col("dist") == 0.0).select("source", "node", F.lit(0).alias("depth")),
+        ["source", "node"],
+        lambda fr: fr.join(dag, (F.col("source") == F.col("__gs"))
+                           & (F.col("node") == F.col("__gu")))
+        .groupBy(F.col("__gs").alias("source"), F.col("__gv").alias("node"))
+        .agg(F.max(F.col("depth") + 1).alias("depth")),
+        max_iterations, better=operator.gt, value="depth",
     )
-    n_depth_iters = 0
-    for it in range(max_iterations):
-        cand = (
-            depth.join(dag, (F.col("source") == F.col("__gs")) & (F.col("node") == F.col("__gu")))
-            .select(F.col("__gs").alias("source"), F.col("__gv").alias("node"),
-                    (F.col("depth") + 1).alias("cand"))
-            .groupBy("source", "node")
-            .agg(F.max("cand").alias("cand"))
-        )
-        merged = (
-            cand.join(depth.select(F.col("source").alias("__os"), F.col("node").alias("__on"),
-                                   F.col("depth").alias("__old")),
-                      (F.col("source") == F.col("__os")) & (F.col("node") == F.col("__on")),
-                      "left")
-            .filter(F.col("__old").isNull() | (F.col("cand") > F.col("__old")))
-            .select("source", "node", F.col("cand").alias("depth"))
-        )
-        merged = merged.transform(truncate_lineage)
-        n_depth_iters = it + 1
-        if merged.limit(1).count() == 0:
-            break
-        keys = merged.select(F.col("source").alias("__s"), F.col("node").alias("__n"))
-        depth = (
-            depth.join(keys, (depth.source == F.col("__s")) & (depth.node == F.col("__n")),
-                       "left_anti")
-            .unionByName(merged)
-        )
-        depth = depth.transform(truncate_lineage)
     if stats_out is not None:
-        stats_out["depth_iterations"] = n_depth_iters
+        stats_out["depth_iterations"] = run.rounds
+    depth = run.state  # checkpointed by the loop: read once per sigma level
     max_depth = depth.agg(F.max("depth").alias("m")).collect()[0]["m"] or 0
 
     # sigma: process depth levels ascending — every DAG pred of a level-L
@@ -1383,7 +1335,7 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
             .agg(F.sum("sigma").alias("sigma"))
         )
         sigma = sigma.unionByName(contrib)
-        if level % checkpoint_every == 0:
+        if level % FRONTIER_TRUNCATE_EVERY == 0:
             sigma = sigma.transform(truncate_lineage)
     out = (
         d.join(depth, ["source", "node"])
@@ -1473,18 +1425,15 @@ def _brandes_local(e: DataFrame, source_ids: list[int], scale: float) -> DataFra
 
 
 def _weighted_betweenness_distributed(ew: DataFrame, source_ids: list[int],
-                                      scale: float, all_nodes: DataFrame,
-                                      checkpoint_every: int) -> DataFrame:
+                                      scale: float, all_nodes: DataFrame) -> DataFrame:
     """Distributed weighted Brandes backward pass: dependency accumulation
     over the shortest-path DAG by longest-path depth descending. A
     depth-L node's dependents sit at depths > L (DAG edges strictly
     increase depth), all processed in earlier rounds — so its delta is
     the aggregate of every partial contribution accumulated so far
     (unlike the unweighted pass, one level does NOT mean one row)."""
-    vs = dijkstra_sigma(
-        ew, source_ids, weight_col="w", src_col="src", dst_col="dst",
-        driver_threshold=0, checkpoint_every=checkpoint_every,
-    )
+    vs = dijkstra_sigma(ew, source_ids, weight_col="w", src_col="src", dst_col="dst",
+                        driver_threshold=0)
     vs = vs.transform(truncate_lineage)
     du = vs.select("source", F.col("node").alias("src"), F.col("dist").alias("__du"))
     dv = vs.select("source", F.col("node").alias("dst"), F.col("dist").alias("__dv"))
@@ -1532,7 +1481,7 @@ def _weighted_betweenness_distributed(ew: DataFrame, source_ids: list[int],
         )
         contribs = contribs.transform(truncate_lineage)
         acc = contribs if acc is None else acc.unionByName(contribs)
-        if (max_depth - level + 1) % checkpoint_every == 0:
+        if (max_depth - level + 1) % FRONTIER_TRUNCATE_EVERY == 0:
             acc = acc.transform(truncate_lineage)
     if acc is None:
         return all_nodes.select("node", F.lit(0.0).alias("betweenness"))
@@ -1551,7 +1500,6 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
                            sample_sources: int | None = None,
                            driver_threshold: int = DRIVER_MAX_EDGES,
                            exact: bool = False,
-                           checkpoint_every: int = 5,
                            weight_col: str | None = None) -> DataFrame:
     """(node, betweenness) over ordered (s, t) pairs — Brandes: forward
     multi-source BFS-with-sigma, then backward dependency accumulation
@@ -1614,14 +1562,11 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         ew = _weighted_edge_frame(edges, src_col, dst_col, weight_col)
         if fits_driver(ew, driver_threshold):
             return _weighted_brandes_local(ew, source_ids, scale)
-        return _weighted_betweenness_distributed(
-            ew, source_ids, scale, all_nodes, checkpoint_every
-        )
+        return _weighted_betweenness_distributed(ew, source_ids, scale, all_nodes)
     if fits_driver(e, driver_threshold):
         return _brandes_local(e, source_ids, scale)
 
-    vs = bfs_sigma(e, source_ids, src_col="src", dst_col="dst",
-                   driver_threshold=0, checkpoint_every=checkpoint_every)
+    vs = bfs_sigma(e, source_ids, src_col="src", dst_col="dst", driver_threshold=0)
     vs = vs.transform(truncate_lineage)
     max_dist = vs.agg(F.max("dist").alias("m")).collect()[0]["m"] or 0
 
@@ -1660,7 +1605,7 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         )
         contribs = contribs.transform(truncate_lineage)
         acc = acc.unionByName(contribs)
-        if (max_dist - level + 1) % checkpoint_every == 0:
+        if (max_dist - level + 1) % FRONTIER_TRUNCATE_EVERY == 0:
             acc = acc.transform(truncate_lineage)
     per_source = acc.groupBy("source", "node").agg(F.sum("delta").alias("delta"))
     return (
@@ -1790,26 +1735,23 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
 # --- articulation points / bridges (chokepoint analysis) ---------------------
 
 def _exclusion_reach(e: DataFrame, seeds: DataFrame, key_cols: list[str],
-                     edge_filter, max_iterations: int) -> DataFrame:
+                     keep: Callable[[DataFrame], DataFrame],
+                     max_iterations: int) -> DataFrame:
     """Shared kernel: per exclusion key, the set of nodes reachable from the
-    seed when `edge_filter(reached, e)` prunes forbidden edges. One frontier
-    DataFrame keyed by the exclusion key runs ALL exclusion scenarios as one
-    superstep loop (the multi_source_sssp trick) instead of |keys| serial
-    BFS jobs. Returns (key_cols..., node) distinct rows. The fixpoint probe
-    (count) materializes the merged set every round, so lineage is
-    checkpointed per iteration as a side effect — no separate cadence knob."""
-    reached = seeds
-    prev = -1
-    for it in range(max_iterations):
-        joined = reached.join(e, reached.node == e.src)
-        new = joined.filter(edge_filter).select(*key_cols, F.col("dst").alias("node"))
-        merged = reached.union(new).distinct().transform(truncate_lineage)
-        cnt = merged.count()
-        if cnt == prev:
-            break
-        prev = cnt
-        reached = merged
-    return reached
+    seed when `keep` drops the forbidden (key_cols..., src, dst) edge
+    rows. One `_frontier_loop` keyed (key_cols..., node) runs ALL
+    exclusion scenarios as one superstep loop (the multi_source_sssp
+    trick) instead of |keys| serial BFS jobs; a round relaxes only the
+    nodes reached the round before. Returns (key_cols..., node) distinct
+    rows."""
+    # both checkpointed once, or every round re-runs their distincts
+    e = e.transform(truncate_lineage)
+    return _frontier_loop(
+        seeds.distinct().transform(truncate_lineage), [*key_cols, "node"],
+        lambda fr: keep(fr.join(e, fr.node == e.src).select(*key_cols, "src", "dst"))
+        .select(*key_cols, F.col("dst").alias("node")).distinct(),
+        max_iterations, better=None,
+    ).state
 
 
 def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
@@ -1870,7 +1812,7 @@ def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
         F.when(F.col("node") == m0, F.lit(m1)).otherwise(F.lit(m0)).alias("node"),
     )
     reached = _exclusion_reach(
-        e, seeds, ["ex"], F.col("dst") != F.col("ex"), max_iterations
+        e, seeds, ["ex"], lambda c: c.filter(F.col("dst") != F.col("ex")), max_iterations
     )
     out = (
         reached.groupBy("ex")
@@ -1933,7 +1875,9 @@ def bridges(edges: DataFrame, src_col: str = "src_system_id",
         ((F.col("src") == F.col("a")) & (F.col("dst") == F.col("b")))
         | ((F.col("src") == F.col("b")) & (F.col("dst") == F.col("a")))
     )
-    reached = _exclusion_reach(e, seeds, ["a", "b"], not_excluded, max_iterations)
+    reached = _exclusion_reach(
+        e, seeds, ["a", "b"], lambda c: c.filter(not_excluded), max_iterations
+    )
     return (
         reached.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("reached"))
@@ -2097,20 +2041,11 @@ def set_exclusion_reach(edges: DataFrame, seeds: DataFrame, excluded: DataFrame,
             rows.append((k, len(seen)))
         return local_frame(spark, rows, "k long, reachable long")
 
-    reached = seeds
-    prev = -1
-    for _ in range(max_iterations):
-        new = (
-            reached.join(e, reached.node == e.src)
-            .select("k", F.col("dst").alias("node"))
-            .join(excluded, ["k", "node"], "left_anti")
-        )
-        merged = reached.union(new).distinct().transform(truncate_lineage)
-        cnt = merged.count()
-        if cnt == prev:
-            break
-        prev = cnt
-        reached = merged
+    reached = _exclusion_reach(
+        e, seeds, ["k"],
+        lambda c: c.join(excluded.withColumnRenamed("node", "dst"), ["k", "dst"], "left_anti"),
+        max_iterations,
+    )
     return reached.groupBy("k").agg(F.count(F.lit(1)).alias("reachable"))
 
 

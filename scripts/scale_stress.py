@@ -111,8 +111,7 @@ def completed_stage_metrics(spark: SparkSession) -> dict[int, dict]:
 GRAPH_BUDGET_SEC = 1200
 
 
-def graph_stress(spark: SparkSession, layers: int, width: int,
-                 checkpoint_every: int, budget: int) -> int:
+def graph_stress(spark: SparkSession, layers: int, width: int, budget: int) -> int:
     """Long-diameter distributed-Pregel stress (VERDICT r5 item 3).
 
     A "wide chain" — complete bipartite between consecutive layers —
@@ -127,10 +126,10 @@ def graph_stress(spark: SparkSession, layers: int, width: int,
     dist(node in layer l) = l; only node 0 of layer 0 is reachable;
     iterations = layers (layers-1 productive relaxations + the
     empty-frontier detection round); dist_checkpoints =
-    (layers-1) // checkpoint_every (the detection round breaks before
-    its checkpoint slot).
+    (layers-1) // FRONTIER_TRUNCATE_EVERY (the detection round breaks
+    before its checkpoint slot).
     """
-    from eve_graph_spark.operators.graph import sssp
+    from eve_graph_spark.operators.graph import FRONTIER_TRUNCATE_EVERY, sssp
 
     n_edges = (layers - 1) * width * width
     e = (
@@ -145,8 +144,7 @@ def graph_stress(spark: SparkSession, layers: int, width: int,
     stats: dict = {}
     t0 = time.time()
     out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-               driver_threshold=0, max_iterations=layers + 10,
-               checkpoint_every=checkpoint_every, stats_out=stats)
+               driver_threshold=0, max_iterations=layers + 10, stats_out=stats)
     agg = out.groupBy((F.floor(F.col("node") / width)).alias("layer")).agg(
         F.count(F.lit(1)).alias("n"),
         F.min("dist").alias("dmin"),
@@ -168,14 +166,14 @@ def graph_stress(spark: SparkSession, layers: int, width: int,
         errs.append(f"iterations={stats.get('iterations')} expected {layers}")
     # the final (empty-frontier) round breaks before its checkpoint slot,
     # so cadence applies to the layers-1 productive supersteps before it
-    if stats.get("dist_checkpoints") != (layers - 1) // checkpoint_every:
+    if stats.get("dist_checkpoints") != (layers - 1) // FRONTIER_TRUNCATE_EVERY:
         errs.append(f"dist_checkpoints={stats.get('dist_checkpoints')} "
-                    f"expected {(layers - 1) // checkpoint_every}")
-    # the final plan holds at most (checkpoint_every - 1) un-truncated
+                    f"expected {(layers - 1) // FRONTIER_TRUNCATE_EVERY}")
+    # the final plan holds at most (FRONTIER_TRUNCATE_EVERY - 1) un-truncated
     # supersteps (~20 lines each: anti-join + union per merge) on top of
     # the checkpointed base — bounded by the CADENCE, independent of
     # layers, which is exactly what lineage truncation must guarantee
-    plan_budget = 60 + 20 * checkpoint_every
+    plan_budget = 60 + 20 * FRONTIER_TRUNCATE_EVERY
     if plan_lines >= plan_budget:
         errs.append(f"unbounded lineage: {plan_lines} plan lines (budget {plan_budget})")
     if took > budget:
@@ -193,7 +191,7 @@ def graph_stress(spark: SparkSession, layers: int, width: int,
 
 
 def reliable_ckpt_stress(spark: SparkSession, layers: int, width: int,
-                         checkpoint_every: int, budget: int) -> int:
+                         budget: int) -> int:
     """Fault-tolerant-checkpoint premium (r10 verdict item 1 follow-up).
 
     Runs the wide-chain SSSP distributed loop twice — default
@@ -228,8 +226,7 @@ def reliable_ckpt_stress(spark: SparkSession, layers: int, width: int,
     def run():
         t0 = time.time()
         out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-                   driver_threshold=0, max_iterations=layers + 10,
-                   checkpoint_every=checkpoint_every)
+                   driver_threshold=0, max_iterations=layers + 10)
         rows = sorted(map(tuple, out.collect()))
         return rows, time.time() - t0
 
@@ -522,7 +519,7 @@ def louvain_stress(spark: SparkSession, n_cliques: int, clique_size: int,
 
 
 def multi_source_stress(spark: SparkSession, layers: int, width: int, k: int,
-                        checkpoint_every: int, budget: int) -> int:
+                        budget: int) -> int:
     """Multi-source frontier-loop stress (round-6: landmark closeness fix).
 
     Same wide-chain as graph_stress but k sources — the FIRST node of
@@ -534,7 +531,7 @@ def multi_source_stress(spark: SparkSession, layers: int, width: int, k: int,
     dist l - ls (complete bipartite between consecutive layers), nothing
     in layer ls or earlier is reachable except the source itself.
     """
-    from eve_graph_spark.operators.graph import multi_source_sssp
+    from eve_graph_spark.operators.graph import FRONTIER_TRUNCATE_EVERY, multi_source_sssp
 
     n_edges = (layers - 1) * width * width
     e = (
@@ -553,8 +550,7 @@ def multi_source_stress(spark: SparkSession, layers: int, width: int, k: int,
     t0 = time.time()
     out = multi_source_sssp(
         e, sources, weight_col="w", src_col="src", dst_col="dst",
-        driver_threshold=0, max_iterations=layers + 10,
-        checkpoint_every=checkpoint_every, stats_out=stats,
+        driver_threshold=0, max_iterations=layers + 10, stats_out=stats,
     )
     agg = out.groupBy(
         (F.floor(F.col("source") / width)).alias("src_layer"),
@@ -588,7 +584,7 @@ def multi_source_stress(spark: SparkSession, layers: int, width: int, k: int,
     expect_iters = layers - min(source_layers)
     if stats.get("iterations") != expect_iters:
         errs.append(f"iterations={stats.get('iterations')} expected {expect_iters}")
-    plan_budget = 60 + 20 * checkpoint_every
+    plan_budget = 60 + 20 * FRONTIER_TRUNCATE_EVERY
     if plan_lines >= plan_budget:
         errs.append(f"unbounded lineage: {plan_lines} plan lines (budget {plan_budget})")
     if took > budget:
@@ -884,7 +880,6 @@ def main() -> int:
     ap.add_argument("--graph-layers", type=int, default=1000)
     ap.add_argument("--graph-width", type=int, default=32)
     ap.add_argument("--graph-sources", type=int, default=16)
-    ap.add_argument("--graph-checkpoint-every", type=int, default=10)
     args = ap.parse_args()
     budgets = {k: v for k, v in BUDGETS.items() if args.only is None or k in args.only}
 
@@ -913,12 +908,11 @@ def main() -> int:
                               args.louvain_clique_size, GRAPH_BUDGET_SEC)
     if args.reliable_ckpt:
         return reliable_ckpt_stress(
-            spark, args.graph_layers, args.graph_width,
-            args.graph_checkpoint_every, GRAPH_BUDGET_SEC,
+            spark, args.graph_layers, args.graph_width, GRAPH_BUDGET_SEC
         )
     if args.graph:
         return graph_stress(spark, args.graph_layers, args.graph_width,
-                            args.graph_checkpoint_every, GRAPH_BUDGET_SEC)
+                            GRAPH_BUDGET_SEC)
     if args.multi_source:
         # default shape: 100 layers x 100 width ~ 1M edges, diameter 99,
         # 16 sources — k x the 200k-edge smoke, at a diameter where
@@ -926,7 +920,7 @@ def main() -> int:
         layers = args.graph_layers if args.graph_layers != 1000 else 100
         width = args.graph_width if args.graph_width != 32 else 100
         return multi_source_stress(spark, layers, width, args.graph_sources,
-                                   args.graph_checkpoint_every, GRAPH_BUDGET_SEC)
+                                   GRAPH_BUDGET_SEC)
 
     tmp = tempfile.mkdtemp(prefix="scale_stress_")
     # queries resolve every table against sf_dir: link the rest through

@@ -63,7 +63,7 @@ def test_sssp_bit_identical_under_reliable_checkpoints(spark, tmp_path):
     jumps = build_jumps(spark, "/root/testdata/sf0.001")
     src = [jumps.select("src_system_id").first()[0]]
     # driver_threshold=0 forces the distributed superstep loop — the path
-    # that actually calls truncate_lineage every checkpoint_every rounds.
+    # that actually calls truncate_lineage every FRONTIER_TRUNCATE_EVERY rounds.
     base = sorted(
         map(
             tuple,

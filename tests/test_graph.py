@@ -106,32 +106,6 @@ def test_distributed_loop_matches_local_fast_path(spark, fixture_edges):
     assert dist == local
 
 
-@pytest.mark.slow  # >3s: full-tier only (r14 test tiers)
-def test_multi_source_sssp_per_source_parity(spark, fixture_edges):
-    """(source, node)-keyed state: per-source (dist, pred) equal k
-    independent sssp() runs, on BOTH the driver fast path and the
-    distributed one-frontier loop (driver_threshold=0)."""
-    from eve_graph_spark.operators.graph import multi_source_sssp
-
-    jumps, _ = fixture_edges
-    sources = [0, 3]
-    expect = {}
-    for s in sources:
-        for r in sssp(jumps, [s], weight_col="risk", src_col="src_system_id",
-                      dst_col="dst_system_id").collect():
-            expect[(s, r["node"])] = (r["dist"], r["pred"])
-    for thr in (None, 0):
-        kwargs = {} if thr is None else {"driver_threshold": 0}
-        got = {
-            (r["source"], r["node"]): (r["dist"], r["pred"])
-            for r in multi_source_sssp(
-                jumps, sources, weight_col="risk", src_col="src_system_id",
-                dst_col="dst_system_id", **kwargs
-            ).collect()
-        }
-        assert got == expect, thr
-
-
 def test_graph_engine_routes(spark, sf_dir):
     systems = build_systems(spark, sf_dir)
     jumps = build_jumps(spark, sf_dir)
@@ -338,6 +312,101 @@ def test_k_shortest_driver_matches_distributed_under_ties(spark):
     want = [(2.0, [3, 5, 4]), (2.0, [3, 1, 2, 4])]
     assert k_shortest_paths_distributed(e, 3, 4, k=2) == want
     assert k_shortest_paths_distributed(e, 3, 4, k=2, driver_threshold=0) == want
+
+
+# --- frontier family: driver branch vs _frontier_loop ------------------------
+# Each keyed frontier kernel runs on three small graphs; the default
+# (driver) branch must equal driver_threshold=0 exactly. Each graph is
+# (edges, source, target): TIE_EDGES has a zero-weight edge, the chain's
+# target sits 3 hops out, and the second graph has two components.
+
+_FRONTIER_GRAPHS = {
+    "ties": (TIE_EDGES, 3, 4),
+    "chain": ([(i, i + 1, 1.0) for i in range(29)], 0, 3),
+    "two_components": (
+        [(0, 1, 1.0), (1, 2, 2.0), (2, 0, 1.0), (0, 2, 4.0),
+         (10, 11, 1.0), (11, 12, 3.0)],
+        0, 12,
+    ),
+}
+
+
+def _frontier_kernel(kernel, spark, edges, s, t, **kw):
+    from eve_graph_spark.operators import graph as G
+    from eve_graph_spark.operators import graph_analytics as ga
+
+    e = spark.createDataFrame(edges, "src long, dst long, weight double")
+    cols = dict(src_col="src", dst_col="dst")
+    if kernel == "sssp":
+        return G.sssp(e, [s], **kw).collect()
+    if kernel == "sssp_target":
+        dist = G.sssp(e, [s], target_id=t, **kw)
+        path = reconstruct_path(dist, t)
+        on_path = {r["node"]: (r["dist"], r["pred"]) for r in dist.collect()
+                   if r["node"] in path}
+        return path, on_path
+    if kernel == "multi_source_sssp":
+        other = max(u for u, _, _ in edges)
+        rows = G.multi_source_sssp(e, [s, other, s], **kw).collect()
+        for src in (s, other):  # each source's rows are sssp's from it alone
+            assert sorted((r["node"], r["dist"], r["pred"]) for r in rows
+                          if r["source"] == src) == sorted(
+                tuple(r) for r in G.sssp(e, [src]).collect())
+        return rows
+    if kernel == "k_shortest_paths":
+        return G.k_shortest_paths_distributed(e, s, t, k=3, **kw)
+    if kernel == "bfs_sigma":
+        return ga.bfs_sigma(e, [s, t], **cols, **kw).collect()
+    if kernel == "dijkstra_sigma":
+        return ga.dijkstra_sigma(e, [s, t], "weight", **cols, **kw).collect()
+    sym = spark.createDataFrame(
+        [(u, v) for u, v, _ in edges] + [(v, u) for u, v, _ in edges],
+        "src long, dst long",
+    )
+    if kernel == "label_cc":
+        return ga.connected_components(sym, **cols, algorithm="label", **kw).collect()
+    if kernel == "articulation_points":
+        return ga.articulation_points(sym, **cols, **kw).collect()
+    if kernel == "bridges":
+        return ga.bridges(sym, **cols, **kw).collect()
+    assert kernel == "set_exclusion_reach"
+    seeds = spark.createDataFrame([(0, s), (1, s), (2, t)], "k long, node long")
+    excl = spark.createDataFrame([(1, t), (2, s)], "k long, node long")
+    return ga.set_exclusion_reach(sym, seeds, excl, **cols, **kw).collect()
+
+
+_FRONTIER_KERNELS = [
+    "sssp", "sssp_target", "multi_source_sssp", "k_shortest_paths", "bfs_sigma",
+    "dijkstra_sigma", "label_cc", "articulation_points", "bridges",
+    "set_exclusion_reach",
+]
+# a kernel without a target walks the whole chain: ~30 supersteps of
+# ~1 s each on 4 cores, so those cases run in the full tier only
+_FRONTIER_CASES = [
+    pytest.param(
+        kernel, graph, id=f"{kernel}-{graph}",
+        marks=pytest.mark.slow
+        if graph == "chain" and kernel not in ("sssp_target", "k_shortest_paths") else (),
+    )
+    for kernel in _FRONTIER_KERNELS
+    for graph in sorted(_FRONTIER_GRAPHS)
+    # dijkstra_sigma needs strictly positive weights (TIE_EDGES has a 0.0);
+    # articulation points and bridges are defined on a connected graph
+    if not (kernel == "dijkstra_sigma" and graph == "ties")
+    and not (kernel in ("articulation_points", "bridges") and graph == "two_components")
+]
+
+
+@pytest.mark.parametrize("kernel, graph", _FRONTIER_CASES)
+def test_frontier_family_branch_parity(spark, kernel, graph):
+    edges, s, t = _FRONTIER_GRAPHS[graph]
+
+    def canon(out):
+        return sorted(tuple(r) for r in out) if isinstance(out, list) else out
+
+    local = canon(_frontier_kernel(kernel, spark, edges, s, t))
+    dist = canon(_frontier_kernel(kernel, spark, edges, s, t, driver_threshold=0))
+    assert dist == local
 
 
 def test_k_shortest_distributed_no_route(spark):

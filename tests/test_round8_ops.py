@@ -186,26 +186,14 @@ def test_exclusion_bfs_superstep_bound(choke):
     from eve_graph_spark.operators import graph_analytics as ga
 
     calls = {"n": 0}
-    orig = ga._exclusion_reach
+    orig = ga._frontier_loop
 
-    def counting(e, seeds, key_cols, edge_filter, max_iterations):
-        reached = seeds
-        prev = -1
-        for it in range(max_iterations):
-            joined = reached.join(e, reached.node == e.src)
-            new = joined.filter(edge_filter).select(
-                *key_cols, ga.F.col("dst").alias("node")
-            )
-            merged = reached.union(new).distinct().localCheckpoint(eager=True)
-            cnt = merged.count()
-            calls["n"] = it + 1
-            if cnt == prev:
-                break
-            prev = cnt
-            reached = merged
-        return reached
+    def counting(*args, **kwargs):
+        run = orig(*args, **kwargs)
+        calls["n"] = run.rounds
+        return run
 
-    with patch.object(ga, "_exclusion_reach", side_effect=counting) as m:
+    with patch.object(ga, "_frontier_loop", side_effect=counting) as m:
         articulation_points(
             choke, src_col="src", dst_col="dst", driver_threshold=0
         ).collect()
@@ -444,24 +432,6 @@ def test_node2vec_walks_are_valid(jumps, spark, sf_dir):
 
 
 # --- robustness curve + diameter ---------------------------------------------------
-
-@pytest.mark.slow  # >3s: full-tier only (r14 test tiers)
-def test_set_exclusion_reach_distributed_matches_driver(choke, spark):
-    from eve_graph_spark.operators.graph_analytics import set_exclusion_reach
-
-    # scenarios: remove {} / {0} / {0,1}
-    excl = spark.createDataFrame([(1, 0), (2, 0), (2, 1)], "k long, node long")
-    seeds = spark.createDataFrame([(0, 0), (1, 5), (2, 5)], "k long, node long")
-    kw = dict(src_col="src", dst_col="dst")
-    drv = set_exclusion_reach(choke, seeds, excl, **kw)
-    dist = set_exclusion_reach(choke, seeds, excl, **kw, driver_threshold=0)
-    assert _sorted_rows(drv) == _sorted_rows(dist)
-    got = {r["k"]: r["reachable"] for r in drv.collect()}
-    assert got[0] == 25  # nothing removed: the whole graph
-    # removing hub 0 from seed 5's viewpoint: 5 keeps only the 5-21
-    # wormhole into region 1 and onward through the hub chain
-    assert got[1] < 25 and got[2] < got[1]
-
 
 def test_risk_robustness_percolation_cliff(spark, sf_dir):
     from eve_graph_spark.queries import queries as registry

@@ -55,7 +55,7 @@ def test_sssp_long_diameter_lineage_truncation(spark):
     )
     stats: dict = {}
     out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-               driver_threshold=0, checkpoint_every=5, stats_out=stats)
+               driver_threshold=0, stats_out=stats)
     rows = {r["node"]: (r["dist"], r["pred"]) for r in out.collect()}
     assert len(rows) == hops + 1
     assert all(rows[i][0] == float(i) for i in range(hops + 1))
