@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 KM_FP = 1_000_000  # element fixed point: |x| <= ~2k after scaling fits long
+KMEANS_DRIVER_MAX_ROWS = 200_000  # below this, kmeans_fit runs on the driver
 
 
 def _fixed_vec(col: Column) -> Column:
@@ -76,8 +77,7 @@ def _clean(embeddings: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFr
 
 def kmeans_fit(embeddings: DataFrame, k: int = 4, iterations: int = 2,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               dim: int = 64, check_unique_ids: bool = True,
-               driver_local_threshold: int = 200_000) -> dict[int, list[int]]:
+               dim: int = 64, check_unique_ids: bool = True) -> dict[int, list[int]]:
     """The trained model: fixed-point centroids after `iterations` Lloyd
     rounds from a deterministic init (the k smallest ids' vectors; cluster
     index = id rank) — i.e. the centroids the FINAL assignment of
@@ -93,8 +93,8 @@ def kmeans_fit(embeddings: DataFrame, k: int = 4, iterations: int = 2,
     has already deduped; fit is a multi-pass job anyway, so the extra
     groupBy is in budget even at corpus scale).
 
-    Corpora under `driver_local_threshold` rows fit on the driver
-    (r13, the same threshold device as similarity._ivf_topk_local): one
+    Corpora under KMEANS_DRIVER_MAX_ROWS rows fit on the driver
+    (the same threshold device as similarity._ivf_topk_local): one
     collect of the fixed-point matrix feeds the uniqueness check, the
     deterministic init AND every Lloyd round — replacing one driver job
     per step (dup-check agg, init TakeOrdered, one posexplode+groupBy
@@ -102,14 +102,12 @@ def kmeans_fit(embeddings: DataFrame, k: int = 4, iterations: int = 2,
     arithmetic (numpy wraps like the JVM long), and the centroid update
     runs the same double op sequence (2.0·sum + n) / (2.0·n) with
     round-to-nearest long→double conversion on both sides. Parity is
-    pinned by test; pass driver_local_threshold=0 to force the
-    distributed loop (the oracle CTEs replay either)."""
-    emb = _clean(embeddings, id_col, vec_col, dim)
-    if driver_local_threshold:
-        from eve_graph_spark.operators.graph import fits_driver
+    pinned by test (the oracle CTEs replay either branch)."""
+    from eve_graph_spark.operators.graph import fits_driver
 
-        if fits_driver(emb, driver_local_threshold):
-            return _kmeans_fit_local(emb, k, iterations, check_unique_ids)
+    emb = _clean(embeddings, id_col, vec_col, dim)
+    if fits_driver(emb, KMEANS_DRIVER_MAX_ROWS):
+        return _kmeans_fit_local(emb, k, iterations, check_unique_ids)
     if check_unique_ids:
         dup = (
             emb.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
@@ -153,7 +151,7 @@ def kmeans_fit(embeddings: DataFrame, k: int = 4, iterations: int = 2,
 def _kmeans_fit_local(emb: DataFrame, k: int, iterations: int,
                       check_unique_ids: bool) -> dict[int, list[int]]:
     """Driver-side Lloyd fit over the collected fixed-point matrix — the
-    ≤driver_local_threshold branch of kmeans_fit. Same values as the
+    ≤KMEANS_DRIVER_MAX_ROWS branch of kmeans_fit. Same values as the
     distributed loop (see its docstring); `emb` is the _clean() frame."""
     return _kmeans_fit_local_rows(emb.collect(), k, iterations, check_unique_ids)
 

@@ -464,8 +464,7 @@ def portable_minhash_near_dups(df: DataFrame, text_col: str = "text", id_col: st
 def near_dup_clusters(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       threshold: float = 0.5,
                       max_bucket_size: int | str | None = None,
-                      carry: dict[str, Column] | None = None,
-                      driver_local_threshold: int = 20_000) -> DataFrame:
+                      carry: dict[str, Column] | None = None) -> DataFrame:
     """(doc_id, cluster) near-dup cluster membership with exact-dup
     pre-collapse — the scale-critical ordering for dup-heavy corpora.
 
@@ -535,10 +534,10 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text", id_col: str = "do
     # whose exact-percentile replication isn't worth owning twice.
     # fits_driver respects SPARK_GRAFT_FORCE_DISTRIBUTED (the bench's
     # distributed arm still times the full pipeline below).
-    if max_bucket_size is None and driver_local_threshold:
+    if max_bucket_size is None:
         from eve_graph_spark.operators.graph import fits_driver
 
-        if fits_driver(docs.select(F.col(id_col)), driver_local_threshold):
+        if fits_driver(docs.select(F.col(id_col)), NEAR_DUP_DRIVER_MAX_DOCS):
             local = _near_dup_clusters_local(
                 docs, text_col, id_col, threshold, carry,
                 num_hashes, bands, rows_per_band, k,
@@ -617,6 +616,8 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text", id_col: str = "do
     return members.join(rep_cluster, "__dg").select(id_col, "cluster", *carry.keys())
 
 
+#: Most docs near_dup_clusters hands to its driver branch.
+NEAR_DUP_DRIVER_MAX_DOCS = 20_000
 #: Most bucket pairs, summed over every band's buckets, the driver branch
 #: enumerates (about the pairs of one 2,000-representative bucket).
 _LOCAL_MAX_PAIRS = 2_000_000
@@ -626,7 +627,7 @@ def _near_dup_clusters_local(docs: DataFrame, text_col: str, id_col: str,
                              threshold: float, carry: dict[str, Column] | None,
                              num_hashes: int, bands: int, rows_per_band: int,
                              k: int) -> DataFrame | None:
-    """near_dup_clusters' ≤driver_local_threshold branch (uncapped path
+    """near_dup_clusters' ≤NEAR_DUP_DRIVER_MAX_DOCS branch (uncapped path
     only): the text-derived values (digest, signature, verify set, carry
     expressions) come from ONE engine scan — so string semantics are
     Spark's, bit-identical to the distributed path — and the pair/CC
@@ -841,12 +842,12 @@ def duplicate_spans(
 # --- semantic (embedding-space) dedup ----------------------------------------
 
 SEMDEDUP_FP = 10**9  # fixed-point scale for the pairwise dot/norm integers
+SEMDEDUP_DRIVER_MAX_ROWS = 10_000  # below this, semantic_dedup runs on the driver
 
 
 def semantic_dedup(embeddings: DataFrame, k: int = 4, iterations: int = 2,
                    tau: float = 0.3, id_col: str = "vec_id",
-                   vec_col: str = "embedding", dim: int = 64,
-                   driver_local_threshold: int = 10_000) -> DataFrame:
+                   vec_col: str = "embedding", dim: int = 64) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space, then
     drop documents whose cosine to a kept in-cluster neighbor exceeds
     `tau` — semantic near-duplicates that MinHash/SimHash (surface-form
@@ -895,7 +896,7 @@ def semantic_dedup(embeddings: DataFrame, k: int = 4, iterations: int = 2,
     # fits_driver respects SPARK_GRAFT_FORCE_DISTRIBUTED.
     from eve_graph_spark.operators.graph import fits_driver
 
-    if driver_local_threshold and fits_driver(emb, driver_local_threshold):
+    if fits_driver(emb, SEMDEDUP_DRIVER_MAX_ROWS):
         local = _semantic_dedup_local(emb, k, iterations, tau)
         if local is not None:  # declines on NaN/Inf vectors or NULL ids
             return local
@@ -970,7 +971,7 @@ def semantic_dedup(embeddings: DataFrame, k: int = 4, iterations: int = 2,
 
 def _semantic_dedup_local(emb: DataFrame, k: int, iterations: int,
                           tau: float) -> DataFrame | None:
-    """semantic_dedup's ≤driver_local_threshold branch: one collect, then
+    """semantic_dedup's ≤SEMDEDUP_DRIVER_MAX_ROWS branch: one collect, then
     numpy twins of every stage (see the call site for the parity
     argument). `emb` is the cleaned (id, vec) frame. Returns None to
     decline (NULL ids / non-finite vectors) — the caller then runs the

@@ -623,7 +623,6 @@ def sssp(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 200,
-    driver_threshold: int = DRIVER_SSSP_MAX_EDGES,
     target_id: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -646,13 +645,12 @@ def sssp(
     absent — when a target is supplied the result is a ROUTE table, not
     an all-nodes distance table.
 
-    Graphs with ≤ `driver_threshold` edges are solved on the driver by
-    `_dijkstra`, whose (dist, hops, pred) heap key reproduces the
-    distributed loop's choices; pass 0 to force that loop
-    (`_frontier_loop`). It relaxes the frontier per round, a join plus a
-    (dist, pred) min-aggregation, until no dist improves; with a target
-    it prunes frontier rows whose dist is ≥ the target's settled dist
-    and stops when none is left. On a 1000-layer graph with the target
+    Graphs with ≤ DRIVER_SSSP_MAX_EDGES edges are solved on the driver
+    by `_dijkstra`, whose (dist, hops, pred) heap key reproduces the
+    distributed loop's choices (`_frontier_loop`). That loop relaxes the
+    frontier per round, a join plus a (dist, pred) min-aggregation,
+    until no dist improves; with a target it prunes frontier rows whose
+    dist is ≥ the target's settled dist and stops when none is left. On a 1000-layer graph with the target
     at layer 10 that is ~11 supersteps instead of ~1000.
 
     If `stats_out` is a dict, the distributed loop records
@@ -663,7 +661,7 @@ def sssp(
     """
     spark = edges.sparkSession
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_SSSP_MAX_EDGES):
         rows = _dijkstra(_collect_adj(e), source_ids, target_id).entries()
         return local_frame(spark, rows, _SSSP_SCHEMA)
     run = _min_plus_loop(e, [], [(int(s),) for s in source_ids], max_iterations,
@@ -682,14 +680,13 @@ def sssp_route(
     weight_col: str = "weight",
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_threshold: int = DRIVER_SSSP_MAX_EDGES,
 ) -> tuple[DataFrame, list[int]]:
     """(full dist table, source→target node path) — the shared tail of the
     route queries (A1/A2): SSSP dist, dist-table-derived preds
     (pred(v) := MIN(src) over edges with dist(src) + w == dist(v) EXACTLY —
     the SQL-replayable tie-break, see safest_route_path), pred-chain walk.
 
-    Below `driver_threshold` edges one Arrow edge collect feeds
+    Below DRIVER_SSSP_MAX_EDGES edges one Arrow edge collect feeds
     `_dijkstra`, the preds rule AND the walk: no job per step on a
     reference-sized graph. Bit-identical by construction: Python float
     add/compare on the collected doubles are the same IEEE-754 ops the
@@ -698,7 +695,7 @@ def sssp_route(
     spark = edges.sparkSession
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
     source_id, target_id = int(source_id), int(target_id)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_SSSP_MAX_EDGES):
         adj = _collect_adj(e)
         tree = _dijkstra(adj, [source_id])
         dist, s = tree.dist, tree.index[source_id]
@@ -720,9 +717,7 @@ def sssp_route(
         rows = [(n, d) for n, d, _ in tree.entries()]
         return local_frame(spark, rows, "node long, dist double"), path
 
-    dist = sssp(
-        e, [source_id], weight_col="weight", driver_threshold=driver_threshold
-    ).select("node", "dist")
+    dist = sssp(e, [source_id], weight_col="weight").select("node", "dist")
     u = dist.select(F.col("node").alias("u_node"), F.col("dist").alias("u_dist"))
     preds = (
         dist.join(e, e.dst == dist.node)
@@ -748,7 +743,6 @@ def multi_source_sssp(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 200,
-    driver_threshold: int = DRIVER_SSSP_MAX_EDGES,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Per-source weighted shortest paths: (source, node, dist, pred),
@@ -781,11 +775,18 @@ def multi_source_sssp(
     # (source, source) state rows and emit every result row twice
     source_ids = list(dict.fromkeys(source_ids))
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_SSSP_MAX_EDGES):
         adj = _collect_adj(e)
         rows = [(int(s), *entry) for s in source_ids for entry in _dijkstra(adj, [s]).entries()]
         return local_frame(spark, rows, _MSSSP_SCHEMA)
 
+    return _multi_source_sssp_distributed(e, source_ids, max_iterations, stats_out)
+
+
+def _multi_source_sssp_distributed(e: DataFrame, source_ids: list[int], max_iterations: int,
+                                   stats_out: dict | None) -> DataFrame:
+    """multi_source_sssp's distributed branch over the `_weighted_edges`
+    frame `e` and a deduplicated source list."""
     run = _min_plus_loop(e, ["source"], [(int(s), int(s)) for s in source_ids],
                          max_iterations)
     if stats_out is not None:
@@ -914,7 +915,6 @@ def k_shortest_paths_distributed(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 200,
-    driver_threshold: int = DRIVER_SSSP_MAX_EDGES,
     stats_out: dict | None = None,
 ) -> list[tuple[float, list[int]]]:
     """Yen's k best loop-free routes with BATCHED spur sweeps — the
@@ -922,7 +922,7 @@ def k_shortest_paths_distributed(
     `gds.shortestPath.yens` parity, the step past database.rs:484-544's
     single Dijkstra).
 
-    Below `driver_threshold` it collects the edges and runs the driver
+    Below DRIVER_SSSP_MAX_EDGES edges it collects them and runs the driver
     twin (identical results; a reference-scale graph must not launch
     Spark jobs per route query). Above it, each Yen round runs ONE
     `_banned_multi_sweep` over all |prev_path| spur jobs instead of
@@ -941,7 +941,7 @@ def k_shortest_paths_distributed(
     if k < 1:
         return []
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_SSSP_MAX_EDGES):
         return k_shortest_paths_local(_collect_adj(e), int(source), int(target), k)
     e = e.persist()
     wcache: dict[tuple[int, int], float] = {}
@@ -1013,7 +1013,6 @@ def a_star(
     src_col: str = "src",
     dst_col: str = "dst",
     id_col: str = "system_id",
-    driver_threshold: int = DRIVER_SSSP_MAX_EDGES,
     stats_out: dict | None = None,
 ) -> tuple[float, list[int]] | None:
     """A* single-pair route over the stored x,y,z coordinates — the
@@ -1043,7 +1042,7 @@ def a_star(
     Driver-side over the collected edge list: a single-pair interactive
     route on a graph that fits the driver must not launch a job per
     expansion (the distributed answer to the same question is
-    sssp(target_id=...)). Raises above `driver_threshold`.
+    sssp(target_id=...)). Raises above DRIVER_SSSP_MAX_EDGES edges.
 
     Returns (total_cost, [node, ...]) or None when unreachable.
     `stats_out["expansions"]` counts expanded nodes — the quantity the
@@ -1051,7 +1050,7 @@ def a_star(
     below Dijkstra's on a coordinate-true grid).
     """
     e = _weighted_edges(edges, src_col, dst_col, weight_col)
-    if not fits_driver(e, driver_threshold, force_exempt=True):
+    if not fits_driver(e, DRIVER_SSSP_MAX_EDGES, force_exempt=True):
         raise ValueError(
             "a_star: graph exceeds the driver threshold; single-pair routes "
             "at that scale run sssp(target_id=...) with its distributed "
@@ -1086,8 +1085,7 @@ def collect_coords(coords: DataFrame,
 
 def dfs(edges: DataFrame, source: int,
         src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-        max_depth: int | None = None,
-        driver_threshold: int = DRIVER_SSSP_MAX_EDGES) -> DataFrame:
+        max_depth: int | None = None) -> DataFrame:
     """GDS `gds.dfs` counterpart: depth-first preorder from `source`,
     returned as (node, visit_order) with visit_order starting at 1.
 
@@ -1103,7 +1101,7 @@ def dfs(edges: DataFrame, source: int,
     on the entire visited set, so no superstep decomposition exists (GDS
     also computes it single-threaded on the in-memory projection). The
     kernel therefore runs on the driver for graphs within
-    `driver_threshold` edges and raises loudly beyond it, the same
+    DRIVER_SSSP_MAX_EDGES edges and raises loudly beyond it, the same
     budget-exhaustion convention as MST/k-truss — a silent distributed
     "DFS" would really be a BFS-ish frontier walk with different
     semantics. For reachability at scale use `connected_components`; for
@@ -1113,9 +1111,9 @@ def dfs(edges: DataFrame, source: int,
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    if not fits_driver(e, driver_threshold, force_exempt=True):
+    if not fits_driver(e, DRIVER_SSSP_MAX_EDGES, force_exempt=True):
         raise ValueError(
-            f"dfs: graph exceeds driver_threshold={driver_threshold} edges; "
+            f"dfs: graph exceeds DRIVER_SSSP_MAX_EDGES={DRIVER_SSSP_MAX_EDGES} edges; "
             "depth-first order is sequential and cannot be computed "
             "distributed — use connected_components / sssp for scale paths"
         )
@@ -1158,7 +1156,6 @@ def reconstruct_path(
     dist: DataFrame,
     target_id: int,
     max_hops: int = 10_000,
-    driver_threshold: int = DRIVER_PATH_MAX_NODES,
     stats_out: dict | None = None,
 ) -> list[int]:
     """Walk pred pointers target → source (GDS returning nodeIds,
@@ -1168,7 +1165,7 @@ def reconstruct_path(
     100× graph a full `.collect()` here is a driver OOM even though the
     answer is a handful of hops. Two modes, threshold-guarded like `sssp`:
 
-    - **driver mode** (≤ `driver_threshold` rows): collect the {node: pred}
+    - **driver mode** (≤ DRIVER_PATH_MAX_NODES rows): collect the {node: pred}
       map once and walk it locally — right for the reference-scale graph;
     - **distributed mode**: persist dist once, then walk backward hop by
       hop; each step is ONE row fetched via a pushed-down `node = cur`
@@ -1182,7 +1179,7 @@ def reconstruct_path(
     'iterative') and `rows_collected` — pinning that the distributed walk
     never collects the vertex-sized table.
     """
-    if fits_driver(dist, driver_threshold):
+    if fits_driver(dist, DRIVER_PATH_MAX_NODES):
         rows = dist.select("node", "pred").collect()
         if stats_out is not None:
             stats_out["mode"] = "driver"

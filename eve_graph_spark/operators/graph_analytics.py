@@ -38,6 +38,8 @@ from eve_graph_spark.frames import local_frame
 from eve_graph_spark.operators.graph import (
     FRONTIER_TRUNCATE_EVERY,
     _frontier_loop,
+    _multi_source_sssp_distributed,
+    _weighted_edges,
     fits_driver,
     multi_source_sssp,
 )
@@ -166,7 +168,6 @@ def _label_components(e: DataFrame, max_iterations: int,
 
 def connected_components(edges: DataFrame, src_col: str = "src_system_id",
                          dst_col: str = "dst_system_id",
-                         driver_threshold: int = DRIVER_MAX_EDGES,
                          max_iterations: int = 100,
                          algorithm: str = "auto",
                          stats_out: dict | None = None) -> DataFrame:
@@ -216,7 +217,7 @@ def connected_components(edges: DataFrame, src_col: str = "src_system_id",
             stats_out.pop(k, None)
     e = _edge_frame(edges, src_col, dst_col)
     spark = edges.sparkSession
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -427,17 +428,16 @@ def _rank_frame(spec: RankSpec, e: DataFrame, iterations: int, damping: float,
 
 
 def _rank(spec: RankSpec, edges: DataFrame, src_col: str, dst_col: str,
-          iterations: int, driver_threshold: int, damping: float = 0.0,
+          iterations: int, damping: float = 0.0,
           sources: list[int] | None = None) -> DataFrame:
     e = _edge_frame(edges, src_col, dst_col)
-    run = _rank_driver if fits_driver(e, driver_threshold) else _rank_frame
+    run = _rank_driver if fits_driver(e, DRIVER_MAX_EDGES) else _rank_frame
     return run(spec, e, iterations, damping, sources)
 
 
 def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
              src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-             sources: list[int] | None = None,
-             driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+             sources: list[int] | None = None) -> DataFrame:
     """Fixed-iteration PageRank, bit-reproducible: the `_PAGERANK` spec.
 
     rank0 = 1/n; rank'(v) = (1-d)/n + d * (Σ_u→v fp(rank(u)/deg(u)))/1e12
@@ -455,13 +455,11 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
     the periodic lineage truncations materialize. At scale each superstep
     is one shuffle keyed by dst.
     """
-    return _rank(_PAGERANK, edges, src_col, dst_col, iterations, driver_threshold,
-                 damping, sources)
+    return _rank(_PAGERANK, edges, src_col, dst_col, iterations, damping, sources)
 
 
 def article_rank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
-                 src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-                 driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                 src_col: str = "src_system_id", dst_col: str = "dst_system_id") -> DataFrame:
     """GDS `gds.articleRank` parity: the `_ARTICLE_RANK` spec, PageRank
     with each contribution divided by (deg(u) + avgDeg) instead of deg(u),
     so low-degree endorsements count more.
@@ -471,14 +469,12 @@ def article_rank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
     denominator is an exact integer — the fp'd contribution is the same
     one-division IEEE sequence in every engine, then summed exactly.
     """
-    return _rank(_ARTICLE_RANK, edges, src_col, dst_col, iterations, driver_threshold,
-                 damping)
+    return _rank(_ARTICLE_RANK, edges, src_col, dst_col, iterations, damping)
 
 
 def eigenvector_centrality(edges: DataFrame, iterations: int = 3,
                            src_col: str = "src_system_id",
-                           dst_col: str = "dst_system_id",
-                           driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                           dst_col: str = "dst_system_id") -> DataFrame:
     """GDS `gds.eigenvector` parity: the `_EIGENVECTOR` spec, a
     fixed-iteration power method.
 
@@ -489,26 +485,24 @@ def eigenvector_centrality(edges: DataFrame, iterations: int = 3,
     edges contribute with multiplicity, like GDS on a multi-graph
     projection.
     """
-    return _rank(_EIGENVECTOR, edges, src_col, dst_col, iterations, driver_threshold)
+    return _rank(_EIGENVECTOR, edges, src_col, dst_col, iterations)
 
 
 def hits(edges: DataFrame, iterations: int = 2,
-         src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-         driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+         src_col: str = "src_system_id", dst_col: str = "dst_system_id") -> DataFrame:
     """GDS `gds.hits` parity (Kleinberg HITS): the `_HITS` spec, two
     eigenvector half-steps per iteration with the edge direction flipped.
     auth'(v) = L2-normalized Σ_{u→v} fp(hub(u)); then
     hub'(u) = L2-normalized Σ_{u→v} fp(auth'(v)). hub0 = 1, auth0 = 0, so
     `iterations=0` returns hub 1.0 and authority 0.0 on both branches.
     """
-    return _rank(_HITS, edges, src_col, dst_col, iterations, driver_threshold)
+    return _rank(_HITS, edges, src_col, dst_col, iterations)
 
 
 # --- closeness centrality ---------------------------------------------------
 
 def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
                          dst_col: str = "dst_system_id",
-                         driver_threshold: int = DRIVER_MAX_EDGES,
                          landmarks: int | None = None,
                          exact: bool = False,
                          weight_col: str | None = None) -> DataFrame:
@@ -552,7 +546,7 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         # the bench's distributed arm turns fixture-sized queries into
         # errors — and over-threshold ones into silent all-pairs runs.
         if (landmarks is None and not exact
-                and not fits_driver(ew, driver_threshold, force_exempt=True)):
+                and not fits_driver(ew, DRIVER_MAX_EDGES, force_exempt=True)):
             raise ValueError(
                 "closeness_centrality: graph exceeds the driver threshold and no "
                 "landmarks were given — exact all-pairs closeness is O(V) pivots "
@@ -569,7 +563,6 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         pivot_ids = [r["node"] for r in sources.collect()]
         d = multi_source_sssp(
             ew, pivot_ids, weight_col="w", src_col="src", dst_col="dst",
-            driver_threshold=driver_threshold,
         ).select("node", "dist")
         fp = F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5)).cast("long")
         sum_fp = F.sum(fp)
@@ -582,7 +575,7 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
             .otherwise(F.lit(0.0))
             .alias("closeness")
         )
-    if landmarks is None and fits_driver(e, driver_threshold):
+    if landmarks is None and fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, list[int]] = {}
         nodes: set[int] = set()
         for r in e.collect():
@@ -610,7 +603,7 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
     # measurable twin; branch parity pinned by
     # test_closeness_distributed_matches_local)
     if (landmarks is None and not exact
-            and not fits_driver(e, driver_threshold, force_exempt=True)):
+            and not fits_driver(e, DRIVER_MAX_EDGES, force_exempt=True)):
         raise ValueError(
             "closeness_centrality: graph exceeds the driver threshold and no "
             "landmarks were given — exact all-pairs closeness is O(V) pivots "
@@ -631,7 +624,6 @@ def closeness_centrality(edges: DataFrame, src_col: str = "src_system_id",
     # in doubles, so the aggregate is order-independent.
     d = multi_source_sssp(
         ew, pivot_ids, weight_col="w", src_col="src", dst_col="dst",
-        driver_threshold=driver_threshold,
     ).select("node", "dist")
     return d.groupBy("node").agg(
         ((F.count(F.lit(1)) - 1).cast("double") / F.sum("dist")).alias("closeness")
@@ -644,7 +636,6 @@ def harmonic_centrality(edges: DataFrame, src_col: str = "src_system_id",
                         dst_col: str = "dst_system_id",
                         weight_col: str | None = None,
                         landmarks: list[int] | None = None,
-                        driver_threshold: int = DRIVER_MAX_EDGES,
                         stats_out: dict | None = None) -> DataFrame:
     """(node, harmonic, eccentricity) per SOURCE node: harmonic =
     Σ 1/d(node→v) over reachable v ≠ node (the disconnected-robust
@@ -665,13 +656,10 @@ def harmonic_centrality(edges: DataFrame, src_col: str = "src_system_id",
     per-landmark rows in that mode, full semantics per row.
     """
     if weight_col is None:
-        vs = bfs_sigma(edges, landmarks, src_col, dst_col,
-                       driver_threshold=driver_threshold,
-                       stats_out=stats_out)
+        vs = bfs_sigma(edges, landmarks, src_col, dst_col, stats_out=stats_out)
         ecc = F.max("dist").cast("long")
     else:
         vs = dijkstra_sigma(edges, landmarks, weight_col, src_col, dst_col,
-                            driver_threshold=driver_threshold,
                             stats_out=stats_out)
         ecc = F.max("dist")
     term = F.when(
@@ -713,7 +701,6 @@ def triangle_count(edges: DataFrame, src_col: str = "src_system_id",
 def strongly_connected_components(edges: DataFrame,
                                   src_col: str = "src_system_id",
                                   dst_col: str = "dst_system_id",
-                                  driver_threshold: int = DRIVER_MAX_EDGES,
                                   max_pivots: int = 10_000) -> DataFrame:
     """(node, scc) over a DIRECTED edge set, scc = min node id in the
     component (unlike connected_components, direction matters here).
@@ -731,7 +718,7 @@ def strongly_connected_components(edges: DataFrame,
     """
     e = _edge_frame(edges, src_col, dst_col).distinct()
     spark = e.sparkSession
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, list[int]] = {}
         nodes: set[int] = set()
         for r in e.collect():
@@ -934,7 +921,6 @@ def jaccard_link_prediction(edges: DataFrame, src_col: str = "src_system_id",
 
 def k_core(edges: DataFrame, k: int, src_col: str = "src_system_id",
            dst_col: str = "dst_system_id",
-           driver_threshold: int = DRIVER_MAX_EDGES,
            max_iterations: int = 100) -> DataFrame:
     """Nodes of the k-core: iteratively peel nodes with degree < k.
 
@@ -945,11 +931,11 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src_system_id",
     Distributed form: each round is one degree aggregation + one semi-join
     edge filter; rounds are O(peel depth), each a single shuffle keyed by
     src — the same budget as one superstep of the CC loop. Driver path
-    below `driver_threshold` edges is an exact bucket-queue peel.
+    below DRIVER_MAX_EDGES edges is an exact bucket-queue peel.
     """
     e = _edge_frame(edges, src_col, dst_col).distinct()
     spark = edges.sparkSession
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, set[int]] = {}
         for r in e.collect():
             adj.setdefault(r["src"], set()).add(r["dst"])
@@ -988,8 +974,7 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src_system_id",
 
 def label_propagation(edges: DataFrame, iterations: int = 5,
                       src_col: str = "src_system_id",
-                      dst_col: str = "dst_system_id",
-                      driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                      dst_col: str = "dst_system_id") -> DataFrame:
     """(node, community) via synchronous label propagation (LPA).
 
     Deterministic spec (so driver-local and distributed paths agree
@@ -1015,7 +1000,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
     e = _edge_frame(edges, src_col, dst_col)
     spark = edges.sparkSession
 
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         inbound: dict[int, list[int]] = {}
         nodes: set[int] = set()
         for r in e.collect():
@@ -1087,7 +1072,6 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
 def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
               src_col: str = "src_system_id", dst_col: str = "dst_system_id",
               max_iterations: int = 200,
-              driver_threshold: int = DRIVER_MAX_EDGES,
               stats_out: dict | None = None) -> DataFrame:
     """(source, node, dist, sigma): hop distance and shortest-path COUNT
     from each source — the forward pass of Brandes betweenness and the
@@ -1118,7 +1102,7 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
     e = _edge_frame(edges, src_col, dst_col)
     # source_ids=None has NO distributed twin (the loop needs explicit
     # seed rows) — its probe is exempt from the forced-distributed arm
-    if fits_driver(e, driver_threshold, force_exempt=source_ids is None):
+    if fits_driver(e, DRIVER_MAX_EDGES, force_exempt=source_ids is None):
         adj: dict[int, list[int]] = {}
         nodes: set[int] = set()
         for r in e.collect():
@@ -1157,10 +1141,17 @@ def bfs_sigma(edges: DataFrame, source_ids: list[int] | None,
             "bfs_sigma: source_ids=None (all nodes) above the driver "
             "threshold is O(V) sources with O(V^2) state — pass an explicit "
             "sampled source list (betweenness_centrality(sample_sources=k) "
-            "does) or raise driver_threshold knowingly."
+            "does) or raise the DRIVER_MAX_EDGES cutover knowingly."
         )
+    return _bfs_sigma_distributed(e, source_ids, max_iterations, stats_out)
+
+
+def _bfs_sigma_distributed(e: DataFrame, source_ids: list[int], max_iterations: int = 200,
+                           stats_out: dict | None = None) -> DataFrame:
+    """bfs_sigma's distributed branch over the (src, dst) edge frame `e`
+    and a deduplicated source list."""
     visited = local_frame(
-        spark, [(int(s), int(s), 0, 1.0) for s in source_ids],
+        e.sparkSession, [(int(s), int(s), 0, 1.0) for s in source_ids],
         "source long, node long, dist int, sigma double",
     )
     # a level-L frontier row sends sigma to each out-neighbour; only
@@ -1222,7 +1213,6 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
                    weight_col: str,
                    src_col: str = "src_system_id", dst_col: str = "dst_system_id",
                    max_iterations: int = 200,
-                   driver_threshold: int = DRIVER_MAX_EDGES,
                    stats_out: dict | None = None) -> DataFrame:
     """(source, node, dist, sigma, depth): WEIGHTED shortest-path distance,
     shortest-path COUNT, and shortest-path-DAG longest-path depth per
@@ -1257,7 +1247,7 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
     ew = _weighted_edge_frame(edges, src_col, dst_col, weight_col)
     out_schema = "source long, node long, dist double, sigma double, depth int"
     # see bfs_sigma: source_ids=None is driver-only, exempt from the arm
-    if fits_driver(ew, driver_threshold, force_exempt=source_ids is None):
+    if fits_driver(ew, DRIVER_MAX_EDGES, force_exempt=source_ids is None):
         adj: dict[int, list[tuple[int, float]]] = {}
         nodes: set[int] = set()
         for r in ew.collect():
@@ -1279,11 +1269,18 @@ def dijkstra_sigma(edges: DataFrame, source_ids: list[int] | None,
             "dijkstra_sigma: source_ids=None (all nodes) above the driver "
             "threshold is O(V) sources with O(V^2) state — pass an explicit "
             "sampled source list (betweenness_centrality(sample_sources=k, "
-            "weight_col=...) does) or raise driver_threshold knowingly."
+            "weight_col=...) does) or raise the DRIVER_MAX_EDGES cutover knowingly."
         )
-    d = multi_source_sssp(
-        ew, source_ids, weight_col="w", src_col="src", dst_col="dst",
-        max_iterations=max_iterations, driver_threshold=0, stats_out=stats_out,
+    return _dijkstra_sigma_distributed(ew, source_ids, max_iterations, stats_out)
+
+
+def _dijkstra_sigma_distributed(ew: DataFrame, source_ids: list[int],
+                                max_iterations: int = 200,
+                                stats_out: dict | None = None) -> DataFrame:
+    """dijkstra_sigma's distributed branch over the (src, dst, w) edge
+    frame `ew` and a deduplicated source list."""
+    d = _multi_source_sssp_distributed(
+        _weighted_edges(ew, "src", "dst", "w"), source_ids, max_iterations, stats_out,
     ).select("source", "node", "dist")
 
     # per-source shortest-path DAG: edge (u, v) is on a shortest path from
@@ -1432,8 +1429,7 @@ def _weighted_betweenness_distributed(ew: DataFrame, source_ids: list[int],
     increase depth), all processed in earlier rounds — so its delta is
     the aggregate of every partial contribution accumulated so far
     (unlike the unweighted pass, one level does NOT mean one row)."""
-    vs = dijkstra_sigma(ew, source_ids, weight_col="w", src_col="src", dst_col="dst",
-                        driver_threshold=0)
+    vs = _dijkstra_sigma_distributed(ew, source_ids)
     vs = vs.transform(truncate_lineage)
     du = vs.select("source", F.col("node").alias("src"), F.col("dist").alias("__du"))
     dv = vs.select("source", F.col("node").alias("dst"), F.col("dist").alias("__dv"))
@@ -1498,7 +1494,6 @@ def _weighted_betweenness_distributed(ew: DataFrame, source_ids: list[int],
 def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
                            dst_col: str = "dst_system_id",
                            sample_sources: int | None = None,
-                           driver_threshold: int = DRIVER_MAX_EDGES,
                            exact: bool = False,
                            weight_col: str | None = None) -> DataFrame:
     """(node, betweenness) over ordered (s, t) pairs — Brandes: forward
@@ -1549,7 +1544,7 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
     else:
         # see closeness_centrality: the guard judges the real size under
         # the forced-distributed bench arm too
-        if not exact and not fits_driver(e, driver_threshold, force_exempt=True):
+        if not exact and not fits_driver(e, DRIVER_MAX_EDGES, force_exempt=True):
             raise ValueError(
                 "betweenness_centrality: graph exceeds the driver threshold "
                 "and no sample_sources were given — exact betweenness is O(V) "
@@ -1560,13 +1555,13 @@ def betweenness_centrality(edges: DataFrame, src_col: str = "src_system_id",
         scale = 1.0
     if weight_col is not None:
         ew = _weighted_edge_frame(edges, src_col, dst_col, weight_col)
-        if fits_driver(ew, driver_threshold):
+        if fits_driver(ew, DRIVER_MAX_EDGES):
             return _weighted_brandes_local(ew, source_ids, scale)
         return _weighted_betweenness_distributed(ew, source_ids, scale, all_nodes)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         return _brandes_local(e, source_ids, scale)
 
-    vs = bfs_sigma(e, source_ids, src_col="src", dst_col="dst", driver_threshold=0)
+    vs = _bfs_sigma_distributed(e, source_ids)
     vs = vs.transform(truncate_lineage)
     max_dist = vs.agg(F.max("dist").alias("m")).collect()[0]["m"] or 0
 
@@ -1646,7 +1641,6 @@ def rw_score_sql(walk_id: str, step: int, dst: str) -> str:
 def random_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
                  nodes: DataFrame | None = None,
                  src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-                 driver_threshold: int = DRIVER_MAX_EDGES,
                  checkpoint_every: int = 4) -> DataFrame:
     """Deterministic random-walk corpus: (walk_id, step, node), one row per
     visited position — the sampling kernel under node2vec/DeepWalk-style
@@ -1680,7 +1674,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
             F.col(nodes.columns[0]).cast("long").alias("node")
         ).distinct()
 
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, list[int]] = {}
         for r in e.collect():
             adj.setdefault(r["src"], []).append(r["dst"])
@@ -1757,8 +1751,7 @@ def _exclusion_reach(e: DataFrame, seeds: DataFrame, key_cols: list[str],
 def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
                         dst_col: str = "dst_system_id",
                         candidates: DataFrame | None = None,
-                        max_iterations: int = 60,
-                        driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                        max_iterations: int = 60) -> DataFrame:
     """(node, reached, is_articulation) over a CONNECTED undirected graph
     (directed-symmetric edge list; symmetrized defensively here): node v is
     an articulation point (chokepoint system) iff removing it disconnects
@@ -1777,7 +1770,7 @@ def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
     e = _star_symmetrize(_edge_frame(edges, src_col, dst_col))
     spark = e.sparkSession
 
-    if fits_driver(e, driver_threshold) and candidates is None:
+    if fits_driver(e, DRIVER_MAX_EDGES) and candidates is None:
         adj: dict[int, set[int]] = {}
         for r in e.collect():
             adj.setdefault(r["src"], set()).add(r["dst"])
@@ -1828,8 +1821,7 @@ def articulation_points(edges: DataFrame, src_col: str = "src_system_id",
 
 
 def bridges(edges: DataFrame, src_col: str = "src_system_id",
-            dst_col: str = "dst_system_id", max_iterations: int = 60,
-            driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+            dst_col: str = "dst_system_id", max_iterations: int = 60) -> DataFrame:
     """(src, dst, reached, is_bridge) per undirected edge (src < dst) of a
     CONNECTED graph: the edge is a bridge (chokepoint gate) iff removing it
     disconnects the graph. Same exclusion-BFS design as articulation_points
@@ -1838,7 +1830,7 @@ def bridges(edges: DataFrame, src_col: str = "src_system_id",
     spanning-tree edges (non-tree edges are never bridges)."""
     e = _star_symmetrize(_edge_frame(edges, src_col, dst_col))
     spark = e.sparkSession
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, set[int]] = {}
         for r in e.collect():
             adj.setdefault(r["src"], set()).add(r["dst"])
@@ -1892,7 +1884,6 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
                    return_mult: int = 4, inout_mult: int = 2,
                    nodes: DataFrame | None = None,
                    src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-                   driver_threshold: int = DRIVER_MAX_EDGES,
                    checkpoint_every: int = 4) -> DataFrame:
     """Second-order biased walks (node2vec, Grover & Leskovec 2016):
     the next hop depends on the PREVIOUS node — candidates are penalized
@@ -1922,7 +1913,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
             F.col(nodes.columns[0]).cast("long").alias("node")
         ).distinct()
 
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, list[int]] = {}
         eset: set[tuple[int, int]] = set()
         for r in e.collect():
@@ -1999,8 +1990,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2, steps: int = 4,
 def set_exclusion_reach(edges: DataFrame, seeds: DataFrame, excluded: DataFrame,
                         src_col: str = "src_system_id",
                         dst_col: str = "dst_system_id",
-                        max_iterations: int = 60,
-                        driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                        max_iterations: int = 60) -> DataFrame:
     """(k, reachable): per scenario k, the size of the component containing
     seed(k) after removing the node SET excluded(k) — the percolation /
     robustness-curve kernel (articulation_points generalizes to "what if
@@ -2015,7 +2005,7 @@ def set_exclusion_reach(edges: DataFrame, seeds: DataFrame, excluded: DataFrame,
     excluded = excluded.select(F.col(excluded.columns[0]).cast("long").alias("k"),
                                F.col(excluded.columns[1]).cast("long").alias("node"))
 
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         adj: dict[int, set[int]] = {}
         for r in e.collect():
             adj.setdefault(r["src"], set()).add(r["dst"])
@@ -2041,12 +2031,15 @@ def set_exclusion_reach(edges: DataFrame, seeds: DataFrame, excluded: DataFrame,
             rows.append((k, len(seen)))
         return local_frame(spark, rows, "k long, reachable long")
 
+    # a seed inside its own scenario's excluded set reaches nothing
     reached = _exclusion_reach(
-        e, seeds, ["k"],
+        e, seeds.join(excluded, ["k", "node"], "left_anti"), ["k"],
         lambda c: c.join(excluded.withColumnRenamed("node", "dst"), ["k", "dst"], "left_anti"),
         max_iterations,
     )
-    return reached.groupBy("k").agg(F.count(F.lit(1)).alias("reachable"))
+    dead = seeds.join(excluded, ["k", "node"], "left_semi").select(
+        "k", F.lit(0).cast("long").alias("reachable"))
+    return reached.groupBy("k").agg(F.count(F.lit(1)).alias("reachable")).unionByName(dead)
 
 
 def diameter_estimate(
@@ -2055,7 +2048,6 @@ def diameter_estimate(
     weight_col: str | None = None,
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_threshold: int | None = None,
 ) -> DataFrame:
     """Double-sweep diameter lower bound (Magnien et al.), hop-distance by
     default, WEIGHTED when `weight_col` is given — GDS parity with weighted
@@ -2072,19 +2064,16 @@ def diameter_estimate(
     accumulation), so an unrolled Bellman-Ford oracle replays them
     bit-for-bit (same property safest_route_path relies on).
 
-    Below `driver_threshold` edges BOTH sweeps run
+    Below DRIVER_SSSP_MAX_EDGES edges BOTH sweeps run
     from ONE edge collect (`double_sweep_local`) — the prior composition
     collected the edge set twice (once per `sssp` call) and ran two more
     driver jobs for the peak/max scalars. Same relaxation kernel, same
-    tie-break, bit-identical outputs (pinned by branch-parity test); pass
-    0 to force the job-composed path.
+    tie-break, bit-identical outputs (pinned by branch-parity test).
     """
     from eve_graph_spark.operators.graph import (
         DRIVER_SSSP_MAX_EDGES, _collect_adj, double_sweep_local, sssp,
     )
 
-    if driver_threshold is None:
-        driver_threshold = DRIVER_SSSP_MAX_EDGES
     spark = edges.sparkSession
     e = edges if weight_col else edges.withColumn("__hop", F.lit(1.0))
     w = weight_col or "__hop"
@@ -2093,7 +2082,7 @@ def diameter_estimate(
         F.col(dst_col).cast("long").alias("dst"),
         F.col(w).cast("double").alias("weight"),
     )
-    if fits_driver(en, driver_threshold):
+    if fits_driver(en, DRIVER_SSSP_MAX_EDGES):
         peak_node, peak_dist, lb = double_sweep_local(_collect_adj(en), int(start))
         return local_frame(
             spark, [(int(start), peak_node, peak_dist, lb)],
@@ -2282,8 +2271,7 @@ def community_metrics(edges: DataFrame, labels: DataFrame,
                       src_col: str = "src_system_id",
                       dst_col: str = "dst_system_id",
                       node_col: str = "node", label_col: str = "community",
-                      scale: int = 1_000_000,
-                      driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                      scale: int = 1_000_000) -> DataFrame:
     """GDS `gds.conductance` + `gds.modularity` parity: per-community cut
     quality for a given node→community assignment (e.g. label_propagation
     output), on the directed edge set.
@@ -2303,7 +2291,7 @@ def community_metrics(edges: DataFrame, labels: DataFrame,
     two exchanges, per-src and per-dst, over the same tagged join: each
     tagged edge emits its 1–2 community contributions map-side and a
     single groupBy sums them); no node-pair blowup anywhere. Below
-    `driver_threshold` edges the whole kernel runs
+    DRIVER_MAX_EDGES edges the whole kernel runs
     driver-local from one edge + one label collect — the same integer
     counters and the identical single double division per metric, so the
     branches agree bit-for-bit (pinned by test). Assumes `labels` is an
@@ -2316,7 +2304,7 @@ def community_metrics(edges: DataFrame, labels: DataFrame,
     )
     spark = edges.sparkSession
 
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         import math
         from collections import defaultdict
 
@@ -2500,8 +2488,7 @@ def _mst_local(und_rows: list, spark) -> DataFrame:
 def minimum_spanning_forest(edges: DataFrame, weight_col: str = "risk",
                             src_col: str = "src_system_id",
                             dst_col: str = "dst_system_id",
-                            max_rounds: int = 16,
-                            driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                            max_rounds: int = 16) -> DataFrame:
     """GDS `gds.spanningTree` parity, distributed: Borůvka's algorithm on
     the undirected projection. Returns the forest's canonical edges
     (src<dst, weight_fp) — on a connected graph, the unique MST under the
@@ -2526,7 +2513,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "risk",
         F.col(weight_col).cast("double").alias("w"),
     )
     und = _mst_canon(e)
-    if fits_driver(und, driver_threshold):
+    if fits_driver(und, DRIVER_MAX_EDGES):
         return _mst_local(und.collect(), edges.sparkSession)
 
     labels = (
@@ -2641,8 +2628,7 @@ def _dag_local(e_rows: list, max_iterations: int, spark) -> DataFrame:
 def dag_longest_paths(edges: DataFrame, weight_col: str | None = None,
                       src_col: str = "src_system_id",
                       dst_col: str = "dst_system_id",
-                      max_iterations: int = 64,
-                      driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                      max_iterations: int = 64) -> DataFrame:
     """GDS `gds.dag.topologicalSort(computeMaxDistanceFromSource)` +
     `gds.dag.longestPath` parity: per node, the longest incoming path in
     hops (`topo_level` — a valid topological ordering key and the node's
@@ -2669,7 +2655,7 @@ def dag_longest_paths(edges: DataFrame, weight_col: str | None = None,
         F.col(dst_col).cast("long").alias("b"),
         wexpr.alias("wfp"),
     )
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         return _dag_local(e.collect(), max_iterations, edges.sparkSession)
 
     nodes = e.select(F.col("a").alias("node")).union(
@@ -2762,8 +2748,7 @@ def _k_truss_local(und_rows: list, k: int, spark) -> DataFrame:
 
 def k_truss(edges: DataFrame, k: int = 3,
             src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-            max_rounds: int = 16,
-            driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+            max_rounds: int = 16) -> DataFrame:
     """GDS `gds.ktruss` parity: the maximal subgraph where every edge sits
     in ≥ k−2 triangles OF THAT SUBGRAPH. Returns the surviving canonical
     edges (src<dst) with their final in-truss support. k must be ≥ 3
@@ -2779,7 +2764,7 @@ def k_truss(edges: DataFrame, k: int = 3,
         raise ValueError("k_truss requires k >= 3 (k=2 keeps every edge)")
     e = _edge_frame(edges, src_col, dst_col)
     und = _truss_canon(e)
-    if fits_driver(und, driver_threshold):
+    if fits_driver(und, DRIVER_MAX_EDGES):
         return _k_truss_local(und.collect(), k, edges.sparkSession)
     cur = und.transform(truncate_lineage)
     n_prev = cur.count()
@@ -2972,8 +2957,7 @@ def louvain(edges: DataFrame, rounds: int = 4,
             weight_col: str | None = None,
             pre_scaled_weights: bool = False,
             gamma: float = 1.0,
-            stats_out: dict | None = None,
-            driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+            stats_out: dict | None = None) -> DataFrame:
     """GDS `gds.louvain` (maxLevels=1) parity: modularity-optimizing local
     moves on the undirected projection, made deterministic and
     oracle-replayable:
@@ -3043,7 +3027,7 @@ def louvain(edges: DataFrame, rounds: int = 4,
     # collapse groupBys — the collapse itself runs in _collapse_local,
     # which is bit-identical to the und/sl frames below (the
     # leiden/multilevel fixture wall was Spark job count).
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         und_l, sl_l = _collapse_local(
             (r["src"], r["dst"], r["wfp"]) for r in e.collect()
         )
@@ -3192,8 +3176,7 @@ def community_aggregate(edges: DataFrame, labels: DataFrame,
                         weight_col: str | None = None,
                         src_col: str = "src_system_id",
                         dst_col: str = "dst_system_id",
-                        pre_scaled_weights: bool = False,
-                        driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                        pre_scaled_weights: bool = False) -> DataFrame:
     """Louvain phase-2 graph aggregation: one super-node per community,
     super-edge weight = Σ of the collapsed undirected edge weights between
     the two communities; intra-community mass lands on the diagonal as a
@@ -3220,7 +3203,7 @@ def community_aggregate(edges: DataFrame, labels: DataFrame,
         F.col(dst_col).cast("long").alias("dst"),
         wexpr.alias("wfp"),
     )
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         und_l, sl_l = _collapse_local(
             (r["src"], r["dst"], r["wfp"]) for r in e.collect()
         )
@@ -3315,8 +3298,7 @@ def louvain_multilevel(edges: DataFrame, levels: int = 2, rounds: int = 4,
                        dst_col: str = "dst_system_id",
                        weight_col: str | None = None,
                        gamma: float = 1.0,
-                       stats_out: dict | None = None,
-                       driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                       stats_out: dict | None = None) -> DataFrame:
     """GDS `gds.louvain` with maxLevels > 1: alternate local-move phases
     (the deterministic synchronous `louvain`) with graph AGGREGATION
     (`community_aggregate`) — after each level every community becomes one
@@ -3335,7 +3317,7 @@ def louvain_multilevel(edges: DataFrame, levels: int = 2, rounds: int = 4,
     no-op pass over an already-tiny graph."""
     gnum, gden = _gamma_rational(gamma)
     e = _louvain_wfp_frame(edges, src_col, dst_col, weight_col)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         return _multilevel_local(
             [(r["src"], r["dst"], r["wfp"]) for r in e.collect()],
             levels, rounds, refine=False, spark=edges.sparkSession,
@@ -3344,8 +3326,7 @@ def louvain_multilevel(edges: DataFrame, levels: int = 2, rounds: int = 4,
     per_level: list[dict] = [] if stats_out is not None else None
     lv = {} if stats_out is not None else None
     mapping = louvain(edges, rounds=rounds, src_col=src_col, dst_col=dst_col,
-                      weight_col=weight_col, gamma=gamma, stats_out=lv,
-                      driver_threshold=driver_threshold)
+                      weight_col=weight_col, gamma=gamma, stats_out=lv)
     if stats_out is not None:
         per_level.append(lv)
     for _ in range(1, levels):
@@ -3355,14 +3336,12 @@ def louvain_multilevel(edges: DataFrame, levels: int = 2, rounds: int = 4,
         # unmaterialized aggregate plan would re-execute the collapse +
         # label joins each time (measured: minutes on a 25-node fixture)
         agg = community_aggregate(edges, mapping, weight_col=weight_col,
-                                  src_col=src_col, dst_col=dst_col,
-                                  driver_threshold=driver_threshold
+                                  src_col=src_col, dst_col=dst_col
                                   ).transform(truncate_lineage)
         lv = {} if stats_out is not None else None
         up = louvain(agg, rounds=rounds, src_col="src", dst_col="dst",
                      weight_col="wfp", pre_scaled_weights=True,
-                     gamma=gamma, stats_out=lv,
-                     driver_threshold=driver_threshold)
+                     gamma=gamma, stats_out=lv)
         if stats_out is not None:
             per_level.append(lv)
         mapping = mapping.join(
@@ -3379,8 +3358,7 @@ def louvain_multilevel(edges: DataFrame, levels: int = 2, rounds: int = 4,
 
 def refine_communities(edges: DataFrame, labels: DataFrame,
                        src_col: str = "src_system_id",
-                       dst_col: str = "dst_system_id",
-                       driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                       dst_col: str = "dst_system_id") -> DataFrame:
     """Leiden refinement phase (Traag, Waltman & van Eck 2019, the step
     that fixes Louvain's documented flaw): split every community that is
     not INTERNALLY CONNECTED into its connected pieces. Local moves can
@@ -3401,7 +3379,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         pairs = {
             (r["src"], r["dst"]) if r["src"] < r["dst"] else (r["dst"], r["src"])
             for r in e.collect() if r["src"] != r["dst"]
@@ -3426,8 +3404,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
     intra_sym = intra.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         intra.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    cc = connected_components(intra_sym, src_col="src", dst_col="dst",
-                              driver_threshold=driver_threshold)
+    cc = connected_components(intra_sym, src_col="src", dst_col="dst")
     singles = labels.join(
         cc.select(F.col("node").alias("n2")), labels.node == F.col("n2"), "left_anti"
     ).select("node", F.col("node").alias("community"))
@@ -3440,8 +3417,7 @@ def leiden(edges: DataFrame, levels: int = 2, rounds: int = 4,
            src_col: str = "src_system_id", dst_col: str = "dst_system_id",
            weight_col: str | None = None,
            gamma: float = 1.0,
-           stats_out: dict | None = None,
-           driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+           stats_out: dict | None = None) -> DataFrame:
     """GDS `gds.leiden` counterpart, deterministic: per level, synchronous
     modularity local moves (`louvain`) → REFINEMENT (`refine_communities`
     — split internally-disconnected communities, the Leiden guarantee) →
@@ -3460,7 +3436,7 @@ def leiden(edges: DataFrame, levels: int = 2, rounds: int = 4,
     """
     gnum, gden = _gamma_rational(gamma)
     e = _louvain_wfp_frame(edges, src_col, dst_col, weight_col)
-    if fits_driver(e, driver_threshold):
+    if fits_driver(e, DRIVER_MAX_EDGES):
         return _multilevel_local(
             [(r["src"], r["dst"], r["wfp"]) for r in e.collect()],
             levels, rounds, refine=True, spark=edges.sparkSession,
@@ -3469,13 +3445,11 @@ def leiden(edges: DataFrame, levels: int = 2, rounds: int = 4,
     per_level: list[dict] = [] if stats_out is not None else None
     lv = {} if stats_out is not None else None
     labels = louvain(edges, rounds=rounds, src_col=src_col, dst_col=dst_col,
-                     weight_col=weight_col, gamma=gamma, stats_out=lv,
-                     driver_threshold=driver_threshold)
+                     weight_col=weight_col, gamma=gamma, stats_out=lv)
     if stats_out is not None:
         per_level.append(lv)
     mapping = refine_communities(edges, labels, src_col=src_col,
-                                 dst_col=dst_col,
-                                 driver_threshold=driver_threshold)
+                                 dst_col=dst_col)
     for _ in range(1, levels):
         mapping = mapping.transform(truncate_lineage)
         # materialize the super-graph once per level: the distributed
@@ -3483,18 +3457,15 @@ def leiden(edges: DataFrame, levels: int = 2, rounds: int = 4,
         # unmaterialized aggregate plan would re-execute the collapse +
         # label joins each time (measured: minutes on a 25-node fixture)
         agg = community_aggregate(edges, mapping, weight_col=weight_col,
-                                  src_col=src_col, dst_col=dst_col,
-                                  driver_threshold=driver_threshold
+                                  src_col=src_col, dst_col=dst_col
                                   ).transform(truncate_lineage)
         lv = {} if stats_out is not None else None
         up = louvain(agg, rounds=rounds, src_col="src", dst_col="dst",
                      weight_col="wfp", pre_scaled_weights=True,
-                     gamma=gamma, stats_out=lv,
-                     driver_threshold=driver_threshold)
+                     gamma=gamma, stats_out=lv)
         if stats_out is not None:
             per_level.append(lv)
-        up = refine_communities(agg, up, src_col="src", dst_col="dst",
-                                driver_threshold=driver_threshold)
+        up = refine_communities(agg, up, src_col="src", dst_col="dst")
         mapping = mapping.join(
             up.select(F.col("node").alias("community"),
                       F.col("community").alias("next_c")),
@@ -3562,8 +3533,7 @@ def _fastrp_local(adj_rows: list, dim: int, iterations: int, spark) -> DataFrame
 
 def fastrp_embeddings(edges: DataFrame, dim: int = FASTRP_DIM, iterations: int = 2,
                       src_col: str = "src_system_id",
-                      dst_col: str = "dst_system_id",
-                      driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                      dst_col: str = "dst_system_id") -> DataFrame:
     """GDS `gds.fastRP` parity (Chen et al., "Fast and Accurate Network
     Embeddings via Very Sparse Random Projection"), made deterministic and
     oracle-replayable:
@@ -3592,7 +3562,7 @@ def fastrp_embeddings(edges: DataFrame, dim: int = FASTRP_DIM, iterations: int =
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    if fits_driver(adj, driver_threshold):
+    if fits_driver(adj, DRIVER_MAX_EDGES):
         return _fastrp_local(adj.collect(), dim, iterations, edges.sparkSession)
 
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
@@ -3702,8 +3672,7 @@ def _k1_local(adj_rows: list, max_rounds: int, spark) -> DataFrame:
 
 
 def k1_coloring(edges: DataFrame, max_rounds: int = 12,
-                src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-                driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+                src_col: str = "src_system_id", dst_col: str = "dst_system_id") -> DataFrame:
     """GDS `gds.beta.k1coloring` parity: a proper vertex coloring (no edge
     joins two same-colored nodes) via deterministic Jones–Plassmann —
     a node colors itself in the round where it holds the highest priority
@@ -3733,7 +3702,7 @@ def k1_coloring(edges: DataFrame, max_rounds: int = 12,
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    if fits_driver(adj, driver_threshold):
+    if fits_driver(adj, DRIVER_MAX_EDGES):
         return _k1_local(adj.collect(), max_rounds, edges.sparkSession)
 
     prio_expr = F.conv(
@@ -3829,8 +3798,7 @@ def _sllpa_local(adj_rows: list, rounds: int, min_count: int, spark) -> DataFram
 
 def sllpa(edges: DataFrame, rounds: int = 5, min_count: int = 2,
           src_col: str = "src_system_id", dst_col: str = "dst_system_id",
-          weight_col: str | None = None,
-          driver_threshold: int = DRIVER_MAX_EDGES) -> DataFrame:
+          weight_col: str | None = None) -> DataFrame:
     """GDS `gds.sllpa` parity (speaker-listener label propagation, Xie et
     al. — OVERLAPPING community detection): each round every node SPEAKS
     its most-frequent memory label (ties → min) and LISTENS to the most
@@ -3874,7 +3842,7 @@ def sllpa(edges: DataFrame, rounds: int = 5, min_count: int = 2,
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v"), "wfp").unionByName(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"), "wfp")
     )
-    if fits_driver(adj, driver_threshold):
+    if fits_driver(adj, DRIVER_MAX_EDGES):
         return _sllpa_local(adj.collect(), rounds, min_count, edges.sparkSession)
 
     from pyspark.sql import Window

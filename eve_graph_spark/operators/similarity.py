@@ -20,6 +20,7 @@ from eve_graph_spark.checkpointing import truncate_lineage
 from eve_graph_spark.frames import local_frame
 
 FIXED_POINT_SCALE = 1_000_000_000  # products are in [-1,1]·dim → fits long
+IVF_DRIVER_MAX_ROWS = 200_000  # below this, ivf_topk runs on the driver
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -336,7 +337,6 @@ def ivf_topk(
     lloyd_iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    driver_local_threshold: int = 200_000,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantizer → probe the
     query's `n_probe` nearest cells → exact cosine re-rank inside them.
@@ -356,16 +356,15 @@ def ivf_topk(
     break toward the lowest cell id (strict > in the fold keeps the first
     maximum).
 
-    Like SSSP/PageRank, a corpus under `driver_local_threshold` rows takes
+    Like SSSP/PageRank, a corpus under IVF_DRIVER_MAX_ROWS rows takes
     a driver-local numpy fast path (the training loop is inherently
     iterative; a sub-MB corpus shouldn't pay one Spark job per Lloyd
     pass). The distributed path is the same algorithm and is parity-pinned
-    by tests; pass driver_local_threshold=0 to force it.
+    by tests.
     """
-    from eve_graph_spark.operators.graph import force_distributed
+    from eve_graph_spark.operators.graph import fits_driver
 
-    if (driver_local_threshold and not force_distributed()
-            and embeddings.count() <= driver_local_threshold):
+    if fits_driver(embeddings, IVF_DRIVER_MAX_ROWS):
         return _ivf_topk_local(
             embeddings, query_ids, k, n_centroids, n_probe, lloyd_iterations,
             id_col, vec_col,
@@ -486,9 +485,8 @@ def ivf_pq_index(
     train_sample: int = 200_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode_driver_local: bool | None = None,
 ) -> tuple[DataFrame, dict]:
-    """IVF-PQ index build (r6 verdict item 8, the standard FAISS split):
+    """IVF-PQ index build (the standard FAISS split):
     a coarse k-means quantizer assigns each vector to a cell, and a
     PRODUCT QUANTIZER compresses it to `m_subspaces` byte-sized codes —
     per subspace, the nearest entry of a small L2-trained codebook.
@@ -556,8 +554,8 @@ def ivf_pq_index(
         "d": d,
     }
 
-    # r13 (guide §1.2/§5): when the training collect already covered the
-    # WHOLE corpus (len(rows) < train_sample ⇒ the orderBy/limit returned
+    # When the training collect already covered the WHOLE corpus
+    # (len(rows) < train_sample ⇒ the orderBy/limit returned
     # everything), encoding it distributed just replays the collected data
     # through ~1 s of interpreted higher-order-function folds plus a
     # checkpoint job — encode driver-side instead. Bit-parity with the
@@ -571,16 +569,15 @@ def ivf_pq_index(
     # scale the corpus is only ever touched by that narrow map.
     # NaN guard: SQL ordering ranks NaN largest, numpy comparisons drop it —
     # any NaN in the corpus keeps the distributed encode authoritative.
-    # `encode_driver_local` overrides the auto condition for parity tests.
+    # SPARK_GRAFT_FORCE_DISTRIBUTED keeps it too (the parity tests' switch).
     from eve_graph_spark.operators.graph import force_distributed
 
-    auto_local = (
+    if (
         len(rows) < train_sample
         and not force_distributed()
         and not any(r[vec_col] is None for r in rows)
         and not np.isnan(V).any()
-    )
-    if encode_driver_local if encode_driver_local is not None else auto_local:
+    ):
         ucents_np = _unit_rows_np(np.array(model["cents"]))  # ascending cell order
         cell_arr = np.array(model["cell_ids"], dtype=np.int64)
         prod = V[:, None, :] * ucents_np[None, :, :]
@@ -603,9 +600,9 @@ def ivf_pq_index(
         # the training collect covered the WHOLE corpus here — expose it
         # (and the driver-encoded index rows) so ivf_pq_topk can derive
         # its query vectors AND run the whole ADC+rerank driver-side
-        # instead of scan-and-collect + shuffle jobs (r13/r14, guide
-        # §1.2/§5.3). Private keys, not part of the persisted-model
-        # contract (sinks strips "_"-prefixed keys).
+        # instead of scan-and-collect + shuffle jobs. Private keys, not
+        # part of the persisted-model contract (sinks strips "_"-prefixed
+        # keys).
         model["_corpus_rows"] = rows
         model["_index_rows"] = enc
         # identity token: ivf_pq_topk's driver-local ADC uses _index_rows

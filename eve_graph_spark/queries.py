@@ -6669,38 +6669,18 @@ def graph_diameter_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Double-sweep diameter lower bound (Magnien et al.): BFS from a fixed
     # start, re-BFS from the farthest node (ties to min id) — exact on
     # trees, near-exact in practice, TWO O(diameter) frontier loops instead
-    # of |V| sweeps. The composition scalars (peak node, two maxima) are
-    # O(1) driver values; the sweeps themselves are the engine's sssp.
+    # of |V| sweeps (graph_analytics.diameter_estimate, hop form; its hop
+    # distances come back as doubles and are cast to the oracle's longs).
     # Runs on the chokepoint subgraph: the full fixture's hub ring keeps
-    # its diameter at a signal-free 3. r13 (guide §5.3): both sweeps from
-    # ONE edge collect below the driver threshold (double_sweep_local —
-    # the sssp composition collected the same edge set twice and ran two
-    # extra scalar jobs); the distributed composition is unchanged above.
-    from eve_graph_spark.operators.graph import (
-        DRIVER_SSSP_MAX_EDGES, _collect_adj, double_sweep_local, fits_driver, sssp,
-    )
+    # its diameter at a signal-free 3.
+    from eve_graph_spark.operators.graph_analytics import diameter_estimate
     from eve_graph_spark.sources.graph_fixture import build_choke_edges
 
-    choke = build_choke_edges(spark, sf_dir).withColumn("cost", F.lit(1).cast("long"))
-    en = choke.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("cost").cast("double").alias("weight"),
-    )
-    if fits_driver(en, DRIVER_SSSP_MAX_EDGES):
-        peak_node, peak_dist, lb = double_sweep_local(_collect_adj(en), 0)
-    else:
-        d1 = sssp(choke, [0], weight_col="cost", src_col="src", dst_col="dst")
-        peak = (
-            d1.orderBy(F.desc("dist"), F.asc("node")).limit(1).collect()[0]
-        )
-        d2 = sssp(choke, [int(peak["node"])], weight_col="cost",
-                  src_col="src", dst_col="dst")
-        peak_node, peak_dist = int(peak["node"]), float(peak["dist"])
-        lb = d2.agg(F.max("dist").alias("m")).collect()[0]["m"]
-    return local_frame(
-        spark, [(0, int(peak_node), int(peak_dist), int(lb))],
-        "sweep_start long, sweep_peak long, ecc_start long, diameter_lb long",
+    choke = build_choke_edges(spark, sf_dir)
+    return diameter_estimate(choke, start=0, src_col="src", dst_col="dst").select(
+        "sweep_start", "sweep_peak",
+        F.col("ecc_start").cast("long").alias("ecc_start"),
+        F.col("diameter_lb").cast("long").alias("diameter_lb"),
     )
 
 

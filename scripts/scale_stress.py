@@ -22,11 +22,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 import urllib.request
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -38,6 +40,21 @@ from eve_graph_spark import queries as registry  # noqa: E402
 from eve_graph_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
 SRC_DIR = "/root/testdata/sf0.1"
+
+
+@contextmanager
+def forced_distributed():
+    """SPARK_GRAFT_FORCE_DISTRIBUTED=1 for the block: every operator
+    cutover (nested calls included) takes its distributed branch."""
+    old = os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED")
+    os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"] = "1"
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"]
+        else:
+            os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"] = old
 
 # Generous wall-time ceilings (sec) on local[32]: an order of magnitude
 # above the healthy runtime, tight enough to flag a plan regressing to a
@@ -143,8 +160,9 @@ def graph_stress(spark: SparkSession, layers: int, width: int, budget: int) -> i
     )
     stats: dict = {}
     t0 = time.time()
-    out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-               driver_threshold=0, max_iterations=layers + 10, stats_out=stats)
+    with forced_distributed():
+        out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
+                   max_iterations=layers + 10, stats_out=stats)
     agg = out.groupBy((F.floor(F.col("node") / width)).alias("layer")).agg(
         F.count(F.lit(1)).alias("n"),
         F.min("dist").alias("dmin"),
@@ -225,8 +243,9 @@ def reliable_ckpt_stress(spark: SparkSession, layers: int, width: int,
 
     def run():
         t0 = time.time()
-        out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-                   driver_threshold=0, max_iterations=layers + 10)
+        with forced_distributed():
+            out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
+                       max_iterations=layers + 10)
         rows = sorted(map(tuple, out.collect()))
         return rows, time.time() - t0
 
@@ -349,7 +368,7 @@ def mst_stress(spark: SparkSession, n_nodes: int, extra_per_node: int,
                budget: int) -> int:
     """Borůvka MST at stress scale (VERDICT r9 item 3): the round-9
     distributed kernels were smoke-tested at 60k-200k edges; this runs
-    `minimum_spanning_forest`'s distributed path (driver_threshold=0) on a
+    `minimum_spanning_forest`'s distributed path (forced) on a
     ~2.4M-edge hash-random graph — past the 2M driver threshold, i.e. the
     regime where production would actually take this path — and asserts
     BIT-PARITY against the driver-local Kruskal twin plus the exact forest
@@ -363,6 +382,7 @@ def mst_stress(spark: SparkSession, n_nodes: int, extra_per_node: int,
     weights on a path) — and both paths read the SAME materialized edge
     frame, so parity is a pure algorithm check.
     """
+    from eve_graph_spark.operators import graph_analytics
     from eve_graph_spark.operators.graph_analytics import minimum_spanning_forest
 
     ring = spark.range(n_nodes).select(
@@ -391,9 +411,10 @@ def mst_stress(spark: SparkSession, n_nodes: int, extra_per_node: int,
     errs: list[str] = []
     before = set(completed_stage_metrics(spark))
     t0 = time.time()
-    dist_forest = minimum_spanning_forest(
-        edges, src_col="src", dst_col="dst", driver_threshold=0
-    ).localCheckpoint(eager=True)
+    with forced_distributed():
+        dist_forest = minimum_spanning_forest(
+            edges, src_col="src", dst_col="dst"
+        ).localCheckpoint(eager=True)
     n_forest = dist_forest.count()
     took = round(time.time() - t0, 1)
     stages = completed_stage_metrics(spark)
@@ -408,9 +429,13 @@ def mst_stress(spark: SparkSession, n_nodes: int, extra_per_node: int,
         errs.append(f"wall {took}s over budget {budget}s")
 
     t0 = time.time()
-    local_forest = minimum_spanning_forest(
-        edges, src_col="src", dst_col="dst", driver_threshold=10**8
-    )
+    # the driver-local twin: raise the cutover past the stress graph
+    cutover = graph_analytics.DRIVER_MAX_EDGES
+    graph_analytics.DRIVER_MAX_EDGES = 10**8
+    try:
+        local_forest = minimum_spanning_forest(edges, src_col="src", dst_col="dst")
+    finally:
+        graph_analytics.DRIVER_MAX_EDGES = cutover
     local_sec = round(time.time() - t0, 1)
     diff = (
         dist_forest.exceptAll(local_forest).count()
@@ -435,7 +460,7 @@ def louvain_stress(spark: SparkSession, n_cliques: int, clique_size: int,
                    budget: int) -> int:
     """Louvain at stress scale (VERDICT r9 item 3): a planted
     ring-of-cliques at ~2M edges, run through the distributed path
-    (driver_threshold=0), asserting planted-community recovery — the
+    (forced), asserting planted-community recovery — the
     label-quality check the 60k-edge smoke can't make interesting.
 
     Planted structure: `n_cliques` cliques of `clique_size` nodes
@@ -472,8 +497,9 @@ def louvain_stress(spark: SparkSession, n_cliques: int, clique_size: int,
     errs: list[str] = []
     before = set(completed_stage_metrics(spark))
     t0 = time.time()
-    out = louvain(edges, rounds=5, src_col="src", dst_col="dst",
-                  driver_threshold=0).localCheckpoint(eager=True)
+    with forced_distributed():
+        out = louvain(edges, rounds=5, src_col="src",
+                      dst_col="dst").localCheckpoint(eager=True)
     took = round(time.time() - t0, 1)
     stages = completed_stage_metrics(spark)
     shuffle_rows = sum(
@@ -548,10 +574,11 @@ def multi_source_stress(spark: SparkSession, layers: int, width: int, k: int,
     sources = [l * width for l in source_layers]
     stats: dict = {}
     t0 = time.time()
-    out = multi_source_sssp(
-        e, sources, weight_col="w", src_col="src", dst_col="dst",
-        driver_threshold=0, max_iterations=layers + 10, stats_out=stats,
-    )
+    with forced_distributed():
+        out = multi_source_sssp(
+            e, sources, weight_col="w", src_col="src", dst_col="dst",
+            max_iterations=layers + 10, stats_out=stats,
+        )
     agg = out.groupBy(
         (F.floor(F.col("source") / width)).alias("src_layer"),
         (F.floor(F.col("node") / width)).alias("layer"),

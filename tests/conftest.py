@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -12,6 +13,17 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def forced_distributed():
+    """Run the block in the forced-distributed arm: with
+    SPARK_GRAFT_FORCE_DISTRIBUTED=1 every `fits_driver` cutover that is
+    not force-exempt answers "doesn't fit", nested calls included.
+    Branch-parity tests build their distributed side inside it."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+        yield
 
 
 def pytest_ignore_collect(collection_path, config):

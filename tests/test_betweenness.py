@@ -9,8 +9,10 @@ star asks for (same family as pagerank/closeness, graph_analytics.py).
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
+from eve_graph_spark.operators import graph_analytics
 from eve_graph_spark.operators.graph_analytics import betweenness_centrality, bfs_sigma
 
 
@@ -69,7 +71,8 @@ def test_bfs_sigma_driver_vs_distributed_bit_identical(spark):
         (r["source"], r["node"]): (r["dist"], r["sigma"]) for r in df.collect()
     }
     local = key(bfs_sigma(e, sources, src_col="src", dst_col="dst"))
-    dist = key(bfs_sigma(e, sources, src_col="src", dst_col="dst", driver_threshold=0))
+    with forced_distributed():
+        dist = key(bfs_sigma(e, sources, src_col="src", dst_col="dst"))
     assert dist == local  # ints throughout: exact, not approx
 
 
@@ -78,10 +81,8 @@ def test_betweenness_driver_vs_distributed(spark):
     # dependency ratios are non-integer -> float-rounding agreement only
     e = _random_sym_edges(spark)
     local = _bet(betweenness_centrality(e, src_col="src", dst_col="dst"))
-    dist = _bet(
-        betweenness_centrality(e, src_col="src", dst_col="dst",
-                               driver_threshold=0, exact=True)
-    )
+    with forced_distributed():
+        dist = _bet(betweenness_centrality(e, src_col="src", dst_col="dst", exact=True))
     assert set(dist) == set(local)
     for v in local:
         assert dist[v] == pytest.approx(local[v], rel=1e-9, abs=1e-9)
@@ -112,13 +113,16 @@ def test_betweenness_matches_pair_formula(spark):
         assert got[v] == pytest.approx(expect[v], rel=1e-9, abs=1e-9)
 
 
-def test_betweenness_exact_above_threshold_is_loud_opt_in(spark):
+def test_betweenness_exact_above_threshold_is_loud_opt_in(spark, monkeypatch):
+    # the guard probes the real size (force-exempt): a zero cutover puts
+    # every graph above it
+    monkeypatch.setattr(graph_analytics, "DRIVER_MAX_EDGES", 0)
     e = _edges(spark, [(1, 2), (2, 3)])
     with pytest.raises(ValueError, match="sample_sources"):
-        betweenness_centrality(e, src_col="src", dst_col="dst", driver_threshold=0)
+        betweenness_centrality(e, src_col="src", dst_col="dst")
     # sampling and the explicit opt-in both proceed
     assert betweenness_centrality(
-        e, src_col="src", dst_col="dst", driver_threshold=0, sample_sources=2
+        e, src_col="src", dst_col="dst", sample_sources=2
     ).count() > 0
 
 

@@ -13,6 +13,8 @@ import pytest
 
 import os
 
+from conftest import forced_distributed
+
 from eve_graph_spark.checkpointing import (
     RELIABLE_DIR_KEY,
     disable_reliable_checkpoints,
@@ -62,36 +64,19 @@ def test_sssp_bit_identical_under_reliable_checkpoints(spark, tmp_path):
 
     jumps = build_jumps(spark, "/root/testdata/sf0.001")
     src = [jumps.select("src_system_id").first()[0]]
-    # driver_threshold=0 forces the distributed superstep loop — the path
-    # that actually calls truncate_lineage every FRONTIER_TRUNCATE_EVERY rounds.
-    base = sorted(
-        map(
-            tuple,
-            sssp(
-                jumps,
-                src,
-                weight_col="risk",
-                src_col="src_system_id",
-                dst_col="dst_system_id",
-                driver_threshold=0,
-            ).collect(),
-        )
-    )
+    # the forced arm runs the distributed superstep loop — the path that
+    # actually calls truncate_lineage every FRONTIER_TRUNCATE_EVERY rounds.
+    def run():
+        with forced_distributed():
+            return sorted(map(tuple, sssp(
+                jumps, src, weight_col="risk",
+                src_col="src_system_id", dst_col="dst_system_id",
+            ).collect()))
+
+    base = run()
     enable_reliable_checkpoints(spark, str(tmp_path))
     try:
-        ckpt = sorted(
-            map(
-                tuple,
-                sssp(
-                    jumps,
-                    src,
-                    weight_col="risk",
-                    src_col="src_system_id",
-                    dst_col="dst_system_id",
-                    driver_threshold=0,
-                ).collect(),
-            )
-        )
+        ckpt = run()
         assert _checkpoint_files(str(tmp_path)), "sssp wrote no checkpoint files"
     finally:
         disable_reliable_checkpoints(spark)
@@ -105,16 +90,16 @@ def test_louvain_bit_identical_under_reliable_checkpoints(spark, tmp_path):
     k4a = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
     k4b = [(a, b) for a in range(10, 14) for b in range(10, 14) if a < b]
     e = _edges(spark, k4a + k4b + [(4, 10)])
-    base = sorted(
-        (r["node"], r["community"])
-        for r in louvain(e, rounds=4, driver_threshold=0).collect()
-    )
+    def run():
+        with forced_distributed():
+            return sorted(
+                (r["node"], r["community"]) for r in louvain(e, rounds=4).collect()
+            )
+
+    base = run()
     enable_reliable_checkpoints(spark, str(tmp_path))
     try:
-        ckpt = sorted(
-            (r["node"], r["community"])
-            for r in louvain(e, rounds=4, driver_threshold=0).collect()
-        )
+        ckpt = run()
         assert _checkpoint_files(str(tmp_path)), "louvain wrote no checkpoint files"
     finally:
         disable_reliable_checkpoints(spark)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.operators.dedup import (
@@ -278,10 +279,11 @@ def test_ivf_local_and_distributed_paths_agree(spark):
         (r["query_id"], r["vec_id"], r["rank"])
         for r in ivf_topk(emb, [0, 7], **kw).collect()
     }
-    dist = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in ivf_topk(emb, [0, 7], driver_local_threshold=0, **kw).collect()
-    }
+    with forced_distributed():
+        dist = {
+            (r["query_id"], r["vec_id"], r["rank"])
+            for r in ivf_topk(emb, [0, 7], **kw).collect()
+        }
     assert local == dist
     assert len(local) == 10
 
@@ -303,6 +305,7 @@ def test_near_dup_local_branch_declines_over_its_pair_budget(spark, monkeypatch)
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     assert dedup._near_dup_clusters_local(docs, "text", "doc_id", 0.5, None, 8, 4, 2, 3) is None
     got = sorted(map(tuple, dedup.near_dup_clusters(docs).collect()))
-    dist = sorted(map(tuple, dedup.near_dup_clusters(docs, driver_local_threshold=0).collect()))
+    with forced_distributed():
+        dist = sorted(map(tuple, dedup.near_dup_clusters(docs).collect()))
     assert got == dist
     assert got == [(i, 0 if i < 20 else 20) for i in range(40)]  # min id per group

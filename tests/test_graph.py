@@ -5,6 +5,7 @@ from __future__ import annotations
 import heapq
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.api import GraphEngine, RouteNotFound
@@ -90,19 +91,20 @@ def test_oracle_sssp_bounds_are_safe(spark, fixture_edges):
 
 
 def test_distributed_loop_matches_local_fast_path(spark, fixture_edges):
-    """driver_threshold=0 forces the iterative DataFrame loop; it must
-    produce bit-identical (node, dist) to the driver-local fast path."""
+    """The forced-distributed arm runs the iterative DataFrame loop; it
+    must produce bit-identical (node, dist) to the driver-local fast path."""
     jumps, _ = fixture_edges
     local = {
         r["node"]: r["dist"]
         for r in sssp(jumps, [0], weight_col="risk",
                       src_col="src_system_id", dst_col="dst_system_id").collect()
     }
-    dist = {
-        r["node"]: r["dist"]
-        for r in sssp(jumps, [0], weight_col="risk", src_col="src_system_id",
-                      dst_col="dst_system_id", driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["dist"]
+            for r in sssp(jumps, [0], weight_col="risk", src_col="src_system_id",
+                          dst_col="dst_system_id").collect()
+        }
     assert dist == local
 
 
@@ -141,8 +143,8 @@ def test_k_shortest_distributed_matches_driver(spark, sf_dir):
     """The batched-spur-sweep distributed Yen's returns the same ranked
     (cost, path) list as the driver twin on the fixture graph (top-4
     simple-path costs are distinct there, so output is implementation-
-    independent — see route_alternatives_k3). driver_threshold=0 forces
-    the distributed machinery; stats pin that spur sweeps are batched
+    independent — see route_alternatives_k3). The forced-distributed arm
+    runs the distributed machinery; stats pin that spur sweeps are batched
     (one sweep per Yen round, not one per spur)."""
     from eve_graph_spark.operators.graph import k_shortest_paths_distributed
     from eve_graph_spark.sources.graph_fixture import build_jumps
@@ -154,9 +156,8 @@ def test_k_shortest_distributed_matches_driver(spark, sf_dir):
     )
     local = k_shortest_paths_distributed(e, 1, 13, k=3, weight_col="w")
     stats: dict = {}
-    dist = k_shortest_paths_distributed(
-        e, 1, 13, k=3, weight_col="w", driver_threshold=0, stats_out=stats
-    )
+    with forced_distributed():
+        dist = k_shortest_paths_distributed(e, 1, 13, k=3, weight_col="w", stats_out=stats)
     assert dist == local
     assert [c for c, _ in dist] == [9441717.0, 9697133.0, 14013145.0]
     # 1 first-path sweep + 2 Yen rounds = 3 sweeps TOTAL, regardless of
@@ -176,9 +177,8 @@ def test_k_shortest_distributed_target_early_exit(spark):
         [(i, i + 1, 1.0) for i in range(n)], "src long, dst long, weight double"
     )
     stats: dict = {}
-    routes = k_shortest_paths_distributed(
-        e, 0, 3, k=1, driver_threshold=0, stats_out=stats
-    )
+    with forced_distributed():
+        routes = k_shortest_paths_distributed(e, 0, 3, k=1, stats_out=stats)
     assert routes == [(3.0, [0, 1, 2, 3])]
     assert stats["sweeps"] == 1
     # unpruned, the single sweep would run ~n supersteps
@@ -197,15 +197,16 @@ def test_driver_kernel_matches_distributed_loop_under_ties(spark):
     e = spark.createDataFrame(TIE_EDGES, "src long, dst long, weight double")
     adj = Adjacency.from_edges(*zip(*TIE_EDGES))
     for seeds in ([3], [1, 3]):
-        want = {
-            r["node"]: (r["dist"], r["pred"])
-            for r in sssp(e, seeds, driver_threshold=0).collect()
-        }
+        with forced_distributed():
+            want = {
+                r["node"]: (r["dist"], r["pred"]) for r in sssp(e, seeds).collect()
+            }
         got = {n: (d, p) for n, d, p in _dijkstra(adj, seeds).entries()}
         assert got == want, seeds
     assert want[4] == (1.0, 2)  # seed 1 reaches 4 at 1.0 through 2
     for s, t in ((3, 4), (1, 4)):
-        dist = sssp(e, [s], target_id=t, driver_threshold=0)
+        with forced_distributed():
+            dist = sssp(e, [s], target_id=t)
         assert route_local(adj, s, t) == reconstruct_path(dist, t)
     assert route_local(adj, 3, 4) == [3, 5, 4]
 
@@ -263,7 +264,9 @@ def test_landmark_route_is_the_plain_kernel_route_on_every_pair(spark):
                     (avoid, s, t)
     e = spark.createDataFrame(EXACT_EDGES, "src long, dst long, weight double")
     preds: dict[int, dict[int, int | None]] = {s: {} for s in ids}
-    for r in multi_source_sssp(e, ids, driver_threshold=0).collect():
+    with forced_distributed():
+        rows = multi_source_sssp(e, ids).collect()
+    for r in rows:
         preds[r["source"]][r["node"]] = r["pred"]
     for s in ids:
         for t in ids:
@@ -272,7 +275,8 @@ def test_landmark_route_is_the_plain_kernel_route_on_every_pair(spark):
     assert route_local(adj, 5, 8, set(), table) == [5, 8]
     assert route_local(adj, 1, 20, set(), table) == []
     assert route_local(adj, 9, 5, {1}, table) == [9, 14, 13, 12, 11, 2, 5]
-    dist = sssp(e, [12], target_id=9, driver_threshold=0)
+    with forced_distributed():
+        dist = sssp(e, [12], target_id=9)
     assert route_local(adj, 12, 9, set(), table) == reconstruct_path(dist, 9)
 
 
@@ -311,12 +315,14 @@ def test_k_shortest_driver_matches_distributed_under_ties(spark):
     e = spark.createDataFrame(TIE_EDGES, "src long, dst long, weight double")
     want = [(2.0, [3, 5, 4]), (2.0, [3, 1, 2, 4])]
     assert k_shortest_paths_distributed(e, 3, 4, k=2) == want
-    assert k_shortest_paths_distributed(e, 3, 4, k=2, driver_threshold=0) == want
+    with forced_distributed():
+        assert k_shortest_paths_distributed(e, 3, 4, k=2) == want
 
 
 # --- frontier family: driver branch vs _frontier_loop ------------------------
 # Each keyed frontier kernel runs on three small graphs; the default
-# (driver) branch must equal driver_threshold=0 exactly. Each graph is
+# (driver) branch must equal the forced-distributed arm exactly (nested
+# calls such as reconstruct_path are forced too). Each graph is
 # (edges, source, target): TIE_EDGES has a zero-weight edge, the chain's
 # target sits 3 hops out, and the second graph has two components.
 
@@ -331,48 +337,49 @@ _FRONTIER_GRAPHS = {
 }
 
 
-def _frontier_kernel(kernel, spark, edges, s, t, **kw):
+def _frontier_kernel(kernel, spark, edges, s, t):
     from eve_graph_spark.operators import graph as G
     from eve_graph_spark.operators import graph_analytics as ga
 
     e = spark.createDataFrame(edges, "src long, dst long, weight double")
     cols = dict(src_col="src", dst_col="dst")
     if kernel == "sssp":
-        return G.sssp(e, [s], **kw).collect()
+        return G.sssp(e, [s]).collect()
     if kernel == "sssp_target":
-        dist = G.sssp(e, [s], target_id=t, **kw)
+        dist = G.sssp(e, [s], target_id=t)
         path = reconstruct_path(dist, t)
         on_path = {r["node"]: (r["dist"], r["pred"]) for r in dist.collect()
                    if r["node"] in path}
         return path, on_path
     if kernel == "multi_source_sssp":
         other = max(u for u, _, _ in edges)
-        rows = G.multi_source_sssp(e, [s, other, s], **kw).collect()
+        rows = G.multi_source_sssp(e, [s, other, s]).collect()
         for src in (s, other):  # each source's rows are sssp's from it alone
             assert sorted((r["node"], r["dist"], r["pred"]) for r in rows
                           if r["source"] == src) == sorted(
                 tuple(r) for r in G.sssp(e, [src]).collect())
         return rows
     if kernel == "k_shortest_paths":
-        return G.k_shortest_paths_distributed(e, s, t, k=3, **kw)
+        return G.k_shortest_paths_distributed(e, s, t, k=3)
     if kernel == "bfs_sigma":
-        return ga.bfs_sigma(e, [s, t], **cols, **kw).collect()
+        return ga.bfs_sigma(e, [s, t], **cols).collect()
     if kernel == "dijkstra_sigma":
-        return ga.dijkstra_sigma(e, [s, t], "weight", **cols, **kw).collect()
+        return ga.dijkstra_sigma(e, [s, t], "weight", **cols).collect()
     sym = spark.createDataFrame(
         [(u, v) for u, v, _ in edges] + [(v, u) for u, v, _ in edges],
         "src long, dst long",
     )
     if kernel == "label_cc":
-        return ga.connected_components(sym, **cols, algorithm="label", **kw).collect()
+        return ga.connected_components(sym, **cols, algorithm="label").collect()
     if kernel == "articulation_points":
-        return ga.articulation_points(sym, **cols, **kw).collect()
+        return ga.articulation_points(sym, **cols).collect()
     if kernel == "bridges":
-        return ga.bridges(sym, **cols, **kw).collect()
+        return ga.bridges(sym, **cols).collect()
     assert kernel == "set_exclusion_reach"
-    seeds = spark.createDataFrame([(0, s), (1, s), (2, t)], "k long, node long")
-    excl = spark.createDataFrame([(1, t), (2, s)], "k long, node long")
-    return ga.set_exclusion_reach(sym, seeds, excl, **cols, **kw).collect()
+    # scenario 3's seed is in its own excluded set: it reaches nothing
+    seeds = spark.createDataFrame([(0, s), (1, s), (2, t), (3, s)], "k long, node long")
+    excl = spark.createDataFrame([(1, t), (2, s), (3, s)], "k long, node long")
+    return ga.set_exclusion_reach(sym, seeds, excl, **cols).collect()
 
 
 _FRONTIER_KERNELS = [
@@ -405,7 +412,8 @@ def test_frontier_family_branch_parity(spark, kernel, graph):
         return sorted(tuple(r) for r in out) if isinstance(out, list) else out
 
     local = canon(_frontier_kernel(kernel, spark, edges, s, t))
-    dist = canon(_frontier_kernel(kernel, spark, edges, s, t, driver_threshold=0))
+    with forced_distributed():
+        dist = canon(_frontier_kernel(kernel, spark, edges, s, t))
     assert dist == local
 
 
@@ -415,7 +423,8 @@ def test_k_shortest_distributed_no_route(spark):
     e = spark.createDataFrame(
         [(0, 1, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
     )
-    assert k_shortest_paths_distributed(e, 0, 3, k=2, driver_threshold=0) == []
+    with forced_distributed():
+        assert k_shortest_paths_distributed(e, 0, 3, k=2) == []
 
 
 def test_route_alternatives_api(spark, sf_dir):
@@ -449,7 +458,8 @@ def test_reconstruct_path_iterative_mode_matches_driver_mode(spark, fixture_edge
                 src_col="src_system_id", dst_col="dst_system_id")
     stats_drv, stats_it = {}, {}
     p_driver = reconstruct_path(dist, 13, stats_out=stats_drv)
-    p_iter = reconstruct_path(dist, 13, driver_threshold=0, stats_out=stats_it)
+    with forced_distributed():
+        p_iter = reconstruct_path(dist, 13, stats_out=stats_it)
     assert stats_drv["mode"] == "driver"
     assert stats_it["mode"] == "iterative"
     assert p_iter == p_driver
@@ -464,7 +474,8 @@ def test_reconstruct_path_iterative_unreachable_target(spark, fixture_edges):
     dist = sssp(jumps, [0], weight_col="risk",
                 src_col="src_system_id", dst_col="dst_system_id")
     stats = {}
-    assert reconstruct_path(dist, 999_999, driver_threshold=0, stats_out=stats) == []
+    with forced_distributed():
+        assert reconstruct_path(dist, 999_999, stats_out=stats) == []
     assert stats["mode"] == "iterative" and stats["rows_collected"] == 0
 
 
@@ -497,7 +508,8 @@ def test_sssp_target_early_exit_distributed_chain(spark):
         [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, weight double"
     )
     st: dict = {}
-    dist = sssp(e, [0], driver_threshold=0, target_id=target, stats_out=st)
+    with forced_distributed():
+        dist = sssp(e, [0], target_id=target, stats_out=st)
     rows = {r["node"]: (r["dist"], r["pred"]) for r in dist.collect()}
     assert st["early_exit"] is True
     assert st["iterations"] <= target + 2  # ~11 supersteps, not 60
@@ -512,24 +524,18 @@ def test_sssp_target_early_exit_branchy_parity(spark, fixture_edges):
     agree with the full distributed run on every entry with
     dist <= dist(target) — the contract reconstruct_path depends on."""
     jumps, _ = fixture_edges
-    full = {
-        r["node"]: (r["dist"], r["pred"])
-        for r in sssp(jumps, [0], weight_col="risk", src_col="src_system_id",
-                      dst_col="dst_system_id", driver_threshold=0).collect()
-    }
+    cols = dict(weight_col="risk", src_col="src_system_id", dst_col="dst_system_id")
     st: dict = {}
-    pruned_df = sssp(jumps, [0], weight_col="risk", src_col="src_system_id",
-                     dst_col="dst_system_id", driver_threshold=0,
-                     target_id=13, stats_out=st)
+    with forced_distributed():
+        full_df = sssp(jumps, [0], **cols)
+        pruned_df = sssp(jumps, [0], target_id=13, stats_out=st, **cols)
+    full = {r["node"]: (r["dist"], r["pred"]) for r in full_df.collect()}
     pruned = {r["node"]: (r["dist"], r["pred"]) for r in pruned_df.collect()}
     d13 = full[13][0]
     for node, (d, p) in full.items():
         if d <= d13:
             assert pruned[node] == (d, p), node
-    assert reconstruct_path(pruned_df, 13) == reconstruct_path(
-        sssp(jumps, [0], weight_col="risk", src_col="src_system_id",
-             dst_col="dst_system_id", driver_threshold=0), 13
-    )
+    assert reconstruct_path(pruned_df, 13) == reconstruct_path(full_df, 13)
 
 
 def test_sssp_target_early_exit_driver_path(spark, fixture_edges):
@@ -556,7 +562,8 @@ def test_sssp_target_edge_cases(spark):
         [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
     )
     st: dict = {}
-    dist = sssp(e, [0], driver_threshold=0, target_id=0, stats_out=st)
+    with forced_distributed():
+        dist = sssp(e, [0], target_id=0, stats_out=st)
     assert st["early_exit"] and st["iterations"] == 1
     assert reconstruct_path(dist, 0) == [0]
     # unreachable target: no early exit, loop drains normally, empty path
@@ -564,7 +571,8 @@ def test_sssp_target_edge_cases(spark):
         [(0, 1, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
     )
     st2: dict = {}
-    dist2 = sssp(e2, [0], driver_threshold=0, target_id=3, stats_out=st2)
+    with forced_distributed():
+        dist2 = sssp(e2, [0], target_id=3, stats_out=st2)
     assert st2["early_exit"] is False
     assert reconstruct_path(dist2, 3) == []
 
@@ -615,3 +623,36 @@ def test_graph_engine_route_avoid_list(spark, sf_dir):
     # avoid list also applies to the risk projection
     safe = eng.safest_route(names[0], names[13], avoid=[mid])
     assert mid not in safe and safe[-1] == names[13]
+
+
+def test_no_public_function_takes_a_branch_knob(spark):
+    """Each operator picks its driver or distributed branch from its
+    module's cutover constant, and SPARK_GRAFT_FORCE_DISTRIBUTED forces the
+    distributed one everywhere: no public function or method of the
+    operators or of graph_api takes a per-call cutover."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import eve_graph_spark.operators as ops
+
+    mods = [importlib.import_module(f"{ops.__name__}.{m.name}")
+            for m in pkgutil.iter_modules(ops.__path__)]
+    mods.append(importlib.import_module("eve_graph_spark.graph_api"))
+    knobs = {"driver_threshold", "driver_local_threshold", "encode_driver_local"}
+    found = []
+    for mod in mods:
+        for name, obj in vars(mod).items():
+            if name.startswith("_"):
+                continue
+            if inspect.isclass(obj):
+                fns = [(f"{name}.{n}", f) for n, f in vars(obj).items()
+                       if inspect.isfunction(f) and not n.startswith("_")]
+            elif inspect.isfunction(obj):
+                fns = [(name, obj)]
+            else:
+                continue
+            found += [(mod.__name__, n) for n, f in fns
+                      if knobs & set(inspect.signature(f).parameters)]
+    assert len(mods) > 10
+    assert not found, found

@@ -5,6 +5,7 @@ from __future__ import annotations
 import functools
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.operators.graph_analytics import (
@@ -28,10 +29,8 @@ def test_connected_components_two_islands(spark):
 def test_connected_components_distributed_matches_local(spark):
     e = _edges(spark, [(1, 2), (2, 3), (10, 11), (11, 12), (3, 4)])
     local = {r["node"]: r["component"] for r in connected_components(e).collect()}
-    dist = {
-        r["node"]: r["component"]
-        for r in connected_components(e, driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {r["node"]: r["component"] for r in connected_components(e).collect()}
     assert dist == local
 
 
@@ -65,25 +64,31 @@ def test_closeness_distributed_matches_local(spark):
 
     e = _edges(spark, [(1, 2), (2, 3), (3, 4)])
     local = {r["node"]: r["closeness"] for r in closeness_centrality(e).collect()}
-    dist = {
-        r["node"]: r["closeness"]
-        for r in closeness_centrality(e, driver_threshold=0, exact=True).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["closeness"]
+            for r in closeness_centrality(e, exact=True).collect()
+        }
     assert dist == local
 
 
-def test_closeness_exact_above_threshold_is_loud_opt_in(spark):
+def test_closeness_exact_above_threshold_is_loud_opt_in(spark, monkeypatch):
     """Exact all-pairs on an above-threshold graph must raise with
     guidance (O(V) pivots, O(V^2) state) unless exact=True — never run
     silently. landmarks=k stays allowed without the flag."""
     import pytest
 
+    from eve_graph_spark.operators import graph_analytics
     from eve_graph_spark.operators.graph_analytics import closeness_centrality
 
+    # the guard probes the real size (force-exempt): a zero cutover puts
+    # every graph above it
+    monkeypatch.setattr(graph_analytics, "DRIVER_MAX_EDGES", 0)
     e = _edges(spark, [(1, 2), (2, 3), (3, 4)])
     with pytest.raises(ValueError, match="landmarks=k"):
-        closeness_centrality(e, driver_threshold=0)
-    assert closeness_centrality(e, driver_threshold=0, landmarks=2).count() > 0
+        closeness_centrality(e)
+    with forced_distributed():
+        assert closeness_centrality(e, landmarks=2).count() > 0
 
 
 def test_pagerank_hub_ranks_highest(spark):
@@ -115,10 +120,11 @@ def test_scc_tarjan_and_fwbw_agree(spark):
         for r in strongly_connected_components(edges).collect()
     }
     assert driver == expect
-    dist = {
-        (r["node"], r["scc"])
-        for r in strongly_connected_components(edges, driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            (r["node"], r["scc"])
+            for r in strongly_connected_components(edges).collect()
+        }
     assert dist == expect
 
 
@@ -134,12 +140,13 @@ def test_scc_dag_resolved_by_trim_not_pivots(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src_system_id long, dst_system_id long"
     )
-    got = {
-        (r["node"], r["scc"])
-        for r in strongly_connected_components(
-            chain, driver_threshold=0, max_pivots=0
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            (r["node"], r["scc"])
+            for r in strongly_connected_components(
+                chain, max_pivots=0
+            ).collect()
+        }
     assert got == {(i, i) for i in range(13)}
 
     # Cycle + tail: one pivot round for the cycle, trim for the tail.
@@ -147,12 +154,13 @@ def test_scc_dag_resolved_by_trim_not_pivots(spark):
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)],
         "src_system_id long, dst_system_id long",
     )
-    got = {
-        (r["node"], r["scc"])
-        for r in strongly_connected_components(
-            cyc, driver_threshold=0, max_pivots=1
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            (r["node"], r["scc"])
+            for r in strongly_connected_components(
+                cyc, max_pivots=1
+            ).collect()
+        }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5)}
 
     # Never a silently-partial mapping: two disjoint cycles but only one
@@ -161,7 +169,8 @@ def test_scc_dag_resolved_by_trim_not_pivots(spark):
         [(1, 2), (2, 1), (3, 4), (4, 3)], "src_system_id long, dst_system_id long"
     )
     with pytest.raises(RuntimeError, match="unassigned"):
-        strongly_connected_components(two, driver_threshold=0, max_pivots=1)
+        with forced_distributed():
+            strongly_connected_components(two, max_pivots=1)
 
 
 def test_label_propagation_two_cliques_bridge(spark):
@@ -189,10 +198,11 @@ def test_label_propagation_distributed_matches_local(spark):
     pairs = [(a, b) for a, b in pairs if a != b]
     e = _edges(spark, pairs)
     local = {r["node"]: r["community"] for r in label_propagation(e, iterations=4).collect()}
-    dist = {
-        r["node"]: r["community"]
-        for r in label_propagation(e, iterations=4, driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["community"]
+            for r in label_propagation(e, iterations=4).collect()
+        }
     assert dist == local
 
 
@@ -214,12 +224,13 @@ def test_star_cc_matches_label_cc(spark):
            for r in connected_components(e).collect()}
     for algo in ("label", "star"):
         st: dict = {}
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(
-                e, driver_threshold=0, algorithm=algo, stats_out=st
-            ).collect()
-        }
+        with forced_distributed():
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(
+                    e, algorithm=algo, stats_out=st
+                ).collect()
+            }
         assert got == ref, algo
 
 
@@ -233,12 +244,13 @@ def test_star_cc_chain_converges_in_log_rounds(spark):
     n = 2000
     e = _edges(spark, [(i, i + 1) for i in range(n - 1)])
     st: dict = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            e, driver_threshold=0, algorithm="star", stats_out=st
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                e, algorithm="star", stats_out=st
+            ).collect()
+        }
     assert got == {i: 0 for i in range(n)}
     assert st["iterations"] <= 15, st
 
@@ -248,12 +260,13 @@ def test_auto_cc_uses_label_on_low_diameter(spark):
 
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (10, 11)])
     st: dict = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            e, driver_threshold=0, algorithm="auto", stats_out=st
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                e, algorithm="auto", stats_out=st
+            ).collect()
+        }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
     assert st["algorithm"] == "label"  # converged inside the budget, no switch
     assert "star_rounds" not in st
@@ -272,16 +285,18 @@ def test_auto_cc_switches_to_star_on_chain(spark):
     n = 2000
     e = _edges(spark, [(i, i + 1) for i in range(n - 1)])
     star_st: dict = {}
-    connected_components(
-        e, driver_threshold=0, algorithm="star", stats_out=star_st
-    ).collect()
-    st: dict = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            e, driver_threshold=0, algorithm="auto", stats_out=st
+    with forced_distributed():
+        connected_components(
+            e, algorithm="star", stats_out=star_st
         ).collect()
-    }
+    st: dict = {}
+    with forced_distributed():
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                e, algorithm="auto", stats_out=st
+            ).collect()
+        }
     assert got == {i: 0 for i in range(n)}
     assert st["algorithm"] == "star"
     assert st["label_supersteps"] == AUTO_LABEL_BUDGET
@@ -367,7 +382,7 @@ def test_node_similarity_hand_graph(spark):
 # --- rank family: driver executor vs DataFrame executor ----------------------
 # Each spec runs on its own pin graph, on a graph with a dangling node (4),
 # a parallel edge (1→2) and a self-loop (2→2), and with iterations=0; the
-# default (driver) branch must equal driver_threshold=0 bit-for-bit.
+# default (driver) branch must equal the forced-distributed arm bit-for-bit.
 
 _RANK_ODD = [(1, 2), (1, 2), (2, 2), (2, 3), (3, 1), (3, 4)]
 _RANK_CASES = [
@@ -399,8 +414,8 @@ def test_rank_family_branch_parity(spark, spec, pin, symmetric, iterations, grap
         e = _edges(spark, _RANK_ODD, symmetric=False)
         iterations = 0 if graph == "iterations0" else iterations
     local = sorted(tuple(r) for r in run(e, iterations=iterations).collect())
-    dist = sorted(tuple(r) for r in run(e, iterations=iterations,
-                                        driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in run(e, iterations=iterations).collect())
     assert dist == local  # bit-identical fixed-point supersteps
     if spec == "hits" and iterations == 0:
         assert {r[1:] for r in local} == {(1.0, 0.0)}  # hub0 = 1, authority0 = 0
@@ -539,8 +554,9 @@ def test_mst_distributed_matches_local(spark):
     e = _wedges(spark, [(1, 2, 1.0), (2, 3, 2.0), (3, 4, 1.0), (4, 1, 5.0),
                         (1, 3, 3.0), (4, 5, 0.5), (5, 6, 9.0), (6, 1, 0.25)])
     loc = sorted(tuple(r) for r in minimum_spanning_forest(e).collect())
-    dist = sorted(tuple(r) for r in
-                  minimum_spanning_forest(e, driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in
+                      minimum_spanning_forest(e).collect())
     assert loc == dist and len(loc) == 5  # 6 nodes connected -> 5 edges
 
 
@@ -560,8 +576,9 @@ def test_mst_equal_weight_tiebreak_deterministic(spark):
     # unique forest, identically on both code paths
     e = _wedges(spark, [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (3, 4, 1.0), (4, 1, 1.0)])
     loc = sorted(tuple(r) for r in minimum_spanning_forest(e).collect())
-    dist = sorted(tuple(r) for r in
-                  minimum_spanning_forest(e, driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in
+                      minimum_spanning_forest(e).collect())
     assert loc == dist and len(loc) == 3
 
 
@@ -607,8 +624,9 @@ def test_dag_longest_path_distributed_matches_local(spark):
         "src_system_id long, dst_system_id long, risk double",
     )
     loc = sorted(tuple(r) for r in dag_longest_paths(e, weight_col="risk").collect())
-    dist = sorted(tuple(r) for r in
-                  dag_longest_paths(e, weight_col="risk", driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in
+                      dag_longest_paths(e, weight_col="risk").collect())
     assert loc == dist
 
 
@@ -633,7 +651,8 @@ def test_dag_rejects_cycles_both_paths(spark):
     with pytest.raises(ValueError, match="cycle"):
         dag_longest_paths(c, weight_col="risk")
     with pytest.raises(ValueError, match="cycle"):
-        dag_longest_paths(c, weight_col="risk", driver_threshold=0, max_iterations=8)
+        with forced_distributed():
+            dag_longest_paths(c, weight_col="risk", max_iterations=8)
 
 
 def test_property_graph_dag_longest_path(spark):
@@ -672,7 +691,8 @@ def test_ktruss_distributed_matches_local(spark):
     pairs += [(4, 5), (5, 6), (4, 6), (6, 7), (7, 8)]
     e = _edges(spark, pairs)
     loc = sorted(tuple(r) for r in k_truss(e, k=3).collect())
-    dist = sorted(tuple(r) for r in k_truss(e, k=3, driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in k_truss(e, k=3).collect())
     assert loc == dist
 
 
@@ -685,7 +705,8 @@ def test_ktruss_cascading_peel(spark):
     # Pins that the peel iterates to fixpoint instead of filtering once.
     e = _edges(spark, [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)])
     assert k_truss(e, k=4).count() == 0
-    assert k_truss(e, k=4, driver_threshold=0).count() == 0
+    with forced_distributed():
+        assert k_truss(e, k=4).count() == 0
 
 
 def test_ktruss_rejects_trivial_k(spark):
@@ -751,10 +772,11 @@ def test_louvain_distributed_matches_local(spark):
     k4a = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
     e = _edges(spark, k4a + [(4, 10), (10, 11), (11, 12), (12, 10)])
     loc = {r["node"]: r["community"] for r in louvain(e, rounds=4).collect()}
-    dist = {
-        r["node"]: r["community"]
-        for r in louvain(e, rounds=4, driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["community"]
+            for r in louvain(e, rounds=4).collect()
+        }
     assert loc == dist
 
 
@@ -831,10 +853,11 @@ def test_fastrp_distributed_matches_local(spark):
     pairs = [(a, b) for a in range(8) for b in range(8) if a < b and (a + b) % 3 != 0]
     e = _edges(spark, pairs + [(0, 8), (8, 9)])
     loc = {r["node"]: tuple(r)[1:] for r in fastrp_embeddings(e).collect()}
-    dist = {
-        r["node"]: tuple(r)[1:]
-        for r in fastrp_embeddings(e, driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: tuple(r)[1:]
+            for r in fastrp_embeddings(e).collect()
+        }
     assert loc == dist  # bit-identical fixed-point + pinned-order float ops
 
 
@@ -910,9 +933,9 @@ def test_louvain_weighted_distributed_matches_local(spark):
     e = spark.createDataFrame(sym, "src_system_id long, dst_system_id long, risk double")
     loc = {r["node"]: r["community"]
            for r in louvain(e, rounds=3, weight_col="risk").collect()}
-    dist = {r["node"]: r["community"]
-            for r in louvain(e, rounds=3, weight_col="risk",
-                             driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: r["community"]
+                for r in louvain(e, rounds=3, weight_col="risk").collect()}
     assert loc == dist
 
 
@@ -942,8 +965,9 @@ def test_k1_coloring_distributed_matches_local(spark):
     pairs += [(4, 5), (5, 6), (6, 7), (7, 4)]
     e = _edges(spark, pairs)
     loc = {r["node"]: r["color"] for r in k1_coloring(e).collect()}
-    dist = {r["node"]: r["color"]
-            for r in k1_coloring(e, driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: r["color"]
+                for r in k1_coloring(e).collect()}
     assert loc == dist
 
 
@@ -956,7 +980,8 @@ def test_k1_coloring_round_budget_is_loud(spark):
     with pytest.raises(RuntimeError, match="uncolored"):
         k1_coloring(e, max_rounds=1)
     with pytest.raises(RuntimeError, match="uncolored"):
-        k1_coloring(e, max_rounds=1, driver_threshold=0)
+        with forced_distributed():
+            k1_coloring(e, max_rounds=1)
 
 
 def test_property_graph_k1_coloring(spark):
@@ -994,7 +1019,8 @@ def test_sllpa_distributed_matches_local(spark):
     k4a = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
     e = _edges(spark, k4a + [(20, 1), (20, 2), (5, 20), (5, 6), (6, 7), (7, 5)])
     loc = sorted(tuple(r) for r in sllpa(e).collect())
-    dist = sorted(tuple(r) for r in sllpa(e, driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in sllpa(e).collect())
     assert loc == dist
 
 
@@ -1089,7 +1115,7 @@ def test_forced_distributed_arm_keeps_exact_cost_guards(spark, monkeypatch):
     exact all-pairs request on a graph over the driver threshold must
     still raise there, for closeness (hop and weighted) and betweenness
     alike, while a graph under it still runs."""
-    from eve_graph_spark.operators import graph
+    from eve_graph_spark.operators import graph, graph_analytics
     from eve_graph_spark.operators.graph_analytics import (
         betweenness_centrality,
         closeness_centrality,
@@ -1099,12 +1125,14 @@ def test_forced_distributed_arm_keeps_exact_cost_guards(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     graph.clear_probe_cache()
     try:
-        with pytest.raises(ValueError, match="landmarks=k"):
-            closeness_centrality(e, driver_threshold=2)
-        with pytest.raises(ValueError, match="landmarks=k"):
-            closeness_centrality(e, driver_threshold=2, weight_col="w")
-        with pytest.raises(ValueError, match="sample_sources"):
-            betweenness_centrality(e, driver_threshold=2)
+        with monkeypatch.context() as mp:
+            mp.setattr(graph_analytics, "DRIVER_MAX_EDGES", 2)
+            with pytest.raises(ValueError, match="landmarks=k"):
+                closeness_centrality(e)
+            with pytest.raises(ValueError, match="landmarks=k"):
+                closeness_centrality(e, weight_col="w")
+            with pytest.raises(ValueError, match="sample_sources"):
+                betweenness_centrality(e)
         assert closeness_centrality(e, weight_col="w").count() == 4
     finally:
         graph.clear_probe_cache()

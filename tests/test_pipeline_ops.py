@@ -6,6 +6,7 @@ semantics directly)."""
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.operators.entity_resolution import blocked_fuzzy_match
@@ -139,7 +140,8 @@ def test_k_core_distributed_matches_driver_path(spark):
     e = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
     edges = spark.createDataFrame(e, "src_system_id long, dst_system_id long")
     local = {r["node"] for r in k_core(edges, k=2).collect()}
-    dist = {r["node"] for r in k_core(edges, k=2, driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"] for r in k_core(edges, k=2).collect()}
     assert local == dist == {1, 2, 3, 4, 5}
 
 

@@ -7,6 +7,7 @@ the optimized form cannot silently drift the values the oracles hash.
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 
@@ -140,14 +141,16 @@ def test_sssp_route_driver_and_distributed_branches_agree(spark):
     ]
     e = spark.createDataFrame(edges, "src long, dst long, weight double")
     d_local, p_local = sssp_route(e, 0, 4)
-    d_dist, p_dist = sssp_route(e, 0, 4, driver_threshold=0)
+    with forced_distributed():
+        d_dist, p_dist = sssp_route(e, 0, 4)
     assert p_local == p_dist and p_local[0] == 0 and p_local[-1] == 4
     assert sorted(map(tuple, d_local.collect())) == sorted(
         map(tuple, d_dist.select("node", "dist").collect())
     )
     # unreachable target -> empty path, both branches
     assert sssp_route(e, 0, 8)[1] == []
-    assert sssp_route(e, 0, 8, driver_threshold=0)[1] == []
+    with forced_distributed():
+        assert sssp_route(e, 0, 8)[1] == []
 
 
 @pytest.mark.slow  # >3s: full-tier only (r14 test tiers)
@@ -164,7 +167,8 @@ def test_kmeans_fit_local_matches_distributed(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for it in (1, 2, 3):
         local = kmeans_fit(df, k=5, iterations=it, dim=8)
-        dist = kmeans_fit(df, k=5, iterations=it, dim=8, driver_local_threshold=0)
+        with forced_distributed():
+            dist = kmeans_fit(df, k=5, iterations=it, dim=8)
         assert local == dist, f"iterations={it}: {local} != {dist}"
 
 
@@ -238,12 +242,11 @@ def test_near_dup_clusters_shuffles_no_text(spark):
     from eve_graph_spark.operators.dedup import near_dup_clusters
 
     df = spark.createDataFrame(ADVERSARIAL_TEXTS, "doc_id long, text string")
-    # driver_local_threshold=0: this pins the DISTRIBUTED pipeline's plan
-    # (r14 added a driver-local branch that would otherwise absorb the
-    # tiny fixture into a LocalRelation with no exchanges at all)
-    plan = near_dup_clusters(
-        df, driver_local_threshold=0
-    )._jdf.queryExecution().optimizedPlan().toString()
+    # the forced-distributed arm: this pins the DISTRIBUTED pipeline's plan
+    # (the driver-local branch would otherwise absorb the tiny fixture
+    # into a LocalRelation with no exchanges at all)
+    with forced_distributed():
+        plan = near_dup_clusters(df)._jdf.queryExecution().optimizedPlan().toString()
     # the old pipeline carried the representative TEXT through the exact-dup
     # aggregate (min_by(text, doc_id)) and signed it post-exchange; the
     # rewrite must never aggregate raw text — only the md5 digest key and
@@ -264,12 +267,9 @@ def test_ivf_pq_driver_local_encode_matches_distributed(spark):
         for i in range(120)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx_local, m_local = ivf_pq_index(
-        emb, m_subspaces=4, encode_driver_local=True
-    )
-    idx_dist, m_dist = ivf_pq_index(
-        emb, m_subspaces=4, encode_driver_local=False
-    )
+    idx_local, m_local = ivf_pq_index(emb, m_subspaces=4)
+    with forced_distributed():
+        idx_dist, m_dist = ivf_pq_index(emb, m_subspaces=4)
     # "_"-prefixed keys are session-only carry (the driver-local branch
     # exposes its corpus collect for ivf_pq_topk reuse); the persisted
     # model contract must be identical
@@ -288,7 +288,7 @@ def test_ivf_pq_driver_local_encode_matches_distributed(spark):
     assert a == b
 
 
-def test_community_metrics_driver_and_distributed_branches_agree(spark):
+def test_community_metrics_driver_and_distributed_branches_agree(spark, monkeypatch):
     """r13: community_metrics gains a driver-local branch below the edge
     threshold and a one-exchange two-sided aggregate in the distributed
     branch — both must produce the identical rows (same integer counters,
@@ -296,6 +296,7 @@ def test_community_metrics_driver_and_distributed_branches_agree(spark):
     communities, cut edges both directions, an unlabeled endpoint
     (inner-join semantics drop the edge from the counters but it still
     counts toward m), and a community with no edges at all."""
+    from eve_graph_spark.operators import graph_analytics
     from eve_graph_spark.operators.graph_analytics import community_metrics
 
     edges = spark.createDataFrame(
@@ -314,12 +315,10 @@ def test_community_metrics_driver_and_distributed_branches_agree(spark):
         "node long, community long",
     )
     key = lambda r: tuple(r)  # noqa: E731
-    local = sorted(
-        map(key, community_metrics(edges, labels, driver_threshold=10**6).collect())
-    )
-    dist = sorted(
-        map(key, community_metrics(edges, labels, driver_threshold=0).collect())
-    )
+    monkeypatch.setattr(graph_analytics, "DRIVER_MAX_EDGES", 10**6)
+    local = sorted(map(key, community_metrics(edges, labels).collect()))
+    with forced_distributed():
+        dist = sorted(map(key, community_metrics(edges, labels).collect()))
     assert local == dist
     assert len(local) == 3  # community 30 present with zero counters
     by_comm = {r[0]: r for r in local}
@@ -353,12 +352,13 @@ def test_near_dup_clusters_carry_matches_separate_join(spark):
     assert near_dup_clusters(df).columns == ["doc_id", "cluster"]
 
 
-def test_diameter_estimate_driver_and_distributed_branches_agree(spark):
+def test_diameter_estimate_driver_and_distributed_branches_agree(spark, monkeypatch):
     """r13: diameter_estimate gains a fused driver-local branch (both
-    sweeps from one edge collect). driver_threshold=0 replays the prior
-    job-composed path; the rows must be identical — weighted ties
+    sweeps from one edge collect). The forced-distributed arm replays the
+    job-composed path, both sweeps included; the rows must be identical — weighted ties
     included (two equal-dist peaks must resolve to the min node in both
     branches)."""
+    from eve_graph_spark.operators import graph
     from eve_graph_spark.operators.graph_analytics import diameter_estimate
 
     # diamond with a tail: ties at dist (nodes 1,2 both at 1.0 from 0),
@@ -370,13 +370,11 @@ def test_diameter_estimate_driver_and_distributed_branches_agree(spark):
         ],
         "src long, dst long, w double",
     )
+    monkeypatch.setattr(graph, "DRIVER_SSSP_MAX_EDGES", 10**6)
     for wc in ("w", None):
-        local = diameter_estimate(
-            edges, start=0, weight_col=wc, driver_threshold=10**6
-        ).collect()
-        dist = diameter_estimate(
-            edges, start=0, weight_col=wc, driver_threshold=0
-        ).collect()
+        local = diameter_estimate(edges, start=0, weight_col=wc).collect()
+        with forced_distributed():
+            dist = diameter_estimate(edges, start=0, weight_col=wc).collect()
         assert [tuple(r) for r in local] == [tuple(r) for r in dist]
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 
@@ -44,9 +45,9 @@ def test_semantic_dedup_local_matches_distributed(spark):
     emb = _emb_fixture(spark, dim=8)
     loc = sorted(map(tuple, semantic_dedup(
         emb, k=3, iterations=2, tau=0.3, dim=8).collect()))
-    dist = sorted(map(tuple, semantic_dedup(
-        emb, k=3, iterations=2, tau=0.3, dim=8,
-        driver_local_threshold=0).collect()))
+    with forced_distributed():
+        dist = sorted(map(tuple, semantic_dedup(
+            emb, k=3, iterations=2, tau=0.3, dim=8).collect()))
     assert loc == dist
     assert any(not r[3] for r in loc)  # the dup rows actually got dropped
 
@@ -59,8 +60,9 @@ def test_semantic_dedup_local_declines_on_nonfinite(spark):
     # NaN fv casts clamp differently in numpy vs SQL — the local branch
     # must decline and both calls run the (authoritative) distributed path
     loc = sorted(map(tuple, semantic_dedup(emb, k=2, iterations=2, dim=2).collect()))
-    dist = sorted(map(tuple, semantic_dedup(
-        emb, k=2, iterations=2, dim=2, driver_local_threshold=0).collect()))
+    with forced_distributed():
+        dist = sorted(map(tuple, semantic_dedup(
+            emb, k=2, iterations=2, dim=2).collect()))
     assert loc == dist
 
 
@@ -82,8 +84,9 @@ def test_near_dup_clusters_local_matches_distributed_with_carry(spark):
     docs = spark.createDataFrame(ADVERSARIAL, "doc_id long, text string")
     carry = {"tlen": F.length(F.coalesce("text", F.lit(""))).cast("long")}
     loc = sorted(map(tuple, near_dup_clusters(docs, carry=dict(carry)).collect()))
-    dist = sorted(map(tuple, near_dup_clusters(
-        docs, carry=dict(carry), driver_local_threshold=0).collect()))
+    with forced_distributed():
+        dist = sorted(map(tuple, near_dup_clusters(
+            docs, carry=dict(carry)).collect()))
     assert loc == dist
     # exact dups 1/2 share a cluster; every doc appears exactly once
     by_id = {r[0]: r[1] for r in loc}
@@ -112,8 +115,9 @@ def test_ivf_pq_topk_driver_adc_matches_distributed(spark):
         "vec_id long, embedding array<double>",
     )
     qids = [3, 57, 110]
-    idx_l, m_l = ivf_pq_index(emb, m_subspaces=4, encode_driver_local=True)
-    idx_d, m_d = ivf_pq_index(emb, m_subspaces=4, encode_driver_local=False)
+    idx_l, m_l = ivf_pq_index(emb, m_subspaces=4)
+    with forced_distributed():
+        idx_d, m_d = ivf_pq_index(emb, m_subspaces=4)
     assert "_index_rows" in m_l and "_index_rows" not in m_d
     local = sorted(map(tuple, ivf_pq_topk(
         emb, qids, k=5, index=idx_l, model=m_l).collect()))

@@ -17,7 +17,10 @@ Each test pins a round-10 ADVICE item:
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
+from conftest import forced_distributed
 
 
 def _e(spark, rows, schema="src_system_id long, dst_system_id long"):
@@ -50,7 +53,8 @@ def test_ppr_absent_sources_raises_distributed(spark):
 
     e = _e(spark, [(1, 2), (2, 3)])
     with pytest.raises(ValueError, match="no source nodes present"):
-        pagerank(e, sources=[99], driver_threshold=0)
+        with forced_distributed():
+            pagerank(e, sources=[99])
 
 
 def test_property_graph_ppr_empty_sources_raises(spark):
@@ -96,8 +100,8 @@ def test_mst_budget_exhaustion_raises(spark):
     e = spark.createDataFrame(
         rows, "src_system_id long, dst_system_id long, risk double")
     with pytest.raises(RuntimeError, match="did not converge"):
-        minimum_spanning_forest(e, weight_col="risk", max_rounds=1,
-                                driver_threshold=0).collect()
+        with forced_distributed():
+            minimum_spanning_forest(e, weight_col="risk", max_rounds=1).collect()
 
 
 @pytest.mark.slow  # >3s: full-tier only (r14 test tiers)
@@ -105,10 +109,11 @@ def test_mst_sufficient_budget_matches_local_twin(spark):
     from eve_graph_spark.operators.graph_analytics import minimum_spanning_forest
 
     e = _path_graph(spark, 8)
-    dist = sorted(
-        tuple(r) for r in minimum_spanning_forest(
-            e, weight_col="risk", driver_threshold=0).collect()
-    )
+    with forced_distributed():
+        dist = sorted(
+            tuple(r) for r in minimum_spanning_forest(
+                e, weight_col="risk").collect()
+        )
     local = sorted(
         tuple(r) for r in minimum_spanning_forest(e, weight_col="risk").collect()
     )
@@ -127,14 +132,16 @@ def test_k_truss_budget_exhaustion_raises(spark):
     # returning {(2,3)} would not be a 4-truss.
     e = _e(spark, [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)])
     with pytest.raises(RuntimeError, match="fixpoint"):
-        k_truss(e, k=4, max_rounds=1, driver_threshold=0).collect()
+        with forced_distributed():
+            k_truss(e, k=4, max_rounds=1).collect()
 
 
 def test_k_truss_sufficient_budget_matches_local_twin(spark):
     from eve_graph_spark.operators.graph_analytics import k_truss
 
     e = _e(spark, [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)])
-    dist = sorted(tuple(r) for r in k_truss(e, k=4, driver_threshold=0).collect())
+    with forced_distributed():
+        dist = sorted(tuple(r) for r in k_truss(e, k=4).collect())
     local = sorted(tuple(r) for r in k_truss(e, k=4).collect())
     assert dist == local == []  # deep peel dissolves both triangles
 
@@ -333,7 +340,8 @@ def test_ivf_index_persist_roundtrip(spark, sf_dir, tmp_path):
     idx2, model2 = read_ivf_index(spark, str(tmp_path / "ivf"))
 
     got = ivf_topk_from_index(idx2, model2, qids, k=5)
-    want = ivf_topk(emb, qids, k=5, driver_local_threshold=0)
+    with forced_distributed():
+        want = ivf_topk(emb, qids, k=5)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
@@ -394,15 +402,14 @@ def test_sllpa_weighted_flips_listened_label(spark):
 
     e = _wedges(spark, [(0, 9, 10.0), (0, 1, 1.0), (0, 2, 1.0),
                         (9, 8, 10.0), (1, 2, 1.0)])
-    for thresh in (None, 0):  # driver-local and distributed paths agree
-        kw = {} if thresh is None else {"driver_threshold": 0}
-        unw = {r["node"]: r["label"]
-               for r in sllpa(e, rounds=1, min_count=1, **kw).collect()
-               if r["node"] == 0 and r["label"] != 0}
-        wgt = {r["node"]: r["label"]
-               for r in sllpa(e, rounds=1, min_count=1, weight_col="risk",
-                              **kw).collect()
-               if r["node"] == 0 and r["label"] != 0}
+    for forced in (False, True):  # driver-local and distributed paths agree
+        with forced_distributed() if forced else contextlib.nullcontext():
+            unw = {r["node"]: r["label"]
+                   for r in sllpa(e, rounds=1, min_count=1).collect()
+                   if r["node"] == 0 and r["label"] != 0}
+            wgt = {r["node"]: r["label"]
+                   for r in sllpa(e, rounds=1, min_count=1, weight_col="risk").collect()
+                   if r["node"] == 0 and r["label"] != 0}
         assert unw[0] == 1  # count tie -> min label
         assert wgt[0] == 9  # heavy edge out-votes two light ones
 
@@ -415,10 +422,11 @@ def test_sllpa_weighted_distributed_matches_local(spark):
     e = _wedges(spark, ka + [(20, 1, 7.0), (20, 2, 0.5), (5, 20, 1.25),
                              (5, 6, 3.0), (6, 7, 0.75), (7, 5, 2.0)])
     loc = sorted(tuple(r) for r in sllpa(e, weight_col="risk").collect())
-    dist = sorted(
-        tuple(r)
-        for r in sllpa(e, weight_col="risk", driver_threshold=0).collect()
-    )
+    with forced_distributed():
+        dist = sorted(
+            tuple(r)
+            for r in sllpa(e, weight_col="risk").collect()
+        )
     assert loc == dist
     assert loc  # non-vacuous
 
@@ -553,11 +561,11 @@ def test_louvain_multilevel_distributed_matches_local(spark):
 
     e = _ring_of_triangles(spark, 8)
     loc = sorted(tuple(r) for r in louvain_multilevel(e, levels=2, rounds=3).collect())
-    dist = sorted(
-        tuple(r)
-        for r in louvain_multilevel(e, levels=2, rounds=3,
-                                    driver_threshold=0).collect()
-    )
+    with forced_distributed():
+        dist = sorted(
+            tuple(r)
+            for r in louvain_multilevel(e, levels=2, rounds=3).collect()
+        )
     assert loc == dist
 
 
@@ -572,9 +580,10 @@ def test_louvain_self_loops_degree_and_m_parity(spark):
             (1, 1), (5, 5)]
     e = spark.createDataFrame(rows, "src_system_id long, dst_system_id long")
     loc = sorted(tuple(r) for r in louvain(e, rounds=4).collect())
-    dist = sorted(
-        tuple(r) for r in louvain(e, rounds=4, driver_threshold=0).collect()
-    )
+    with forced_distributed():
+        dist = sorted(
+            tuple(r) for r in louvain(e, rounds=4).collect()
+        )
     assert loc == dist
     assert len(loc) == 6  # self-loops add no phantom nodes
 
@@ -643,10 +652,11 @@ def test_leiden_distributed_matches_local(spark):
 
     e = _ring_of_triangles(spark, 8)
     loc = sorted(tuple(r) for r in leiden(e, levels=2, rounds=3).collect())
-    dist = sorted(
-        tuple(r)
-        for r in leiden(e, levels=2, rounds=3, driver_threshold=0).collect()
-    )
+    with forced_distributed():
+        dist = sorted(
+            tuple(r)
+            for r in leiden(e, levels=2, rounds=3).collect()
+        )
     assert loc == dist
 
 

@@ -5,6 +5,7 @@ parity of the new multilevel driver fast paths."""
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 
 
 def _sym(spark, pairs):
@@ -72,9 +73,10 @@ def test_gamma_distributed_matches_local(spark):
 
     e = _tri_ring(spark, 4, double_bridge=True)
     loc = sorted(map(tuple, louvain(e, rounds=4, gamma=2.0).collect()))
-    dist = sorted(
-        map(tuple, louvain(e, rounds=4, gamma=2.0, driver_threshold=0).collect())
-    )
+    with forced_distributed():
+        dist = sorted(
+            map(tuple, louvain(e, rounds=4, gamma=2.0).collect())
+        )
     assert loc == dist
 
 
@@ -125,7 +127,8 @@ def test_louvain_stats_out_distributed_matches_local(spark):
     loc: dict = {}
     dist: dict = {}
     louvain(e, rounds=4, stats_out=loc).collect()
-    louvain(e, rounds=4, stats_out=dist, driver_threshold=0).collect()
+    with forced_distributed():
+        louvain(e, rounds=4, stats_out=dist).collect()
     assert loc["moves_per_round"] == dist["moves_per_round"]
     assert loc["did_converge"] == dist["did_converge"]
 
@@ -151,12 +154,13 @@ def test_multilevel_distributed_matches_local_with_gamma(spark):
     e = _tri_ring(spark, 3, double_bridge=True)
     for fn in (louvain_multilevel, leiden):
         loc = sorted(map(tuple, fn(e, levels=2, rounds=4, gamma=3.0).collect()))
-        dist = sorted(
-            map(
-                tuple,
-                fn(e, levels=2, rounds=4, gamma=3.0, driver_threshold=0).collect(),
+        with forced_distributed():
+            dist = sorted(
+                map(
+                    tuple,
+                    fn(e, levels=2, rounds=4, gamma=3.0).collect(),
+                )
             )
-        )
         assert loc == dist, fn.__name__
 
 
@@ -169,9 +173,10 @@ def test_multilevel_local_fast_path_matches_distributed_default(spark):
     e = _tri_ring(spark, 5)
     for fn in (louvain_multilevel, leiden):
         fast = sorted(map(tuple, fn(e, levels=2, rounds=4).collect()))
-        slow = sorted(
-            map(tuple, fn(e, levels=2, rounds=4, driver_threshold=0).collect())
-        )
+        with forced_distributed():
+            slow = sorted(
+                map(tuple, fn(e, levels=2, rounds=4).collect())
+            )
         assert fast == slow, fn.__name__
 
 
@@ -221,12 +226,16 @@ def test_dfs_isolated_source_visits_itself(spark):
     assert [tuple(r) for r in dfs(e, 99).collect()] == [(99, 1)]
 
 
-def test_dfs_raises_beyond_driver_threshold(spark):
+def test_dfs_raises_beyond_driver_threshold(spark, monkeypatch):
+    from eve_graph_spark.operators import graph
     from eve_graph_spark.operators.graph import dfs
 
+    # dfs has no distributed twin (force-exempt): only the cutover itself
+    # puts a graph above it
+    monkeypatch.setattr(graph, "DRIVER_SSSP_MAX_EDGES", 1)
     e = _sym(spark, [(0, 1), (1, 2)])
     with pytest.raises(ValueError, match="sequential"):
-        dfs(e, 0, driver_threshold=1)
+        dfs(e, 0)
 
 
 def test_property_graph_dfs(spark):

@@ -16,6 +16,7 @@ Contracts under test:
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.operators.graph_analytics import (
@@ -103,14 +104,16 @@ def _sorted_rows(df):
 
 def test_articulation_distributed_matches_driver(choke):
     drv = articulation_points(choke, src_col="src", dst_col="dst")
-    dist = articulation_points(choke, src_col="src", dst_col="dst", driver_threshold=0)
+    with forced_distributed():
+        dist = articulation_points(choke, src_col="src", dst_col="dst")
     assert _sorted_rows(drv) == _sorted_rows(dist)
 
 
 @pytest.mark.slow  # >10s: full-tier only (r14 test tiers)
 def test_bridges_distributed_matches_driver(choke):
     drv = bridges(choke, src_col="src", dst_col="dst")
-    dist = bridges(choke, src_col="src", dst_col="dst", driver_threshold=0)
+    with forced_distributed():
+        dist = bridges(choke, src_col="src", dst_col="dst")
     assert _sorted_rows(drv) == _sorted_rows(dist)
 
 
@@ -118,9 +121,10 @@ def test_bridges_distributed_matches_driver(choke):
 def test_random_walks_distributed_matches_driver(jumps, spark, sf_dir):
     nodes = build_systems(spark, sf_dir).select("system_id")
     drv = random_walks(jumps, walks_per_node=2, steps=4, nodes=nodes)
-    dist = random_walks(
-        jumps, walks_per_node=2, steps=4, nodes=nodes, driver_threshold=0
-    )
+    with forced_distributed():
+        dist = random_walks(
+            jumps, walks_per_node=2, steps=4, nodes=nodes
+        )
     assert _sorted_rows(drv) == _sorted_rows(dist)
 
 
@@ -172,7 +176,8 @@ def test_random_walks_stop_at_sinks(spark):
     assert by_walk[2] == {0: 2, 1: 3}
     assert by_walk[1] == {0: 1, 1: 2, 2: 3}
     # distributed path agrees on the ragged shape
-    dist = random_walks(e, walks_per_node=1, steps=4, driver_threshold=0).collect()
+    with forced_distributed():
+        dist = random_walks(e, walks_per_node=1, steps=4).collect()
     assert sorted(tuple(r) for r in dist) == sorted(tuple(r) for r in rows)
 
 
@@ -194,9 +199,10 @@ def test_exclusion_bfs_superstep_bound(choke):
         return run
 
     with patch.object(ga, "_frontier_loop", side_effect=counting) as m:
-        articulation_points(
-            choke, src_col="src", dst_col="dst", driver_threshold=0
-        ).collect()
+        with forced_distributed():
+            articulation_points(
+                choke, src_col="src", dst_col="dst"
+            ).collect()
         assert m.called
     assert calls["n"] <= 14
 
@@ -381,7 +387,8 @@ def test_node2vec_distributed_matches_driver(jumps, spark, sf_dir):
     nodes = build_systems(spark, sf_dir).select("system_id")
     kw = dict(walks_per_node=2, steps=4, return_mult=4, inout_mult=2, nodes=nodes)
     drv = node2vec_walks(jumps, **kw)
-    dist = node2vec_walks(jumps, **kw, driver_threshold=0)
+    with forced_distributed():
+        dist = node2vec_walks(jumps, **kw)
     assert _sorted_rows(drv) == _sorted_rows(dist)
 
 

@@ -9,6 +9,7 @@ import gc
 import weakref
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark import api
@@ -34,7 +35,8 @@ def names(spark, sf_dir) -> dict[int, str]:
 def _dataframe_route(eng: GraphEngine, projection: str, src: int, dst: int) -> list[str]:
     """The distributed DataFrame route: sssp(target_id=) -> reconstruct_path
     -> names."""
-    dist = sssp(eng.registry.get(projection), [src], target_id=dst, driver_threshold=0)
+    with forced_distributed():
+        dist = sssp(eng.registry.get(projection), [src], target_id=dst)
     return path_as_names(eng.systems, reconstruct_path(dist, dst))
 
 

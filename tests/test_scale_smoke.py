@@ -9,6 +9,7 @@ the driver-local fast path, which is the bit-identical reference.
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 # slow tier: 200k-edge distributed Pregel stress — deselected from the driver-window default run
 pytestmark = pytest.mark.slow
 
@@ -36,8 +37,9 @@ def test_distributed_sssp_matches_local_at_200k_edges(spark):
     e = _random_graph(spark)
     local = {r["node"]: r["dist"] for r in sssp(e, [0], weight_col="w",
                                                 src_col="src", dst_col="dst").collect()}
-    dist = {r["node"]: r["dist"] for r in sssp(e, [0], weight_col="w", src_col="src",
-                                               dst_col="dst", driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: r["dist"] for r in sssp(e, [0], weight_col="w", src_col="src",
+                                                   dst_col="dst").collect()}
     assert dist == local
     assert len(dist) > N_NODES * 0.9  # giant component reached
 
@@ -54,8 +56,8 @@ def test_sssp_long_diameter_lineage_truncation(spark):
         F.lit(1.0).alias("w"),
     )
     stats: dict = {}
-    out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst",
-               driver_threshold=0, stats_out=stats)
+    with forced_distributed():
+        out = sssp(e, [0], weight_col="w", src_col="src", dst_col="dst", stats_out=stats)
     rows = {r["node"]: (r["dist"], r["pred"]) for r in out.collect()}
     assert len(rows) == hops + 1
     assert all(rows[i][0] == float(i) for i in range(hops + 1))
@@ -88,18 +90,18 @@ def test_multi_source_sssp_one_loop_at_200k_edges(spark):
     max_single_iters = 0
     for s in sources:
         st: dict = {}
-        d = sssp(e, [s], weight_col="w", src_col="src", dst_col="dst",
-                 driver_threshold=0, stats_out=st)
+        with forced_distributed():
+            d = sssp(e, [s], weight_col="w", src_col="src", dst_col="dst", stats_out=st)
         singles.update({(s, r["node"]): r["dist"] for r in d.collect()})
         max_single_iters = max(max_single_iters, st["iterations"])
     ms: dict = {}
-    got = {
-        (r["source"], r["node"]): r["dist"]
-        for r in multi_source_sssp(
-            e, sources, weight_col="w", src_col="src", dst_col="dst",
-            driver_threshold=0, stats_out=ms,
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            (r["source"], r["node"]): r["dist"]
+            for r in multi_source_sssp(
+                e, sources, weight_col="w", src_col="src", dst_col="dst", stats_out=ms,
+            ).collect()
+        }
     assert got == singles
     # ONE loop: iterations = max over sources (+0; the empty-frontier
     # detection round is shared), vs sum-over-sources for sequential sweeps
@@ -113,9 +115,9 @@ def test_distributed_components_match_local_at_200k_edges(spark):
     )
     local = {r["node"]: r["component"] for r in
              connected_components(sym, src_col="src", dst_col="dst").collect()}
-    dist = {r["node"]: r["component"] for r in
-            connected_components(sym, src_col="src", dst_col="dst",
-                                 driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: r["component"] for r in
+                connected_components(sym, src_col="src", dst_col="dst").collect()}
     assert dist == local
 
 
@@ -135,12 +137,13 @@ def test_distributed_sampled_betweenness_at_200k_edges(spark):
             e, src_col="src", dst_col="dst", sample_sources=4
         ).collect()
     }
-    dist = {
-        r["node"]: r["betweenness"]
-        for r in betweenness_centrality(
-            e, src_col="src", dst_col="dst", sample_sources=4, driver_threshold=0
-        ).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["betweenness"]
+            for r in betweenness_centrality(
+                e, src_col="src", dst_col="dst", sample_sources=4
+            ).collect()
+        }
     assert set(dist) == set(local)
     mism = [
         v for v in local
@@ -158,10 +161,10 @@ def test_star_components_match_local_at_200k_edges(spark):
     local = {r["node"]: r["component"] for r in
              connected_components(sym, src_col="src", dst_col="dst").collect()}
     st: dict = {}
-    star = {r["node"]: r["component"] for r in
-            connected_components(sym, src_col="src", dst_col="dst",
-                                 driver_threshold=0, algorithm="star",
-                                 stats_out=st).collect()}
+    with forced_distributed():
+        star = {r["node"]: r["component"] for r in
+                connected_components(sym, src_col="src", dst_col="dst", algorithm="star",
+                                     stats_out=st).collect()}
     assert star == local
     assert st["iterations"] <= 10, st  # O(log n) rounds, not O(diameter)
 
@@ -174,10 +177,11 @@ def test_distributed_random_walks_at_200k_edges(spark):
 
     e = _random_graph(spark)
     nodes = spark.range(500).select((F.col("id") * 97 % N_NODES).alias("node")).distinct()
-    walks = random_walks(
-        e, walks_per_node=2, steps=3, nodes=nodes, driver_threshold=0,
-        src_col="src", dst_col="dst",
-    ).persist()
+    with forced_distributed():
+        walks = random_walks(
+            e, walks_per_node=2, steps=3, nodes=nodes,
+            src_col="src", dst_col="dst",
+        ).persist()
     n_seeds = nodes.count()
     by_step = {r["step"]: r["n"] for r in
                walks.groupBy("step").agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -232,7 +236,8 @@ def test_distributed_louvain_at_200k_edges(spark):
     from eve_graph_spark.operators.graph_analytics import community_metrics, louvain
 
     e = _random_graph(spark)
-    labels = louvain(e, rounds=2, src_col="src", dst_col="dst", driver_threshold=0)
+    with forced_distributed():
+        labels = louvain(e, rounds=2, src_col="src", dst_col="dst")
     n_nodes = (
         e.select(F.col("src").alias("n")).union(e.select(F.col("dst").alias("n")))
         .filter(F.col("n").isNotNull()).distinct().count()
@@ -253,19 +258,20 @@ def test_distributed_mst_at_200k_edges(spark):
     e = _random_graph(spark).withColumn(
         "w", (F.abs(F.xxhash64("src", "dst")) % 1_000_000).cast("double") / 1_000.0
     )
-    forest = minimum_spanning_forest(
-        e, weight_col="w", src_col="src", dst_col="dst", driver_threshold=0
-    ).localCheckpoint(eager=True)
+    with forced_distributed():
+        forest = minimum_spanning_forest(
+            e, weight_col="w", src_col="src", dst_col="dst"
+        ).localCheckpoint(eager=True)
     n_forest = forest.count()
     nodes = (
         e.filter(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("n")).union(e.filter(F.col("src") != F.col("dst")).select(F.col("dst").alias("n")))
         .distinct().count()
     )
-    comps = connected_components(
-        e.filter(F.col("src") != F.col("dst")), src_col="src", dst_col="dst",
-        driver_threshold=0,
-    ).select("component").distinct().count()
+    with forced_distributed():
+        comps = connected_components(
+            e.filter(F.col("src") != F.col("dst")), src_col="src", dst_col="dst",
+        ).select("component").distinct().count()
     assert n_forest == nodes - comps  # spanning forest edge count
     # acyclic: a forest with k edges spans exactly k + (#tree components)
     # nodes; CC over the forest must reproduce the same component count
@@ -278,9 +284,10 @@ def test_distributed_mst_at_200k_edges(spark):
     forest_sym = forest.select("src", "dst").union(
         forest.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    f_comps = connected_components(
-        forest_sym, src_col="src", dst_col="dst", driver_threshold=0
-    ).select("component").distinct().count()
+    with forced_distributed():
+        f_comps = connected_components(
+            forest_sym, src_col="src", dst_col="dst"
+        ).select("component").distinct().count()
     assert n_forest == f_nodes - f_comps
 
 
@@ -297,9 +304,10 @@ def test_distributed_dag_longest_path_at_200k_edges(spark):
     loc = {r["node"]: (r["topo_level"], r["longest_dist_fp"])
            for r in dag_longest_paths(e, weight_col="w", src_col="src",
                                       dst_col="dst").collect()}
-    dist = {r["node"]: (r["topo_level"], r["longest_dist_fp"])
-            for r in dag_longest_paths(e, weight_col="w", src_col="src", dst_col="dst",
-                                       driver_threshold=0, max_iterations=128).collect()}
+    with forced_distributed():
+        dist = {r["node"]: (r["topo_level"], r["longest_dist_fp"])
+                for r in dag_longest_paths(e, weight_col="w", src_col="src", dst_col="dst",
+                                           max_iterations=128).collect()}
     assert dist == loc
 
 
@@ -312,9 +320,10 @@ def test_distributed_eigenvector_at_200k_edges(spark):
     loc = {r["node"]: r["score"]
            for r in eigenvector_centrality(e, iterations=2,
                                            src_col="src", dst_col="dst").collect()}
-    dist = {r["node"]: r["score"]
-            for r in eigenvector_centrality(e, iterations=2, src_col="src",
-                                            dst_col="dst", driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: r["score"]
+                for r in eigenvector_centrality(e, iterations=2, src_col="src",
+                                                dst_col="dst").collect()}
     assert dist == loc
 
 
@@ -335,8 +344,9 @@ def test_distributed_k1_coloring_at_60k_edges(spark):
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    colors = k1_coloring(e, max_rounds=48, src_col="src", dst_col="dst",
-                         driver_threshold=0).localCheckpoint(eager=True)
+    with forced_distributed():
+        colors = k1_coloring(e, max_rounds=48, src_col="src",
+                             dst_col="dst").localCheckpoint(eager=True)
     bad = (
         e.join(colors.withColumnRenamed("node", "src").withColumnRenamed("color", "cs"), "src")
         .join(colors.withColumnRenamed("node", "dst").withColumnRenamed("color", "cd"), "dst")
@@ -357,9 +367,10 @@ def test_distributed_fastrp_at_200k_edges(spark):
     from eve_graph_spark.operators.graph_analytics import fastrp_embeddings
 
     e = _random_graph(spark)
-    dist = {r["node"]: tuple(r)[1:]
-            for r in fastrp_embeddings(e, dim=4, iterations=2, src_col="src",
-                                       dst_col="dst", driver_threshold=0).collect()}
+    with forced_distributed():
+        dist = {r["node"]: tuple(r)[1:]
+                for r in fastrp_embeddings(e, dim=4, iterations=2, src_col="src",
+                                           dst_col="dst").collect()}
     loc = {r["node"]: tuple(r)[1:]
            for r in fastrp_embeddings(e, dim=4, iterations=2, src_col="src",
                                       dst_col="dst").collect()}
@@ -385,8 +396,8 @@ def test_distributed_ktruss_at_60k_edges(spark):
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    truss = k_truss(e, k=3, src_col="src", dst_col="dst",
-                    driver_threshold=0).localCheckpoint(eager=True)
+    with forced_distributed():
+        truss = k_truss(e, k=3, src_col="src", dst_col="dst").localCheckpoint(eager=True)
     n = truss.count()
     assert n > 0  # dense-enough random graph keeps a triangle core
     assert truss.filter(F.col("support") < 1).count() == 0

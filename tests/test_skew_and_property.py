@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import forced_distributed
 # slow tier: property-based sweeps over random graphs/corpora — deselected from the driver-window default run
 pytestmark = pytest.mark.slow
 
@@ -174,10 +175,11 @@ def test_star_cc_matches_union_find_on_random_graphs(spark, edges):
         r["node"]: r["component"]
         for r in connected_components(e, src_col="src", dst_col="dst").collect()
     }
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            e, src_col="src", dst_col="dst", driver_threshold=0, algorithm="star"
-        ).collect()
-    }
+    with forced_distributed():
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                e, src_col="src", dst_col="dst", algorithm="star"
+            ).collect()
+        }
     assert got == ref

@@ -8,6 +8,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from conftest import forced_distributed
 from pyspark.sql import functions as F
 
 from eve_graph_spark.operators.graph_analytics import (
@@ -94,11 +95,12 @@ def test_dijkstra_sigma_distributed_matches_driver(spark):
         for r in dijkstra_sigma(e, [0, 5], weight_col="w",
                                 src_col="src", dst_col="dst").collect()
     }
-    dist = {
-        (r["source"], r["node"]): (r["dist"], r["sigma"], r["depth"])
-        for r in dijkstra_sigma(e, [0, 5], weight_col="w", src_col="src",
-                                dst_col="dst", driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            (r["source"], r["node"]): (r["dist"], r["sigma"], r["depth"])
+            for r in dijkstra_sigma(e, [0, 5], weight_col="w", src_col="src",
+                                    dst_col="dst").collect()
+        }
     assert dist == local
 
 
@@ -156,12 +158,13 @@ def test_weighted_betweenness_distributed_matches_driver(spark):
         for r in betweenness_centrality(e, src_col="src", dst_col="dst",
                                         weight_col="w").collect()
     }
-    dist = {
-        r["node"]: r["betweenness"]
-        for r in betweenness_centrality(e, src_col="src", dst_col="dst",
-                                        weight_col="w", driver_threshold=0,
-                                        exact=True).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["betweenness"]
+            for r in betweenness_centrality(e, src_col="src", dst_col="dst",
+                                            weight_col="w",
+                                            exact=True).collect()
+        }
     assert set(dist) == set(local)
     for v in local:
         assert dist[v] == pytest.approx(local[v], rel=1e-9), v
@@ -233,12 +236,13 @@ def test_weighted_closeness_landmarks_distributed(spark, sf_dir):
         r["node"]: r["closeness"]
         for r in closeness_centrality(jumps, weight_col="risk", landmarks=3).collect()
     }
-    dist = {
-        r["node"]: r["closeness"]
-        for r in closeness_centrality(
-            jumps, weight_col="risk", landmarks=3, driver_threshold=0
-        ).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: r["closeness"]
+            for r in closeness_centrality(
+                jumps, weight_col="risk", landmarks=3
+            ).collect()
+        }
     assert dist == local
 
 
@@ -270,11 +274,11 @@ def test_harmonic_weighted_driver_distributed_parity(spark, sf_dir):
         for r in harmonic_centrality(jumps, weight_col="risk",
                                      landmarks=lm).collect()
     }
-    dist = {
-        r["node"]: (r["harmonic"], r["eccentricity"])
-        for r in harmonic_centrality(jumps, weight_col="risk", landmarks=lm,
-                                     driver_threshold=0).collect()
-    }
+    with forced_distributed():
+        dist = {
+            r["node"]: (r["harmonic"], r["eccentricity"])
+            for r in harmonic_centrality(jumps, weight_col="risk", landmarks=lm).collect()
+        }
     assert set(local) == set(lm)
     assert dist == local  # bit-identical: same IEEE min-plus fixpoint
 
